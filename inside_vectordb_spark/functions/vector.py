@@ -28,15 +28,30 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Only a SIMPLE identifier may be interpolated into the parsed-SQL
-# fast paths (advice r12): a name with dots/spaces/reserved words
-# would mis-parse or resolve as a struct-field access. Anything else
-# falls through to the Column builder, which handles any name.
 _SIMPLE_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
+# bare words the SQL parser may read as niladic function calls (ANSI
+# mode parses them as such) instead of a column of that name
+_NILADIC = frozenset(
+    {"current_date", "current_timestamp", "current_user", "current_catalog",
+     "current_database", "current_schema", "current_time", "user", "session_user"}
+)
 
 
-def _simple(name: object) -> bool:
-    return isinstance(name, str) and _SIMPLE_IDENT.fullmatch(name) is not None
+def sql_ident(name: str) -> str:
+    """THE way a column name enters the parsed-SQL fast paths (advice
+    r12): SQL text that resolves exactly like ``F.col(name)`` — dotted
+    names stay struct-field accesses, and any part that is not a plain
+    identifier, or that the parser would read as a function call
+    (``current_date`` …), is backtick-quoted. A name that already
+    carries backticks is passed through: ``F.col`` and the SQL parser
+    read quoted parts alike. Column operands take the Column builder
+    instead."""
+    if "`" in name:
+        return name
+    return ".".join(
+        p if _SIMPLE_IDENT.fullmatch(p) and p.lower() not in _NILADIC else f"`{p}`"
+        for p in name.split(".")
+    )
 
 # Optimization r12 (guide §1.2 "per-task work" applied to the DRIVER):
 # when the operand is a plain column NAME, each helper builds its whole
@@ -71,18 +86,16 @@ def as_double_array(col: Column | str) -> Column:
     """Cast ``array<float>`` → ``array<double>`` so every downstream op
     runs in double precision (float32 storage, float64 math — the
     reference does the same: float32 matrices, float64 metrics)."""
-    if _simple(col):
-        return F.expr(f"transform({col}, x -> CAST(x AS DOUBLE))")
     if isinstance(col, str):
-        col = F.col(col)
+        return F.expr(f"transform({sql_ident(col)}, x -> CAST(x AS DOUBLE))")
     return F.transform(col, lambda x: x.cast("double"))
 
 
 def dot_product(a: Column | str, b: Column | str) -> Column:
     """Elementwise product then strict sequential sum — a Catalyst
     ``aggregate(zip_with(...))`` chain, all JVM-side."""
-    if _simple(a) and _simple(b):
-        return F.expr(_sql_dot(a, b))
+    if isinstance(a, str) and isinstance(b, str):
+        return F.expr(_sql_dot(sql_ident(a), sql_ident(b)))
     aa = as_double_array(a)
     bb = as_double_array(b)
     return F.aggregate(
@@ -93,16 +106,16 @@ def dot_product(a: Column | str, b: Column | str) -> Column:
 
 
 def l2_norm(a: Column | str) -> Column:
-    if _simple(a):
-        return F.expr(_sql_norm(a))
+    if isinstance(a, str):
+        return F.expr(_sql_norm(sql_ident(a)))
     return F.sqrt(dot_product(a, a))
 
 
 def l2_normalize(a: Column | str) -> Column:
     """x / ||x||, with zero vectors passed through unchanged
     (``faiss.normalize_L2`` semantics: 0-vector stays 0)."""
-    if _simple(a):
-        ad = _sql_dbl(a)
+    if isinstance(a, str):
+        ad = _sql_dbl(sql_ident(a))
         nrm = (
             f"sqrt(aggregate(transform({ad}, x -> x * x), "
             f"CAST(0.0 AS DOUBLE), (s, x) -> s + x))"
@@ -120,7 +133,8 @@ def l2_normalize(a: Column | str) -> Column:
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """dot(a,b) / (||a||·||b||); 0 when either side is a zero vector."""
-    if _simple(a) and _simple(b):
+    if isinstance(a, str) and isinstance(b, str):
+        a, b = sql_ident(a), sql_ident(b)
         na, nb = _sql_norm(a), _sql_norm(b)
         return F.expr(
             f"CASE WHEN {na} = 0.0 OR {nb} = 0.0 THEN CAST(0.0 AS DOUBLE) "

@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from inside_vectordb_spark import _generations as gen
 from inside_vectordb_spark import _meta_io as mio
 from inside_vectordb_spark.functions.vector import l2_normalize
 from inside_vectordb_spark.operators.ann import (
@@ -875,7 +876,7 @@ def build_sq_index(
     # previous index would silently exclude ids from the NEW corpus
     # (deletes are "compacted away by a rebuild" — so the rebuild must
     # actually drop them)
-    mio.remove_tree(mio.join(path, "tombstones"))
+    gen.remove_rels(path, gen.TOMBSTONES)
     (
         spark.createDataFrame(
             pd.DataFrame(
@@ -911,16 +912,10 @@ def delete_from_sq_index(
 ) -> dict[str, Any]:
     """FAISS ``remove_ids`` / hnswlib ``mark_deleted`` analogue:
     tombstone a set of doc ids in the persisted SQ index WITHOUT
-    rewriting the codes table. Deletes append to a tiny ``tombstones``
-    parquet; search anti-joins it (no broadcast hint — the set grows
-    until the next rebuild, AQE broadcasts only while it is actually
-    small). At 100 TB this is the
-    only viable shape: a delete touches O(deleted) bytes, and the
-    codes table is compacted away lazily by a rebuild, not eagerly.
-
-    Idempotent per id: already-tombstoned ids are skipped, so re-runs
-    do not grow the tombstone table or the meta counter.
-    """
+    rewriting the codes table (``_generations.delete``; this tier's
+    tombstone column is ``doc_id``). A delete touches O(deleted)
+    bytes, and the codes table is compacted away lazily by a rebuild,
+    not eagerly. Idempotent per id."""
     # serialize maintenance under the commit lock (review r9-4, the
     # hnsw/sign r9-2 rule applied tier-wide): without it the
     # disjointness guard races a concurrent upsert of the same delta
@@ -930,33 +925,12 @@ def delete_from_sq_index(
         meta = _read_meta(path)
         if meta is None or meta.get("kind") != "sq":
             raise FileNotFoundError(f"no complete SQ index at {path}")
-        # idempotency via executor-side anti-join (the pq_det twin's
-        # shape): the ACCUMULATED tombstone set can be corpus-sized after
-        # crawl-scale delete campaigns, and the old deleted_ids() collect
-        # round-tripped ALL of it through the driver on every delete of a
-        # handful of ids (review r8). The delta side is caller-provided
-        # and small; the anti-join count is bounded by len(ids).
-        ids_df = spark.createDataFrame(
-            pd.DataFrame({"doc_id": np.array(sorted(set(int(i) for i in ids)),
-                                             dtype=np.int64)})
-        ).distinct()
-        tomb = os.path.join(path, "tombstones")
-        if mio.is_dir(tomb):
-            ids_df = ids_df.join(spark.read.parquet(tomb), "doc_id", "left_anti")
-        n_fresh = ids_df.count()
-        if n_fresh:
-            ids_df.write.mode("append").parquet(tomb)
-            meta["n_deleted"] = meta.get("n_deleted", 0) + n_fresh
-            _write_meta(path, meta)
-        return meta
+        return gen.delete(spark, path, meta, ids, col="doc_id", indent=2)
 
 
 def deleted_ids(spark: SparkSession, path: str) -> set[int]:
     """The current tombstone set (empty if none ever deleted)."""
-    tomb = mio.join(path, "tombstones")
-    if not mio.is_dir(tomb):
-        return set()
-    return {r["doc_id"] for r in mio.read_parquet_rows(tomb)}
+    return gen.tombstone_ids(path, col="doc_id")
 
 
 def ensure_sq_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, Any]:
@@ -1004,12 +978,9 @@ def ann_sq_topk_indexed(
         raise FileNotFoundError(f"no complete SQ index at {path}")
     spark = queries.sparkSession
     stats = load_sq_stats(spark, path)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    tomb = mio.join(path, "tombstones")
-    if mio.is_dir(tomb):
-        codes = codes.join(
-            spark.read.parquet(tomb), "doc_id", "left_anti"
-        )
+    codes = gen.drop_deleted(
+        spark, spark.read.parquet(os.path.join(path, "codes")), path, col="doc_id"
+    )
     return ann_sq_topk(
         queries,
         corpus,

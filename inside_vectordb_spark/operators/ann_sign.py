@@ -35,6 +35,7 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from inside_vectordb_spark import _generations as gen
 from inside_vectordb_spark import _meta_io as mio
 from inside_vectordb_spark.functions.vector import cosine_similarity
 
@@ -101,15 +102,10 @@ def sign_bucket(vec_col: Column | str, planes=None) -> Column:
     hyperplanes — pure Catalyst (one left-assoc dot per plane,
     identical order to the SQL twin's left-assoc sum)."""
     planes = SIGN_PLANES if planes is None else planes
-    from ..functions.vector import _simple
+    from ..functions.vector import sql_ident
 
-    # Only a simple identifier may be interpolated into the parsed-SQL
-    # fast path (advice r12); anything else goes through the Column
-    # builder, which handles any name.
-    if _simple(vec_col):
-        return F.expr(spark_bucket_sql(vec_col, planes))
     if isinstance(vec_col, str):
-        vec_col = F.col(vec_col)
+        return F.expr(spark_bucket_sql(sql_ident(vec_col), planes))
     v = F.transform(vec_col, lambda x: x.cast("double"))
     total = None
     for b, signs in enumerate(planes):
@@ -178,7 +174,7 @@ def ensure_sign_index(
     planes = sign_planes(bits, dim)
     # fresh lifecycle: tombstones from a prior index must not leak
     # into the rebuilt one (same contract as the SQ tier)
-    mio.remove_tree(mio.join(path, "tombstones"))
+    gen.remove_rels(path, gen.TOMBSTONES)
     (
         corpus.select(
             F.col(id_col).alias("id"),
@@ -210,18 +206,13 @@ def pruned_lists(spark: SparkSession, path: str, probes: DataFrame) -> DataFrame
 def _index_scan(spark: SparkSession, path: str, probed: list[int]) -> DataFrame:
     """The pruned (id, bucket) scan every sign-LSH search shares:
     partition-pruned to the probed buckets, with tombstoned ids
-    anti-joined out (no broadcast hint — tombstones accumulate until
-    the next rebuild, so AQE picks broadcast only while the set is
-    actually small), so deleted vectors can never reach candidate
+    anti-joined out, so deleted vectors can never reach candidate
     generation or the rerank."""
     idx = (
         spark.read.parquet(os.path.join(path, "buckets"))
         .filter(F.col("bucket").isin(probed))
     )
-    tomb = mio.join(path, "tombstones")
-    if mio.is_dir(tomb):
-        idx = idx.join(spark.read.parquet(tomb), "id", "left_anti")
-    return idx
+    return gen.drop_deleted(spark, idx, path, on="id")
 
 
 def ann_sign_topk_indexed(
@@ -592,11 +583,9 @@ def _upsert_sign_locked(
     if meta is None or meta.get("kind") != "sign_lsh":
         raise FileNotFoundError(f"no complete sign-LSH index at {path}")
     stored_ids = spark.read.parquet(os.path.join(path, "buckets")).select("id")
-    tomb = mio.join(path, "tombstones")
-    if mio.is_dir(tomb):
-        stored_ids = stored_ids.unionByName(
-            spark.read.parquet(tomb).select("id")
-        )
+    dead = gen.tombstones(spark, path, meta)
+    if dead is not None:
+        stored_ids = stored_ids.unionByName(dead)
     _assert_disjoint_delta(stored_ids, new_vectors.select(id_col), path)
     planes = sign_planes(meta["bits"], meta["dim"])
     (
@@ -619,42 +608,22 @@ def delete_from_sign_index(
     spark: SparkSession, path: str, ids: list[int]
 ) -> dict:
     """hnswlib ``mark_deleted`` analogue on the sign-LSH tier:
-    tombstone doc ids WITHOUT rewriting the bucket table — deletes
-    append to a tiny ``tombstones`` parquet that search anti-joins
-    out of the candidate scan (AQE-chosen strategy). O(deleted)
-    bytes written;
-    a rebuild (``ensure_sign_index`` on a changed corpus/params)
-    compacts tombstones away. Idempotent per id. Runs under the index
-    commit lock (review r9): a delete landing between compaction's
-    live-row snapshot and its tombstone-dir removal would be silently
-    dropped — the compacted index would resurrect the id."""
-    import numpy as np
-    import pandas as pd
-
+    tombstone doc ids WITHOUT rewriting the bucket table
+    (``_generations.delete``). O(deleted) bytes written; compaction or
+    a rebuild removes them physically. Idempotent per id. Runs under
+    the index commit lock (review r9): a delete landing between
+    compaction's live-row snapshot and its tombstone-dir removal
+    would be silently dropped — the compacted index would resurrect
+    the id."""
     with mio.commit_lock(path):
         meta = mio.read_json(mio.join(path, "meta.json"))
         if meta is None or meta.get("kind") != "sign_lsh":
             raise FileNotFoundError(f"no complete sign-LSH index at {path}")
-        existing = sign_deleted_ids(spark, path)
-        fresh = sorted(set(int(i) for i in ids) - existing)
-        if fresh:
-            (
-                spark.createDataFrame(
-                    pd.DataFrame({"id": np.array(fresh, dtype=np.int64)})
-                )
-                .write.mode("append")
-                .parquet(os.path.join(path, "tombstones"))
-            )
-            meta["n_deleted"] = meta.get("n_deleted", 0) + len(fresh)
-            mio.write_json(mio.join(path, "meta.json"), meta)
-        return meta
+        return gen.delete(spark, path, meta, ids)
 
 
 def sign_deleted_ids(spark: SparkSession, path: str) -> set[int]:
-    tomb = mio.join(path, "tombstones")
-    if not mio.is_dir(tomb):
-        return set()
-    return {r["id"] for r in mio.read_parquet_rows(tomb)}
+    return gen.tombstone_ids(path)
 
 
 def compact_sign_index(spark: SparkSession, path: str) -> dict:
@@ -699,12 +668,9 @@ def compact_sign_index(spark: SparkSession, path: str) -> dict:
         if meta is None or meta.get("kind") != "sign_lsh":
             raise FileNotFoundError(f"no complete sign-LSH index at {path}")
         buckets = os.path.join(path, "buckets")
-        tomb = mio.join(path, "tombstones")
         tmp = mio.join(path, "buckets_compact_tmp")
         mio.remove_tree(tmp)  # orphan from a crashed prior compaction
-        live = spark.read.parquet(buckets)
-        if mio.is_dir(tomb):
-            live = live.join(spark.read.parquet(tomb), "id", "left_anti")
+        live = gen.drop_deleted(spark, spark.read.parquet(buckets), path, on="id")
         # emptiness guard BEFORE any write: an all-tombstoned index
         # must refuse (and an empty partitioned parquet dir can't even
         # be read back for validation — UNABLE_TO_INFER_SCHEMA)
@@ -732,7 +698,7 @@ def compact_sign_index(spark: SparkSession, path: str) -> dict:
         _begin_rebuild(path)  # marker OFF before the non-atomic swap
         mio.remove_tree(buckets)
         mio.move(tmp, buckets)
-        mio.remove_tree(tomb)
+        gen.remove_rels(path, gen.TOMBSTONES)
         removed = meta.pop("n_deleted", 0)
         if removed:
             meta["n_compacted_away"] = meta.get("n_compacted_away", 0) + removed

@@ -26,9 +26,10 @@ Layout (all data parquet, control files via the ``_meta_io`` seam):
     <path>/tombstones/        mark_deleted ids (search filters them;
                               compaction removes them physically)
     <path>/meta.json          params + fingerprint + the generation
-                              map — the ATOMIC COMMIT POINT for
-                              every maintenance op; removed first
-                              only on full rebuilds
+                              map; removed first only on full rebuilds
+
+Generation naming, meta as the commit point, the one-commit GC grace
+(``gc_pending``) and tombstones follow ``inside_vectordb_spark/_generations.py``.
 
 Scale shape: vectors are routed to ``n_parts`` graph partitions by
 ``pmod(xxhash64(id), n_parts)`` — deterministic, so a delta upsert
@@ -41,9 +42,8 @@ exchange (plan-pinned in ``tests/test_plans.py``). Upserts rebuild
 ONLY the receiving partitions into a fresh generation dir (same
 no-shuffle shape) with O(delta) graph inserts — base nodes are never
 re-inserted; the stored RNG state continues the level-draw stream, so
-load-then-add builds the identical graph an unsaved index would; the
-meta write commits, superseded dirs survive one commit for in-flight
-readers. Deletes tombstone (nodes keep ROUTING the beam, hnswlib
+load-then-add builds the identical graph an unsaved index would.
+Deletes tombstone (nodes keep ROUTING the beam, hnswlib
 semantics); compaction rebuilds partitions from live rows — the
 compacted index is bit-identical to a fresh build over them.
 
@@ -75,6 +75,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from inside_vectordb_spark import _generations as gen
 from inside_vectordb_spark import _meta_io as mio
 from inside_vectordb_spark.operators.ann import _normalize_rows
 from inside_vectordb_spark.operators.ann_index import (
@@ -106,25 +107,21 @@ _PARTIAL_SCHEMA = StructType(
 )
 
 
-def _tomb_dir(path: str, meta: dict) -> str:
-    """The CURRENT tombstone relation. Partial compaction shrinks the
-    tombstone set; an in-place rewrite of one fixed dir would lose the
-    surviving tombstones on a crash between remove and rewrite
-    (deleted docs reappearing), so the live relation is versioned in
-    meta (``tomb_rel``) and swapped by the atomic meta commit, exactly
-    like the graph generation dirs."""
-    return mio.join(path, meta.get("tomb_rel", "tombstones"))
+# the relation families this index owns; graph relations are
+# superseded (and reclaimed) one partition dir at a time
+_FAMILIES = ("graph", gen.TOMBSTONES)
+_PART_LEVEL = ("graph",)
 
 
-def _gc_dirs(path: str, gc_now: list) -> None:
-    """Reclaim dirs a PREVIOUS commit superseded: ``[rel, part]``
-    entries are one graph partition dir; ``[rel, None]`` entries are a
-    whole relation (superseded tombstone generations)."""
-    for old_rel, p in gc_now:
-        if p is None:
-            mio.remove_tree(os.path.join(path, old_rel))
-        else:
-            mio.remove_tree(os.path.join(path, old_rel, f"part={p}"))
+def _read_meta(path: str) -> dict[str, Any]:
+    meta = gen.read_meta(path)
+    if meta is None or meta.get("kind") != "hnsw_vendored":
+        raise FileNotFoundError(f"no complete vendored-HNSW index at {path}")
+    return meta
+
+
+def _commit(path: str, meta: dict, superseded: list, drop=()) -> dict[str, Any]:
+    return gen.commit_parts(path, meta, superseded, _FAMILIES, _PART_LEVEL, drop)
 
 
 def _part_expr(id_col: str, n_parts: int):
@@ -322,9 +319,7 @@ def _build_hnsw_locked(
     # fresh lifecycle: upsert/compaction generations and tombstones
     # from a prior index must not leak into the rebuilt one (the
     # marker is already off, so no reader resolves them mid-cleanup)
-    for name in os.listdir(path) if os.path.isdir(path) else []:
-        if name.startswith(("graph_u", "graph_c", "tombstones")):
-            mio.remove_tree(os.path.join(path, name))
+    gen.remove_rels(path, "graph_u", "graph_c", gen.TOMBSTONES)
     meta = {
         "kind": "hnsw_vendored",
         "dim": dim,
@@ -342,11 +337,11 @@ def _build_hnsw_locked(
         # in-flight readers, and a crash after the marker removal
         # destroyed a valid index)
         "part_rels": {},  # part -> rel; absent parts resolve to "graph"
-        "gc_pending": [],  # [rel, part] dirs superseded by THIS commit
+        "gc_pending": [],
         "part_counts": part_counts,  # stored nodes per partition
         "corpus": fp,
     }
-    mio.write_json(mio.join(path, "meta.json"), meta, indent=2)
+    gen.write_meta(path, meta, indent=2)
     return meta
 
 
@@ -361,7 +356,7 @@ def ensure_hnsw_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, 
     ``ann_index.ensure_ivfpq_index``); the corollary, as there, is
     that pointing ``vec_col`` at a DIFFERENT vector column over the
     same ids requires a distinct ``path``."""
-    meta = mio.read_json(mio.join(path, "meta.json"))
+    meta = gen.read_meta(path)
     want = {
         "kind": "hnsw_vendored",
         "dim": params["dim"],
@@ -384,27 +379,12 @@ def ensure_hnsw_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, 
 
 
 def _read_graph(spark: SparkSession, path: str, meta: dict) -> DataFrame:
-    """Union the live graph rows across generation dirs: each
-    partition resolves to the relation meta names for it ("graph" =
-    the base build; "graph_u<N>" = the upsert generation that last
-    rewrote it). Only meta-named (rel, part) pairs are visible, so an
-    interrupted upsert (generation written, meta not yet swapped)
-    reads as the pre-upsert index — and superseded dirs survive one
-    commit for in-flight readers (the lexical-index discipline)."""
-    part_rels: dict[str, str] = meta.get("part_rels", {}) or {}
-    base_rel = meta.get("base_rel", "graph")
+    """Union the live graph rows across generation dirs, each
+    partition read from the relation meta names for it ("graph" = the
+    base build; "graph_u<N>" = the upsert generation that last rewrote
+    it)."""
     by_rel: dict[str, list[int]] = {}
-    for p in range(int(meta["n_parts"])):
-        rel = part_rels.get(str(p), base_rel)
-        # resolve per-(rel, part): a pair whose part=p subdir is absent
-        # is a partition that was never populated OR rebuilt to zero
-        # rows (incremental compact of a fully-tombstoned shard writes
-        # a generation dir with no part=p data — advice r10: falling
-        # back to base_rel here would resurrect compacted-away rows,
-        # and reading a data-less generation dir raises
-        # UNABLE_TO_INFER_SCHEMA). Same guard as the indexed search.
-        if not mio.is_dir(os.path.join(path, rel, f"part={p}")):
-            continue
+    for p, rel in gen.part_map(path, meta).items():
         by_rel.setdefault(rel, []).append(p)
     out = None
     for rel, parts in sorted(by_rel.items()):
@@ -463,9 +443,7 @@ def ann_hnsw_topk_indexed(
     partition regardless of how many distinct values the batch
     carries. NULL-valued queries match nothing (SQL equality).
     Mutually exclusive with ``filter_df``."""
-    meta = mio.read_json(mio.join(path, "meta.json"))
-    if meta is None or meta.get("kind") != "hnsw_vendored":
-        raise FileNotFoundError(f"no complete vendored-HNSW index at {path}")
+    meta = _read_meta(path)
     if filter_df is not None and query_filter_col is not None:
         raise ValueError(
             "filter_df (global allow-list) and query_filter_col (per-query "
@@ -594,14 +572,9 @@ def ann_hnsw_topk_indexed(
         if not pdf.empty:
             yield search_one(pdf)
 
-    part_rels: dict[str, str] = meta.get("part_rels", {}) or {}
-    base_rel = meta.get("base_rel", "graph")
     partials = None
-    for p in range(int(meta["n_parts"])):
-        d = os.path.join(path, part_rels.get(str(p), base_rel))
-        if not mio.is_dir(os.path.join(d, f"part={p}")):
-            continue
-        src = spark.read.parquet(d).filter(
+    for p, rel in gen.part_map(path, meta).items():
+        src = spark.read.parquet(os.path.join(path, rel)).filter(
             # no cast on the partition column — it would block the
             # PartitionFilters prune that makes this scan one dir
             F.col("part") == p
@@ -631,13 +604,7 @@ def ann_hnsw_topk_indexed(
         partials = branch if partials is None else partials.unionByName(branch)
     if partials is None:
         raise FileNotFoundError(f"no graph relations at {path}")
-    tomb = _tomb_dir(path, meta)
-    if mio.is_dir(tomb):
-        partials = partials.join(
-            spark.read.parquet(tomb).withColumnRenamed("id", "doc_id"),
-            "doc_id",
-            "left_anti",
-        )
+    partials = gen.drop_deleted(spark, partials, path, meta)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     out = partials.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
@@ -645,16 +612,6 @@ def ann_hnsw_topk_indexed(
     if round_to is not None:
         out = out.withColumn("score", F.round("score", round_to))
     return out.select("query_id", "doc_id", "score", "rank")
-
-
-def _fresh_upsert_rel(path: str) -> str:
-    """Smallest ``graph_u<n>`` whose dir doesn't exist — an upsert
-    generation never reuses a directory a live or grace-period meta
-    could name (the lexical `_fresh_delta` discipline)."""
-    n = 1
-    while os.path.isdir(os.path.join(path, f"graph_u{n}")):
-        n += 1
-    return f"graph_u{n}"
 
 
 def upsert_hnsw_index(
@@ -669,13 +626,10 @@ def upsert_hnsw_index(
     receiving partitions' kernels, run O(delta) graph inserts
     continuing each partition's stored RNG stream, and write the
     extended partitions into a FRESH generation dir that meta's
-    ``part_rels`` repoints at atomically. The meta write is the
-    commit point: a crash anywhere before it leaves the old index
-    fully servable (review r9 — the first cut removed the marker
-    before a dynamic partition overwrite, so a crash — or even a
-    delta routing to a previously EMPTY partition — destroyed a valid
-    index; it also deleted files under in-flight readers, who now get
-    one commit of grace). Runs under the commit lock: two concurrent
+    ``part_rels`` repoints at (review r9 — the first cut removed the
+    marker before a dynamic partition overwrite, so a crash — or even
+    a delta routing to a previously EMPTY partition — destroyed a
+    valid index). Runs under the commit lock: two concurrent
     upserts are read-modify-write on part_rels/fingerprint and the
     loser's rows would silently vanish otherwise. A delta routing to
     a partition with no stored graph builds a fresh kernel for it —
@@ -691,9 +645,7 @@ def _upsert_hnsw_locked(
     id_col: str,
     vec_col: str,
 ) -> dict[str, Any]:
-    meta = mio.read_json(mio.join(path, "meta.json"))
-    if meta is None or meta.get("kind") != "hnsw_vendored":
-        raise FileNotFoundError(f"no complete vendored-HNSW index at {path}")
+    meta = _read_meta(path)
     m, efc, dim, n_parts, seed = (
         meta["m"],
         meta["ef_construction"],
@@ -707,14 +659,12 @@ def _upsert_hnsw_locked(
     stored_ids = graph.filter(F.col("level") == 0).select(
         F.col("node_id").alias(id_col)
     )
-    tomb = _tomb_dir(path, meta)
-    if mio.is_dir(tomb):
+    dead = gen.tombstones(spark, path, meta, as_col=id_col)
+    if dead is not None:
         # a re-added deleted id would stay permanently masked by the
         # surviving tombstone while the merged fingerprint counted it
         # (the sign-tier contract)
-        stored_ids = stored_ids.unionByName(
-            spark.read.parquet(tomb).select(F.col("id").alias(id_col))
-        )
+        stored_ids = stored_ids.unionByName(dead)
     delta = new_vectors.select(
         F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v")
     ).withColumn("part", _part_expr("doc_id", n_parts))
@@ -772,8 +722,7 @@ def _upsert_hnsw_locked(
     # delta rows, coalesced into a single task — graph rows never
     # cross an exchange during maintenance either (the groupBy form
     # hash-exchanged every touched partition's whole graph)
-    part_rels0 = dict(meta.get("part_rels", {}) or {})
-    base_rel0 = meta.get("base_rel", "graph")
+    stored = gen.part_map(path, meta)
     out = None
     for p in touched:
         d_rows = delta.filter(F.col("part") == p).select(
@@ -786,11 +735,10 @@ def _upsert_hnsw_locked(
             F.lit(None).cast(StringType()).alias("meta_json"),
             F.col("v").alias("__delta_v"),
         )
-        gdir = os.path.join(path, part_rels0.get(str(p), base_rel0))
         branch = d_rows
-        if mio.is_dir(os.path.join(gdir, f"part={p}")):
+        if p in stored:
             g_rows = (
-                spark.read.parquet(gdir)
+                spark.read.parquet(os.path.join(path, stored[p]))
                 .filter(F.col("part") == p)  # PartitionFilters prune
                 .select(
                     F.col("part").cast("long").alias("part"),
@@ -810,19 +758,11 @@ def _upsert_hnsw_locked(
             extend_whole_partition, GRAPH_SCHEMA
         )
         out = branch if out is None else out.unionByName(branch)
-    rel = _fresh_upsert_rel(path)
+    rel = f"graph_u{gen.fresh_gen(path, 'graph_u')}"
     out.write.mode("overwrite").partitionBy("part").parquet(
         os.path.join(path, rel)
     )
     part_rels = dict(meta.get("part_rels", {}) or {})
-    base_rel = meta.get("base_rel", "graph")
-    superseded = [
-        [part_rels.get(str(p), base_rel), p]
-        for p in touched
-        if mio.is_dir(
-            os.path.join(path, part_rels.get(str(p), base_rel), f"part={p}")
-        )
-    ]
     for p in touched:
         part_rels[str(p)] = rel
     meta["part_rels"] = part_rels
@@ -837,13 +777,7 @@ def _upsert_hnsw_locked(
     meta["corpus"] = _merge_fingerprint(
         meta.get("corpus"), _corpus_fingerprint(new_vectors, id_col)
     )
-    # one-commit GC grace: delete the dirs the PREVIOUS commit
-    # superseded, record this commit's for the next one
-    gc_now = meta.get("gc_pending", [])
-    meta["gc_pending"] = superseded
-    mio.write_json(mio.join(path, "meta.json"), meta, indent=2)  # commit
-    _gc_dirs(path, gc_now)
-    return meta
+    return _commit(path, meta, [[stored[p], p] for p in touched if p in stored])
 
 
 def delete_from_hnsw_index(
@@ -857,35 +791,7 @@ def delete_from_hnsw_index(
     id; runs under the commit lock (a delete landing inside a
     concurrent compaction's window would be silently dropped)."""
     with mio.commit_lock(path):
-        meta = mio.read_json(mio.join(path, "meta.json"))
-        if meta is None or meta.get("kind") != "hnsw_vendored":
-            raise FileNotFoundError(f"no complete vendored-HNSW index at {path}")
-        tomb = _tomb_dir(path, meta)
-        existing: set[int] = set()
-        if mio.is_dir(tomb):
-            existing = {r["id"] for r in mio.read_parquet_rows(tomb)}
-        fresh = sorted(set(int(i) for i in ids) - existing)
-        if fresh:
-            spark.createDataFrame(
-                pd.DataFrame({"id": np.array(fresh, dtype=np.int64)})
-            ).write.mode("append").parquet(tomb)
-            meta["n_deleted"] = meta.get("n_deleted", 0) + len(fresh)
-            mio.write_json(mio.join(path, "meta.json"), meta, indent=2)
-        return meta
-
-
-def _fresh_compact_rel(path: str) -> str:
-    n = 1
-    while os.path.isdir(os.path.join(path, f"graph_c{n}")):
-        n += 1
-    return f"graph_c{n}"
-
-
-def _fresh_tomb_rel(path: str) -> str:
-    n = 1
-    while os.path.isdir(os.path.join(path, f"tombstones_g{n}")):
-        n += 1
-    return f"tombstones_g{n}"
+        return gen.delete(spark, path, _read_meta(path), ids, indent=2)
 
 
 def compact_hnsw_index(
@@ -900,9 +806,8 @@ def compact_hnsw_index(
     here pays the per-partition graph build, exactly what hnswlib
     users do when deleted mass grows). A rebuilt partition inserts
     id-ASC with a fresh seeded RNG, so it is BIT-IDENTICAL to
-    ``build_hnsw_index`` over its live rows (pinned in tests). Commit
-    = one atomic meta write; superseded dirs get one commit of reader
-    grace. No-op when there is nothing to fold.
+    ``build_hnsw_index`` over its live rows (pinned in tests). One
+    generation commit; no-op when there is nothing to fold.
 
     ``min_dead_fraction=None`` (default) is the full OPTIMIZE: every
     partition rebuilds to canonical form (``base_rel`` repointed,
@@ -920,11 +825,9 @@ def compact_hnsw_index(
     the churned shards — the same dirty-partition economics as delta
     compaction in table formats."""
     with mio.commit_lock(path):
-        meta = mio.read_json(mio.join(path, "meta.json"))
-        if meta is None or meta.get("kind") != "hnsw_vendored":
-            raise FileNotFoundError(f"no complete vendored-HNSW index at {path}")
-        tomb = _tomb_dir(path, meta)
-        has_tomb = mio.is_dir(tomb)
+        meta = _read_meta(path)
+        tomb_df = gen.tombstones(spark, path, meta, as_col="doc_id")
+        has_tomb = tomb_df is not None
         if min_dead_fraction is None:
             if not (meta.get("part_rels") or has_tomb):
                 return meta  # single clean generation already
@@ -937,11 +840,6 @@ def compact_hnsw_index(
             meta.get("seed", 42),
         )
         g0 = _read_graph(spark, path, meta).filter(F.col("level") == 0)
-        tomb_df = (
-            spark.read.parquet(tomb).withColumnRenamed("id", "doc_id")
-            if has_tomb
-            else None
-        )
         live = g0.select(
             "part",
             F.col("node_id").alias("doc_id"),
@@ -951,7 +849,6 @@ def compact_hnsw_index(
             live = live.join(tomb_df, "doc_id", "left_anti")
 
         part_rels = dict(meta.get("part_rels", {}) or {})
-        base_rel = meta.get("base_rel", "graph")
         if min_dead_fraction is None:
             dirty = list(range(int(meta["n_parts"])))
             n_removed = meta.get("n_deleted", 0)
@@ -1017,7 +914,7 @@ def compact_hnsw_index(
                 f"compaction would leave the HNSW index at {path} EMPTY "
                 "(every row tombstoned) — rebuild over a fresh corpus instead"
             )
-        rel = _fresh_compact_rel(path)
+        rel = f"graph_c{gen.fresh_gen(path, 'graph_c')}"
         # stored vectors are already normalized; build_one re-normalizes,
         # which is idempotent on unit vectors — the rebuilt partition is
         # bit-identical to a fresh build over the live rows
@@ -1029,23 +926,19 @@ def compact_hnsw_index(
         ).write.mode("overwrite").partitionBy("part").parquet(
             os.path.join(path, rel)
         )
-        superseded = []
-        for p in dirty:
-            old = part_rels.get(str(p), base_rel)
-            if mio.is_dir(os.path.join(path, old, f"part={p}")):
-                superseded.append([old, p])
+        stored = gen.part_map(path, meta)
+        superseded = [[stored[p], p] for p in dirty if p in stored]
+        old_tomb = meta.get("tomb_rel", gen.TOMBSTONES)
         if has_tomb:
             # the superseded tombstone relation ALWAYS enters
-            # gc_pending (crash resilience: if the immediate removal
-            # below doesn't run, the next commit's GC reclaims it);
-            # with survivors it additionally gets the one-commit
-            # reader grace, with none it is removed immediately below
-            # as well — leaving a fully-folded dir named "tombstones"
-            # on disk while meta drops tomb_rel would make the DEFAULT
-            # relation name resolve back to the stale dir (a re-added
-            # id would be rejected as a duplicate by the upsert
-            # disjointness check)
-            superseded.append([meta.get("tomb_rel", "tombstones"), None])
+            # gc_pending; with survivors it gets the one-commit reader
+            # grace, with none this commit reclaims it already —
+            # leaving a fully-folded dir named "tombstones" on disk
+            # while meta drops tomb_rel would make the DEFAULT relation
+            # name resolve back to the stale dir (a re-added id would
+            # be rejected as a duplicate by the upsert disjointness
+            # check)
+            superseded.append([old_tomb, None])
         if n_removed:
             meta["n_compacted_away"] = (
                 meta.get("n_compacted_away", 0) + n_removed
@@ -1074,7 +967,7 @@ def compact_hnsw_index(
                 # survivors move to a FRESH versioned relation; the
                 # meta commit swaps it in atomically (a crash before
                 # the commit leaves the old relation fully live)
-                new_tomb = _fresh_tomb_rel(path)
+                new_tomb = f"tombstones_g{gen.fresh_gen(path, 'tombstones_g')}"
                 spark.createDataFrame(
                     pd.DataFrame({"id": np.array(remaining, dtype=np.int64)})
                 ).write.mode("overwrite").parquet(
@@ -1085,16 +978,11 @@ def compact_hnsw_index(
             else:
                 meta.pop("n_deleted", None)
                 meta.pop("tomb_rel", None)
-        gc_now = meta.get("gc_pending", [])
-        meta["gc_pending"] = superseded
         # fingerprint: recompute over live ids is WRONG here for the
         # same reason as the sign tier (lineage identity — ensure
         # callers pass the ORIGINAL corpus); it stays as committed.
-        mio.write_json(mio.join(path, "meta.json"), meta, indent=2)  # commit
-        if has_tomb and (min_dead_fraction is None or not remaining):
-            # every mask is physically folded away; the tombstone dir
-            # goes with them immediately (the lifecycle's "cleared"
-            # contract, and the default-relation-name hazard above)
-            mio.remove_tree(tomb)
-        _gc_dirs(path, gc_now)
-        return meta
+        # When every mask is physically folded away the tombstone dir
+        # goes with this commit (the lifecycle's "cleared" contract,
+        # and the default-relation-name hazard above).
+        folded = has_tomb and (min_dead_fraction is None or not remaining)
+        return _commit(path, meta, superseded, drop=[old_tomb] if folded else ())

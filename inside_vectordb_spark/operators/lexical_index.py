@@ -16,19 +16,22 @@ ONCE at index time and never again. This module is that index-at-rest
   NOTHING that is O(corpus): the round-4 verdict's doclen shuffle is
   gone from the serving path.
 - ``df``: the dictionary (term, df), same bucketing, stored under a
-  VERSIONED directory (``df_v<N>``) named by ``meta.json`` — the
-  atomic meta write is the commit point for dictionary swaps, so a
+  VERSIONED directory (``df_v<N>``) named by ``meta.json``, so a
   crash mid-upsert can never pair a new dictionary with old meta or
-  vice versa (the ``_meta_io`` seam the module advertises).
+  vice versa.
 - ``doclen``: (doc_id, dl) generation + delta dirs named by
   ``meta.doclen_rels`` — kept for introspection/stats; the serving
   path no longer reads it.
 - ``meta.json`` (via the atomic ``_meta_io`` seam): k-invariant
   corpus stats (n_docs, avgdl) + a corpus fingerprint (count, id
   range, AND total chars — in-place text edits at unchanged ids
-  invalidate the cache), written LAST as the completeness marker;
-  ``ensure_lexical_index`` rebuilds on a changed corpus, params, or
-  layout version.
+  invalidate the cache); ``ensure_lexical_index`` rebuilds on a
+  changed corpus, params, or layout version.
+
+Every build, upsert, compaction and norm build is a generation commit
+(fresh relation names, meta as the commit point, one-commit GC grace
+for the relations the previous meta named) as described in
+``inside_vectordb_spark/_generations.py``.
 
 Because tokenization and counting are deterministic, the stored index
 search is BIT-IDENTICAL to the fresh ``bm25_topk`` — the registered
@@ -43,6 +46,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from inside_vectordb_spark import _generations as gen
 from inside_vectordb_spark import _meta_io as mio
 from inside_vectordb_spark.functions.text import token_count, tokenize
 from inside_vectordb_spark.operators.bm25 import BM25_B, BM25_K1
@@ -59,30 +63,28 @@ def _term_bucket(col) -> F.Column:
     return F.pmod(F.hash(col), F.lit(N_TERM_BUCKETS))
 
 
-def _fresh_gen(path: str) -> int:
-    """Smallest generation n whose build dirs don't exist yet — a
-    rebuild NEVER writes into a directory a live meta could name, so
-    the old index stays fully servable until the meta commit."""
-    n = 1
-    while any(
-        os.path.isdir(os.path.join(path, f"{fam}_b{n}"))
-        for fam in ("postings", "df", "doclen")
-    ) or os.path.isdir(os.path.join(path, f"df_v{n}")):
-        n += 1
-    return n
+# the relation families this index owns (GC sweeps only these)
+_FAMILIES = ("df", "postings", "doclen", "docnorm")
 
 
-def _fresh_delta(path: str, fam: str, start: int) -> str:
-    """Smallest ``<fam>_d<n>`` (n ≥ start) whose dir doesn't exist —
-    a length-based name alone collided after COMPACTION: the rel list
-    shrinks to one while the superseded ``_d1`` dir survives under
-    the one-commit grace, and an upsert reusing that name would
-    overwrite a directory an in-flight reader may still hold (found
-    by tests/test_compaction.py)."""
-    n = start
-    while os.path.isdir(os.path.join(path, f"{fam}_d{n}")):
-        n += 1
-    return f"{fam}_d{n}"
+def _fresh_build_gen(path: str) -> int:
+    """One number for a build or compaction's sibling relations."""
+    return gen.fresh_gen(path, "postings_b", "df_b", "doclen_b", "df_v")
+
+
+def _rels(meta: dict) -> set[str]:
+    """Every relation a meta names."""
+    return (
+        set(meta.get("postings_rels", []))
+        | set(meta.get("doclen_rels", []))
+        | {meta.get("df_rel"), meta.get("docnorm_rel")}
+    ) - {None}
+
+
+def _commit(path: str, meta: dict, prev: dict, families=_FAMILIES) -> dict:
+    """Commit ``meta``; the relations ``prev`` (the superseded meta)
+    named keep their one-commit grace."""
+    return gen.commit(path, meta, _rels(meta) | _rels(prev), families)
 
 
 def _docnorm_dir(path: str, meta: dict) -> str:
@@ -115,43 +117,8 @@ def _validate_serving(meta: dict | None, path: str) -> dict:
 
 
 def _df_dir(path: str, meta: dict) -> str:
-    """Resolve the live dictionary directory through meta.json — the
-    versioned name makes the atomic meta write the commit point for
-    dictionary swaps."""
+    """The live dictionary directory, resolved through meta.json."""
     return os.path.join(path, meta.get("df_rel", "df"))
-
-
-def _gc_dirs(path: str, keep: set[str]) -> None:
-    """Remove superseded index relations (runs AFTER the meta commit,
-    so a crash here leaves only harmless orphans, never a torn
-    index). Covers every directory family this index owns — a
-    rebuild's old generation, superseded dictionaries, and derived
-    docnorm generations."""
-    try:
-        entries = os.listdir(path)
-    except FileNotFoundError:
-        return
-    for name in entries:
-        versioned = (
-            name in ("df", "postings", "doclen", "docnorm")
-            or name.startswith("df_")
-            or name.startswith("postings_")
-            or name.startswith("doclen_")
-            or name.startswith("docnorm_")
-        )
-        if versioned and name not in keep:
-            mio.remove_tree(os.path.join(path, name))
-
-
-def _read_rels(spark: SparkSession, path: str, rels: list[str]) -> DataFrame:
-    """Union parquet relations named by a meta rel list — THE
-    rel-resolution idiom, in one place (review r9: three hand-rolled
-    copies invited divergence if resolution rules ever change)."""
-    out = None
-    for rel in rels:
-        d = spark.read.parquet(os.path.join(path, rel))
-        out = d if out is None else out.unionByName(d)
-    return out
 
 
 def _read_postings(spark: SparkSession, path: str, meta: dict) -> DataFrame:
@@ -160,7 +127,7 @@ def _read_postings(spark: SparkSession, path: str, meta: dict) -> DataFrame:
     (delta written, meta not yet swapped) reads as the pre-upsert
     index, never a torn one. Bucket-pruning filters push into every
     member scan independently."""
-    return _read_rels(spark, path, meta.get("postings_rels", ["postings"]))
+    return gen.read_rels(spark, path, meta.get("postings_rels", ["postings"]))
 
 
 def build_lexical_index(
@@ -205,9 +172,9 @@ def _build_locked(
     from inside_vectordb_spark.operators.ann_index import _corpus_fingerprint
     from inside_vectordb_spark.operators.bm25 import doc_token_stream
 
-    prev_meta = mio.read_json(mio.join(path, "meta.json")) or {}
-    gen = _fresh_gen(path)
-    post_rel, df_rel, dl_rel = f"postings_b{gen}", f"df_b{gen}", f"doclen_b{gen}"
+    prev_meta = gen.read_meta(path) or {}
+    n = _fresh_build_gen(path)
+    post_rel, df_rel, dl_rel = f"postings_b{n}", f"df_b{n}", f"doclen_b{n}"
     d = docs.select(
         F.col(id_col).alias("doc_id"), F.lower(F.col(text_col)).alias("__t")
     )
@@ -218,11 +185,9 @@ def _build_locked(
         .agg(F.count("*").alias("tf"))
         .withColumn("pb", _term_bucket(F.col("term")))
     )
-    # every relation of a rebuild lands in FRESH generation dirs: the
-    # live index (named by the current meta) is never overwritten in
-    # place, so a crash anywhere before the meta commit leaves the old
-    # index fully servable (review r6s2: the in-place overwrite paired
-    # old meta with torn data)
+    # every relation of a rebuild lands in FRESH generation dirs
+    # (review r6s2: the in-place overwrite paired old meta with torn
+    # data)
     tf.repartition("pb").write.mode("overwrite").partitionBy("pb").parquet(
         os.path.join(path, post_rel)
     )
@@ -266,24 +231,13 @@ def _build_locked(
         else _corpus_fingerprint(docs, id_col, content_col=text_col),
     }
     meta["postings_rels"] = [post_rel]
-    mio.write_json(mio.join(path, "meta.json"), meta)
-    # one-commit GRACE for the superseded generation: a reader that
-    # resolved the PREVIOUS meta may still hold lazy frames over its
-    # dirs — they survive until the NEXT commit (review r8: immediate
-    # GC crashed in-flight readers mid-scan)
-    prev_keep = (
-        set(prev_meta.get("postings_rels", []))
-        | set(prev_meta.get("doclen_rels", []))
-        | {prev_meta.get("df_rel"), prev_meta.get("docnorm_rel")}
-    ) - {None}
-    _gc_dirs(path, {df_rel, post_rel, dl_rel} | prev_keep)
-    return meta
+    return _commit(path, meta, prev_meta)
 
 
 def ensure_lexical_index(docs: DataFrame, path: str, **kw) -> dict:
     from inside_vectordb_spark.operators.ann_index import _corpus_fingerprint
 
-    meta = mio.read_json(mio.join(path, "meta.json"))
+    meta = gen.read_meta(path)
     fp = _corpus_fingerprint(
         docs, kw.get("id_col", "doc_id"), content_col=kw.get("text_col", "text")
     )
@@ -317,7 +271,7 @@ def bm25_topk_indexed(
     aggregation — nothing O(corpus) moves. Identical scoring
     arithmetic to ``bm25_scores``, so results match the fresh path
     bit-for-bit."""
-    meta = _validate_serving(mio.read_json(mio.join(path, "meta.json")), path)
+    meta = _validate_serving(gen.read_meta(path), path)
     q = queries.select(
         F.col(qid_col).alias("query_id"), F.lower(F.col(qtext_col)).alias("__qt")
     )
@@ -368,25 +322,23 @@ def build_tfidf_norms(spark: SparkSession, path: str) -> None:
     is exactly why engines precompute it at index time. Derived from
     the stored postings + dictionary (no corpus re-scan)."""
     from inside_vectordb_spark.operators.tfidf import smooth_idf
-    # the SAME meta-as-commit-point protocol every other relation in
-    # this module uses (review r7): norms land in a fresh generation
-    # dir and the atomic meta write REPOINTS docnorm_rel — writing
-    # into the live pointed dir made directory existence the
-    # completeness marker, so a killed build left a torn docnorm that
-    # silently dropped documents from every TF-IDF result forever
-    # the norm build is a read-modify-write commit on meta.json —
-    # serialized by the index commit lock like every other commit in
-    # this module (review r8: two lazy builders raced the gen bump)
+    # norms land in a fresh generation dir that the meta commit
+    # repoints docnorm_rel at (review r7: writing into the live pointed
+    # dir made directory existence the completeness marker, so a
+    # killed build left a torn docnorm that silently dropped documents
+    # from every TF-IDF result forever)
     with mio.commit_lock(path):
-        meta = _validate_serving(
-            mio.read_json(mio.join(path, "meta.json")), path
-        )
+        meta = _validate_serving(gen.read_meta(path), path)
+        prev = dict(meta)
         postings = _read_postings(spark, path, meta)
         dft = spark.read.parquet(_df_dir(path, meta)).select("term", "df")
         n_docs = float(meta["n_docs"])
         wd = (1.0 + F.log("tf")) * smooth_idf(F.col("df"), n_docs)
-        gen = int(meta.get("docnorm_gen", 0)) + 1
-        rel = f"docnorm_g{gen}"
+        # the on-disk probe, not a counter in meta: a rebuild writes a
+        # meta without one, and restarting at g1 overwrote a norm dir
+        # the pre-rebuild meta still named during its grace commit
+        n = gen.fresh_gen(path, "docnorm_g")
+        rel = f"docnorm_g{n}"
         (
             postings.join(dft, "term")
             .select("doc_id", (wd * wd).alias("w2"))
@@ -395,18 +347,10 @@ def build_tfidf_norms(spark: SparkSession, path: str) -> None:
             .write.mode("overwrite")
             .parquet(os.path.join(path, rel))
         )
-        superseded = meta.get("docnorm_rel")
-        meta["docnorm_rel"], meta["docnorm_gen"] = rel, gen
-        mio.write_json(mio.join(path, "meta.json"), meta)
-    # one-commit grace (same rule as the rebuild GC): the directly
-    # superseded norm dir survives until the NEXT commit; anything
-    # older goes
-    for name in os.listdir(path):
-        if (
-            name.startswith("docnorm_g")
-            and name not in (rel, superseded)
-        ):
-            mio.remove_tree(os.path.join(path, name))
+        meta["docnorm_rel"], meta["docnorm_gen"] = rel, n
+        # the norm build sweeps only its own family: the other
+        # relations' grace runs from the last data commit
+        _commit(path, meta, prev, families=("docnorm_g",))
 
 
 def tfidf_topk_indexed(
@@ -423,11 +367,11 @@ def tfidf_topk_indexed(
     precomputed ``docnorm`` relation (built once from the full
     dictionary), and the query side stays a broadcast. Same
     arithmetic as ``operators/tfidf.py:tfidf_scores``."""
-    meta = _validate_serving(mio.read_json(mio.join(path, "meta.json")), path)
+    meta = _validate_serving(gen.read_meta(path), path)
     if not mio.is_dir(_docnorm_dir(path, meta)):
         build_tfidf_norms(spark, path)
         # the build COMMITS by repointing docnorm_rel — re-read meta
-        meta = _validate_serving(mio.read_json(mio.join(path, "meta.json")), path)
+        meta = _validate_serving(gen.read_meta(path), path)
     n_docs = float(meta["n_docs"])
     q = queries.select(
         F.col(qid_col).alias("query_id"), F.lower(F.col(qtext_col)).alias("__qt")
@@ -520,11 +464,8 @@ def upsert_lexical_index(
     - doclen: the delta lands in a fresh ``doclen_d<N>`` dir named by
       meta, never an in-place append (retry-safe).
 
-    The ATOMIC meta.json write is the single commit point: readers
-    resolve both the dictionary dir and the postings dir list through
-    meta, so a crash at any earlier step leaves the pre-upsert index
-    fully intact (orphan dirs get GC'd after the next successful
-    commit) — no window where delta postings pair with base meta.
+    One generation commit (``_generations``): no window where delta
+    postings pair with base meta.
 
     Contract (FAISS ``add``): delta ids disjoint from stored ids. The
     merged fingerprint makes a later ``ensure_lexical_index`` over
@@ -548,44 +489,33 @@ def compact_lexical_index(spark: SparkSession, path: str) -> dict:
     pass):
 
     - under the commit lock, write (⋃ postings rels) and (⋃ doclen
-      rels) into fresh ``_b<gen>`` dirs (never touching any dir the
-      live meta names — crash anywhere before the commit leaves the
-      old index fully servable, generation-dir discipline);
-    - commit by atomically rewriting meta.json with single-element
-      rel lists; dictionary, norms, and corpus stats are unchanged
-      (compaction moves no logical rows);
-    - GC superseded dirs with the same one-commit grace the
-      build/upsert paths give in-flight readers.
+      rels) into fresh ``_b<gen>`` dirs;
+    - commit meta.json with single-element rel lists; dictionary,
+      norms, and corpus stats are unchanged (compaction moves no
+      logical rows).
 
     Search results are BIT-IDENTICAL before and after (same rows,
     different physical layout) — pinned against the shared BM25
     oracle in tests and on the driver via ``bm25_compacted_topk``.
     Idempotent: a compacted index is a no-op (returned unchanged)."""
     with mio.commit_lock(path, timeout_sec=600.0):
-        meta = _validate_serving(mio.read_json(mio.join(path, "meta.json")), path)
+        meta = _validate_serving(gen.read_meta(path), path)
         post_rels = list(meta.get("postings_rels", ["postings"]))
         dl_rels = list(meta.get("doclen_rels", ["doclen"]))
         if len(post_rels) <= 1 and len(dl_rels) <= 1:
             return meta
-        gen = _fresh_gen(path)
-        post_rel, dl_rel = f"postings_b{gen}", f"doclen_b{gen}"
+        n = _fresh_build_gen(path)
+        post_rel, dl_rel = f"postings_b{n}", f"doclen_b{n}"
         _read_postings(spark, path, meta).repartition("pb").write.mode(
             "overwrite"
         ).partitionBy("pb").parquet(os.path.join(path, post_rel))
-        _read_rels(spark, path, dl_rels).write.mode("overwrite").parquet(
+        gen.read_rels(spark, path, dl_rels).write.mode("overwrite").parquet(
             os.path.join(path, dl_rel)
         )
-        prev_keep = set(post_rels) | set(dl_rels)
+        prev = dict(meta)
         meta["postings_rels"] = [post_rel]
         meta["doclen_rels"] = [dl_rel]
-        mio.write_json(mio.join(path, "meta.json"), meta)  # commit point
-        # one-commit grace: readers on the previous meta keep their
-        # dirs until the NEXT commit
-        _gc_dirs(
-            path,
-            {post_rel, dl_rel, meta["df_rel"], meta["docnorm_rel"]} | prev_keep,
-        )
-        return meta
+        return _commit(path, meta, prev)
 
 
 def _upsert_locked(
@@ -598,7 +528,7 @@ def _upsert_locked(
     )
     from inside_vectordb_spark.operators.bm25 import doc_token_stream
 
-    meta = _validate_serving(mio.read_json(mio.join(path, "meta.json")), path)
+    meta = _validate_serving(gen.read_meta(path), path)
     spark = new_docs.sparkSession
     d = new_docs.select(
         F.col(id_col).alias("doc_id"), F.lower(F.col(text_col)).alias("__t")
@@ -608,7 +538,7 @@ def _upsert_locked(
     # postings and double-count df/n_docs, roughly doubling affected
     # BM25 weights with no error. Stored ids come from the doclen
     # generation+delta dirs — O(n_docs) narrow rows, never postings.
-    stored_ids = _read_rels(
+    stored_ids = gen.read_rels(
         spark, path, meta.get("doclen_rels", ["doclen"])
     ).select("doc_id")
     _assert_disjoint_delta(stored_ids, d.select("doc_id"), path)
@@ -620,8 +550,12 @@ def _upsert_locked(
         .withColumn("pb", _term_bucket(F.col("term")))
     )
     tf.persist()
+    prev = dict(meta)
     rels = list(meta.get("postings_rels", ["postings"]))
-    delta_rel = _fresh_delta(path, "postings", len(rels))
+    # start at the rel count, then probe: after a compaction the list
+    # shrinks to one while the superseded ``_d1`` dir survives its
+    # grace (found by tests/test_compaction.py)
+    delta_rel = f"postings_d{gen.fresh_gen(path, 'postings_d', start=len(rels))}"
     tf.repartition("pb").write.mode("overwrite").partitionBy("pb").parquet(
         os.path.join(path, delta_rel)
     )
@@ -640,16 +574,12 @@ def _upsert_locked(
         n = int(old_df_rel.rsplit("_v", 1)[1]) + 1
     except (IndexError, ValueError):
         n = 1
-    # probe the filesystem like _fresh_delta: after a rebuild resets
-    # df_rel to df_b<gen>, a counter restarted at v1 would overwrite a
+    # probe the filesystem: after a rebuild resets df_rel to
+    # df_b<gen>, a counter restarted at v1 would overwrite a
     # grace-protected dictionary dir (and its derived docnorm) that an
     # in-flight reader on the pre-rebuild meta may still hold
     # (review r9 — the _d<N> collision class, for the _v names)
-    while os.path.isdir(os.path.join(path, f"df_v{n}")) or os.path.isdir(
-        os.path.join(path, f"docnorm_df_v{n}")
-    ):
-        n += 1
-    new_df_rel = f"df_v{n}"
+    new_df_rel = f"df_v{gen.fresh_gen(path, 'df_v', 'docnorm_df_v', start=n)}"
     merged.repartition("pb").write.mode("overwrite").partitionBy("pb").parquet(
         os.path.join(path, new_df_rel)
     )
@@ -658,7 +588,7 @@ def _upsert_locked(
     # an in-place append would mutate the pre-upsert index before the
     # commit point and double-append on a retried crash
     dl_rels = list(meta.get("doclen_rels", ["doclen"]))
-    dl_delta_rel = _fresh_delta(path, "doclen", len(dl_rels))
+    dl_delta_rel = f"doclen_d{gen.fresh_gen(path, 'doclen_d', start=len(dl_rels))}"
     dl.write.mode("overwrite").parquet(os.path.join(path, dl_delta_rel))
     row = dl.agg(
         F.count("*").alias("n"),
@@ -687,18 +617,6 @@ def _upsert_locked(
     meta["doclen_rels"] = dl_rels + [dl_delta_rel]
     # df changed → the derived norms are stale: invalidate by
     # REPOINTING meta at the next docnorm generation (no fs mutation
-    # before the commit — a crash here leaves the old index intact,
-    # old docnorm included; the old dir becomes a post-commit orphan)
-    old_docnorm = meta.get("docnorm_rel")
+    # before the commit)
     meta["docnorm_rel"] = f"docnorm_{new_df_rel}"
-    mio.write_json(mio.join(path, "meta.json"), meta)  # the commit point
-    # one-commit grace for the superseded dictionary/norm dirs — an
-    # in-flight reader on the previous meta keeps its files until the
-    # NEXT commit (review r8)
-    _gc_dirs(
-        path,
-        set(meta["postings_rels"])
-        | set(meta["doclen_rels"])
-        | ({new_df_rel, old_df_rel, old_docnorm} - {None}),
-    )
-    return meta
+    return _commit(path, meta, prev)

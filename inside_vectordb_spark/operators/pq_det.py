@@ -46,6 +46,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from inside_vectordb_spark import _generations as gen
 from inside_vectordb_spark import _meta_io as mio
 from inside_vectordb_spark.functions.vector import (
     as_double_array,
@@ -273,7 +274,7 @@ def ensure_pq_det_index(
     # the base corpus; a rebuild also compacts tombstones away (FAISS
     # retrain semantics)
     cents_sub.write.mode("overwrite").parquet(os.path.join(path, "cents"))
-    mio.remove_tree(os.path.join(path, "tombstones"))
+    gen.remove_rels(path, gen.TOMBSTONES)
     mio.write_json(mio.join(path, "meta.json"), want)
     return path
 
@@ -362,12 +363,9 @@ def delete_from_pq_det_index(
     spark: SparkSession, path: str, ids: "list[int] | DataFrame"
 ) -> dict:
     """FAISS ``remove_ids`` on the PQ tier: tombstone doc ids WITHOUT
-    rewriting codes — deletes append to a ``tombstones`` parquet that
-    search anti-joins out of the ADC scan (AQE-chosen strategy: the
-    accumulated set can be corpus-sized after crawl-scale delete
-    campaigns, so no forced broadcast). The
-    codebook is untouched (FAISS never retrains on remove). O(deleted)
-    bytes; a rebuild compacts tombstones away. Idempotent per id.
+    rewriting codes (``_generations.delete``). The codebook is
+    untouched (FAISS never retrains on remove). O(deleted) bytes; a
+    rebuild compacts tombstones away. Idempotent per id.
 
     ``ids`` is a DataFrame with one LONG column (stays on the
     executors end to end — a delete set can be O(corpus) at crawl
@@ -381,30 +379,7 @@ def delete_from_pq_det_index(
         meta = mio.read_json(mio.join(path, "meta.json"))
         if meta is None or meta.get("kind") != "pq_det":
             raise FileNotFoundError(f"no complete pq_det index at {path}")
-        tomb = os.path.join(path, "tombstones")
-        if isinstance(ids, DataFrame):
-            ids_df = ids.select(ids.columns[0]).toDF("id").distinct()
-        else:
-            ids_df = spark.createDataFrame(
-                [(int(i),) for i in ids], "id long"
-            ).distinct()
-        if mio.is_dir(tomb):
-            # No broadcast hint: the ACCUMULATED tombstone table is
-            # O(total deleted) — after crawl-scale delete campaigns it can
-            # be corpus-sized, and a forced broadcast would blow the
-            # driver. AQE picks broadcast while it is actually small
-            # (advice r6).
-            ids_df = ids_df.join(
-                spark.read.parquet(tomb), "id", "left_anti"
-            )
-        fresh_rows = ids_df.persist()
-        n_fresh = fresh_rows.count()
-        if n_fresh:
-            fresh_rows.write.mode("append").parquet(tomb)
-            meta["n_deleted"] = meta.get("n_deleted", 0) + n_fresh
-            mio.write_json(mio.join(path, "meta.json"), meta)
-        fresh_rows.unpersist()
-        return meta
+        return gen.delete(spark, path, meta, ids)
 
 
 def ann_pq_det_topk_indexed(
@@ -434,13 +409,7 @@ def ann_pq_det_topk_indexed(
     )
     cents = _centroids(corpus, id_col, vec_col, centroid_stride, n_centroids_cap)
     cents_sub = _sub_explode(cents, "__cv", "__cv", m_sub, dim)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    tomb = os.path.join(path, "tombstones")
-    if mio.is_dir(tomb):
-        dead = spark.read.parquet(tomb).select(F.col("id").alias("doc_id"))
-        # no broadcast hint: tombstones grow until the next rebuild —
-        # AQE broadcasts while small, shuffles when they aren't
-        codes = codes.join(dead, "doc_id", "left_anti")
+    codes = gen.drop_deleted(spark, spark.read.parquet(os.path.join(path, "codes")), path)
     return _adc_search(
         queries, codes, corpus, cents_sub, k, cand_k,
         query_id_col, id_col, vec_col, m_sub, dim,
@@ -473,14 +442,10 @@ def pq_det_refine_sweep(
     )
     cents = _centroids(corpus, id_col, vec_col, centroid_stride, n_centroids_cap)
     cents_sub = _sub_explode(cents, "__cv", "__cv", m_sub, dim)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
     # the sweep measures the index state SEARCH serves: tombstoned
     # docs must not occupy candidate slots or set top1_score
     # (review r8 — the search path anti-joined, the sweep didn't)
-    tomb = os.path.join(path, "tombstones")
-    if mio.is_dir(tomb):
-        dead = spark.read.parquet(tomb).select(F.col("id").alias("doc_id"))
-        codes = codes.join(dead, "doc_id", "left_anti")
+    codes = gen.drop_deleted(spark, spark.read.parquet(os.path.join(path, "codes")), path)
     qb, ranked = _adc_ranked(
         queries, codes, cents_sub, query_id_col, vec_col, m_sub, dim
     )

@@ -152,13 +152,9 @@ def _quality_parts(text_col: str):
     handful, with identical Catalyst semantics — every float literal
     carries the ``D`` suffix so arithmetic stays DOUBLE (a bare SQL
     ``0.25`` would parse as DECIMAL and change the rounding chain)."""
-    from ..functions.vector import _simple
+    from ..functions.vector import sql_ident
 
-    if not _simple(text_col):
-        # Backtick-quote non-simple identifiers before interpolating
-        # into parsed SQL (advice r12): a name with dots/spaces would
-        # mis-parse or resolve as a struct-field access.
-        text_col = "`" + text_col.replace("`", "``") + "`"
+    text_col = sql_ident(text_col)
     toks = r"array_remove(split(%s, '[ \\t\\n\\f\\r]+'), '')" % text_col
     n = f"CAST(size({toks}) AS DOUBLE)"
     n_alpha = f"length(regexp_replace({text_col}, '[^A-Za-z]', ''))"

@@ -19,6 +19,7 @@ from inside_vectordb_spark.operators.ann_index import (
     ensure_ivf_index,
     ensure_lsh_index,
 )
+from inside_vectordb_spark import _generations as gen
 from inside_vectordb_spark import _meta_io as mio
 from inside_vectordb_spark.registry import register
 
@@ -333,7 +334,7 @@ def ann_hnsw_vendored_lifecycle_q(spark: SparkSession, sf_dir: str) -> DataFrame
         _rebuild,
         meta_stale=lambda m: (
             not str(m.get("base_rel", "")).startswith("graph_c")
-            or mio.is_dir(mio.join(art, "tombstones"))
+            or gen.has_tombstones(art)
         ),
     )
     return ann_hnsw_topk_indexed(
@@ -666,7 +667,7 @@ def ann_hnsw_lifecycle_invariants_q(spark: SparkSession, sf_dir: str) -> DataFra
     res = ann_hnsw_vendored_lifecycle_q(spark, sf_dir)  # ensures the chain ran
     art = mio.art_path("hnsw_lifecycle", sf_dir)
     meta = mio.read_json(mio.join(art, "meta.json"))
-    tombstones_cleared = not mio.is_dir(mio.join(art, "tombstones"))
+    tombstones_cleared = not gen.has_tombstones(art)
     generations_folded = not meta.get("part_rels") and str(
         meta.get("base_rel", "")
     ).startswith("graph_c")
@@ -1289,7 +1290,7 @@ def ann_signlsh_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         _rebuild_compacted,
         meta_stale=lambda m: (
-            not m.get("compacted") or mio.is_dir(mio.join(art, "tombstones"))
+            not m.get("compacted") or gen.has_tombstones(art)
         ),
     )
     return ann_sign_topk_indexed(

@@ -1,0 +1,332 @@
+"""The shared index commit protocol (``inside_vectordb_spark/_generations.py``).
+
+- a crash-injection matrix over the generation-committing ops of the
+  HNSW and lexical tiers: each op is failed once inside the meta write
+  (generation written, not committed) and once inside GC (committed,
+  nothing reclaimed). The crashed index must serve exactly the pre-op
+  or the post-op answer, never a deleted id, and after the next
+  successful commit — the retry of an uncommitted op, the following
+  op after a committed one — it must serve and lay out its data dirs
+  like a crash-free run of the same sequence;
+- the tombstone count stays exact when tombstones landed without a
+  meta write;
+- a TF-IDF norm build after a rebuild never reuses a relation the
+  pre-rebuild meta still names;
+- a delete after a tombstone-folding compaction survives the next
+  commit's GC.
+"""
+
+from __future__ import annotations
+
+import os
+import re
+import shutil
+
+import numpy as np
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+import inside_vectordb_spark.io as eio
+from inside_vectordb_spark import _generations as gen
+from inside_vectordb_spark.operators import hnsw_index as hi
+from inside_vectordb_spark.operators import lexical_index as lx
+from tests.conftest import SF_DIR
+
+DIM = 16
+K = 5
+HNSW = dict(dim=DIM, m=8, ef_construction=40, n_parts=2, seed=7)
+
+
+def _vectors(spark, ids, seed=0):
+    rng = np.random.default_rng(seed)
+    vecs = rng.standard_normal((len(ids), DIM)).astype(np.float32)
+    return spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.asarray(ids, dtype=np.int64), "embedding": list(vecs)})
+    )
+
+
+def _hnsw_answer(spark, path, queries):
+    rows = hi.ann_hnsw_topk_indexed(spark, queries, path, k=K, ef_search=64).collect()
+    return sorted(tuple(r) for r in rows)
+
+
+def _data_dirs(path):
+    """Relative dirs holding parquet data (husks of reclaimed
+    relations, which keep only ``_SUCCESS``, are not data)."""
+    out = []
+    for root, _dirs, files in os.walk(path):
+        if any(f.endswith(".parquet") for f in files):
+            out.append(os.path.relpath(root, path))
+    return sorted(out)
+
+
+def _renumbered(dirs):
+    """Generation numbers erased: a crashed attempt consumes the names
+    it wrote, so its retry commits the next free number."""
+    return sorted(re.sub(r"(?<=[a-z_])\d+(?=/|$)", "#", d) for d in dirs)
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _few_shuffle_partitions(spark):
+    """The indexes here are tiny: one shuffle partition cuts the task
+    overhead of every op the matrix repeats (about a quarter of its
+    run time); the commit protocol does not depend on it."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    yield
+    spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _crashing(monkeypatch, point):
+    def boom(*a, **kw):
+        raise _Crash(point)
+
+    monkeypatch.setattr(gen, {"meta": "write_meta", "gc": "gc"}[point], boom)
+
+
+# --- HNSW --------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def hnsw_case(spark, tmp_path_factory):
+    """A maintained index — base build, one upsert generation, and
+    tombstones covering a quarter of partition 0 (so a partial
+    compaction at 0.2 rebuilds that shard only) — built once and
+    copied per case."""
+    root = tmp_path_factory.mktemp("gen_hnsw")
+    template = str(root / "template")
+    base = _vectors(spark, range(160), seed=1)
+    hi.build_hnsw_index(base, template, **HNSW)
+    hi.upsert_hnsw_index(spark, _vectors(spark, range(160, 170), seed=2), template)
+    parts = {
+        int(r["vec_id"]): int(r["p"])
+        for r in base.select("vec_id", hi._part_expr("vec_id", 2).alias("p")).collect()
+    }
+    p0 = [i for i, p in sorted(parts.items()) if p == 0]
+    p1 = [i for i, p in sorted(parts.items()) if p == 1]
+    deleted = p0[: len(p0) // 4] + p1[:1]
+    hi.delete_from_hnsw_index(spark, template, deleted)
+    queries = base.filter(F.col("vec_id") % 16 == 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    return {
+        "root": root,
+        "template": template,
+        "queries": queries,
+        "deleted": set(deleted),
+        "pre": _hnsw_answer(spark, template, queries),
+        "next_delete": p0[len(p0) // 4 : len(p0) // 4 + 3],
+        "crash_free": {},
+    }
+
+
+HNSW_OPS = {
+    "upsert": lambda spark, c, path: hi.upsert_hnsw_index(
+        spark, _vectors(spark, range(170, 180), seed=3), path
+    ),
+    "delete": lambda spark, c, path: hi.delete_from_hnsw_index(
+        spark, path, c["next_delete"]
+    ),
+    "compact": lambda spark, c, path: hi.compact_hnsw_index(spark, path),
+    "compact_partial": lambda spark, c, path: hi.compact_hnsw_index(
+        spark, path, min_dead_fraction=0.2
+    ),
+}
+
+
+def _hnsw_next_commit(spark, path):
+    hi.upsert_hnsw_index(spark, _vectors(spark, range(180, 185), seed=4), path)
+
+
+def _crash_free(c, op, run_op, next_commit, answer):
+    """Answers and data dirs of the crash-free sequence, after the op
+    and after the next commit; one run per op, shared by both points."""
+    if op not in c["crash_free"]:
+        path = str(c["root"] / f"free_{op}")
+        shutil.copytree(c["template"], path)
+        run_op(path)
+        after_op = (answer(path), _data_dirs(path))
+        next_commit(path)
+        c["crash_free"][op] = (after_op, (answer(path), _data_dirs(path)))
+    return c["crash_free"][op]
+
+
+def _check_crash(c, op, point, run_op, next_commit, answer, pre, monkeypatch):
+    """Crash ``op`` at ``point``, check the crashed index, recover with
+    the next successful commit and compare with the crash-free run.
+    Returns the crashed answer."""
+    (post, dirs_op), (final, dirs_next) = _crash_free(c, op, run_op, next_commit, answer)
+    path = str(c["root"] / f"crash_{op}_{point}")
+    shutil.copytree(c["template"], path)
+    with monkeypatch.context() as mp:
+        _crashing(mp, point)
+        with pytest.raises(_Crash):
+            run_op(path)
+    crashed = answer(path)
+    if point == "meta":
+        assert crashed == pre
+        run_op(path)  # the retry is the next successful commit
+        assert answer(path) == post
+        assert _renumbered(_data_dirs(path)) == _renumbered(dirs_op)
+    else:
+        assert crashed == post
+        next_commit(path)
+        assert answer(path) == final
+        assert _data_dirs(path) == dirs_next
+    return crashed
+
+
+@pytest.mark.parametrize(
+    "op,point",
+    [(op, point) for op in HNSW_OPS for point in ("meta", "gc")
+     # a delete supersedes nothing, so it has no GC step
+     if (op, point) != ("delete", "gc")],
+)
+def test_hnsw_crash_matrix(spark, hnsw_case, monkeypatch, op, point):
+    c = hnsw_case
+    crashed = _check_crash(
+        c, op, point,
+        lambda path: HNSW_OPS[op](spark, c, path),
+        lambda path: _hnsw_next_commit(spark, path),
+        lambda path: _hnsw_answer(spark, path, c["queries"]),
+        c["pre"], monkeypatch,
+    )
+    assert not {r[1] for r in crashed} & c["deleted"]
+    if op == "delete":
+        (post, _), _ = c["crash_free"][op]
+        assert not {r[1] for r in post} & set(c["next_delete"])
+
+
+def test_delete_recounts_tombstones_written_without_meta(spark, tmp_path):
+    """Tombstones that landed without their meta write (a crash between
+    append and meta) are counted by the next delete; a short
+    ``n_deleted`` would make search, which over-fetches by
+    ``k + n_deleted``, return fewer than k live rows."""
+    path = str(tmp_path / "hnsw1")
+    corpus = _vectors(spark, range(120), seed=5)
+    hi.build_hnsw_index(corpus, path, **{**HNSW, "n_parts": 1})
+    vecs = {int(r["vec_id"]): np.asarray(r["embedding"], dtype=np.float64)
+            for r in corpus.collect()}
+    q = vecs[0] / np.linalg.norm(vecs[0])
+    order = sorted(vecs, key=lambda i: -float(vecs[i] @ q) / np.linalg.norm(vecs[i]))
+    nearest, farthest = order[:K], order[-1]
+    # tombstones that landed without their meta write
+    os.makedirs(os.path.join(path, "tombstones"))
+    pd.DataFrame({"id": np.array(nearest, dtype=np.int64)}).to_parquet(
+        os.path.join(path, "tombstones", "part-crashed.parquet")
+    )
+    meta = hi.delete_from_hnsw_index(spark, path, [farthest])
+    assert meta["n_deleted"] == K + 1
+    queries = corpus.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    got = hi.ann_hnsw_topk_indexed(spark, queries, path, k=K, ef_search=64).collect()
+    assert len(got) == K
+    assert not {r["doc_id"] for r in got} & (set(nearest) | {farthest})
+
+
+def test_delete_after_folding_compaction_survives_next_commit(spark, tmp_path):
+    """A folding compaction leaves the default tombstone relation in
+    grace; a delete that recreates it must not be reclaimed with it by
+    the next commit (the deleted id would be served again)."""
+    path = str(tmp_path / "fold")
+    corpus = _vectors(spark, range(100), seed=6)
+    hi.build_hnsw_index(corpus, path, **HNSW)
+    hi.delete_from_hnsw_index(spark, path, [1])
+    hi.compact_hnsw_index(spark, path)
+    hi.delete_from_hnsw_index(spark, path, [2])
+    hi.upsert_hnsw_index(spark, _vectors(spark, range(100, 105), seed=7), path)
+    queries = corpus.filter(F.col("vec_id") == 2).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    served = {r["doc_id"] for r in
+              hi.ann_hnsw_topk_indexed(spark, queries, path, k=K).collect()}
+    assert 2 not in served and len(served) == K
+
+
+# --- lexical -----------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def lex_case(spark, tmp_path_factory):
+    """Lexical index with one upsert delta and built TF-IDF norms."""
+    root = tmp_path_factory.mktemp("gen_lex")
+    template = str(root / "template")
+    rng = np.random.default_rng(8)
+    vocab = [f"w{i}" for i in range(40)]
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": np.arange(80, dtype=np.int64),
+        "text": [" ".join(rng.choice(vocab, 6)) for _ in range(80)],
+    }))
+    chunk = [docs.filter(F.floor(F.col("doc_id") / 20) == i) for i in range(4)]
+    queries = spark.createDataFrame(pd.DataFrame({
+        "query_id": np.arange(6, dtype=np.int64),
+        "qtext": [" ".join(rng.choice(vocab, 3)) for _ in range(6)],
+    }))
+    lx.build_lexical_index(chunk[0], template)
+    lx.upsert_lexical_index(chunk[1], template)
+    c = {"root": root, "template": template, "chunks": chunk, "queries": queries,
+         "crash_free": {}}
+    # the TF-IDF search builds the norms the upsert invalidated
+    c["pre_tfidf"] = _lex_answer(spark, c, template, tfidf=True)
+    c["pre_bm25"] = _lex_answer(spark, c, template)
+    return c
+
+
+def _lex_answer(spark, c, path, tfidf=False):
+    fn = lx.tfidf_topk_indexed if tfidf else lx.bm25_topk_indexed
+    return sorted(tuple(r) for r in fn(spark, c["queries"], path, k=K).collect())
+
+
+LEX_OPS = {
+    "upsert": lambda spark, c, path: lx.upsert_lexical_index(c["chunks"][2], path),
+    "compact": lambda spark, c, path: lx.compact_lexical_index(spark, path),
+    "tfidf_norms": lambda spark, c, path: lx.build_tfidf_norms(spark, path),
+}
+
+
+def _lex_next_commit(spark, c, path):
+    lx.upsert_lexical_index(c["chunks"][3], path)
+
+
+@pytest.mark.parametrize(
+    "op,point", [(op, point) for op in LEX_OPS for point in ("meta", "gc")]
+)
+def test_lexical_crash_matrix(spark, lex_case, monkeypatch, op, point):
+    c = lex_case
+    # TF-IDF answers for the norm build; BM25 (which never builds
+    # norms lazily, so never commits) for the data ops
+    tfidf = op == "tfidf_norms"
+    _check_crash(
+        c, op, point,
+        lambda path: LEX_OPS[op](spark, c, path),
+        lambda path: _lex_next_commit(spark, c, path),
+        lambda path: _lex_answer(spark, c, path, tfidf),
+        c["pre_tfidf" if tfidf else "pre_bm25"], monkeypatch,
+    )
+
+
+def test_tfidf_norms_after_rebuild_take_a_fresh_relation(spark, tmp_path):
+    """A rebuild's meta carries no norm generation; the next lazy norm
+    build must not write into a relation the pre-rebuild meta still
+    names (it keeps its one-commit grace for in-flight readers)."""
+    path = str(tmp_path / "lex")
+    docs = eio.load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    queries = docs.filter(F.col("doc_id") < 4).select(
+        F.col("doc_id").alias("query_id"), F.col("text").alias("qtext")
+    )
+    lx.build_lexical_index(docs, path)
+    lx.tfidf_topk_indexed(spark, queries, path, k=K).collect()
+    before = gen.read_meta(path)
+    lx.build_lexical_index(docs.filter(F.col("doc_id") % 5 != 0), path)
+    lx.tfidf_topk_indexed(spark, queries, path, k=K).collect()
+    after = gen.read_meta(path)
+    named_before = set(before["postings_rels"]) | set(before["doclen_rels"]) | {
+        before["df_rel"], before["docnorm_rel"]
+    }
+    assert after["docnorm_rel"] not in named_before
