@@ -76,6 +76,39 @@ def read_parquet_rows(
     return rows
 
 
+def read_parquet_frame(paths: list[str], columns: list[str] | None = None):
+    """Driver-side read of the parquet files ``paths`` into one pandas
+    frame, columnar end to end: for driver-resident relations too
+    large for ``read_parquet_rows``' per-row dicts (one 25,000-node
+    HNSW graph partition reads in ~70 ms, against ~1.3 s as rows, on a
+    4-vCPU host)."""
+    import pyarrow as _pa
+    import pyarrow.parquet as _pq
+
+    tables = [_pq.read_table(p, columns=columns) for p in paths]
+    return _pa.concat_tables(tables).to_pandas()
+
+
+def list_files(path: str) -> tuple[tuple[str, int, int], ...]:
+    """``(name, size, mtime_ns)`` of every file directly under
+    ``path``, sorted by name; empty when the directory is absent. A
+    reader that keeps state derived from a directory compares this
+    stamp to notice a rewrite in place, which a name alone hides."""
+    try:
+        with os.scandir(path) as it:
+            entries = [e for e in it if e.is_file()]
+    except FileNotFoundError:
+        return ()
+    out = []
+    for e in entries:
+        try:
+            st = e.stat()
+        except FileNotFoundError:
+            continue  # removed since the listing
+        out.append((e.name, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
 def exists(path: str) -> bool:
     return os.path.exists(path)
 

@@ -115,9 +115,15 @@ class HnswIndex:
         qmat: np.ndarray,
         k: int,
         allow: np.ndarray | None = None,
+        ef: int | None = None,
     ) -> tuple[np.ndarray, np.ndarray]:
         """Batch query: returns (labels, dists) shaped (nq, k), dists
         ascending per row, distance = 1 − inner product.
+
+        ``ef`` sets this call's beam width; ``None`` uses ``self.ef``
+        (``set_ef``). Passing it per call leaves the index unmutated,
+        so one loaded index can serve concurrent requests that ask for
+        different beams.
 
         ``allow`` is an optional boolean mask over INTERNAL indexes
         (insertion order): hnswlib's filter-function semantics —
@@ -138,12 +144,13 @@ class HnswIndex:
         if self._entry < 0:
             raise RuntimeError("empty index")
         k = min(k, len(self._ids))
+        beam = max(self.ef if ef is None else max(int(ef), 1), k)
         labels = np.full((len(qmat), k), -1, dtype=np.int64)
         dists = np.full((len(qmat), k), np.inf, dtype=np.float64)
         ids_arr = np.asarray(self._ids, dtype=np.int64)
         for qi, q in enumerate(qmat):
             ep = self._descend(q, self._entry, self._max_level, 0)
-            cand = self._search_layer(q, [ep], 0, max(self.ef, k), allow)
+            cand = self._search_layer(q, [ep], 0, beam, allow)
             # ascending distance, id ASC tie-break for determinism
             cand.sort(key=lambda t: (t[0], ids_arr[t[1]]))
             top = cand[:k]

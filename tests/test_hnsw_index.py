@@ -14,6 +14,7 @@ Pins the contracts the rows-only driver check can't see:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -21,6 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import inside_vectordb_spark.io as eio
+import inside_vectordb_spark.operators.hnsw_index as hnsw_mod
 from inside_vectordb_spark import _meta_io as mio
 from inside_vectordb_spark.operators.ann import _normalize_rows
 from inside_vectordb_spark.operators.hnsw_index import (
@@ -862,3 +864,285 @@ def test_filtered_graph_search(spark, tmp_path):
         spark, q, art, k=K, ef_search=EF_SEARCH, filter_df=None
     ).toPandas()
     pd.testing.assert_frame_equal(a, b)
+
+
+# -- resident serving: parity with scatter-gather and invalidation ---------
+
+
+def _search_both(spark, art, queries, monkeypatch, loads=None, **kw):
+    """(resident frame, forced scatter-gather frame) for one request;
+    the budget constant at 0 sends the same call down the scatter
+    path. ``loads`` counts the resident call's kernel loads."""
+    from inside_vectordb_spark.plans import count_nodes
+
+    if loads is None:
+        res = ann_hnsw_topk_indexed(spark, queries, art, **kw)
+    else:
+        with loads.counting(monkeypatch):
+            res = ann_hnsw_topk_indexed(spark, queries, art, **kw)
+    assert count_nodes(res, "LocalTableScanExec") == 1, "resident path not taken"
+    with monkeypatch.context() as mp:
+        mp.setattr(hnsw_mod, "_RESIDENT_MAX_BYTES", 0)
+        sg = ann_hnsw_topk_indexed(spark, queries, art, **kw)
+    assert count_nodes(sg, "LocalTableScanExec") == 0, "scatter path not taken"
+    return res, sg
+
+
+def _assert_parity(spark, art, queries, monkeypatch, dead=(), loads=None, **kw):
+    """The resident answer equals scatter-gather row for row: ids,
+    rank, rounded score, column names and types; no deleted id."""
+    res, sg = _search_both(spark, art, queries, monkeypatch, loads, **kw)
+    assert res.dtypes == sg.dtypes
+    a, b = _sorted_frame(res), _sorted_frame(sg)
+    pd.testing.assert_frame_equal(a, b, check_exact=True)
+    assert not set(a["doc_id"]) & set(dead)
+    return a
+
+
+class _LoadCounter:
+    """Counts kernel reconstructions while ``counting`` and reports
+    which partitions of one index were reloaded since the last
+    ``take``. The wrapper is installed only around resident calls:
+    the upsert and scatter paths ship ``_index_from_rows`` to Python
+    workers, which cannot import a test module."""
+
+    def __init__(self, art):
+        self.art = art
+        self.calls = 0
+        self._seen = self._kernels()
+
+    @contextmanager
+    def counting(self, monkeypatch):
+        orig = hnsw_mod._index_from_rows
+
+        def counted(*a, **kw):
+            self.calls += 1
+            return orig(*a, **kw)
+
+        with monkeypatch.context() as mp:
+            mp.setattr(hnsw_mod, "_index_from_rows", counted)
+            yield
+
+    def _kernels(self):
+        return {
+            key[1]: id(entry[2])
+            for key, entry in hnsw_mod._KERNELS._entries.items()
+            if key[0] == self.art
+        }
+
+    def take(self):
+        now = self._kernels()
+        reloaded = {p for p, k in now.items() if self._seen.get(p) != k}
+        calls, self.calls, self._seen = self.calls, 0, now
+        return calls, reloaded
+
+
+def test_resident_parity_and_invalidation_across_commits(
+    spark, tmp_path, monkeypatch
+):
+    """Every commit kind changes the answer the resident path serves
+    exactly as it changes scatter-gather's, reloading only the
+    partitions the commit rewrote; a repeat search reloads nothing."""
+    from inside_vectordb_spark import _generations as gen
+    from inside_vectordb_spark.operators.hnsw_index import (
+        compact_hnsw_index,
+        delete_from_hnsw_index,
+    )
+
+    monkeypatch.setattr(
+        hnsw_mod, "_KERNELS", hnsw_mod._KernelCache(hnsw_mod._CACHE_MAX_BYTES)
+    )
+    art = _art(tmp_path, "resident")
+    corpus = _corpus(spark)
+    q = _queries(spark)
+    routed = corpus.withColumn("part", _part_expr("vec_id", N_PARTS))
+    by_part = {
+        int(p): sorted(g["vec_id"])
+        for p, g in routed.select("vec_id", "part").toPandas().groupby("part")
+    }
+    hole = 3
+    base = routed.filter((F.col("part") != hole) & (F.col("vec_id") % 5 != 0))
+    fill = routed.filter(F.col("part") == hole)
+    spread = routed.filter((F.col("part") != hole) & (F.col("vec_id") % 5 == 0))
+    params = dict(dim=DIM, ef_construction=EFC, n_parts=N_PARTS, seed=42)
+    loads = _LoadCounter(art)
+    kw = dict(k=K, ef_search=EF_SEARCH, loads=loads)
+
+    # a full rebuild rewrites graph/part=<p> in place under the same
+    # relation name: only the directory stamp tells the two apart
+    build_hnsw_index(corpus.drop("part"), art, m=8, **params)
+    _assert_parity(spark, art, q, monkeypatch, **kw)
+    assert loads.take() == (4, {0, 1, 2, 3})
+    build_hnsw_index(base.drop("part"), art, m=M, **params)
+    _assert_parity(spark, art, q, monkeypatch, **kw)
+    assert loads.take() == (3, {0, 1, 2})
+    _assert_parity(spark, art, q, monkeypatch, **kw)
+    assert loads.take() == (0, set())
+
+    # upsert into the previously empty partition: it alone loads
+    upsert_hnsw_index(spark, fill.drop("part"), art)
+    _assert_parity(spark, art, q, monkeypatch, **kw)
+    assert loads.take() == (1, {hole})
+
+    # delete: tombstones only, no graph partition reloads
+    heavy = [i for i in by_part[1] if i % 5 != 0][:40]
+    dead = heavy + by_part[hole][:2]
+    delete_from_hnsw_index(spark, art, dead)
+    _assert_parity(spark, art, q, monkeypatch, dead=dead, **kw)
+    assert loads.take() == (0, set())
+
+    # upsert spread over the other three partitions
+    upsert_hnsw_index(spark, spread.drop("part"), art)
+    _assert_parity(spark, art, q, monkeypatch, dead=dead, **kw)
+    assert loads.take() == (3, {0, 1, 2})
+
+    # the delete's in-between window: tombstone rows land in the
+    # relation before (or without) a meta write; the very next
+    # request masks them
+    meta = mio.read_json(os.path.join(art, "meta.json"))
+    top = _sorted_frame(ann_hnsw_topk_indexed(spark, q, art, k=K))
+    raw = [int(i) for i in top[top["rank"] == 1]["doc_id"][:3]]
+    spark.createDataFrame(pd.DataFrame({"id": np.array(raw, np.int64)})).write.mode(
+        "append"
+    ).parquet(gen.tomb_dir(art, meta))
+    dead += raw
+    _assert_parity(spark, art, q, monkeypatch, dead=dead, **kw)
+    assert loads.take() == (0, set())
+
+    # partial compaction rebuilds only the dirty partition
+    meta = compact_hnsw_index(spark, art, min_dead_fraction=0.2)
+    assert set(meta["part_rels"]) >= {"1"}
+    dirty = {int(p) for p, rel in meta["part_rels"].items() if rel.startswith("graph_c")}
+    assert dirty == {1}
+    _assert_parity(spark, art, q, monkeypatch, dead=dead, **kw)
+    assert loads.take() == (1, {1})
+
+    # full compaction rewrites every partition
+    compact_hnsw_index(spark, art)
+    a = _assert_parity(spark, art, q, monkeypatch, dead=dead, **kw)
+    assert loads.take() == (4, {0, 1, 2, 3})
+    assert a["query_id"].nunique() == 20
+
+
+def test_resident_parity_ef_round_and_k(spark, tmp_path, monkeypatch):
+    """Per-request knobs reach the resident kernels without mutating
+    them: two beams over one cached index each equal scatter-gather
+    at that beam, the cached kernels keep their ef; unrounded scores
+    and k larger than a partition match too."""
+    art = _art(tmp_path, "knobs")
+    build_hnsw_index(
+        _corpus(spark), art, dim=DIM, m=M, ef_construction=EFC,
+        n_parts=N_PARTS, seed=42,
+    )
+    q = _queries(spark)
+    _assert_parity(spark, art, q, monkeypatch, k=K, ef_search=200)
+    kernels = [
+        e[2] for key, e in hnsw_mod._KERNELS._entries.items() if key[0] == art
+    ]
+    assert len(kernels) == N_PARTS
+    efs = [kern.ef for kern in kernels]
+    _assert_parity(spark, art, q, monkeypatch, k=K, ef_search=64)
+    assert [kern.ef for kern in kernels] == efs
+    _assert_parity(spark, art, q, monkeypatch, k=K, round_to=None)
+    big = _assert_parity(spark, art, q, monkeypatch, k=200)
+    assert big.groupby("query_id").size().max() > max(
+        len(kern) for kern in kernels
+    )
+
+
+def test_resident_parity_when_the_beam_reaches_fewer_than_k(
+    spark, tmp_path, monkeypatch
+):
+    """m=2 over two tight clusters disconnects nodes, so some rows
+    come back with fewer than k answers: both paths drop the same
+    pads."""
+    rng = np.random.default_rng(0)
+    pts = np.concatenate(
+        [c + 0.05 * rng.normal(size=(40, 16)) for c in (0.0, 10.0)]
+    )
+    pdf = pd.DataFrame(
+        {"vec_id": np.arange(len(pts), dtype=np.int64), "embedding": list(pts)}
+    )
+    corpus = spark.createDataFrame(pdf, "vec_id bigint, embedding array<double>")
+    art = _art(tmp_path, "pads")
+    build_hnsw_index(
+        corpus, art, dim=16, m=2, ef_construction=4, n_parts=2, seed=3
+    )
+    q = spark.createDataFrame(
+        pdf.rename(columns={"vec_id": "query_id"}).head(10),
+        "query_id bigint, embedding array<double>",
+    )
+    got = _assert_parity(spark, art, q, monkeypatch, k=40, ef_search=2)
+    assert got.groupby("query_id").size().min() < 40
+
+
+def test_resident_cache_evicts_least_recently_used(spark, tmp_path, monkeypatch):
+    """More indexes than the byte bound holds: the least recently used
+    kernels go, resident bytes stay under the bound, and an evicted
+    index reloads on its next search."""
+    import shutil
+
+    src = _art(tmp_path, "lru_src")
+    build_hnsw_index(
+        _corpus(spark), src, dim=DIM, m=M, ef_construction=EFC,
+        n_parts=N_PARTS, seed=42,
+    )
+    arts = [_art(tmp_path, f"lru{i}") for i in range(3)]
+    for a in arts:
+        shutil.copytree(src, a)
+    q = _queries(spark)
+    probe = hnsw_mod._KernelCache(1 << 40)
+    monkeypatch.setattr(hnsw_mod, "_KERNELS", probe)
+    want = _sorted_frame(ann_hnsw_topk_indexed(spark, q, arts[0], k=K))
+    one_index = probe.resident_bytes
+    # room for one and a half indexes
+    cache = hnsw_mod._KernelCache(one_index * 3 // 2)
+    monkeypatch.setattr(hnsw_mod, "_KERNELS", cache)
+    for a in arts:
+        got = _sorted_frame(ann_hnsw_topk_indexed(spark, q, a, k=K))
+        pd.testing.assert_frame_equal(got, want)
+        assert cache.resident_bytes <= cache.max_bytes
+    held = {key[0] for key in cache._entries}
+    assert held <= set(arts[1:]) and arts[2] in held
+    assert sum(1 for key in cache._entries if key[0] == arts[2]) == N_PARTS
+    loads = _LoadCounter(arts[0])
+    with loads.counting(monkeypatch):
+        ann_hnsw_topk_indexed(spark, q, arts[0], k=K).collect()
+    assert loads.take() == (N_PARTS, set(range(N_PARTS)))
+    assert cache.resident_bytes <= cache.max_bytes
+
+
+def test_kernel_cache_accounting_under_threads():
+    """Concurrent puts and gets on one cache never lose a byte count
+    and never leave it over its bound."""
+    import sys
+    import threading
+
+    cache = hnsw_mod._KernelCache(10_000)
+    errors = []
+
+    def worker(seed):
+        rng = np.random.default_rng(seed)
+        try:
+            for _ in range(2000):
+                key = ("idx", int(rng.integers(0, 40)))
+                stamp = int(rng.integers(0, 3))
+                if cache.get(key, "graph", stamp) is None:
+                    cache.put(key, "graph", stamp, object(), int(rng.integers(1, 900)))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(s,)) for s in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    held = sum(e[3] for e in cache._entries.values())
+    assert cache.resident_bytes == held <= cache.max_bytes

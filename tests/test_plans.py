@@ -613,6 +613,51 @@ def test_hnsw_indexed_only_partials_shuffle(spark):
     assert_not_in_plan(df, "CartesianProduct")
 
 
+def test_hnsw_indexed_scatter_gather_only_partials_shuffle(spark, monkeypatch):
+    """The scatter-gather plan, forced by a zero resident budget (the
+    registry query's index would otherwise be served resident): one
+    searching branch per stored partition, and any exchange carries
+    only the Q×k partial triples, never graph rows or vectors."""
+    from inside_vectordb_spark.operators import hnsw_index
+
+    monkeypatch.setattr(hnsw_index, "_RESIDENT_MAX_BYTES", 0)
+    df = QUERIES["ann_hnsw_vendored_indexed"](spark, SF_DIR)
+    assert count_nodes(df, "MapInPandasExec") == 4
+    assert count_nodes(df, "LocalTableScanExec") == 0
+    for part, cols in shuffled_payloads(df):
+        assert set(cols) <= {"query_id", "doc_id", "score"}, (part, cols)
+    assert_not_in_plan(df, "CartesianProduct")
+
+
+def test_hnsw_indexed_resident_is_one_local_scan_and_no_job(spark):
+    """A resident answer plans as a single LocalTableScan (the score
+    rounding folded in) and collecting it launches no Spark job, with
+    the session's Arrow conversion on or off."""
+    from inside_vectordb_spark.plans.audit import _walk
+
+    sc = spark.sparkContext
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            df = QUERIES["ann_hnsw_vendored_indexed"](spark, SF_DIR)
+            nodes = [
+                n.getClass().getSimpleName()
+                for n in _walk(df._jdf.queryExecution().executedPlan())
+            ]
+            assert nodes == ["LocalTableScanExec"], (arrow, nodes)
+            group = f"resident-no-job-{arrow}"
+            sc.setJobGroup(group, group)
+            rows = df.collect()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            assert len(rows) == 200
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], arrow
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(key, before)
+
+
 def test_mrl_sq_candidates_broadcast_no_vector_shuffle(spark):
     """The quantized funnel: queries broadcast into the decoded-codes
     scan, candidates broadcast into the rerank — no exchange ever
