@@ -86,7 +86,6 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -109,6 +108,12 @@ from inside_vectordb_spark.operators.ann_index import (
     _merge_fingerprint,
 )
 from inside_vectordb_spark.operators.hnsw_kernel import HnswIndex
+from inside_vectordb_spark.operators.topk import (
+    _PARTIAL_SCHEMA,
+    _RESIDENT_MAX_BYTES,
+    _RESIDENT_MAX_QUERIES,
+    _local_topk,
+)
 
 GRAPH_SCHEMA = StructType(
     [
@@ -121,20 +126,6 @@ GRAPH_SCHEMA = StructType(
         StructField("meta_json", StringType()),
     ]
 )
-
-_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("query_id", LongType()),
-        StructField("doc_id", LongType()),
-        StructField("score", DoubleType()),
-    ]
-)
-# what the scatter-gather plan's final select yields (row_number is
-# never NULL); the resident path builds its local frame with it
-_RESULT_SCHEMA = StructType(
-    _PARTIAL_SCHEMA.fields + [StructField("rank", IntegerType(), False)]
-)
-
 
 # the relation families this index owns; graph relations are
 # superseded (and reclaimed) one partition dir at a time
@@ -430,16 +421,12 @@ def _read_graph(spark: SparkSession, path: str, meta: dict) -> DataFrame:
 
 # -- resident serving ------------------------------------------------------
 #
-# Selection and bound constants, set from a crossover sweep (2,000 to
-# 100,000 64-dim vectors, m=16, 4 partitions, local[2] on a 4-vCPU
-# host). Up to 1,000 queries the driver answers faster than
-# scatter-gather at every size (29-36x at one query, 1.3-1.6x at
-# 1,000); at 5,000 its lead is down to 1.15-1.2x while the batch holds
-# the driver's one Python thread for 13-20 s, so larger batches stay
-# on the cluster path. A 57.7 MB index loads cold in 2.3 s, less than
-# one 2.8 s scatter-gather request over it.
-_RESIDENT_MAX_QUERIES = 1000
-_RESIDENT_MAX_BYTES = 64 << 20
+# The selection bounds (_RESIDENT_MAX_QUERIES, _RESIDENT_MAX_BYTES) are
+# shared with the exact GEMM's driver placement and documented in
+# ``operators/topk.py``; they are bound here as module attributes so a
+# test can force scatter-gather alone. A 57.7 MB index loads cold in
+# 2.3 s, less than one 2.8 s scatter-gather request over it.
+
 # estimated in-memory bytes of every cached kernel in the process: a
 # loaded kernel takes about 2.6x its partition's on-disk bytes, so
 # this holds three indexes at the byte budget
@@ -575,27 +562,14 @@ def _resident_topk(
     dead = gen.tombstone_ids(path, meta)
     if dead:
         allp = allp[~allp["doc_id"].isin(list(dead))]
-    q = allp["query_id"].to_numpy(np.int64)
-    d = allp["doc_id"].to_numpy(np.int64)
-    s = allp["score"].to_numpy(np.float64)
-    order = np.lexsort((d, -s, q))
-    q, d, s = q[order], d[order], s[order]
-    starts = np.ones(len(q), dtype=bool)
-    starts[1:] = q[1:] != q[:-1]
-    pos = np.arange(len(q))
-    rank = (pos - np.maximum.accumulate(np.where(starts, pos, 0)) + 1).astype(np.int32)
-    keep = rank <= k
-    rows = pa.table(
-        {"query_id": q[keep], "doc_id": d[keep], "score": s[keep], "rank": rank[keep]}
+    return _local_topk(
+        spark,
+        allp["query_id"].to_numpy(np.int64),
+        allp["doc_id"].to_numpy(np.int64),
+        allp["score"].to_numpy(np.float64),
+        k,
+        round_to,
     )
-    # an Arrow table becomes a local relation whatever the session's
-    # Arrow setting (a pandas frame does only with it on), and Spark
-    # folds the round below into it: the frame plans as one
-    # LocalTableScan and the score keeps Spark's own HALF_UP rounding
-    out = spark.createDataFrame(rows, schema=_RESULT_SCHEMA)
-    if round_to is not None:
-        out = out.withColumn("score", F.round("score", round_to))
-    return out
 
 
 def ann_hnsw_topk_indexed(

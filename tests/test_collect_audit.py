@@ -15,6 +15,10 @@ test on purpose: update the budget only with the same justification,
 or keep the work on the executors (persist/localCheckpoint — see
 streaming/dedup_stream.py, which this audit forced off a per-batch
 driver round-trip in round 6).
+
+``.toArrow()`` and ``.toPandas()`` ship rows through the driver just
+as ``.collect()`` does, so they count as sites too; each budgeted one
+names the bound that keeps it driver-sized.
 """
 
 from __future__ import annotations
@@ -25,9 +29,12 @@ import re
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "inside_vectordb_spark")
 
-# file (relative to package root) -> audited number of .collect() sites
+# file (relative to package root) -> audited number of .collect(),
+# .toArrow() and .toPandas() sites
 COLLECT_BUDGET = {
-    "operators/ann.py": 1,            # k-row centroid table (bounded k)
+    "operators/ann.py": 2,            # |Q|-row probe query matrix; the
+                                      # ≤ sample_limit (8192) k-means
+                                      # training sample (toPandas)
     "operators/ann_index.py": 3,      # meta fingerprints (1-row aggs); the
                                       # k-row centroid/codebook/SQ-stat reads
                                       # moved to _meta_io.read_parquet_rows
@@ -57,14 +64,20 @@ COLLECT_BUDGET = {
     "operators/ivfpq_det.py": 1,      # probed-cid list (≤ |Q|·n_probe)
     "operators/lexical_index.py": 4,  # 1-row stats + per-bucket offset rows
     "operators/partitioned_ann.py": 1,  # per-partition top-k merge (≤ parts·Q·k)
-    "operators/pq.py": 1,             # ≤8192-row training sample (documented cap)
+    "operators/pq.py": 2,             # |Q|-row query matrix; the ≤8192-row
+                                      # codebook training sample (toPandas,
+                                      # documented cap)
     "operators/ranks.py": 2,          # quantile-boundary literals (≤ n_buckets rows)
     "operators/rm3.py": 1,            # |Q|×fb_terms weight table (bounded
                                       # knobs); the duplicated corpus-stats
                                       # collect moved into bm25's shared
                                       # corpus_bm25_stats (review r7)
     "operators/sq.py": 1,             # 1-row min/max stats literal
-    "operators/topk.py": 1,           # query-matrix broadcast (documented contract)
+    "operators/topk.py": 2,           # query-matrix broadcast (documented
+                                      # contract); the driver placement's
+                                      # corpus read (toArrow), taken only
+                                      # when the plan's size estimate is
+                                      # ≤ _RESIDENT_MAX_BYTES (64 MiB)
     "operators/traindata.py": 3,      # BPE argmax batches (≤30 rows/round);
                                       # DSIR log-ratio table (≤ n_buckets
                                       # = 4096 rows — replaced the leaked
@@ -79,7 +92,7 @@ COLLECT_BUDGET = {
 
 def _count_collects() -> dict[str, int]:
     out: dict[str, int] = {}
-    pat = re.compile(r"\.collect\(\)")
+    pat = re.compile(r"\.(?:collect|toArrow|toPandas)\(\)")
     for root, _dirs, files in os.walk(PKG):
         for f in files:
             if not f.endswith(".py"):
@@ -98,6 +111,6 @@ def _count_collects() -> dict[str, int]:
 def test_no_new_driver_collect_sites():
     got = _count_collects()
     assert got == COLLECT_BUDGET, (
-        "driver-side collect() sites changed — audit the new/removed "
+        "driver-side collect()/toArrow()/toPandas() sites changed — audit the new/removed "
         f"sites and update COLLECT_BUDGET.\n got={got}\n want={COLLECT_BUDGET}"
     )

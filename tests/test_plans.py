@@ -671,3 +671,94 @@ def test_mrl_sq_candidates_broadcast_no_vector_shuffle(spark):
     assert_not_in_plan(df, "CartesianProduct")
     # WindowGroupLimit pre-trims both stages' windows map-side
     assert count_in_plan(df, "WindowGroupLimit") >= 2
+
+
+def _exact_gemm_inputs(spark, n_queries=3):
+    """A local query batch (collecting it runs no job) and the
+    embeddings file read directly, without ``io.load_table``'s
+    round-robin split, so the corpus scan is the request's one job."""
+    import pyarrow as pa
+
+    q = eio.query_vectors(spark, SF_DIR).limit(1).collect()[0]
+    queries = spark.createDataFrame(
+        pa.table(
+            {
+                "query_id": pa.array(range(n_queries), pa.int64()),
+                "embedding": pa.array([list(q["embedding"])] * n_queries),
+            }
+        )
+    )
+    return queries, spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+
+
+def test_exact_gemm_driver_is_one_local_scan_and_one_job(spark):
+    """The driver placement's answer plans as a single LocalTableScan
+    (the score rounding folded in), with the session's Arrow
+    conversion on or off, and a whole request — construction plus
+    collect — runs exactly one Spark job: the corpus scan."""
+    from inside_vectordb_spark.operators.topk import exact_cosine_topk_gemm
+    from inside_vectordb_spark.plans.audit import _walk
+
+    sc = spark.sparkContext
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            queries, corpus = _exact_gemm_inputs(spark)
+            group = f"exact-driver-one-job-{arrow}"
+            sc.setJobGroup(group, group)
+            df = exact_cosine_topk_gemm(queries, corpus, k=10)
+            rows = df.collect()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            nodes = [
+                n.getClass().getSimpleName()
+                for n in _walk(df._jdf.queryExecution().executedPlan())
+            ]
+            assert nodes == ["LocalTableScanExec"], (arrow, nodes)
+            assert len(rows) == 30
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, arrow
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(key, before)
+
+
+def test_exact_gemm_executor_keeps_partials_only_shuffle(spark, monkeypatch):
+    """The executor placement, forced by a zero byte budget: the
+    mapInPandas kernel plus the merge window, and the plan's only
+    exchange carries the Q×k partial triples, never corpus vectors."""
+    from inside_vectordb_spark.operators import topk
+
+    monkeypatch.setattr(topk, "_RESIDENT_MAX_BYTES", 0)
+    queries, corpus = _exact_gemm_inputs(spark)
+    df = topk.exact_cosine_topk_gemm(queries, corpus, k=10)
+    assert count_nodes(df, "MapInPandasExec") == 1
+    assert count_nodes(df, "WindowExec") == 1
+    assert [set(cols) for _, cols in shuffled_payloads(df)] == [
+        {"query_id", "doc_id", "score"}
+    ]
+
+
+def test_exact_gemm_placement_bounds(spark, monkeypatch):
+    """Over 1,000 queries, a corpus without a usable size estimate and
+    a corpus over the byte budget keep the executor placement; a
+    corpus exactly at the budget is served on the driver."""
+    from inside_vectordb_spark.operators import topk
+
+    def placement(queries, corpus):
+        df = topk.exact_cosine_topk_gemm(queries, corpus, k=10)
+        return "executor" if count_nodes(df, "MapInPandasExec") else "driver"
+
+    queries, corpus = _exact_gemm_inputs(spark)
+    big_batch, _ = _exact_gemm_inputs(spark, n_queries=1001)
+    at_bound, _ = _exact_gemm_inputs(spark, n_queries=1000)
+    assert placement(big_batch, corpus) == "executor"
+    assert placement(at_bound, corpus) == "driver"
+    # an RDD-backed relation reports spark.sql.defaultSizeInBytes
+    unsized = spark.createDataFrame(corpus.rdd, corpus.schema)
+    assert placement(queries, unsized) == "executor"
+    est = corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    monkeypatch.setattr(topk, "_RESIDENT_MAX_BYTES", est)
+    assert placement(queries, corpus) == "driver"
+    monkeypatch.setattr(topk, "_RESIDENT_MAX_BYTES", est - 1)
+    assert placement(queries, corpus) == "executor"
