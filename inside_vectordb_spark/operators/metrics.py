@@ -10,47 +10,146 @@ Exact reference semantics preserved (``notebooks/utils.py``):
 - Precision@K (``utils.py:49-82``): per query |top-K ∩ relevant| /
   |retrieved@K| (NOT /K — the denominator is what was actually
   retrieved, capped at K); empty retrieval → 0.0; mean over ALL
-  searched queries.
+  searched queries, 0.0 when nothing was searched.
 - MRR (``utils.py:85-110``): 1/rank of first relevant, 0.0 when no
-  relevant doc retrieved; mean over ALL searched queries.
+  relevant doc retrieved; mean over ALL searched queries, 0.0 when
+  nothing was searched.
 
-Everything is joins + grouped aggregations — no UDFs, no collect.
-The qrels side is small (judgments) → broadcast; the ranked-results
-side is k·Q rows. At 100 TB corpus scale these inputs are tiny
-(metrics run on search OUTPUT, not the corpus), so this never
-becomes a bottleneck.
+Like the reference's one loop per query, every metric reads ONE
+aggregate (``_per_query`` then ``_means``):
+
+1. the result rows LEFT-join the broadcast distinct (query_id, doc_id)
+   qrels pairs;
+2. one ``groupBy(query_id)`` emits, for every requested K, the
+   conditional counts ``ret_K`` = #(rank ≤ K) and ``hit_K`` =
+   #(rank ≤ K ∧ relevant), plus ``first_rank`` = min(rank | relevant)
+   — no K-dimension cross join — and, when recall is asked for, each
+   searched query picks up its broadcast ``n_relevant``;
+3. one global aggregate averages the per-query ratios into
+   ``recall_K``, ``precision_K`` and ``mrr`` (one row even over an
+   empty result frame, so every metric zero-fills).
+
+``recall_at_k``, ``precision_at_k`` and ``mrr`` are views that read
+their own columns of that row (the optimizer prunes the rest);
+``evaluation_report`` reads all of them from the same pass;
+``registry/compare.py`` runs the same aggregate grouped by method.
+``ndcg_at_k`` carries the max grade per pair through the same join
+and sums per-K DCG the same conditional way.
+
+No UDFs, no collect. The qrels side is small (judgments) → broadcast;
+the ranked-results side is k·Q rows. At 100 TB corpus scale these
+inputs are tiny (metrics run on search OUTPUT, not the corpus), so
+this never becomes a bottleneck.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 K_VALUES_RECALL = (1, 5, 10, 20, 50, 100)
 K_VALUES_PRECISION = (1, 5, 10)
 
 
-def _k_dim(topk: DataFrame, k_values: tuple[int, ...]) -> DataFrame:
-    """One-row-per-K dimension table built inline (no spark.range —
-    stays a local relation, Catalyst folds it into the plan)."""
+def _dcg_term(rank_col: str):
+    """(2^relevance − 1) / log2(rank + 1), Järvelin & Kekäläinen gain."""
+    gain = F.pow(F.lit(2.0), F.col("relevance").cast("double")) - F.lit(1.0)
+    return gain / F.log2(F.col(rank_col) + F.lit(1.0))
+
+
+def _per_query(
+    topk: DataFrame,
+    qrels: DataFrame,
+    ks: tuple[int, ...],
+    by: tuple[str, ...] = (),
+    graded: bool = False,
+) -> DataFrame:
+    """One row per searched (``by``, query_id): ``ret_K``, ``hit_K``
+    and ``first_rank``. qrels are deduped on (query_id, doc_id) because
+    relevance grade is ignored (P5); ``graded`` callers pass one row
+    per pair with its ``relevance`` and also get the per-K DCG sum
+    ``dcg_K``."""
+    rel = (
+        qrels.select("query_id", "doc_id", *(["relevance"] if graded else []))
+        .distinct()
+        .withColumn("__rel", F.lit(True))
+    )
+    rank, hit = F.col("rank"), F.col("__rel").isNotNull()
+    cols = [F.min(F.when(hit, rank)).alias("first_rank")]
+    for k in ks:
+        cols += [
+            F.count(F.when(rank <= k, 1)).alias(f"ret_{k}"),
+            F.count(F.when(hit & (rank <= k), 1)).alias(f"hit_{k}"),
+        ]
+        if graded:
+            cols.append(
+                F.sum(F.when(hit & (rank <= k), _dcg_term("rank")))
+                .alias(f"dcg_{k}")
+            )
     return (
-        topk.sparkSession.createDataFrame(
-            [(int(k),) for k in k_values], "k int"
-        )
+        topk.join(F.broadcast(rel), ["query_id", "doc_id"], "left")
+        .groupBy(*by, "query_id")
+        .agg(*cols)
     )
 
 
-def _searched(topk: DataFrame) -> DataFrame:
-    return topk.select("query_id").distinct()
+def _means(
+    topk: DataFrame,
+    qrels: DataFrame,
+    recall_ks: tuple[int, ...] = (),
+    precision_ks: tuple[int, ...] = (),
+    by: tuple[str, ...] = (),
+) -> DataFrame:
+    """Unrounded ``recall_K``, ``precision_K`` and ``mrr`` per ``by``
+    group — one row overall when ``by`` is empty, even when ``topk``
+    is. avg() skips the null ratio of an unjudged query, which IS the
+    recall skip rule; an empty mean is 0.0."""
+    pq = _per_query(topk, qrels, tuple(sorted(set(recall_ks) | set(precision_ks))), by)
+    if recall_ks:
+        n_rel = qrels.groupBy("query_id").agg(F.countDistinct("doc_id").alias("n_relevant"))
+        pq = pq.join(F.broadcast(n_rel), "query_id", "left")
+
+    def mean(x):
+        return F.coalesce(F.avg(x), F.lit(0.0))
+
+    def precision(k):
+        hit, ret = F.col(f"hit_{k}"), F.col(f"ret_{k}")
+        return F.when(ret > 0, hit / ret).otherwise(0.0)
+
+    return pq.groupBy(*by).agg(
+        *[
+            mean(F.col(f"hit_{k}") / F.col("n_relevant")).alias(f"recall_{k}")
+            for k in recall_ks
+        ],
+        *[mean(precision(k)).alias(f"precision_{k}") for k in precision_ks],
+        mean(F.coalesce(F.lit(1.0) / F.col("first_rank"), F.lit(0.0))).alias("mrr"),
+    )
 
 
-def _hits(topk: DataFrame, qrels: DataFrame) -> DataFrame:
-    """(query_id, rank) for every retrieved row that is relevant —
-    J3's inner join. qrels deduped on (query_id, doc_id) because
-    relevance grade is ignored (P5)."""
-    rel = qrels.select("query_id", "doc_id").distinct()
-    return topk.join(F.broadcast(rel), ["query_id", "doc_id"]).select(
-        "query_id", "rank"
+def _long(
+    means: DataFrame, keys: list[tuple[str, int | None]], round_to: int | None
+) -> DataFrame:
+    """(metric STRING, k INT, value DOUBLE) rows in ``keys`` order —
+    (metric, k) pairs naming the ``<metric>_<k>`` column (``<metric>``
+    when k is None) of a one-row aggregate."""
+
+    def row(metric: str, k: int | None):
+        v = F.col(metric if k is None else f"{metric}_{k}")
+        return F.struct(
+            F.lit(metric).alias("metric"),
+            F.lit(k).cast("int").alias("k"),
+            (v if round_to is None else F.round(v, round_to)).alias("value"),
+        )
+
+    return means.select(F.inline(F.array(*[row(m, k) for m, k in keys])))
+
+
+def _view(means: DataFrame, name: str, ks: tuple[int, ...], round_to: int | None) -> DataFrame:
+    """(k INT, <name> DOUBLE), one row per K, ordered by k."""
+    return (
+        _long(means, [(name, k) for k in ks], round_to)
+        .select("k", F.col("value").alias(name))
+        .orderBy("k")
     )
 
 
@@ -64,35 +163,7 @@ def recall_at_k(
     ALWAYS one row per K: when no searched query has judgments (the
     skip rule removes everyone) recall is 0.0, the reference's
     documented fallback (``utils.py:15-46``), not an empty frame."""
-    n_rel = (
-        qrels.groupBy("query_id")
-        .agg(F.countDistinct("doc_id").alias("n_relevant"))
-    )
-    # judged AND searched queries only (the skip rule)
-    base = _searched(topk).join(F.broadcast(n_rel), "query_id")
-    universe = base.crossJoin(F.broadcast(_k_dim(topk, k_values)))
-    hit_counts = (
-        _hits(topk, qrels)
-        .crossJoin(F.broadcast(_k_dim(topk, k_values)))
-        .filter(F.col("rank") <= F.col("k"))
-        .groupBy("query_id", "k")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    # hit_counts is bounded by Q·K rows by construction — broadcast so
-    # the outer join never falls back to sort-merge
-    per_query = universe.join(F.broadcast(hit_counts), ["query_id", "k"], "left").select(
-        "k",
-        (F.coalesce(F.col("n_hits"), F.lit(0)) / F.col("n_relevant")).alias("r"),
-    )
-    agg = per_query.groupBy("k").agg(F.avg("r").alias("recall"))
-    out = (
-        _k_dim(topk, k_values)
-        .join(F.broadcast(agg), "k", "left")
-        .select("k", F.coalesce(F.col("recall"), F.lit(0.0)).alias("recall"))
-    )
-    if round_to is not None:
-        out = out.withColumn("recall", F.round("recall", round_to))
-    return out.orderBy("k")
+    return _view(_means(topk, qrels, recall_ks=k_values), "recall", k_values, round_to)
 
 
 def precision_at_k(
@@ -101,39 +172,11 @@ def precision_at_k(
     k_values: tuple[int, ...] = K_VALUES_PRECISION,
     round_to: int | None = 6,
 ) -> DataFrame:
-    """Returns (k INT, precision DOUBLE). Denominator is
+    """Returns (k INT, precision DOUBLE), one row per K. Denominator is
     |retrieved@K| = count of result rows with rank ≤ K (``utils.py:74-79``)."""
-    kd = _k_dim(topk, k_values)
-    retrieved = (
-        topk.crossJoin(F.broadcast(kd))
-        .filter(F.col("rank") <= F.col("k"))
-        .groupBy("query_id", "k")
-        .agg(F.count("*").alias("n_retrieved"))
+    return _view(
+        _means(topk, qrels, precision_ks=k_values), "precision", k_values, round_to
     )
-    hit_counts = (
-        _hits(topk, qrels)
-        .crossJoin(F.broadcast(kd))
-        .filter(F.col("rank") <= F.col("k"))
-        .groupBy("query_id", "k")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    universe = _searched(topk).crossJoin(F.broadcast(kd))
-    per_query = (
-        universe.join(F.broadcast(retrieved), ["query_id", "k"], "left")
-        .join(F.broadcast(hit_counts), ["query_id", "k"], "left")
-        .select(
-            "k",
-            F.when(F.coalesce(F.col("n_retrieved"), F.lit(0)) == 0, F.lit(0.0))
-            .otherwise(
-                F.coalesce(F.col("n_hits"), F.lit(0)) / F.col("n_retrieved")
-            )
-            .alias("p"),
-        )
-    )
-    out = per_query.groupBy("k").agg(F.avg("p").alias("precision"))
-    if round_to is not None:
-        out = out.withColumn("precision", F.round("precision", round_to))
-    return out.orderBy("k")
 
 
 def mrr(
@@ -141,15 +184,7 @@ def mrr(
 ) -> DataFrame:
     """Returns a single row (mrr DOUBLE). 1/first-relevant-rank per
     query, zero-filled for queries with no relevant retrieval."""
-    first_hit = (
-        _hits(topk, qrels)
-        .groupBy("query_id")
-        .agg(F.min("rank").alias("first_rank"))
-    )
-    per_query = _searched(topk).join(F.broadcast(first_hit), "query_id", "left").select(
-        F.coalesce(F.lit(1.0) / F.col("first_rank"), F.lit(0.0)).alias("rr")
-    )
-    out = per_query.agg(F.avg("rr").alias("mrr"))
+    out = _means(topk, qrels).select("mrr")
     if round_to is not None:
         out = out.withColumn("mrr", F.round("mrr", round_to))
     return out
@@ -163,18 +198,12 @@ def evaluation_report(
 ) -> DataFrame:
     """Long-form metric report: (metric STRING, k INT, value DOUBLE) —
     the relational shape of the reference's nested report JSON
-    (``utils.py:113-135``)."""
-    r = recall_at_k(topk, qrels, k_values_recall).select(
-        F.lit("recall").alias("metric"), "k", F.col("recall").alias("value")
-    )
-    p = precision_at_k(topk, qrels, k_values_precision).select(
-        F.lit("precision").alias("metric"), "k", F.col("precision").alias("value")
-    )
-    m = mrr(topk, qrels).select(
-        F.lit("mrr").alias("metric"), F.lit(None).cast("int").alias("k"),
-        F.col("mrr").alias("value"),
-    )
-    return r.unionByName(p).unionByName(m)
+    (``utils.py:113-135``). Recall rows, then precision rows, then the
+    MRR row, all from one aggregate row."""
+    keys = [("recall", k) for k in k_values_recall]
+    keys += [("precision", k) for k in k_values_precision]
+    means = _means(topk, qrels, k_values_recall, k_values_precision)
+    return _long(means, keys + [("mrr", None)], 6)
 
 
 K_VALUES_NDCG = (5, 10, 100)
@@ -193,49 +222,41 @@ def ndcg_at_k(
     hits, normalized by the ideal DCG of that query's own judgment
     set, mean over searched-and-judged queries (the A5 skip rule).
 
-    Same scale shape as the A5-A7 chain: qrels broadcast, one
-    (query,k) aggregate over k·Q rows — metrics run on search OUTPUT,
-    never the corpus. Returns (k INT, ndcg DOUBLE) ordered by k.
+    DCG comes from the same per-query aggregate as the A5-A7 chain
+    (per-K conditional sums over the graded hits join); the ideal DCG
+    is per-K conditional sums over the judgment ranking. Returns
+    (k INT, ndcg DOUBLE) ordered by k.
 
-    Like ``_hits`` (P5), qrels are deduped on (query_id, doc_id)
+    Like the A5-A7 chain (P5), qrels are deduped on (query_id, doc_id)
     first — duplicate judgment rows (merged/updated qrels files)
     would otherwise double-count in BOTH the DCG join and the ideal
     ranking. Grade conflicts resolve to MAX (a doc's strongest
     judgment wins); the oracle restates the same rule."""
-    kd = _k_dim(topk, k_values)
     qrels = qrels.groupBy("query_id", "doc_id").agg(
         F.max("relevance").alias("relevance")
     )
-    gain = F.pow(F.lit(2.0), F.col("relevance").cast("double")) - F.lit(1.0)
-    dcg = (
-        topk.join(F.broadcast(qrels), ["query_id", "doc_id"])
-        .crossJoin(F.broadcast(kd))
-        .filter(F.col("rank") <= F.col("k"))
-        .groupBy("query_id", "k")
-        .agg(F.sum(gain / F.log2(F.col("rank") + F.lit(1.0))).alias("dcg"))
-    )
-    from pyspark.sql import Window
-
     iw = Window.partitionBy("query_id").orderBy(
         F.desc("relevance"), F.asc("doc_id")
     )
     ideal = (
         qrels.withColumn("__ir", F.row_number().over(iw))
-        .crossJoin(F.broadcast(kd))
-        .filter(F.col("__ir") <= F.col("k"))
-        .groupBy("query_id", "k")
-        .agg(F.sum(gain / F.log2(F.col("__ir") + F.lit(1.0))).alias("idcg"))
+        .groupBy("query_id")
+        .agg(*[
+            F.sum(F.when(F.col("__ir") <= k, _dcg_term("__ir"))).alias(f"idcg_{k}")
+            for k in k_values
+        ])
     )
-    # all-grade-0 judgment sets have idcg == 0: skipped, explicitly —
-    # ANSI mode (Spark 4 default) makes 0/0 an error, not a null
-    base = _searched(topk).join(
-        F.broadcast(ideal.filter(F.col("idcg") > 0)), "query_id"
-    )
-    per_query = base.join(F.broadcast(dcg), ["query_id", "k"], "left").select(
-        "k",
-        (F.coalesce(F.col("dcg"), F.lit(0.0)) / F.col("idcg")).alias("nd"),
-    )
-    out = per_query.groupBy("k").agg(F.avg("nd").alias("ndcg"))
-    if round_to is not None:
-        out = out.withColumn("ndcg", F.round("ndcg", round_to))
-    return out.orderBy("k")
+    # searched AND judged; all-grade-0 judgment sets have idcg == 0
+    # and are skipped, explicitly — ANSI mode (Spark 4 default) makes
+    # 0/0 an error, not a null
+    per_q = _per_query(topk, qrels, k_values, graded=True).join(F.broadcast(ideal), "query_id")
+    means = per_q.agg(*[
+        F.avg(
+            F.when(
+                F.col(f"idcg_{k}") > 0,
+                F.coalesce(F.col(f"dcg_{k}"), F.lit(0.0)) / F.col(f"idcg_{k}"),
+            )
+        ).alias(f"ndcg_{k}")
+        for k in k_values
+    ])
+    return _view(means, "ndcg", k_values, round_to).filter(F.col("ndcg").isNotNull())

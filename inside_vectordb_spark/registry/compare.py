@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from inside_vectordb_spark import io as eio
 from inside_vectordb_spark.io import QRELS_SQL
 from inside_vectordb_spark.operators import compare as cmp_ops
+from inside_vectordb_spark.operators.metrics import _means
 from inside_vectordb_spark.operators.topk import exact_cosine_topk
 from inside_vectordb_spark.registry import register
 from inside_vectordb_spark.registry.ann import (
@@ -74,62 +75,21 @@ def _method_topks(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 def _comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One wide row per method (method, recall@10, precision@10, mrr,
-    retention) computed in a SINGLE pass over the method-tagged union
-    of ranked results — the per-method ``evaluation_report`` chain
-    produced identical values through 3 separate metric subplans
-    (~166 exchanges in the dossier); tagging the arms and grouping by
-    method collapses that to a handful of small aggregations. Same
-    arithmetic as the registered oracle (skip-zero-relevant recall,
-    retrieved-count precision denominator, zero-filled MRR)."""
+    retention). The arms' ranked results are tagged with their method
+    and unioned, then go through ``operators/metrics.py``'s one
+    per-query aggregate grouped by method as well — each arm's
+    subplan executes once, and the metric rules live only there."""
     from pyspark.sql import Window
 
-    qr = eio.qrels(spark, sf_dir)
-    rel = qr.select("query_id", "doc_id").distinct().withColumn(
-        "__rel", F.lit(1)
-    )
-    nrel = (
-        qr.select("query_id", "doc_id")
-        .distinct()
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_relevant"))
-    )
     tagged = None
     for m, tk in _method_topks(spark, sf_dir).items():
         t = tk.select(F.lit(m).alias("method"), "query_id", "doc_id", "rank")
         tagged = t if tagged is None else tagged.unionByName(t)
-    # ONE per-(method, query) aggregation over the tagged union — the
-    # arm subplans execute exactly once in the whole plan
-    perq = (
-        tagged.filter(F.col("rank") <= _K)
-        .join(F.broadcast(rel), ["query_id", "doc_id"], "left")
-        .groupBy("method", "query_id")
-        .agg(
-            F.count("*").alias("n_retrieved"),
-            F.count("__rel").alias("n_hits"),
-            F.min(F.when(F.col("__rel").isNotNull(), F.col("rank"))).alias("fr"),
-        )
-        .join(F.broadcast(nrel), "query_id", "left")
-    )
-    # avg() skips nulls, which IS the skip-zero-relevant recall rule
-    cmp = perq.groupBy("method").agg(
-        F.round(
-            F.avg(
-                F.when(
-                    F.col("n_relevant").isNotNull(),
-                    F.col("n_hits") / F.col("n_relevant"),
-                )
-            ),
-            6,
-        ).alias("recall_at_10"),
-        F.round(
-            F.avg(
-                F.when(F.col("n_retrieved") == 0, 0.0).otherwise(
-                    F.col("n_hits") / F.col("n_retrieved")
-                )
-            ),
-            6,
-        ).alias("precision_at_10"),
-        F.round(F.avg(F.coalesce(1.0 / F.col("fr"), F.lit(0.0))), 6).alias("mrr"),
+    cmp = _means(tagged, eio.qrels(spark, sf_dir), (_K,), (_K,), by=("method",)).select(
+        "method",
+        F.round(f"recall_{_K}", 6).alias("recall_at_10"),
+        F.round(f"precision_{_K}", 6).alias("precision_at_10"),
+        F.round("mrr", 6).alias("mrr"),
     )
     # retention from a |methods|-row window frame (bounded by the
     # method count), so cmp's subtree is not re-executed by a
