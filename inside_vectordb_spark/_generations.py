@@ -58,10 +58,12 @@ Crash behaviour, per step of a maintenance op:
   - a delete: before its meta write nothing changed; after it, the
     ids are masked once the append lands.
 
-Full rebuilds (``ann_index._begin_rebuild``) and in-place appends or
-directory swaps on the sign, PQ and MRL tiers use the older marker
-protocol (remove meta first, rewrite it last) and are not generation
-commits.
+Full rebuilds of the ANN tiers (``ann_index._begin_rebuild``), the LSH
+upsert's append and the sign and MRL compactions' directory swaps use
+the older marker protocol (remove meta first, rewrite it last) and
+are not generation commits. The other in-place appends (the sign,
+det-PQ, MRL and IVF upserts) write their rows first and rewrite meta
+last, also outside this protocol.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Persisted ANN index artifacts (S9/S10).
+"""Persisted ANN index artifacts (S9) for the LSH, PQ and SQ8 tiers.
 
 The reference serializes its graph indexes to binary files and
 reloads them on the next run (hnswlib ``003-hnswlib_demo.py:234-257``
@@ -12,12 +12,13 @@ Spark-native index-at-rest:
   parquet partitioned by ``table_idx``. Hyperplanes are derived
   deterministically from the stored seed, so the artifact is
   self-describing via ``meta.json`` alone.
-- **IVF** (S10 analogue): centroids as a tiny parquet + the
-  assignment table partitioned by ``centroid_id`` — the inverted
-  lists ARE parquet partitions, so probing ``n_probe`` centroids is
-  partition pruning: unprobed lists are never read from disk. That is
-  the at-rest property that matters at 100 TB (the reference gets it
-  via in-RAM adjacency; we get it from the layout).
+- **PQ** and **SQ8**: tiny codebook/stats tables plus the compressed
+  codes table, which is what search scans; raw vectors are read only
+  by the candidate-keyed exact re-rank.
+
+The persisted IVF tiers (inverted lists as cid-partitioned parquet,
+probing = partition pruning) live in ``ann_sign.py``: the id-rule
+``ivf_det`` and the trained ``ivf_km``.
 
 ``meta.json`` is written LAST and is the completeness marker: a
 partially-written index (job died mid-write) has no meta and is
@@ -25,8 +26,8 @@ rebuilt. ``ensure_*`` also rebuilds when the stored params differ
 from the requested ones.
 
 Search reuse: query batches against a stored index skip the corpus
-signature/assignment scan entirely — the only per-batch work is
-bucketing/probing the (small) query side and the candidate re-rank.
+signature/encoding scan entirely — the only per-batch work is
+bucketing/scoring the (small) query side and the candidate re-rank.
 """
 
 from __future__ import annotations
@@ -41,12 +42,8 @@ from pyspark.sql import functions as F
 
 from inside_vectordb_spark import _generations as gen
 from inside_vectordb_spark import _meta_io as mio
-from inside_vectordb_spark.functions.vector import l2_normalize
 from inside_vectordb_spark.operators.ann import (
     _rerank_candidates,
-    _hyperplanes,
-    ivf_assign,
-    kmeans_centroids,
     lsh_bucket_ids,
 )
 
@@ -326,54 +323,6 @@ def upsert_lsh_index(
         return meta
 
 
-def upsert_ivf_index(
-    new_vectors: DataFrame, path: str, id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict[str, Any]:
-    """Incremental IVF maintenance — FAISS's ``index.add`` contract
-    (``004-faiss_demo.py:199-211`` adds batches without retraining
-    the quantizer): assign NEW vectors to the EXISTING centroids and
-    append them to the inverted lists. Centroids stay fixed, so the
-    stored assignments after an upsert are bit-identical to assigning
-    the full corpus against the stored quantizer (pinned in
-    tests/test_ann_index.py), and probing/partition pruning see the
-    union of old + delta files per list automatically."""
-    # serialize maintenance under the commit lock (review r9-4, the
-    # hnsw/sign r9-2 rule applied tier-wide): without it the
-    # disjointness guard races a concurrent upsert of the same delta
-    # (both pass, the second appends duplicate rows), and readers /
-    # ensure_* hit the marker window of a healthy index mid-append
-    with mio.commit_lock(path):
-        meta = _read_meta(path)
-        if meta is None or meta.get("kind") != "ivf":
-            raise FileNotFoundError(f"no complete IVF index at {path}")
-        spark = new_vectors.sparkSession
-        _assert_disjoint_delta(
-            spark.read.parquet(os.path.join(path, "assignments")).select("id"),
-            new_vectors.select(id_col),
-            path,
-        )
-        cents = load_ivf_centroids(spark, path)
-        # invalidate the completeness marker BEFORE the append: a crash
-        # mid-append (partially visible task commits) must read as "no
-        # complete index" — the next ensure_* rebuilds — never a valid
-        # meta over torn appended rows; the meta rewrite below restores
-        # the marker as the commit point (review r8)
-        _begin_rebuild(path)
-        (
-            ivf_assign(new_vectors, id_col, vec_col, cents)
-            .repartition("centroid_id")
-            .write.mode("append")
-            .partitionBy("centroid_id")
-            .parquet(os.path.join(path, "assignments"))
-        )
-        meta["corpus"] = _merge_fingerprint(
-            meta.get("corpus"), _corpus_fingerprint(new_vectors, id_col)
-        )
-        _write_meta(path, meta)
-        return meta
-
-
 def ann_lsh_topk_indexed(
     queries: DataFrame,
     corpus: DataFrame,
@@ -406,260 +355,6 @@ def ann_lsh_topk_indexed(
         )
         .select("query_id", "doc_id")
         .distinct()
-    )
-    return _rerank_candidates(
-        cand, queries, corpus, query_id, query_vec, corpus_id, corpus_vec, k, round_to
-    )
-
-
-# ---------------------------------------------------------------------------
-# IVF
-# ---------------------------------------------------------------------------
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict[str, Any]:
-    """X2-analogue build + S10 sink: train the coarse quantizer,
-    assign every vector, land centroids + assignments with the
-    inverted lists as parquet partitions."""
-    spark = corpus.sparkSession
-    _begin_rebuild(path)
-    cents = kmeans_centroids(corpus, vec_col, n_centroids, seed, id_col=id_col)
-    os.makedirs(path, exist_ok=True)
-    cents_pdf = pd.DataFrame(
-        {
-            "centroid_id": np.arange(len(cents), dtype=np.int32),
-            "vector": [row.tolist() for row in cents],
-        }
-    )
-    (
-        spark.createDataFrame(cents_pdf)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "centroids"))
-    )
-    (
-        ivf_assign(corpus, id_col, vec_col, cents)
-        .repartition("centroid_id")  # one file per inverted list
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(os.path.join(path, "assignments"))
-    )
-    meta = {
-        "kind": "ivf",
-        "n_centroids": n_centroids,
-        "seed": seed,
-        "corpus": _corpus_fingerprint(corpus, id_col),
-    }
-    _write_meta(path, meta)
-    return meta
-
-
-def ensure_ivf_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, Any]:
-    meta = _read_meta(path)
-    want = {
-        "kind": "ivf",
-        # RESOLVED defaults included (review r8, the ensure_mrl_index
-        # r7 fix applied to this tier): a caller relying on the
-        # documented defaults must not silently accept an artifact
-        # built at different knobs.
-        "n_centroids": params.get("n_centroids", 16),
-        "seed": params.get("seed", 42),
-        # id_col/vec_col are caller-side names, never stored in meta —
-        # including them would fail the compare and force a silent
-        # full rebuild on EVERY call (the ensure_sq_index fix, applied
-        # to all tiers in r6s2)
-        **{k: v for k, v in params.items() if k not in ("id_col", "vec_col")},
-        "corpus": _corpus_fingerprint(corpus, params.get("id_col", "vec_id")),
-    }
-    if meta is not None and all(meta.get(k) == v for k, v in want.items()):
-        return meta
-    return build_ivf_index(corpus, path, **params)
-
-
-def load_ivf_centroids(spark: SparkSession, path: str) -> np.ndarray:
-    rows = mio.read_parquet_rows(
-        os.path.join(path, "centroids"), order_by=("centroid_id",)
-    )
-    return np.array([r["vector"] for r in rows], dtype=np.float64)
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ (combined: coarse partition pruning × compressed codes)
-# ---------------------------------------------------------------------------
-
-
-def build_ivfpq_index(
-    corpus: DataFrame,
-    path: str,
-    dim: int,
-    n_centroids: int = 16,
-    m: int = 8,
-    ks: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict[str, Any]:
-    """The FAISS-at-scale architecture (IVF-PQ), Spark-native: a
-    coarse quantizer routes every vector to an inverted list
-    (parquet partition — probing = partition pruning, unread lists
-    cost zero I/O), and each list stores PQ codes (m small ints per
-    vector — ~32× less I/O than raw float32 vectors when a list IS
-    read). Codes are non-residual (encode the vector itself, not
-    x − centroid): determinism and engine-portability over the last
-    ~10% of quantization accuracy; the exact re-rank restores true
-    scores either way."""
-    from inside_vectordb_spark.operators.pq import pq_encode, pq_train
-
-    spark = corpus.sparkSession
-    _begin_rebuild(path)
-    cents = kmeans_centroids(corpus, vec_col, n_centroids, seed, id_col=id_col)
-    books = pq_train(corpus, vec_col, dim, m, ks, seed, id_col=id_col)
-    os.makedirs(path, exist_ok=True)
-    (
-        spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "centroid_id": np.arange(len(cents), dtype=np.int32),
-                    "vector": [row.tolist() for row in cents],
-                }
-            )
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "centroids"))
-    )
-    (
-        spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "subspace": np.repeat(np.arange(m, dtype=np.int32), ks),
-                    "code": np.tile(np.arange(ks, dtype=np.int32), m),
-                    "vector": [row.tolist() for row in books.reshape(m * ks, -1)],
-                }
-            )
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "codebooks"))
-    )
-    codes = pq_encode(corpus, id_col, vec_col, books)
-    assigned = codes.join(ivf_assign(corpus, id_col, vec_col, cents), "id")
-    (
-        assigned.repartition("centroid_id")  # one file per inverted list
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(os.path.join(path, "codes"))
-    )
-    meta = {
-        "kind": "ivfpq",
-        "dim": dim,
-        "n_centroids": n_centroids,
-        "m": m,
-        "ks": ks,
-        "seed": seed,
-        "corpus": _corpus_fingerprint(corpus, id_col),
-    }
-    _write_meta(path, meta)
-    return meta
-
-
-def ensure_ivfpq_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, Any]:
-    meta = _read_meta(path)
-    want = {
-        "kind": "ivfpq",
-        # RESOLVED defaults included (review r8, the ensure_mrl_index
-        # r7 fix applied to this tier): a caller relying on the
-        # documented defaults must not silently accept an artifact
-        # built at different knobs.
-        "n_centroids": params.get("n_centroids", 16),
-        "m": params.get("m", 8),
-        "ks": params.get("ks", 16),
-        "seed": params.get("seed", 42),
-        # id_col/vec_col are caller-side names, never stored in meta —
-        # including them would fail the compare and force a silent
-        # full rebuild on EVERY call (the ensure_sq_index fix, applied
-        # to all tiers in r6s2)
-        **{k: v for k, v in params.items() if k not in ("id_col", "vec_col")},
-        "corpus": _corpus_fingerprint(corpus, params.get("id_col", "vec_id")),
-    }
-    if meta is not None and all(meta.get(k) == v for k, v in want.items()):
-        return meta
-    return build_ivfpq_index(corpus, path, **params)
-
-
-def ann_ivfpq_topk_indexed(
-    queries: DataFrame,
-    corpus: DataFrame,
-    path: str,
-    k: int = 10,
-    n_probe: int = 4,
-    refine: int = 5,
-    query_id: str = "query_id",
-    query_vec: str = "embedding",
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """IVF-PQ search: probe ``n_probe`` lists per query (scan-level
-    partition pruning over the union of probed lists), ADC-score the
-    compressed codes with each query masked to ITS probed lists,
-    refine ``k·refine`` candidates with exact cosine. Two knobs, two
-    axes: ``n_probe`` bounds I/O, ``refine`` bounds exact-rerank
-    compute."""
-    from inside_vectordb_spark.operators.ann import _rerank_candidates
-    from inside_vectordb_spark.operators.pq import (
-        _normalize_rows,
-        pq_adc_candidates_probed,
-    )
-    from pyspark.sql import Window as _W
-
-    meta = _read_meta(path)
-    if meta is None or meta.get("kind") != "ivfpq":
-        raise FileNotFoundError(f"no complete IVF-PQ index at {path}")
-    spark = queries.sparkSession
-    cents = load_ivf_centroids(spark, path)
-    books = load_pq_codebooks(spark, path)
-
-    qrows = queries.select(
-        F.col(query_id).alias("qid"), F.col(query_vec).alias("v")
-    ).collect()
-    if not qrows:
-        raise ValueError("empty query set")  # 1-D np.array([]) would
-        # reach _normalize_rows as an opaque AxisError otherwise
-        # (review r8 — the guard ann_pq_topk already has)
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["v"] for r in qrows], dtype=np.float64)
-    order = np.argsort(-(_normalize_rows(qmat) @ cents.T), axis=1)[:, :n_probe]
-    probe_lists = {int(qids[i]): set(map(int, order[i])) for i in range(len(qids))}
-    probed_ids = sorted({c for s in probe_lists.values() for c in s})
-
-    codes_all = spark.read.parquet(os.path.join(path, "codes"))
-    codes = codes_all.filter(F.col("centroid_id").isin(probed_ids))
-    # candidate count floored to a FRACTION of the stored corpus, not
-    # a fixed k*refine: recall tracks the candidate fraction, and the
-    # fixed count starves it as N grows (ann_pq_topk measured 0.83 ->
-    # 0.615 recall@10 at N=2000 before gaining the same floor — the
-    # r6 scale-sweep defect, applied to this tier in review r8). The
-    # corpus size comes from the meta fingerprint (kept current across
-    # upserts by _merge_fingerprint) — a distinct().count() over the
-    # m-rows-per-doc codes table would be a full shuffle per search
-    # call (advisory r9).
-    import math as _math
-
-    n_corpus = int(meta["corpus"]["n"])
-    n_refine = max(k * refine, _math.ceil(0.075 * n_corpus))
-    partials = pq_adc_candidates_probed(
-        codes, qids, qmat, books, probe_lists, n_refine
-    )
-    w = _W.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("doc_id"))
-    cand = (
-        partials.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= n_refine)
-        .select("query_id", "doc_id")
     )
     return _rerank_candidates(
         cand, queries, corpus, query_id, query_vec, corpus_id, corpus_vec, k, round_to
@@ -793,60 +488,6 @@ def ann_pq_topk_indexed(
         round_to=round_to,
         codes=codes,
         codebooks=books,
-    )
-
-
-def ann_ivf_topk_indexed(
-    queries: DataFrame,
-    corpus: DataFrame,
-    path: str,
-    k: int = 10,
-    n_probe: int = 4,
-    query_id: str = "query_id",
-    query_vec: str = "embedding",
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """T4 search against a STORED index: centroids load driver-side
-    (tiny), probed inverted lists come back via partition pruning —
-    ``centroid_id IN (probes)`` prunes unprobed list files at the
-    scan, the disk-level analogue of FAISS's nprobe."""
-    meta = _read_meta(path)
-    if meta is None or meta.get("kind") != "ivf":
-        raise FileNotFoundError(f"no complete IVF index at {path}")
-    spark = queries.sparkSession
-    cents = load_ivf_centroids(spark, path)
-
-    qrows = queries.select(
-        F.col(query_id).alias("qid"), l2_normalize(query_vec).alias("v")
-    ).collect()
-    if not qrows:
-        raise ValueError("empty query set")  # 1-D np.array([]) would
-        # raise an opaque matmul ValueError otherwise (review r8)
-    qids = [r["qid"] for r in qrows]
-    qmat = np.array([r["v"] for r in qrows], dtype=np.float64)
-    order = np.argsort(-(qmat @ cents.T), axis=1)[:, :n_probe]
-    probes = spark.createDataFrame(
-        [
-            (int(qids[i]), int(order[i, j]))
-            for i in range(len(qids))
-            for j in range(order.shape[1])
-        ],
-        "query_id long, centroid_id int",
-    )
-    probed_ids = sorted({int(c) for row in order for c in row})
-    assignments = (
-        spark.read.parquet(os.path.join(path, "assignments"))
-        .filter(F.col("centroid_id").isin(probed_ids))
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(assignments, "centroid_id")
-        .select("query_id", F.col("id").alias("doc_id"))
-    )
-    return _rerank_candidates(
-        cand, queries, corpus, query_id, query_vec, corpus_id, corpus_vec, k, round_to
     )
 
 

@@ -24,12 +24,23 @@ to bucket (narrow projection, no shuffle); the index is parquet
 partitioned by bucket, so probing prunes unread partitions; the
 candidate join is bucket-keyed; exact cosine rerank touches only
 candidates.
+
+The module also holds the deterministic IVF core, each decision
+defined once: the id-modulo centroid rule (``id_rule``), the
+nearest-centroid assignment (``_assign_nearest``), the probe window
+(``probe_window``), the probe → lists → exact-rerank tail
+(``_ivf_search``), and the persisted lists/cents writer and lists
+appender (``_ensure_ivf``, ``_upsert_ivf``) behind the id-rule
+``ivf_det`` and the trained ``ivf_km`` tiers. The det-IVFPQ tier
+reuses the rule, the assignment, the probe window and the pruned
+scan; SemDeDup the rule and the assignment; det-PQ the rule.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+from collections.abc import Callable
 from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -189,18 +200,23 @@ def ensure_sign_index(
 
 
 def pruned_lists(spark: SparkSession, path: str, probes: DataFrame) -> DataFrame:
-    """The IVF inverted-lists scan pruned to the probed centroids:
-    collect the distinct probed cid set (≤ |queries| × n_probe rows —
-    the audited driver-size contract) and filter the cid-partitioned
-    parquet with literal values, so unprobed list partitions cost
-    zero I/O (PartitionFilters, the FAISS nprobe economics). Shared
-    by both det-IVF indexed searches and the registry's probe sweep
+    """The IVF inverted-lists scan pruned to the probed centroids
+    (``pruned_scan`` of the index's ``lists`` relation). Shared by
+    both det-IVF indexed searches and the registry's probe sweep
     (review r9-3: the sweep read 100% of the lists to use at most
     |Q|·4 of them)."""
+    return pruned_scan(spark, os.path.join(path, "lists"), probes)
+
+
+def pruned_scan(spark: SparkSession, rel: str, probes: DataFrame) -> DataFrame:
+    """A cid-partitioned parquet relation pruned to the probed
+    centroids: collect the distinct probed cid set (≤ |queries| ×
+    n_probe rows — the audited driver-size contract) and filter with
+    literal values, so unprobed partitions cost zero I/O
+    (PartitionFilters, the FAISS nprobe economics). The det-IVF lists
+    and the det-IVFPQ codes both read through it."""
     probed = sorted({r["cid"] for r in probes.select("cid").distinct().collect()})
-    return spark.read.parquet(os.path.join(path, "lists")).filter(
-        F.col("cid").isin(probed)
-    )
+    return spark.read.parquet(rel).filter(F.col("cid").isin(probed))
 
 
 def _index_scan(spark: SparkSession, path: str, probed: list[int]) -> DataFrame:
@@ -715,7 +731,7 @@ def _assign_nearest(
     min(struct(-score, cid)) so it partial-aggregates map-side. THE
     assignment rule for every IVF tier (det and km, build and
     O(delta) upsert); one implementation so the rounding/tie-break
-    can never diverge between the six call sites (review r6s2)."""
+    can never diverge between the call sites (review r6s2)."""
     ac = F.round(cosine_similarity(vec_col, "__cv"), 6)
     return (
         vectors.select(id_col, vec_col)
@@ -730,60 +746,57 @@ def _assign_nearest(
     )
 
 
-def ann_ivf_det_topk(
-    spark: SparkSession,
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    n_probe: int = 4,
-    centroid_stride: int = 37,
-    n_centroids_cap: int = 16,
-    query_id_col: str = "query_id",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    filter_col: str | None = None,
+def id_rule(id_col: str, stride: int, cap: int) -> Column:
+    """THE id-modulo centroid rule, ``id % stride == 1 AND id <
+    stride * cap``: a training-free subsample BOUNDED at ``cap`` rows
+    regardless of corpus size, which DuckDB restates literally. The
+    det-IVF and det-IVFPQ coarse quantizers, the det-PQ codebooks and
+    SemDeDup's clusters select their centroids with it, and the
+    frozen-quantizer upserts reject delta ids that match it."""
+    return ((F.col(id_col) % stride) == 1) & (F.col(id_col) < stride * cap)
+
+
+def id_rule_centroids(
+    corpus: DataFrame, id_col: str, vec_col: str, stride: int, cap: int
 ) -> DataFrame:
-    """IVF with a DETERMINISTIC coarse quantizer — the FAISS-analogue
-    tier made fully hash-verifiable (the np.random k-means IVF in
-    ``operators/ann.py`` stays as the stochastic twin, rows-only).
-    The centroid set is the id-selected corpus subsample
-    ``id % stride == 1 AND id < stride * cap`` — BOUNDED at
-    ``n_centroids_cap`` regardless of corpus size, so the quantizer
-    broadcast and the per-row assignment cost are O(cap) at any scale
-    (FAISS accepts any coarse quantizer; sampled-point quantizers are
-    the classic training-free variant).
+    """(cid, __cv): the corpus rows ``id_rule`` selects."""
+    return corpus.filter(id_rule(id_col, stride, cap)).select(
+        F.col(id_col).alias("cid"), F.col(vec_col).alias("__cv")
+    )
 
-    Assignment/probe ordering uses cosine ROUNDED to 6 dp with
-    centroid-id tie-break, so the argmax is cross-engine stable even
-    at float-ulp ties — and assignment is a map-side-combinable
-    struct-min AGGREGATE (no window: corpus vectors never ride a
-    shuffle keyed by row id).
 
-    Scale shape (same as the stochastic IVF): assignment is corpus ×
-    broadcast(centroids) — the one-pass index-build cost; probing
-    touches ``n_probe`` inverted lists per query; the exact rerank
-    sees only candidates."""
-    cents = corpus.filter(
-        ((F.col(id_col) % centroid_stride) == 1)
-        & (F.col(id_col) < centroid_stride * n_centroids_cap)
-    ).select(F.col(id_col).alias("cid"), F.col(vec_col).alias("__cv"))
-    # same loud guard as the build path (review r9-4): an offset id
-    # space (snowflake/partition-encoded) selects NO centroids, and
-    # every downstream join is then empty — the similarity_join auto
-    # route would silently return a zero-row "top-k" for any large
-    # corpus with non-dense ids. The probe is a limit(1) early-exit
-    # scan in the healthy case (dense ids hit the rule within the
-    # first stride rows).
+def _require_id_rule_hit(cents: DataFrame, stride: int, cap: int) -> None:
+    """Fail loudly when the id rule selects nothing: an offset id
+    space (snowflake/partition-encoded) misses ``[1, stride*cap)``,
+    and an empty quantizer would serve empty top-k forever. A
+    ``limit(1)`` early-exit scan — dense ids hit the rule within the
+    first ``stride`` rows. Called only where a guard has always run
+    (the in-memory search and the build), never inside the shared
+    rule, so pinned search plans gain no scan."""
     if cents.limit(1).count() == 0:
         raise ValueError(
-            f"ivf_det centroid rule (id % {centroid_stride} == 1, id < "
-            f"{centroid_stride * n_centroids_cap}) selects no corpus rows "
+            f"ivf_det centroid rule (id % {stride} == 1, id < "
+            f"{stride * cap}) selects no corpus rows "
             "— ids don't intersect the rule range; use the km tier or "
             "adjust stride/cap"
         )
-    return _ivf_search(
-        queries, corpus, cents, k, n_probe, query_id_col, id_col, vec_col,
-        filter_col=filter_col,
+
+
+def probe_window(qb: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
+    """Each query's ``n_probe`` nearest centroids — THE probe rule of
+    every deterministic IVF tier. ``qb`` carries (query_id, __qv, …),
+    ``cents`` (cid, __cv, …); the ranking is cosine ROUNDED to 6 dp
+    with cid tie-break, so it is cross-engine stable even at
+    float-ulp ties. Keeps every input column plus the probe score
+    ``__pc`` and rank ``__rn`` (1 = nearest). The query side is
+    small, so a per-query window over ≤ cap broadcast rows is bounded
+    work."""
+    pw = Window.partitionBy("query_id").orderBy(F.desc("__pc"), F.asc("cid"))
+    return (
+        qb.crossJoin(F.broadcast(cents))
+        .withColumn("__pc", F.round(cosine_similarity("__qv", "__cv"), 6))
+        .withColumn("__rn", F.row_number().over(pw))
+        .filter(F.col("__rn") <= n_probe)
     )
 
 
@@ -797,12 +810,19 @@ def _ivf_search(
     id_col: str,
     vec_col: str,
     filter_col: str | None = None,
+    lists_path: str | None = None,
 ) -> DataFrame:
-    """The assignment → probe → rerank tail every deterministic IVF
-    variant shares (extracted r8 so the id-rule and hash-rule coarse
-    quantizers cannot diverge in search semantics). ``cents`` =
-    (cid, __cv), any id type — ordering/tie-breaks only require the
-    id to be orderable, not numeric.
+    """The probe → lists → exact-rerank tail every deterministic IVF
+    variant shares, so the id-rule, hash-rule and trained quantizers
+    cannot diverge in search semantics. ``cents`` = (cid, __cv), any
+    id type — ordering/tie-breaks only require the id to be
+    orderable, not numeric.
+
+    The inverted lists are either assigned in-plan (corpus × broadcast
+    centroids, ``lists_path`` None) or read from a stored index's
+    cid-partitioned ``lists`` relation, pruned to the probed cids
+    (``pruned_lists``). Deterministic assignment makes both answer
+    identically.
 
     ``filter_col``: optional metadata predicate — rank only corpus
     rows whose value equals the query's. Same composition as the
@@ -810,27 +830,18 @@ def _ivf_search(
     covers the full corpus), the predicate post-filters the rerank
     join, and self-matches are excluded iff a filter is set (the
     engine-wide coupling the registered oracles encode)."""
-    # corpus -> nearest centroid: argmax rounded cosine, cid tie-break,
-    # expressed as min(struct(-score, cid)) so it partial-aggregates
-    assign = _assign_nearest(corpus, cents, id_col, vec_col)
-    # queries -> n_probe nearest centroids (query side is small; a
-    # per-query window over cap rows is bounded work)
     qcols = [F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")]
     if filter_col is not None:
         qcols.append(F.col(filter_col).alias("__qf"))
-    qb = queries.select(*qcols)
-    pw = Window.partitionBy("query_id").orderBy(F.desc("__pc"), F.asc("cid"))
     keep = ["query_id", "__qv", "cid"] + (
         ["__qf"] if filter_col is not None else []
     )
-    probes = (
-        qb.crossJoin(F.broadcast(cents))
-        .withColumn("__pc", F.round(cosine_similarity("__qv", "__cv"), 6))
-        .withColumn("__rn", F.row_number().over(pw))
-        .filter(F.col("__rn") <= n_probe)
-        .select(*keep)
-    )
-    cand = probes.join(assign, "cid").drop("cid")
+    probes = probe_window(queries.select(*qcols), cents, n_probe).select(*keep)
+    if lists_path is None:
+        lists = _assign_nearest(corpus, cents, id_col, vec_col)
+    else:
+        lists = pruned_lists(queries.sparkSession, lists_path, probes)
+    cand = probes.join(lists, "cid").drop("cid")
     ccols = [F.col(id_col).alias("doc_id"), F.col(vec_col).alias("__dv")] + (
         [F.col(filter_col).alias("__cf")] if filter_col is not None else []
     )
@@ -849,6 +860,137 @@ def _ivf_search(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "doc_id", "score", "rank")
+    )
+
+
+def _ensure_ivf(
+    spark: SparkSession,
+    corpus: DataFrame,
+    path: str,
+    want: dict,
+    centroids: Callable[[], DataFrame],
+    id_col: str,
+    vec_col: str,
+) -> str:
+    """THE build of a persisted deterministic IVF index (det and km):
+    reuse a complete index whose meta matches ``want`` (params +
+    corpus fingerprint); otherwise drop the completeness marker, write
+    the centroid table ``cents`` (``centroids()`` → (cid, __cv)), assign
+    the corpus against the STORED centroids into ``lists`` partitioned
+    by cid (inverted lists as directory layout → probing = parquet
+    partition pruning), and write meta.json LAST as the completeness
+    marker. Stored centroids let O(delta) upserts assign without the
+    base corpus and without retraining."""
+    from inside_vectordb_spark.operators.ann_index import _begin_rebuild
+
+    meta = mio.read_json(mio.join(path, "meta.json"))
+    if meta is not None and all(meta.get(k) == v for k, v in want.items()):
+        return path
+    _begin_rebuild(path)  # no stale completeness marker over torn data
+    centroids().write.mode("overwrite").parquet(os.path.join(path, "cents"))
+    stored_cents = spark.read.parquet(os.path.join(path, "cents"))
+    assign = _assign_nearest(corpus, stored_cents, id_col, vec_col)
+    assign.repartition("cid").write.mode("overwrite").partitionBy("cid").parquet(
+        os.path.join(path, "lists")
+    )
+    mio.write_json(mio.join(path, "meta.json"), want)
+    return path
+
+
+def _upsert_ivf(
+    spark: SparkSession,
+    new_vectors: DataFrame,
+    path: str,
+    kind: str,
+    id_col: str,
+    vec_col: str,
+    check_delta: Callable[[dict], None] | None = None,
+) -> dict:
+    """THE lists appender of the persisted deterministic IVF tiers
+    (FAISS ``add``): assign ONLY the delta against the stored, frozen
+    centroids and append its rows into the cid-partitioned lists —
+    O(delta) work, and deterministic assignment makes the maintained
+    lists bit-identical to a build over base ∪ delta against the
+    same centroids. ``check_delta(meta)`` runs a tier's own delta
+    contract first. Delta ids must be DISJOINT from the stored ones
+    (the append-only contract every upsert shares): a re-added id
+    would be served twice in a top-k, so a retried maintenance job
+    fails loudly instead.
+
+    Serialized under the commit lock (review r9-4): without it the
+    disjointness guard races a concurrent upsert of the same delta
+    (both pass, the second appends duplicate rows), and readers /
+    ensure_* hit the marker window of a healthy index mid-append."""
+    from inside_vectordb_spark.operators.ann_index import (
+        _assert_disjoint_delta,
+        _corpus_fingerprint,
+        _merge_fingerprint,
+    )
+
+    with mio.commit_lock(path):
+        meta = mio.read_json(mio.join(path, "meta.json"))
+        if meta is None or meta.get("kind") != kind:
+            raise FileNotFoundError(f"no complete {kind} index at {path}")
+        if check_delta is not None:
+            check_delta(meta)
+        _assert_disjoint_delta(
+            spark.read.parquet(os.path.join(path, "lists")).select("doc_id"),
+            new_vectors.select(id_col),
+            path,
+        )
+        cents = spark.read.parquet(os.path.join(path, "cents"))
+        assign = _assign_nearest(new_vectors, cents, id_col, vec_col)
+        assign.repartition("cid").write.mode("append").partitionBy("cid").parquet(
+            os.path.join(path, "lists")
+        )
+        meta["corpus"] = _merge_fingerprint(
+            meta.get("corpus"), _corpus_fingerprint(new_vectors, id_col)
+        )
+        mio.write_json(mio.join(path, "meta.json"), meta)
+        return meta
+
+
+def ann_ivf_det_topk(
+    spark: SparkSession,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int = 10,
+    n_probe: int = 4,
+    centroid_stride: int = 37,
+    n_centroids_cap: int = 16,
+    query_id_col: str = "query_id",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    filter_col: str | None = None,
+) -> DataFrame:
+    """IVF with a DETERMINISTIC coarse quantizer — the FAISS-analogue
+    tier made fully hash-verifiable (the np.random k-means IVF in
+    ``operators/ann.py`` stays as the stochastic twin, rows-only).
+    The centroid set is ``id_rule``'s id-selected corpus subsample —
+    BOUNDED at ``n_centroids_cap`` regardless of corpus size, so the
+    quantizer broadcast and the per-row assignment cost are O(cap) at
+    any scale (FAISS accepts any coarse quantizer; sampled-point
+    quantizers are the classic training-free variant).
+
+    Assignment and probing (``_assign_nearest``, ``probe_window``)
+    use cosine ROUNDED to 6 dp with centroid-id tie-break, and
+    assignment is a map-side-combinable struct-min AGGREGATE (no
+    window: corpus vectors never ride a shuffle keyed by row id).
+
+    Scale shape: assignment is corpus × broadcast(centroids) — the
+    one-pass index-build cost; probing touches ``n_probe`` inverted
+    lists per query; the exact rerank sees only candidates."""
+    cents = id_rule_centroids(
+        corpus, id_col, vec_col, centroid_stride, n_centroids_cap
+    )
+    # same loud guard as the build path (review r9-4): with no
+    # centroids every downstream join is empty, and the
+    # similarity_join auto route would silently return a zero-row
+    # "top-k" for any large corpus with non-dense ids
+    _require_id_rule_hit(cents, centroid_stride, n_centroids_cap)
+    return _ivf_search(
+        queries, corpus, cents, k, n_probe, query_id_col, id_col, vec_col,
+        filter_col=filter_col,
     )
 
 
@@ -935,16 +1077,23 @@ def ensure_ivf_det_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """Persist the deterministic-IVF assignment table as parquet
-    PARTITIONED BY centroid id — the inverted lists as directory
-    layout, so probing n_probe lists is genuine partition pruning
-    (unprobed lists are never read). The quantizer itself needs no
-    artifact: centroids derive from the corpus by the stored rule
-    (stride/cap in meta.json), the same no-shipped-artifact property
-    the sign-plane generator has. meta.json (atomic via _meta_io)
-    carries params + corpus fingerprint; written LAST as the
-    completeness marker."""
+    """Persist the deterministic-IVF index (``_ensure_ivf``): the
+    assignment table partitioned by centroid id, so probing n_probe
+    lists is genuine partition pruning, plus the centroid vectors
+    for O(delta) upserts. Search never needs the stored centroids:
+    they re-derive from the corpus by the stored rule (stride/cap in
+    meta.json), the same no-shipped-artifact property the sign-plane
+    generator has."""
     from inside_vectordb_spark.operators.ann_index import _corpus_fingerprint
+
+    def centroids() -> DataFrame:
+        cents = id_rule_centroids(
+            corpus, id_col, vec_col, centroid_stride, n_centroids_cap
+        )
+        # never persist an empty "complete" index that serves empty
+        # top-k forever (the one count is build-path-only cost)
+        _require_id_rule_hit(cents, centroid_stride, n_centroids_cap)
+        return cents
 
     want = {
         "kind": "ivf_det",
@@ -952,36 +1101,7 @@ def ensure_ivf_det_index(
         "cap": n_centroids_cap,
         "corpus": _corpus_fingerprint(corpus, id_col),
     }
-    meta = mio.read_json(mio.join(path, "meta.json"))
-    if meta is not None and all(meta.get(k) == v for k, v in want.items()):
-        return path
-    from inside_vectordb_spark.operators.ann_index import _begin_rebuild
-
-    _begin_rebuild(path)  # no stale completeness marker over torn data
-    cents = corpus.filter(
-        ((F.col(id_col) % centroid_stride) == 1)
-        & (F.col(id_col) < centroid_stride * n_centroids_cap)
-    ).select(F.col(id_col).alias("cid"), F.col(vec_col).alias("__cv"))
-    # the id-rule assumes ids intersect [1, stride*cap): an offset id
-    # space (snowflake/partition-encoded) selects NOTHING — fail loudly
-    # instead of persisting an empty "complete" index that serves
-    # empty top-k forever (the one count is build-path-only cost)
-    if cents.limit(1).count() == 0:
-        raise ValueError(
-            f"ivf_det centroid rule (id % {centroid_stride} == 1, id < "
-            f"{centroid_stride * n_centroids_cap}) selects no corpus rows "
-            "— ids don't intersect the rule range; use the km tier or "
-            "adjust stride/cap"
-        )
-    assign = _assign_nearest(corpus, cents, id_col, vec_col)
-    assign.repartition("cid").write.mode("overwrite").partitionBy("cid").parquet(
-        os.path.join(path, "lists")
-    )
-    # centroid VECTORS persist so O(delta) upserts can assign without
-    # the base corpus (the rule still re-derives them at search time)
-    cents.write.mode("overwrite").parquet(os.path.join(path, "cents"))
-    mio.write_json(mio.join(path, "meta.json"), want)
-    return path
+    return _ensure_ivf(spark, corpus, path, want, centroids, id_col, vec_col)
 
 
 def upsert_ivf_det_index(
@@ -991,57 +1111,26 @@ def upsert_ivf_det_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> dict:
-    """FAISS ``add`` on the deterministic-IVF tier: assign ONLY the
-    delta against the frozen centroid rule and append its rows into
-    the cid-partitioned lists — O(delta) work, and because assignment
-    is deterministic the maintained lists are BIT-IDENTICAL to a full
-    rebuild over base ∪ delta (the registered upsert query shares the
-    plain search oracle).
+    """FAISS ``add`` on the deterministic-IVF tier (``_upsert_ivf``):
+    the registered upsert query shares the plain search oracle.
 
     Contract: delta ids disjoint from stored ids AND disjoint from
     the centroid rule (``id % stride == 1 AND id < stride*cap``) — a
     rule-matching delta would change the re-derived quantizer, so it
     is REJECTED (rebuild instead, FAISS retrain semantics)."""
-    # serialize maintenance under the commit lock (review r9-4, the
-    # hnsw/sign r9-2 rule applied tier-wide): without it the
-    # disjointness guard races a concurrent upsert of the same delta
-    # (both pass, the second appends duplicate rows), and readers /
-    # ensure_* hit the marker window of a healthy index mid-append
-    with mio.commit_lock(path):
-        from inside_vectordb_spark.operators.ann_index import (
-            _corpus_fingerprint,
-            _merge_fingerprint,
-        )
 
-        meta = mio.read_json(mio.join(path, "meta.json"))
-        if meta is None or meta.get("kind") != "ivf_det":
-            raise FileNotFoundError(f"no complete ivf_det index at {path}")
+    def reject_rule_ids(meta: dict) -> None:
         stride, cap = int(meta["stride"]), int(meta["cap"])
-        bad = new_vectors.filter(
-            ((F.col(id_col) % stride) == 1) & (F.col(id_col) < stride * cap)
-        ).count()
+        bad = new_vectors.filter(id_rule(id_col, stride, cap)).count()
         if bad:
             raise ValueError(
                 f"{bad} delta ids match the centroid rule (id % {stride} == 1, "
                 f"id < {stride * cap}); rebuild via ensure_ivf_det_index instead"
             )
-        from inside_vectordb_spark.operators.ann_index import _assert_disjoint_delta
 
-        _assert_disjoint_delta(
-            spark.read.parquet(os.path.join(path, "lists")).select("doc_id"),
-            new_vectors.select(id_col),
-            path,
-        )
-        cents = spark.read.parquet(os.path.join(path, "cents"))
-        assign = _assign_nearest(new_vectors, cents, id_col, vec_col)
-        assign.repartition("cid").write.mode("append").partitionBy("cid").parquet(
-            os.path.join(path, "lists")
-        )
-        meta["corpus"] = _merge_fingerprint(
-            meta.get("corpus"), _corpus_fingerprint(new_vectors, id_col)
-        )
-        mio.write_json(mio.join(path, "meta.json"), meta)
-        return meta
+    return _upsert_ivf(
+        spark, new_vectors, path, "ivf_det", id_col, vec_col, reject_rule_ids
+    )
 
 
 def ann_ivf_det_topk_indexed(
@@ -1067,37 +1156,32 @@ def ann_ivf_det_topk_indexed(
     ensure_ivf_det_index(
         spark, corpus, path, centroid_stride, n_centroids_cap, id_col, vec_col
     )
-    cents = corpus.filter(
-        ((F.col(id_col) % centroid_stride) == 1)
-        & (F.col(id_col) < centroid_stride * n_centroids_cap)
-    ).select(F.col(id_col).alias("cid"), F.col(vec_col).alias("__cv"))
-    qb = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+    cents = id_rule_centroids(
+        corpus, id_col, vec_col, centroid_stride, n_centroids_cap
     )
-    pw = Window.partitionBy("query_id").orderBy(F.desc("__pc"), F.asc("cid"))
-    probes = (
-        qb.crossJoin(F.broadcast(cents))
-        .withColumn("__pc", F.round(cosine_similarity("__qv", "__cv"), 6))
-        .withColumn("__rn", F.row_number().over(pw))
-        .filter(F.col("__rn") <= n_probe)
-        .select("query_id", "__qv", "cid")
+    return _ivf_search(
+        queries, corpus, cents, k, n_probe, query_id_col, id_col, vec_col,
+        lists_path=path,
     )
-    lists = pruned_lists(spark, path, probes)
-    cand = probes.join(lists, "cid").select("query_id", "__qv", "doc_id")
-    withvec = cand.join(
-        corpus.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("__dv")),
-        "doc_id",
-    )
-    scored = withvec.select(
-        "query_id",
-        "doc_id",
-        F.round(cosine_similarity("__qv", "__dv"), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+
+
+def _km_centroids(
+    corpus: DataFrame, km_k: int, km_iters: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(cid, __cv): the deterministic Lloyd centroids, one array per
+    cluster in ``pos`` order."""
+    from inside_vectordb_spark.operators.traindata import kmeans_lloyd
+
+    km = kmeans_lloyd(corpus, k=km_k, iters=km_iters, id_col=id_col, vec_col=vec_col)
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
+        km.groupBy("cluster")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "centroid"))),
+                lambda s: s["centroid"],
+            ).alias("__cv")
+        )
+        .select(F.col("cluster").alias("cid"), "__cv")
     )
 
 
@@ -1135,46 +1219,9 @@ def ann_ivf_km_topk(
     MLlib KMeans shape); index assignment = one corpus ×
     broadcast(k×dim) pass; probes touch n_probe lists; only
     candidates reach the exact rerank."""
-    from inside_vectordb_spark.operators.traindata import kmeans_lloyd
-
-    km = kmeans_lloyd(corpus, k=km_k, iters=km_iters, id_col=id_col, vec_col=vec_col)
-    cents = (
-        km.groupBy("cluster")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "centroid"))),
-                lambda s: s["centroid"],
-            ).alias("__cv")
-        )
-        .select(F.col("cluster").alias("cid"), "__cv")
-    )
-    assign = _assign_nearest(corpus, cents, id_col, vec_col)
-    qb = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    pw = Window.partitionBy("query_id").orderBy(F.desc("__pc"), F.asc("cid"))
-    probes = (
-        qb.crossJoin(F.broadcast(cents))
-        .withColumn("__pc", F.round(cosine_similarity("__qv", "__cv"), 6))
-        .withColumn("__rn", F.row_number().over(pw))
-        .filter(F.col("__rn") <= n_probe)
-        .select("query_id", "__qv", "cid")
-    )
-    cand = probes.join(assign, "cid").select("query_id", "__qv", "doc_id")
-    withvec = cand.join(
-        corpus.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("__dv")),
-        "doc_id",
-    )
-    scored = withvec.select(
-        "query_id",
-        "doc_id",
-        F.round(cosine_similarity("__qv", "__dv"), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
+    cents = _km_centroids(corpus, km_k, km_iters, id_col, vec_col)
+    return _ivf_search(
+        queries, corpus, cents, k, n_probe, query_id_col, id_col, vec_col
     )
 
 
@@ -1187,16 +1234,14 @@ def ensure_ivf_km_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """Persist the TRAINED-quantizer IVF: the Lloyd centroids
-    (FAISS's trained coarse quantizer — unlike the det-IVF rule they
-    cannot be re-derived at serving time without re-training, so the
-    k×dim table IS part of the index artifact, exactly as FAISS
-    serializes its quantizer) plus the assignment table partitioned
-    by cid (inverted lists as directory layout → probing = parquet
-    partition pruning). meta.json written LAST as the completeness
-    marker; deterministic training makes rebuilds bit-identical."""
+    """Persist the TRAINED-quantizer IVF (``_ensure_ivf``): the Lloyd
+    centroids (FAISS's trained coarse quantizer — unlike the det-IVF
+    rule they cannot be re-derived at serving time without
+    re-training, so the k×dim table IS part of the index artifact,
+    exactly as FAISS serializes its quantizer) plus the assignment
+    table partitioned by cid. Deterministic training makes rebuilds
+    bit-identical."""
     from inside_vectordb_spark.operators.ann_index import _corpus_fingerprint
-    from inside_vectordb_spark.operators.traindata import kmeans_lloyd
 
     want = {
         "kind": "ivf_km",
@@ -1204,31 +1249,11 @@ def ensure_ivf_km_index(
         "km_iters": km_iters,
         "corpus": _corpus_fingerprint(corpus, id_col),
     }
-    meta = mio.read_json(mio.join(path, "meta.json"))
-    if meta is not None and all(meta.get(k) == v for k, v in want.items()):
-        return path
-    from inside_vectordb_spark.operators.ann_index import _begin_rebuild
-
-    _begin_rebuild(path)  # no stale completeness marker over torn data
-    km = kmeans_lloyd(corpus, k=km_k, iters=km_iters, id_col=id_col, vec_col=vec_col)
-    cents = (
-        km.groupBy("cluster")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "centroid"))),
-                lambda s: s["centroid"],
-            ).alias("__cv")
-        )
-        .select(F.col("cluster").alias("cid"), "__cv")
+    return _ensure_ivf(
+        spark, corpus, path, want,
+        lambda: _km_centroids(corpus, km_k, km_iters, id_col, vec_col),
+        id_col, vec_col,
     )
-    cents.write.mode("overwrite").parquet(os.path.join(path, "cents"))
-    stored_cents = spark.read.parquet(os.path.join(path, "cents"))
-    assign = _assign_nearest(corpus, stored_cents, id_col, vec_col)
-    assign.repartition("cid").write.mode("overwrite").partitionBy("cid").parquet(
-        os.path.join(path, "lists")
-    )
-    mio.write_json(mio.join(path, "meta.json"), want)
-    return path
 
 
 def ann_ivf_km_topk_indexed(
@@ -1253,33 +1278,9 @@ def ann_ivf_km_topk_indexed(
     ``ann_ivf_km_topk`` (the registered query shares its oracle)."""
     ensure_ivf_km_index(spark, corpus, path, km_k, km_iters, id_col, vec_col)
     cents = spark.read.parquet(os.path.join(path, "cents"))
-    qb = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    pw = Window.partitionBy("query_id").orderBy(F.desc("__pc"), F.asc("cid"))
-    probes = (
-        qb.crossJoin(F.broadcast(cents))
-        .withColumn("__pc", F.round(cosine_similarity("__qv", "__cv"), 6))
-        .withColumn("__rn", F.row_number().over(pw))
-        .filter(F.col("__rn") <= n_probe)
-        .select("query_id", "__qv", "cid")
-    )
-    lists = pruned_lists(spark, path, probes)
-    cand = probes.join(lists, "cid").select("query_id", "__qv", "doc_id")
-    withvec = cand.join(
-        corpus.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("__dv")),
-        "doc_id",
-    )
-    scored = withvec.select(
-        "query_id",
-        "doc_id",
-        F.round(cosine_similarity("__qv", "__dv"), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
+    return _ivf_search(
+        queries, corpus, cents, k, n_probe, query_id_col, id_col, vec_col,
+        lists_path=path,
     )
 
 
@@ -1290,47 +1291,10 @@ def upsert_ivf_km_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> dict:
-    """FAISS ``add`` on the trained-quantizer tier: assign ONLY the
-    delta against the STORED centroids (the quantizer is frozen by
-    the artifact itself — FAISS never retrains on add) and append
-    into the cid-partitioned lists — O(delta) work. Unlike the
-    rule-derived det-IVF the delta needs no id RULE, but the ids must
-    be DISJOINT from the stored ones (the append-only contract every
-    upsert in this repo shares): re-adding an id would duplicate its
-    list entry and serve the same doc twice in a top-k. Enforced here
-    with a broadcast semi-join against the stored lists (delta is
-    small by contract) — a retried maintenance job fails loudly
-    instead of corrupting served results. Drift stays the retrain
-    decision (rebuild via ensure_ivf_km_index), exactly FAISS's
-    train/add split."""
-    # serialize maintenance under the commit lock (review r9-4, the
-    # hnsw/sign r9-2 rule applied tier-wide): without it the
-    # disjointness guard races a concurrent upsert of the same delta
-    # (both pass, the second appends duplicate rows), and readers /
-    # ensure_* hit the marker window of a healthy index mid-append
-    with mio.commit_lock(path):
-        from inside_vectordb_spark.operators.ann_index import (
-            _corpus_fingerprint,
-            _merge_fingerprint,
-        )
-
-        meta = mio.read_json(mio.join(path, "meta.json"))
-        if meta is None or meta.get("kind") != "ivf_km":
-            raise FileNotFoundError(f"no complete ivf_km index at {path}")
-        from inside_vectordb_spark.operators.ann_index import _assert_disjoint_delta
-
-        _assert_disjoint_delta(
-            spark.read.parquet(os.path.join(path, "lists")).select("doc_id"),
-            new_vectors.select(id_col),
-            path,
-        )
-        cents = spark.read.parquet(os.path.join(path, "cents"))
-        assign = _assign_nearest(new_vectors, cents, id_col, vec_col)
-        assign.repartition("cid").write.mode("append").partitionBy("cid").parquet(
-            os.path.join(path, "lists")
-        )
-        meta["corpus"] = _merge_fingerprint(
-            meta.get("corpus"), _corpus_fingerprint(new_vectors, id_col)
-        )
-        mio.write_json(mio.join(path, "meta.json"), meta)
-        return meta
+    """FAISS ``add`` on the trained-quantizer tier (``_upsert_ivf``):
+    the quantizer is frozen by the artifact itself — FAISS never
+    retrains on add. Unlike the rule-derived det-IVF the delta needs
+    no id RULE, only ids disjoint from the stored ones. Drift stays
+    the retrain decision (rebuild via ensure_ivf_km_index), exactly
+    FAISS's train/add split."""
+    return _upsert_ivf(spark, new_vectors, path, "ivf_km", id_col, vec_col)

@@ -373,7 +373,7 @@ def ensure_hnsw_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, 
     they are caller-side column NAMES, and including them would force
     a silent full rebuild whenever two callers alias the same data
     differently (the engine-wide convention, see
-    ``ann_index.ensure_ivfpq_index``); the corollary, as there, is
+    ``ann_index.ensure_pq_index``); the corollary, as there, is
     that pointing ``vec_col`` at a DIFFERENT vector column over the
     same ids requires a distinct ``path``."""
     meta = gen.read_meta(path)

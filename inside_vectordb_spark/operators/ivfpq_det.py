@@ -43,6 +43,12 @@ from inside_vectordb_spark.functions.vector import (
     as_double_array,
     cosine_similarity,
 )
+from inside_vectordb_spark.operators.ann_sign import (
+    _assign_nearest,
+    id_rule_centroids,
+    probe_window,
+    pruned_scan,
+)
 from inside_vectordb_spark.operators.pq_det import _l2sq, _sub_explode
 
 IVFPQ_COARSE_STRIDE = 37
@@ -54,29 +60,11 @@ IVFPQ_M = 8
 IVFPQ_CAND_K = 50
 
 
-def _coarse(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return corpus.filter(
-        ((F.col(id_col) % IVFPQ_COARSE_STRIDE) == 1)
-        & (F.col(id_col) < IVFPQ_COARSE_STRIDE * IVFPQ_COARSE_CAP)
-    ).select(F.col(id_col).alias("cid"), F.col(vec_col).alias("__cv"))
-
-
-def _assign(corpus: DataFrame, cents: DataFrame, id_col: str, vec_col: str):
-    """(doc_id, cid): delegates to THE shared nearest-centroid rule
-    (``ann_sign._assign_nearest``) — this was a byte-identical copy
-    the r6s2 consolidation missed, and a drift here would silently
-    diverge the det-IVFPQ and SemDeDup tiers from the IVF tiers
-    (review r7)."""
-    from inside_vectordb_spark.operators.ann_sign import _assign_nearest
-
-    return _assign_nearest(corpus, cents, id_col, vec_col)
-
-
 def _residuals(
     corpus: DataFrame, cents: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
     """(doc_id, cid, __rv): x − coarse_centroid(x), in double."""
-    assign = _assign(corpus, cents, id_col, vec_col)
+    assign = _assign_nearest(corpus, cents, id_col, vec_col)
     return (
         corpus.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("__xv"))
         .join(assign, "doc_id")
@@ -154,7 +142,9 @@ def ensure_ivfpq_det_index(
     from inside_vectordb_spark.operators.ann_index import _begin_rebuild
 
     _begin_rebuild(path)  # no stale completeness marker over torn data
-    cents = _coarse(corpus, id_col, vec_col)
+    cents = id_rule_centroids(
+        corpus, id_col, vec_col, IVFPQ_COARSE_STRIDE, IVFPQ_COARSE_CAP
+    )
     res = _residuals(corpus, cents, id_col, vec_col)
     rcb_sub = _res_codebook(res, m_sub, dim)
     codes = _encode_res(res, rcb_sub, m_sub, dim)
@@ -184,7 +174,9 @@ def ann_ivfpq_det_topk(
     the persisted partition-pruned inverted lists; without, they are
     computed in-plan — identical results either way (deterministic
     encode), so both registered variants share one oracle."""
-    cents = _coarse(corpus, id_col, vec_col)
+    cents = id_rule_centroids(
+        corpus, id_col, vec_col, IVFPQ_COARSE_STRIDE, IVFPQ_COARSE_CAP
+    )
     if path is not None:
         ensure_ivfpq_det_index(
             spark, corpus, path, m_sub, dim, id_col, vec_col
@@ -197,13 +189,8 @@ def ann_ivfpq_det_topk(
     qb = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     )
-    pw = Window.partitionBy("query_id").orderBy(F.desc("__pc"), F.asc("cid"))
-    probes = (
-        qb.crossJoin(F.broadcast(cents))
-        .withColumn("__pc", F.round(cosine_similarity("__qv", "__cv"), 6))
-        .withColumn("__rn", F.row_number().over(pw))
-        .filter(F.col("__rn") <= n_probe)
-        .select("query_id", "__qv", "cid", "__cv")
+    probes = probe_window(qb, cents, n_probe).select(
+        "query_id", "__qv", "cid", "__cv"
     )
     # query residual per probed list, sliced into subspaces
     qres = probes.select(
@@ -224,11 +211,7 @@ def ann_ivfpq_det_topk(
         _l2sq(F.col("__qrm"), F.col("__rcv")).alias("pd"),
     )
     if path is not None:
-        probed = sorted({r["cid"] for r in probes.select("cid").distinct().collect()})
-        codes = (
-            spark.read.parquet(os.path.join(path, "codes"))
-            .filter(F.col("cid").isin(probed))
-        )
+        codes = pruned_scan(spark, os.path.join(path, "codes"), probes)
     else:
         codes = _encode_res(res, rcb_sub, m_sub, dim)
     aw = Window.partitionBy("query_id").orderBy(F.asc("__a"), F.asc("doc_id"))

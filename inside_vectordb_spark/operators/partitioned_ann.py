@@ -40,17 +40,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from inside_vectordb_spark.operators.ann import _normalize_rows
-
-_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("query_id", LongType()),
-        StructField("doc_id", LongType()),
-        StructField("score", DoubleType()),
-    ]
-)
+from inside_vectordb_spark.operators.topk import _PARTIAL_SCHEMA
 
 
 def _local_topk(

@@ -197,56 +197,6 @@ def pq_adc_candidates(
     return codes.mapInPandas(scan, schema=_ADC_SCHEMA)
 
 
-def pq_adc_candidates_probed(
-    codes: DataFrame,
-    qids: np.ndarray,
-    qmat: np.ndarray,
-    codebooks: np.ndarray,
-    probe_lists: dict[int, set[int]],
-    n_out: int,
-) -> DataFrame:
-    """ADC scan restricted per query to its probed inverted lists:
-    ``codes`` rows carry a ``centroid_id``; a (query, code) pair only
-    scores when the code's list is in the query's probe set. The
-    mask is a Q×B boolean built per Arrow batch (Q is small); rows
-    whose list no query probes are skipped wholesale — combined with
-    partition pruning at the scan, unprobed lists never cost I/O OR
-    compute."""
-    m, ks, dsub = codebooks.shape
-    q = _normalize_rows(np.asarray(qmat, dtype=np.float64))
-    lut = np.einsum(
-        "qmd,mkd->qmk", q.reshape(len(q), m, dsub), codebooks
-    ).reshape(len(q), m * ks)
-    offsets = (np.arange(m) * ks).astype(np.int64)
-    ids_q = np.asarray(qids, dtype=np.int64)
-    probes = [np.array(sorted(probe_lists.get(int(qid), ())), dtype=np.int64) for qid in ids_q]
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            doc_ids = pdf["id"].to_numpy(dtype=np.int64)
-            cents = pdf["centroid_id"].to_numpy(dtype=np.int64)
-            codes_mat = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
-            flat = (codes_mat + offsets[None, :]).ravel()
-            scores = (
-                lut[:, flat].reshape(len(lut), len(doc_ids), m).sum(axis=2)
-            )
-            mask = np.vstack([np.isin(cents, p) for p in probes])  # (Q, B)
-            scores = np.where(mask, scores, -np.inf)
-            take = min(n_out, len(doc_ids))
-            idx = np.argpartition(-scores, take - 1, axis=1)[:, :take]
-            out_q = np.repeat(ids_q, take)
-            out_d = doc_ids[idx.ravel()]
-            out_s = np.take_along_axis(scores, idx, axis=1).ravel()
-            keep = np.isfinite(out_s)
-            yield pd.DataFrame(
-                {"query_id": out_q[keep], "doc_id": out_d[keep], "adc": out_s[keep]}
-            )
-
-    return codes.mapInPandas(scan, schema=_ADC_SCHEMA)
-
-
 def ann_pq_topk(
     queries: DataFrame,
     corpus: DataFrame,

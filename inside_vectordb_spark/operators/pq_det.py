@@ -54,6 +54,7 @@ from inside_vectordb_spark.functions.vector import (
     dot_product,
     l2_norm,
 )
+from inside_vectordb_spark.operators.ann_sign import id_rule, id_rule_centroids
 
 PQ_DET_STRIDE = 29
 PQ_DET_CAP = 16
@@ -79,12 +80,6 @@ def _sub_explode(df: DataFrame, vec_col: str, out_col: str, m_sub: int, dim: int
     slices = F.array(*[F.slice(v, m * dsub + 1, dsub) for m in range(m_sub)])
     other = [c for c in df.columns if c != vec_col]
     return df.select(*other, F.posexplode(slices).alias("m", out_col))
-
-
-def _centroids(corpus: DataFrame, id_col: str, vec_col: str, stride: int, cap: int):
-    return corpus.filter(
-        ((F.col(id_col) % stride) == 1) & (F.col(id_col) < stride * cap)
-    ).select(F.col(id_col).alias("cid"), F.col(vec_col).alias("__cv"))
 
 
 def _l2sq(a, b):
@@ -223,7 +218,9 @@ def ann_pq_det_topk(
     """In-memory deterministic-PQ search: encode + ADC + exact rerank
     in one plan (the build cost is paid per call; the persisted twin
     amortizes it)."""
-    cents = _centroids(corpus, id_col, vec_col, centroid_stride, n_centroids_cap)
+    cents = id_rule_centroids(
+        corpus, id_col, vec_col, centroid_stride, n_centroids_cap
+    )
     cents_sub = _sub_explode(cents, "__cv", "__cv", m_sub, dim)
     codes = _encode(corpus, cents_sub, id_col, vec_col, m_sub, dim)
     return _adc_search(
@@ -266,7 +263,9 @@ def ensure_pq_det_index(
     from inside_vectordb_spark.operators.ann_index import _begin_rebuild
 
     _begin_rebuild(path)  # no stale completeness marker over torn data
-    cents = _centroids(corpus, id_col, vec_col, centroid_stride, n_centroids_cap)
+    cents = id_rule_centroids(
+        corpus, id_col, vec_col, centroid_stride, n_centroids_cap
+    )
     cents_sub = _sub_explode(cents, "__cv", "__cv", m_sub, dim)
     codes = _encode(corpus, cents_sub, id_col, vec_col, m_sub, dim)
     codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
@@ -316,9 +315,7 @@ def upsert_pq_det_index(
             raise FileNotFoundError(f"no complete pq_det index at {path}")
         stride, cap = int(meta["stride"]), int(meta["cap"])
         m_sub, dim = int(meta["m"]), int(meta["dim"])
-        bad = new_vectors.filter(
-            ((F.col(id_col) % stride) == 1) & (F.col(id_col) < stride * cap)
-        ).count()
+        bad = new_vectors.filter(id_rule(id_col, stride, cap)).count()
         if bad:
             raise ValueError(
                 f"{bad} delta ids match the centroid rule (id % {stride} == 1, "
@@ -407,7 +404,9 @@ def ann_pq_det_topk_indexed(
         spark, corpus, path, m_sub, dim, centroid_stride, n_centroids_cap,
         id_col, vec_col,
     )
-    cents = _centroids(corpus, id_col, vec_col, centroid_stride, n_centroids_cap)
+    cents = id_rule_centroids(
+        corpus, id_col, vec_col, centroid_stride, n_centroids_cap
+    )
     cents_sub = _sub_explode(cents, "__cv", "__cv", m_sub, dim)
     codes = gen.drop_deleted(spark, spark.read.parquet(os.path.join(path, "codes")), path)
     return _adc_search(
@@ -440,7 +439,9 @@ def pq_det_refine_sweep(
         spark, corpus, path, m_sub, dim, centroid_stride, n_centroids_cap,
         id_col, vec_col,
     )
-    cents = _centroids(corpus, id_col, vec_col, centroid_stride, n_centroids_cap)
+    cents = id_rule_centroids(
+        corpus, id_col, vec_col, centroid_stride, n_centroids_cap
+    )
     cents_sub = _sub_explode(cents, "__cv", "__cv", m_sub, dim)
     # the sweep measures the index state SEARCH serves: tombstoned
     # docs must not occupy candidate slots or set top1_score

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inside_vectordb_spark.functions.vector import dot_product, l2_normalize
-from inside_vectordb_spark.operators.ivfpq_det import _assign
+from inside_vectordb_spark.operators.ann_sign import _assign_nearest, id_rule_centroids
 
 # SemDeDup's own quantizer knobs — deliberately NOT the det-IVFPQ
 # constants (round-5 advisory: the hard-wired 16-centroid cap made
@@ -57,13 +57,12 @@ def _semdedup_coarse(
 
     Fails LOUDLY when the id rule selects nothing (an id space that
     does not intersect ``{i : i % stride == 1, i < stride·k}``):
-    zero centroids would make ``_assign`` drop every document and
+    zero centroids would make ``_assign_nearest`` drop every document and
     semantic dedup silently report zero pairs / zero drops — the same
     guard ``ensure_ivf_det_index`` grew in r6 (advice r6)."""
-    cents = emb.filter(
-        ((F.col(id_col) % SEMDEDUP_COARSE_STRIDE) == 1)
-        & (F.col(id_col) < SEMDEDUP_COARSE_STRIDE * n_clusters)
-    ).select(F.col(id_col).alias("cid"), F.col(vec_col).alias("__cv"))
+    cents = id_rule_centroids(
+        emb, id_col, vec_col, SEMDEDUP_COARSE_STRIDE, n_clusters
+    )
     if not cents.limit(1).count() and emb.limit(1).count():
         # dedup over an EMPTY corpus is well-defined (no pairs) — only
         # a non-empty corpus the rule cannot see is the silent no-op
@@ -102,7 +101,7 @@ def semantic_dedup_pairs(
     if n_clusters is None:
         n_clusters = _default_n_clusters(emb)
     cents = _semdedup_coarse(emb, id_col, vec_col, n_clusters)
-    assign = _assign(emb, cents, id_col, vec_col)
+    assign = _assign_nearest(emb, cents, id_col, vec_col)
     # Normalize ONCE per document (the flagship O6 trick): the pair
     # stage then pays a single dot product per pair instead of
     # re-deriving both operands' norms inside every pair's cosine —

@@ -14,9 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from inside_vectordb_spark import io as eio
 from inside_vectordb_spark.operators.ann import ann_ivf_topk, ann_lsh_topk
 from inside_vectordb_spark.operators.ann_index import (
-    ann_ivf_topk_indexed,
     ann_lsh_topk_indexed,
-    ensure_ivf_index,
     ensure_lsh_index,
 )
 from inside_vectordb_spark import _generations as gen
@@ -174,59 +172,6 @@ def ann_lsh_topk_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ann_lsh_topk_indexed(
         eio.query_vectors(spark, sf_dir), corpus, path, k=10
-    )
-
-
-@register("ann_ivf_topk_indexed")
-def ann_ivf_topk_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S10+T4: IVF search against PERSISTED centroids + partitioned
-    inverted lists; probing prunes unread list partitions at the
-    parquet scan."""
-    corpus = eio.load_table(spark, sf_dir, "embeddings")
-    path = _idx_path("ivf", sf_dir)
-    ensure_ivf_index(corpus, path, n_centroids=16, seed=42)
-    return ann_ivf_topk_indexed(
-        eio.query_vectors(spark, sf_dir), corpus, path, k=10, n_probe=8
-    )
-
-
-@register("ann_ivf_upsert_topk")
-def ann_ivf_upsert_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental index maintenance (FAISS ``add``, the reference's
-    batched build loop ``004:199-211``): build the IVF index on 80%
-    of the corpus, upsert the remaining 20% as an append-only delta
-    (quantizer untouched), then search the maintained index. Result
-    equals searching an index whose assignments were derived from the
-    full corpus against the same centroids (pinned in
-    tests/test_ann_index.py); rows-only driver check."""
-    from inside_vectordb_spark.operators.ann_index import (
-        _corpus_fingerprint,
-        _read_meta,
-        build_ivf_index,
-        upsert_ivf_index,
-    )
-    from pyspark.sql import functions as F
-
-    corpus = eio.load_table(spark, sf_dir, "embeddings")
-    base = corpus.filter(F.col("vec_id") % 5 != 0)
-    delta = corpus.filter(F.col("vec_id") % 5 == 0)
-    path = _idx_path("ivf_upsert", sf_dir)
-    # Cache check against the FULL corpus: a maintained index whose
-    # merged fingerprint equals the full-corpus fingerprint is
-    # current; anything else is rebuilt base-then-delta.
-    _rebuild_if_stale(
-        path,
-        {
-            "kind": "ivf", "n_centroids": 16, "seed": 42, "base_mod": [5, 0],
-            "corpus": _corpus_fingerprint(corpus, "vec_id"),
-        },
-        lambda: (
-            build_ivf_index(base, path, n_centroids=16, seed=42),
-            upsert_ivf_index(delta, path),
-        ),
-    )
-    return ann_ivf_topk_indexed(
-        eio.query_vectors(spark, sf_dir), corpus, path, k=10, n_probe=8
     )
 
 
@@ -903,31 +848,6 @@ def ann_pq_topk_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("ann_ivfpq_topk_indexed")
-def ann_ivfpq_topk_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The combined FAISS-at-scale architecture (IVF-PQ, reference
-    ``004:84-156``'s production big-brother): a coarse quantizer routes
-    vectors to inverted-list parquet partitions (probing = partition
-    pruning — unprobed lists cost zero I/O) and each list stores PQ
-    codes (m small ints — ~32× less I/O than raw vectors when a list
-    IS read). n_probe bounds I/O, refine bounds exact-rerank compute.
-    Rows-only driver check; retention/monotonicity/cache contracts in
-    tests/test_pq.py."""
-    from inside_vectordb_spark.operators.ann_index import (
-        ann_ivfpq_topk_indexed,
-        ensure_ivfpq_index,
-    )
-
-    corpus = eio.load_table(spark, sf_dir, "embeddings")
-    path = _idx_path("ivfpq", sf_dir)
-    ensure_ivfpq_index(
-        corpus, path, dim=EMB_DIM, n_centroids=16, m=8, ks=16, seed=42
-    )
-    return ann_ivfpq_topk_indexed(
-        eio.query_vectors(spark, sf_dir), corpus, path, k=10, n_probe=8, refine=8
-    )
-
-
 from inside_vectordb_spark.operators.sq import sq_oracle_sql  # noqa: E402
 
 _SQ_ORACLE = sq_oracle_sql(eio.N_QUERY_VECTORS, 10, 5)
@@ -1157,8 +1077,7 @@ def ann_signlsh_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, so the maintained index is bit-identical to a full
     rebuild — which is why this row shares the PLAIN search oracle:
     the hash match IS the incremental==batch proof, on the hard
-    signal (the rows-only IVF twin `ann_ivf_upsert_topk` pins the
-    same property in pytest only)."""
+    signal."""
     import os
 
     from pyspark.sql import functions as F
@@ -1177,7 +1096,7 @@ def ann_signlsh_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = corpus.filter(F.col("vec_id") % 5 == 4)
     art = mio.art_path("ann_sign_upsert", sf_dir)
     # current iff the merged fingerprint equals the FULL corpus's —
-    # else rebuild base-then-delta (same cache rule as the IVF twin);
+    # else rebuild base-then-delta (same cache rule as the IVF upserts);
     # recipe keyed on the module constants so a SIGN_BITS/SIGN_DIM
     # default change rebuilds exactly once (review r7 rule, now via
     # the shared gate)
@@ -1566,8 +1485,7 @@ def ann_ivf_det_upsert_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer (O(delta), parquet append into the cid partitions),
     then search. Shares the plain det-IVF oracle — the green hash
     proves the maintained lists answer exactly like a full rebuild
-    (operators/ann_sign.py:upsert_ivf_det_index; the stochastic
-    k-means twin ann_ivf_upsert_topk stays rows-only)."""
+    (operators/ann_sign.py:upsert_ivf_det_index)."""
     from pyspark.sql import functions as F
 
     from inside_vectordb_spark import _meta_io as mio
@@ -1713,7 +1631,12 @@ def ann_ivf_det_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from inside_vectordb_spark.functions.vector import cosine_similarity
-    from inside_vectordb_spark.operators.ann_sign import ensure_ivf_det_index
+    from inside_vectordb_spark.operators.ann_sign import (
+        ensure_ivf_det_index,
+        id_rule_centroids,
+        probe_window,
+        pruned_lists,
+    )
 
     corpus = eio.load_table(spark, sf_dir, "embeddings")
     queries = eio.query_vectors(spark, sf_dir)
@@ -1723,21 +1646,10 @@ def ann_ivf_det_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inline copy of the centroid rule (review r7): probes and the
     # persisted lists must move together if the defaults change
     meta = mio.read_json(mio.join(path, "meta.json"))
-    stride, cap = int(meta["stride"]), int(meta["cap"])
-    cents = corpus.filter(
-        ((F.col("vec_id") % stride) == 1) & (F.col("vec_id") < stride * cap)
-    ).select(F.col("vec_id").alias("cid"), F.col("embedding").alias("__cv"))
-    qb = queries.select(
-        F.col("query_id"), F.col("embedding").alias("__qv")
+    cents = id_rule_centroids(
+        corpus, "vec_id", "embedding", int(meta["stride"]), int(meta["cap"])
     )
-    from pyspark.sql import Window as W
-
-    pw = W.partitionBy("query_id").orderBy(F.desc("__pc"), F.asc("cid"))
-    ranked = (
-        qb.crossJoin(F.broadcast(cents))
-        .withColumn("__pc", F.round(cosine_similarity("__qv", "__cv"), 6))
-        .withColumn("__rn", F.row_number().over(pw))
-    )
+    qb = queries.select("query_id", F.col("embedding").alias("__qv"))
     vecs = corpus.select(
         F.col("vec_id").alias("doc_id"), F.col("embedding").alias("__dv")
     )
@@ -1746,14 +1658,10 @@ def ann_ivf_det_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe-1's, so per-(query, probe-rank) partials roll up to both
     # settings — rank-1 rows ARE probe1, the rank-collapsed rows are
     # probe4; the two-arm loop scored every probe-1 candidate twice
-    probes = ranked.filter(F.col("__rn") <= 4).select(
-        "query_id", "__qv", "cid", "__rn"
-    )
+    probes = probe_window(qb, cents, 4).select("query_id", "__qv", "cid", "__rn")
     # prune the lists scan to the probed cids like the indexed
     # search does (review r9-3: the unfiltered read scanned every
     # list partition to use at most |Q|·4 of them)
-    from inside_vectordb_spark.operators.ann_sign import pruned_lists
-
     lists = pruned_lists(spark, path, probes)
     cand = probes.join(lists, "cid").join(vecs, "doc_id")
     per = cand.rollup("query_id", "__rn").agg(
@@ -2117,20 +2025,16 @@ def ann_ivfpq_det_topk_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Floors chosen with wide margin under the measured recalls at all
 # three test scales (sf0.001/0.01/0.1, seed-fixed so deterministic
-# in-engine: lsh 0.915-0.94, ivf 0.785-0.795, ivf_upsert 0.805-0.850,
-# pq 0.77-0.83, ivfpq 0.710-0.735, brp 0.99-0.995, hnsw 1.0) — the
-# reference's own acceptance style states retention floors, not point
-# values (BENCHMARK_SUMMARY.txt:36-44). r11 widened the arm set from
-# the five base tiers to the indexed/upsert/composed variants, so
-# every rows-only retrieval tier now has a driver-hash-checked
-# envelope, not just a pytest one.
+# in-engine: lsh 0.915-0.94, ivf 0.785-0.795, pq 0.77-0.83,
+# brp 0.99-0.995, hnsw 1.0) — the reference's own acceptance style
+# states retention floors, not point values
+# (BENCHMARK_SUMMARY.txt:36-44). Every rows-only retrieval tier,
+# base and indexed, has a driver-hash-checked envelope here, not
+# just a pytest one.
 _STOCH_FLOORS = {
     "brp": 0.90,
     "hnsw": 0.90,
     "ivf": 0.65,
-    "ivf_indexed": 0.65,
-    "ivf_upsert": 0.70,
-    "ivfpq_indexed": 0.62,
     "lsh": 0.80,
     "lsh_indexed": 0.80,
     "pq": 0.65,
@@ -2146,18 +2050,18 @@ _STOCH_FLOOR_ORACLE = "\nUNION ALL\n".join(
 
 @register("ann_stochastic_recall_floor", oracle=_STOCH_FLOOR_ORACLE)
 def ann_stochastic_recall_floor_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard quality signal for the five rows-only stochastic ANN
-    tiers: recall@10 of each tier vs the exact engine, asserted
+    """Hard quality signal for the rows-only stochastic ANN tiers (one
+    arm per ``_STOCH_FLOORS`` entry): recall@10 of each tier vs the exact engine, asserted
     against a pinned floor AS DATA — the oracle is the floor table
     itself, so a driver hash match proves in-engine that every
     stochastic tier still clears its recall envelope (the reference's
     recall-retention acceptance, restated as a checkable row set
     rather than a point value that would fake determinism).
 
-    One tagged-union pass: all five arms union with a method tag, one
+    One tagged-union pass: all arms union with a method tag, one
     semi-join against the exact ground truth, one groupBy(method) —
     the per-arm search plans dominate; the envelope math adds a
-    broadcast join and a 5-row aggregate."""
+    broadcast join and a one-row-per-arm aggregate."""
     from pyspark.sql import functions as F
 
     from inside_vectordb_spark.operators.topk import exact_cosine_topk
@@ -2173,9 +2077,6 @@ def ann_stochastic_recall_floor_q(spark: SparkSession, sf_dir: str) -> DataFrame
         "brp": ann_brp_topk_q,
         "hnsw": ann_hnsw_vendored_q,
         "ivf": ann_ivf_topk_q,
-        "ivf_indexed": ann_ivf_topk_indexed_q,
-        "ivf_upsert": ann_ivf_upsert_topk_q,
-        "ivfpq_indexed": ann_ivfpq_topk_indexed_q,
         "lsh": ann_lsh_topk_q,
         "lsh_indexed": ann_lsh_topk_indexed_q,
         "pq": ann_pq_topk_q,

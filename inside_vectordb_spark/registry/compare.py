@@ -261,10 +261,12 @@ def method_candidate_costs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _candidate_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(method, n_candidates, work_fraction) — shared by the oracle
     query above and ``method_speedups``' work-ratio columns."""
-    from pyspark.sql import Window
-
-    from inside_vectordb_spark.functions.vector import cosine_similarity
-    from inside_vectordb_spark.operators.ann_sign import sign_bucket
+    from inside_vectordb_spark.operators.ann_sign import (
+        ensure_ivf_det_index,
+        id_rule_centroids,
+        probe_window,
+        sign_bucket,
+    )
 
     q = eio.query_vectors(spark, sf_dir)
     c = eio.load_table(spark, sf_dir, "embeddings")
@@ -274,32 +276,22 @@ def _candidate_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sq = sb.filter(F.col("vec_id") < eio.N_QUERY_VECTORS)
     sign_n = sq.join(sb.select("bucket"), "bucket").count()
     # det-IVF: probed-list pairs (reuses the persisted lists)
-    from inside_vectordb_spark.operators.ann_sign import ensure_ivf_det_index
-
     path = _idx_path("ivf_det", sf_dir)
     ensure_ivf_det_index(spark, c, path)
-    # derive the quantizer from the INDEX's meta (stride/cap), not a
-    # third inline copy of the centroid rule (review r7): if the
-    # det-IVF defaults ever change, the rebuilt lists and these
-    # probes move together. (The DuckDB oracle restates the current
-    # 37/16 rule as literals — a default change flips that row red,
-    # which is the gate working as intended.)
+    # derive the quantizer from the INDEX's meta (stride/cap), not an
+    # inline copy of the centroid rule (review r7): if the det-IVF
+    # defaults ever change, the rebuilt lists and these probes move
+    # together. (The DuckDB oracle restates the current 37/16 rule as
+    # literals — a default change flips that row red, which is the
+    # gate working as intended.)
     from inside_vectordb_spark import _meta_io as mio
 
     meta = mio.read_json(mio.join(path, "meta.json"))
-    stride, cap = int(meta["stride"]), int(meta["cap"])
-    cents = c.filter(
-        ((F.col("vec_id") % stride) == 1) & (F.col("vec_id") < stride * cap)
-    ).select(F.col("vec_id").alias("cid"), F.col("embedding").alias("__cv"))
-    qb = q.select("query_id", F.col("embedding").alias("__qv"))
-    pw = Window.partitionBy("query_id").orderBy(F.desc("__pc"), F.asc("cid"))
-    probes = (
-        qb.crossJoin(F.broadcast(cents))
-        .withColumn("__pc", F.round(cosine_similarity("__qv", "__cv"), 6))
-        .withColumn("__rn", F.row_number().over(pw))
-        .filter(F.col("__rn") <= 4)
-        .select("query_id", "cid")
+    cents = id_rule_centroids(
+        c, "vec_id", "embedding", int(meta["stride"]), int(meta["cap"])
     )
+    qb = q.select("query_id", F.col("embedding").alias("__qv"))
+    probes = probe_window(qb, cents, 4).select("query_id", "cid")
     lists = spark.read.parquet(os.path.join(path, "lists"))
     ivf_n = probes.join(lists, "cid").count()
     exact_n = n_q * n_c

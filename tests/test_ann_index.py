@@ -11,14 +11,10 @@ import os
 import pytest
 
 from inside_vectordb_spark import io as eio
-from inside_vectordb_spark.operators.ann import ann_ivf_topk, ann_lsh_topk
+from inside_vectordb_spark.operators.ann import ann_lsh_topk
 from inside_vectordb_spark.operators.ann_index import (
-    ann_ivf_topk_indexed,
     ann_lsh_topk_indexed,
-    build_ivf_index,
-    ensure_ivf_index,
     ensure_lsh_index,
-    load_ivf_centroids,
 )
 from tests.conftest import SF_DIR
 
@@ -52,14 +48,6 @@ def test_lsh_indexed_matches_inmemory(spark, corpus, queries, tmp_path_factory):
     assert _rows(stored) == _rows(fresh)
 
 
-def test_ivf_indexed_matches_inmemory(spark, corpus, queries, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("ivf_idx"))
-    ensure_ivf_index(corpus, path, n_centroids=16, seed=42)
-    fresh = ann_ivf_topk(queries, corpus, k=10, n_centroids=16, n_probe=8, seed=42)
-    stored = ann_ivf_topk_indexed(queries, corpus, path, k=10, n_probe=8)
-    assert _rows(stored) == _rows(fresh)
-
-
 def test_ensure_skips_rebuild_when_complete(spark, corpus, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("lsh_cache"))
     ensure_lsh_index(corpus, path, **LSH)
@@ -77,63 +65,6 @@ def test_incomplete_index_rejected(spark, corpus, queries, tmp_path_factory):
     os.makedirs(os.path.join(path, "buckets"), exist_ok=True)  # no meta.json
     with pytest.raises(FileNotFoundError, match="no complete LSH index"):
         ann_lsh_topk_indexed(queries, corpus, path, k=10)
-
-
-def test_ivf_centroids_roundtrip(spark, corpus, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("ivf_cent"))
-    build_ivf_index(corpus, path, n_centroids=8, seed=42)
-    cents = load_ivf_centroids(spark, path)
-    assert cents.shape == (8, EMB_DIM)
-
-
-def test_ivf_probe_prunes_partitions(spark, corpus, tmp_path_factory):
-    """The probed scan must carry a partition filter on centroid_id —
-    unprobed inverted lists are pruned, never read."""
-    path = str(tmp_path_factory.mktemp("ivf_prune"))
-    build_ivf_index(corpus, path, n_centroids=16, seed=42)
-    scan = spark.read.parquet(os.path.join(path, "assignments")).filter(
-        "centroid_id IN (1, 3)"
-    )
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid_id" in plan.split("PartitionFilters")[1][:200]
-
-
-def test_ivf_upsert_equals_full_assignment(spark, corpus, tmp_path_factory):
-    """FAISS ``add`` contract: build on 80%, upsert 20% — stored
-    assignments must be bit-identical to assigning the FULL corpus
-    against the stored (untouched) quantizer, and the merged meta
-    fingerprint must equal the full-corpus fingerprint so a later
-    ensure_* call skips the rebuild."""
-    from pyspark.sql import functions as F
-
-    from inside_vectordb_spark.operators.ann import ivf_assign
-    from inside_vectordb_spark.operators.ann_index import (
-        _corpus_fingerprint,
-        ensure_ivf_index,
-        upsert_ivf_index,
-    )
-
-    path = str(tmp_path_factory.mktemp("ivf_upsert"))
-    base = corpus.filter(F.col("vec_id") % 5 != 0)
-    delta = corpus.filter(F.col("vec_id") % 5 == 0)
-    build_ivf_index(base, path, n_centroids=16, seed=42)
-    meta = upsert_ivf_index(delta, path)
-    assert meta["corpus"] == _corpus_fingerprint(corpus, "vec_id")
-
-    cents = load_ivf_centroids(spark, path)
-    stored = sorted(
-        (r["id"], r["centroid_id"])
-        for r in spark.read.parquet(os.path.join(path, "assignments")).collect()
-    )
-    fresh = sorted(
-        (r["id"], r["centroid_id"])
-        for r in ivf_assign(corpus, "vec_id", "embedding", cents).collect()
-    )
-    assert stored == fresh
-    # maintained index is recognized as current for the full corpus
-    mtime = os.path.getmtime(os.path.join(path, "meta.json"))
-    ensure_ivf_index(corpus, path, n_centroids=16, seed=42)
-    assert os.path.getmtime(os.path.join(path, "meta.json")) == mtime
 
 
 def test_lsh_upsert_equals_full_build(spark, corpus, queries, tmp_path_factory):

@@ -35,16 +35,18 @@ COLLECT_BUDGET = {
     "operators/ann.py": 2,            # |Q|-row probe query matrix; the
                                       # ≤ sample_limit (8192) k-means
                                       # training sample (toPandas)
-    "operators/ann_index.py": 3,      # meta fingerprints (1-row aggs); the
-                                      # k-row centroid/codebook/SQ-stat reads
-                                      # moved to _meta_io.read_parquet_rows
+    "operators/ann_index.py": 1,      # meta fingerprints (1-row aggs); the
+                                      # k-row codebook/SQ-stat reads go
+                                      # through _meta_io.read_parquet_rows
                                       # (pyarrow driver read of bounded
-                                      # artifacts — optimization r12)
-    "operators/ann_sign.py": 5,       # probed-cid lists (≤ |Q|·n_probe), 1-row
-                                      # meta; two det-IVF copies folded into
-                                      # the shared pruned_lists (review r9-3);
-                                      # centroid read moved to
-                                      # _meta_io.read_parquet_rows (r12)
+                                      # artifacts — optimization r12); the
+                                      # two |Q|-row query-matrix collects
+                                      # left with the stochastic IVF and
+                                      # IVF-PQ tiers
+    "operators/ann_sign.py": 5,       # probed-cid lists (≤ |Q|·n_probe): the
+                                      # shared pruned_scan (det-IVF, km-IVF
+                                      # and det-IVFPQ read through it) and
+                                      # the four sign-LSH probed-bucket sets
     "operators/bm25.py": 1,           # 1-row corpus stats literal (N, avgdl)
     "operators/compare.py": 2,        # per-method 1-row metric tables
     "operators/hnsw_index.py": 6,     # |Q|-row query matrix (broadcast
@@ -61,7 +63,6 @@ COLLECT_BUDGET = {
                                       # (≤ n_parts rows); tombstone read
                                       # moved to _meta_io.read_parquet_rows
                                       # (r12)
-    "operators/ivfpq_det.py": 1,      # probed-cid list (≤ |Q|·n_probe)
     "operators/lexical_index.py": 4,  # 1-row stats + per-bucket offset rows
     "operators/partitioned_ann.py": 1,  # per-partition top-k merge (≤ parts·Q·k)
     "operators/pq.py": 2,             # |Q|-row query matrix; the ≤8192-row

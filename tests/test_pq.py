@@ -143,105 +143,3 @@ def test_pq_indexed_matches_fresh(spark, tmp_path):
         for r in ann_pq_topk_indexed(q, c, path, k=K, refine=8).collect()
     }
     assert fresh == stored
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ (coarse partition pruning × compressed codes)
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def ivfpq_path(spark, tmp_path_factory):
-    from inside_vectordb_spark.operators.ann_index import build_ivfpq_index
-
-    c = eio.load_table(spark, SF_DIR_MED, "embeddings")
-    path = str(tmp_path_factory.mktemp("ivfpq") / "idx")
-    build_ivfpq_index(c, path, dim=EMB_DIM, n_centroids=16, m=8, ks=16, seed=42)
-    return path
-
-
-def test_ivfpq_recall_retention(spark, exact_sets, ivfpq_path):
-    """Registry knobs (16 lists, probe 8, refine 8) on the
-    structureless driver embeddings: probing half the lists scans
-    ~half the corpus, and ADC+refine must keep the floor the other
-    ANN tiers are held to."""
-    from inside_vectordb_spark.operators.ann_index import ann_ivfpq_topk_indexed
-
-    q = eio.query_vectors(spark, SF_DIR_MED)
-    c = eio.load_table(spark, SF_DIR_MED, "embeddings")
-    ann = ann_ivfpq_topk_indexed(q, c, ivfpq_path, k=K, n_probe=8, refine=8)
-    recall = _recall_vs_exact(ann, exact_sets)
-    assert recall >= 0.6, f"IVF-PQ retention {recall:.3f} < 0.6"
-
-
-def test_ivfpq_probe_sweep_monotone(spark, exact_sets, ivfpq_path):
-    """n_probe is the I/O knob: retention must not decrease as more
-    inverted lists are read; probing ALL lists reduces to plain PQ."""
-    from inside_vectordb_spark.operators.ann_index import ann_ivfpq_topk_indexed
-
-    q = eio.query_vectors(spark, SF_DIR_MED)
-    c = eio.load_table(spark, SF_DIR_MED, "embeddings")
-    rs = []
-    for n_probe in (2, 8, 16):
-        ann = ann_ivfpq_topk_indexed(
-            q, c, ivfpq_path, k=K, n_probe=n_probe, refine=8
-        )
-        rs.append(_recall_vs_exact(ann, exact_sets))
-    assert rs == sorted(rs), f"probe sweep not monotone: {rs}"
-
-
-def test_ivfpq_exploits_structure(spark, tmp_path):
-    """Clustered corpus: probing 2 of 16 lists recovers near-exact
-    recall — the coarse quantizer routed each cluster into few lists,
-    so the pruned scan reads a small corpus fraction (THE IVF-PQ
-    value proposition at 100 TB)."""
-    from inside_vectordb_spark.operators.ann_index import (
-        ann_ivfpq_topk_indexed,
-        build_ivfpq_index,
-    )
-
-    rng = np.random.RandomState(11)
-    centers = rng.normal(size=(10, EMB_DIM))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    m = np.repeat(centers, 100, axis=0) + rng.normal(
-        scale=0.05, size=(1000, EMB_DIM)
-    )
-    m /= np.linalg.norm(m, axis=1, keepdims=True)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": np.arange(1000, dtype=np.int64),
-            "embedding": [v.astype(np.float32).tolist() for v in m],
-        }
-    )
-    corpus = spark.createDataFrame(pdf)
-    queries = corpus.filter("vec_id % 100 < 2").select(
-        corpus["vec_id"].alias("query_id"), "embedding"
-    )
-    exact = _topk_sets(exact_cosine_topk(queries, corpus, k=K))
-    path = str(tmp_path / "ivfpq_clustered")
-    build_ivfpq_index(
-        corpus, path, dim=EMB_DIM, n_centroids=16, m=8, ks=16, seed=42
-    )
-    ann = ann_ivfpq_topk_indexed(queries, corpus, path, k=K, n_probe=2, refine=10)
-    recall = _recall_vs_exact(ann, exact)
-    assert recall >= 0.9, f"IVF-PQ on clustered data: {recall:.3f} < 0.9"
-
-
-def test_ivfpq_index_cache(spark, ivfpq_path):
-    """ensure_* with identical params + unchanged corpus reuses the
-    stored index (meta timestamp-free equality incl. corpus
-    fingerprint); a different corpus triggers a rebuild."""
-    import os as _os
-
-    from inside_vectordb_spark.operators.ann_index import ensure_ivfpq_index
-
-    c = eio.load_table(spark, SF_DIR_MED, "embeddings")
-    before = _os.path.getmtime(_os.path.join(ivfpq_path, "meta.json"))
-    ensure_ivfpq_index(
-        c, ivfpq_path, dim=EMB_DIM, n_centroids=16, m=8, ks=16, seed=42
-    )
-    assert _os.path.getmtime(_os.path.join(ivfpq_path, "meta.json")) == before
-    ensure_ivfpq_index(
-        c.limit(100), ivfpq_path, dim=EMB_DIM, n_centroids=16, m=8, ks=16, seed=42
-    )
-    assert _os.path.getmtime(_os.path.join(ivfpq_path, "meta.json")) > before
