@@ -44,11 +44,18 @@ Tombstones. Deletes are hnswlib ``mark_deleted`` / FAISS
 the data relations are untouched until a compaction or rebuild
 removes the rows physically and clears the relation. The relation is
 read as a directory, so an append is visible the moment it lands: the
-append IS a delete's commit. Meta carries ``n_deleted``, the count
-search uses to over-fetch past masked rows; it is written BEFORE the
-append, as the size of (existing ∪ new) tombstones, so a crash
-between the two only over-counts (more over-fetch, never fewer than
-k live rows) and the next delete recounts it exactly.
+append IS a delete's commit. A delete of a list of ids runs no Spark
+job: the set difference against the stored tombstones is taken on the
+driver and the new ids are appended as one parquet file written with
+pyarrow (``write_ids``; ``_meta_io.write_parquet`` renames it into
+place whole). A delete given as a DataFrame stays on the executors.
+A partial compaction writes its surviving ids to a fresh
+``tombstones_g<n>`` relation the same way. Meta carries
+``n_deleted``, the count search uses to over-fetch past masked rows;
+it is written BEFORE the append, as the size of (existing ∪ new)
+tombstones, so a crash between the two only over-counts (more
+over-fetch, never fewer than k live rows) and the next delete
+recounts it exactly.
 
 Crash behaviour, per step of a maintenance op:
   - before or during the meta write: the previous index is served;
@@ -72,7 +79,7 @@ import os
 from typing import Any, Iterable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -278,12 +285,19 @@ def delete(
         existing = tombstone_ids(path, meta, col)
         new = np.array(sorted({int(i) for i in ids} - existing), dtype=np.int64)
         n_fresh, n_total = len(new), len(existing) + len(new)
-        if n_fresh:
-            fresh = spark.createDataFrame(pd.DataFrame({col: new}))
     if n_fresh:
         meta["n_deleted"] = n_total
         write_meta(path, meta, indent)
-        fresh.write.mode("append").parquet(tomb)
+        if isinstance(ids, DataFrame):
+            fresh.write.mode("append").parquet(tomb)
+        else:
+            write_ids(tomb, new, col)
     if isinstance(ids, DataFrame):
         fresh.unpersist()
     return meta
+
+
+def write_ids(rel_dir: str, ids: np.ndarray, col: str = "id") -> None:
+    """Write a driver-held tombstone id set as one parquet file under
+    ``rel_dir`` (appending when the relation exists) — no Spark job."""
+    mio.write_parquet(rel_dir, pa.table({col: pa.array(ids, pa.int64())}))

@@ -89,6 +89,38 @@ def read_parquet_frame(paths: list[str], columns: list[str] | None = None):
     return _pa.concat_tables(tables).to_pandas()
 
 
+def write_parquet(dir_path: str, table) -> str:
+    """Driver-side write of the Arrow ``table`` as one new file under
+    ``dir_path`` (created if absent); returns the file's path. The name
+    is unique, so appends never collide, and the file is written under
+    a dot-prefixed name that every reader skips and then renamed, so a
+    reader listing the directory sees the whole file or none of it.
+
+    Only the graph's neighbor ids and level are dictionary-encoded:
+    pyarrow's default also dictionary-encodes float vectors, which
+    made one HNSW graph partition (1,354 nodes, 64-dim) 893,854 B
+    against Spark's 717,792 B, while these settings make it 715,419 B
+    and need no ``.crc`` beside it. No column statistics and no Arrow
+    schema blob: no reader of these relations uses either."""
+    import uuid
+
+    import pyarrow.parquet as _pq
+
+    os.makedirs(dir_path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = join(dir_path, f".{name}.tmp")
+    _pq.write_table(
+        table,
+        tmp,
+        use_dictionary=["neighbors.list.element", "level"],
+        write_statistics=False,
+        store_schema=False,
+    )
+    out = join(dir_path, name)
+    os.replace(tmp, out)
+    return out
+
+
 def list_files(path: str) -> tuple[tuple[str, int, int], ...]:
     """``(name, size, mtime_ns)`` of every file directly under
     ``path``, sorted by name; empty when the directory is absent. A

@@ -78,7 +78,12 @@ def _assert_disjoint_delta(
     broadcast semi-join, one count."""
     a = stored_ids.toDF("__sid")
     b = delta_ids.toDF("__sid")
-    n_dup = a.join(F.broadcast(b), "__sid", "left_semi").count()
+    _refuse_overlap(a.join(F.broadcast(b), "__sid", "left_semi").count(), path)
+
+
+def _refuse_overlap(n_dup: int, path: str) -> None:
+    """Raise the append-only error when ``n_dup`` stored ids recur in
+    an upsert delta."""
     if n_dup:
         raise ValueError(
             f"upsert: {n_dup} delta id(s) already in the index at "

@@ -7,7 +7,9 @@
   or the post-op answer, never a deleted id, and after the next
   successful commit — the retry of an uncommitted op, the following
   op after a committed one — it must serve and lay out its data dirs
-  like a crash-free run of the same sequence;
+  like a crash-free run of the same sequence. At these sizes the HNSW
+  upsert and compaction write on the driver; the upsert also runs
+  through both crash points on the executors;
 - the tombstone count stays exact when tombstones landed without a
   meta write;
 - a TF-IDF norm build after a rebuild never reuses a relation the
@@ -200,6 +202,31 @@ def test_hnsw_crash_matrix(spark, hnsw_case, monkeypatch, op, point):
     if op == "delete":
         (post, _), _ = c["crash_free"][op]
         assert not {r[1] for r in post} & set(c["next_delete"])
+
+
+@pytest.mark.parametrize("point", ["meta", "gc"])
+def test_hnsw_crash_matrix_executor_upsert(spark, hnsw_case, monkeypatch, point):
+    """The matrix above writes on the driver at these sizes; this runs
+    the upsert, its retry and the next commit on the executors,
+    forced by a zero byte budget, so both placements stay covered."""
+    c = hnsw_case
+
+    def on_executors(write):
+        def run(path):
+            with monkeypatch.context() as mp:
+                mp.setattr(hi, "_RESIDENT_MAX_BYTES", 0)
+                write(path)
+
+        return run
+
+    crashed = _check_crash(
+        c, "upsert_executor", point,
+        on_executors(lambda path: HNSW_OPS["upsert"](spark, c, path)),
+        on_executors(lambda path: _hnsw_next_commit(spark, path)),
+        lambda path: _hnsw_answer(spark, path, c["queries"]),
+        c["pre"], monkeypatch,
+    )
+    assert not {r[1] for r in crashed} & c["deleted"]
 
 
 def test_delete_recounts_tombstones_written_without_meta(spark, tmp_path):

@@ -941,8 +941,10 @@ def test_resident_parity_and_invalidation_across_commits(
     spark, tmp_path, monkeypatch
 ):
     """Every commit kind changes the answer the resident path serves
-    exactly as it changes scatter-gather's, reloading only the
-    partitions the commit rewrote; a repeat search reloads nothing."""
+    exactly as it changes scatter-gather's, replacing only the cached
+    kernels of the partitions the commit rewrote: a full rebuild's by
+    a reload, a driver-placed upsert's or compaction's by the kernels
+    the write built, with no load. A repeat search reloads nothing."""
     from inside_vectordb_spark import _generations as gen
     from inside_vectordb_spark.operators.hnsw_index import (
         compact_hnsw_index,
@@ -979,10 +981,10 @@ def test_resident_parity_and_invalidation_across_commits(
     _assert_parity(spark, art, q, monkeypatch, **kw)
     assert loads.take() == (0, set())
 
-    # upsert into the previously empty partition: it alone loads
+    # upsert into the previously empty partition: it alone is replaced
     upsert_hnsw_index(spark, fill.drop("part"), art)
     _assert_parity(spark, art, q, monkeypatch, **kw)
-    assert loads.take() == (1, {hole})
+    assert loads.take() == (0, {hole})
 
     # delete: tombstones only, no graph partition reloads
     heavy = [i for i in by_part[1] if i % 5 != 0][:40]
@@ -994,7 +996,7 @@ def test_resident_parity_and_invalidation_across_commits(
     # upsert spread over the other three partitions
     upsert_hnsw_index(spark, spread.drop("part"), art)
     _assert_parity(spark, art, q, monkeypatch, dead=dead, **kw)
-    assert loads.take() == (3, {0, 1, 2})
+    assert loads.take() == (0, {0, 1, 2})
 
     # the delete's in-between window: tombstone rows land in the
     # relation before (or without) a meta write; the very next
@@ -1015,12 +1017,12 @@ def test_resident_parity_and_invalidation_across_commits(
     dirty = {int(p) for p, rel in meta["part_rels"].items() if rel.startswith("graph_c")}
     assert dirty == {1}
     _assert_parity(spark, art, q, monkeypatch, dead=dead, **kw)
-    assert loads.take() == (1, {1})
+    assert loads.take() == (0, {1})
 
     # full compaction rewrites every partition
     compact_hnsw_index(spark, art)
     a = _assert_parity(spark, art, q, monkeypatch, dead=dead, **kw)
-    assert loads.take() == (4, {0, 1, 2, 3})
+    assert loads.take() == (0, {0, 1, 2, 3})
     assert a["query_id"].nunique() == 20
 
 
