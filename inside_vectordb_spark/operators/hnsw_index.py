@@ -68,28 +68,30 @@ Deletes tombstone (nodes keep ROUTING the beam, hnswlib
 semantics); compaction rebuilds partitions from live rows — the
 compacted index is bit-identical to a fresh build over them.
 
-Writes have two placements too, chosen like the reads. An upsert or
-compaction that inserts at most ``_DRIVER_WRITE_MAX_VECTORS`` (3,500)
-vectors — delta rows for an upsert, stored rows of the rebuilt
-partitions for a compaction — into an index whose live partitions
-hold at most ``_RESIDENT_MAX_BYTES`` runs on the driver: the upsert
-collects its routed delta with one ``toArrow`` job, reads only the
-touched partitions through pyarrow and runs its pre-checks in NumPy;
-the compaction runs no job at all. Larger writes keep the executor
-plan (one task per partition). Both placements call ``extend_one``
-and write the same graph rows and meta
+Writes have two placements too, chosen like the reads. An upsert of
+at most ``_DRIVER_UPSERT_MAX_VECTORS`` (8,000) delta rows, or a
+compaction whose rebuilt partitions store at most
+``_DRIVER_REBUILD_MAX_VECTORS`` (3,500) rows, into an index whose
+live partitions hold at most ``_RESIDENT_MAX_BYTES`` runs on the
+driver: the upsert collects its routed delta with one ``toArrow``
+job, reads only the touched partitions through pyarrow and runs its
+pre-checks in NumPy; the compaction runs no job at all. Larger writes
+keep the executor plan (one task per partition). Both placements call
+``extend_one`` and write the same graph rows and meta
 (``tests/test_hnsw_write_placement.py``); the driver writes with
 ``_meta_io.write_parquet`` and, after its commit, hands each new
 kernel to ``_KERNELS`` under its new relation and stamp, so the next
 read loads nothing. A write always reads its partitions fresh from
-disk, so a kernel a reader holds is never mutated. The bound is where
-the driver's serial rebuild stops paying: on a 4-vCPU host at
-``local[2]`` (64-dim, m=16, ef_construction=64, 4 partitions) a full
-compaction over 2,000 / 3,000 / 3,500 / 4,000 / 8,000 live vectors
-took 1.7–1.9 / 3.3–3.5 / 4.0–4.5 / 5.2–5.3 / 10.3–11.1 s on the
-driver against 3.2–4.0 / 4.7–5.5 / 4.6–5.3 / 3.8–4.6 / 5.6–7.2 s on
-the executors, while an upsert of that many vectors into a
-2,000-vector index won on the driver at every size.
+disk, so a kernel a reader holds is never mutated. The bounds are
+where the driver's serial inserts stop paying, measured on a 4-vCPU
+host at ``local[2]`` (64-dim, m=16, ef_construction=64, 4
+partitions): a full compaction over 2,000 / 3,000 / 3,500 / 4,000 /
+8,000 live vectors took 1.7–1.9 / 3.3–3.5 / 4.0–4.5 / 5.2–5.3 /
+10.3–11.1 s on the driver against 3.2–4.0 / 4.7–5.5 / 4.6–5.3 /
+3.8–4.6 / 5.6–7.2 s on the executors, while an upsert of that many
+vectors into a 2,000-vector index won on the driver at every size
+(8,000: 10.9–13.4 s against 15.2–15.3 s). Sizes past 8,000 were not
+measured, and the compaction crossover falls as task slots grow.
 
 Graph builds are insertion-order dependent (true of hnswlib too), so
 this tier is rows-only at the driver; determinism (same corpus, same
@@ -190,38 +192,18 @@ def _part_expr(id_col: str, n_parts: int):
     return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_parts)).cast("long")
 
 
-_XX_P1, _XX_P2, _XX_P3, _XX_P4, _XX_P5 = (
-    np.uint64(x)
-    for x in (
-        0x9E3779B185EBCA87,
-        0xC2B2AE3D27D4EB4F,
-        0x165667B19E3779F9,
-        0x85EBCA77C2B2AE63,
-        0x27D4EB2F165667C5,
+def _route_ids(spark: SparkSession, ids: np.ndarray, n_parts: int) -> np.ndarray:
+    """``_part_expr`` over driver-held ids, with no Spark job: the
+    optimizer folds the projection into the local relation, whose
+    ``collect`` schedules no task."""
+    if not len(ids):
+        return np.empty(0, dtype=np.int64)
+    rows = (
+        spark.createDataFrame(pa.table({"doc_id": pa.array(ids, pa.int64())}))
+        .select(_part_expr("doc_id", n_parts))
+        .collect()
     )
-)
-
-
-def _rotl(x: np.ndarray, r: int) -> np.ndarray:
-    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
-
-
-def _part_ids(ids: np.ndarray, n_parts: int) -> np.ndarray:
-    """``_part_expr`` on the driver: Spark's ``xxhash64`` of a long
-    (XXH64 of 8 bytes, seed 42) then ``pmod``, in wrapping uint64
-    arithmetic. Pinned equal to the Spark expression in
-    ``tests/test_hnsw_write_placement.py``."""
-    x = np.asarray(ids, dtype=np.int64).view(np.uint64)
-    with np.errstate(over="ignore"):
-        h = np.full(x.shape, np.uint64(42) + _XX_P5 + np.uint64(8), dtype=np.uint64)
-        h ^= _rotl(x * _XX_P2, 31) * _XX_P1
-        h = _rotl(h, 27) * _XX_P1 + _XX_P4
-        h ^= h >> np.uint64(33)
-        h *= _XX_P2
-        h ^= h >> np.uint64(29)
-        h *= _XX_P3
-        h ^= h >> np.uint64(32)
-    return np.mod(h.view(np.int64), n_parts)
+    return np.array([r[0] for r in rows], dtype=np.int64)
 
 
 def _index_to_rows(part: int, index: HnswIndex) -> pd.DataFrame:
@@ -920,13 +902,18 @@ def ann_hnsw_topk_indexed(
 
 # -- writes ----------------------------------------------------------------
 #
-# An upsert or compaction that inserts at most this many vectors (delta
-# rows for an upsert, rebuilt live rows for a compaction) into an index
-# whose live partitions hold at most _RESIDENT_MAX_BYTES is applied on
-# the driver; larger writes take the executor plan. The driver inserts
-# serially where the executors build partitions in parallel, so the
-# bound is where the two cross (module docstring).
-_DRIVER_WRITE_MAX_VECTORS = 3500
+# A write into an index whose live partitions hold at most
+# _RESIDENT_MAX_BYTES is applied on the driver when it inserts at most
+# these many vectors; larger writes take the executor plan. The driver
+# inserts serially where the executors work on the touched partitions
+# in parallel, one task each (the sweep is in the module docstring).
+# An upsert won on the driver at every measured delta size up to 8,000,
+# the largest measured, so its bound is that size; it also bounds the
+# delta the driver collects. A compaction's rebuild crossed between
+# 3,500 and 4,000 live vectors at 2 task slots over 4 partitions; more
+# slots would lower that crossover.
+_DRIVER_UPSERT_MAX_VECTORS = 8000
+_DRIVER_REBUILD_MAX_VECTORS = 3500
 
 
 def upsert_hnsw_index(
@@ -950,7 +937,7 @@ def upsert_hnsw_index(
     a partition with no stored graph builds a fresh kernel for it —
     exactly what a full rebuild over base ∪ delta would hold there.
 
-    A delta of at most ``_DRIVER_WRITE_MAX_VECTORS`` rows into an
+    A delta of at most ``_DRIVER_UPSERT_MAX_VECTORS`` rows into an
     index whose live partitions hold at most ``_RESIDENT_MAX_BYTES``
     is applied on the driver: one ``toArrow`` job collects the routed
     delta, only the touched partitions are read, and the pre-checks,
@@ -978,8 +965,8 @@ def _upsert_hnsw_locked(
     if _stamped_bytes(stamps) <= _RESIDENT_MAX_BYTES:
         # one job: the routed delta, or one row past the bound, which
         # sends the upsert to the executors
-        t = delta.limit(_DRIVER_WRITE_MAX_VECTORS + 1).toArrow()
-        if t.num_rows <= _DRIVER_WRITE_MAX_VECTORS:
+        t = delta.limit(_DRIVER_UPSERT_MAX_VECTORS + 1).toArrow()
+        if t.num_rows <= _DRIVER_UPSERT_MAX_VECTORS:
             return _upsert_on_driver(path, meta, kp, stored, stamps, t)
 
     stored_ids = _read_graph(spark, path, meta).filter(F.col("level") == 0).select(
@@ -1240,10 +1227,10 @@ def compact_hnsw_index(
     the churned shards — the same dirty-partition economics as delta
     compaction in table formats.
 
-    Which partitions are dirty is decided on the driver in both
-    placements: the tombstones are read there and routed by
-    ``_part_ids``. When the dirty partitions hold at most
-    ``_DRIVER_WRITE_MAX_VECTORS`` stored rows (meta's
+    An incremental compaction reads the tombstones on the driver and
+    routes them by ``_part_expr`` over a local relation (``_route_ids``,
+    no job). When the dirty partitions hold at most
+    ``_DRIVER_REBUILD_MAX_VECTORS`` stored rows (meta's
     ``part_counts``) and the live partitions at most
     ``_RESIDENT_MAX_BYTES``, they are rebuilt on the driver with no
     Spark job; otherwise in one ``build_one`` task each."""
@@ -1264,19 +1251,18 @@ def _compact_hnsw_locked(
     kp = _kernel_params(meta)
     n_parts = int(meta["n_parts"])
     stored = gen.part_map(path, meta)
-    # the tombstone set is bounded by the mark_deleted contract and
-    # read on the driver, as search reads it
-    dead = np.array(sorted(gen.tombstone_ids(path, meta)), dtype=np.int64)
     pc = meta.get("part_counts")
-    sizes = None
+    sizes = dead = None
     if min_dead_fraction is None:
         dirty = list(range(n_parts))
         n_removed = meta.get("n_deleted", 0)
         remaining: list[int] = []
     else:
-        # tombstones route by THE partition rule, computed here in
-        # NumPy (_part_ids), so the dirty decision runs no job
-        dead_part = _part_ids(dead, n_parts)
+        # the tombstone set is bounded by the mark_deleted contract
+        # and read on the driver, as search reads it; it routes by
+        # THE partition rule
+        dead = np.array(sorted(gen.tombstone_ids(path, meta)), dtype=np.int64)
+        dead_part = _route_ids(spark, dead, n_parts)
         # dirty-shard decision from METADATA (round-10): the
         # per-partition node counts ride meta since this round, so
         # "which shards to compact" costs zero graph I/O — at
@@ -1308,9 +1294,11 @@ def _compact_hnsw_locked(
     stamps = _stamps(path, stored)
     if (
         pc
-        and sum(int(pc.get(str(p), 0)) for p in dirty) <= _DRIVER_WRITE_MAX_VECTORS
+        and sum(int(pc.get(str(p), 0)) for p in dirty) <= _DRIVER_REBUILD_MAX_VECTORS
         and _stamped_bytes(stamps) <= _RESIDENT_MAX_BYTES
     ):
+        if dead is None:
+            dead = np.fromiter(gen.tombstone_ids(path, meta), dtype=np.int64)
         live_counts, kernels = _rebuild_on_driver(
             path, kp, stored, stamps, rel, dirty, dead, sizes
         )

@@ -27,8 +27,11 @@ Two physical strategies, same semantics:
      read once with ``toArrow`` — one JVM-only job, no Python worker,
      no shuffle — each record batch runs the kernel on the driver, and
      a NumPy lexsort merges the partials into a local frame (one
-     ``LocalTableScan``). Nothing is cached: each request re-reads
-     the corpus, so no answer can go stale;
+     ``LocalTableScan``). No rows are cached: each request re-reads
+     the corpus, so no answer can go stale. The projection's plan is
+     kept on the corpus frame (``_projection``), so a repeat request
+     over the same frame skips Spark's analysis, optimization and
+     physical planning;
    - executors otherwise: the query matrix is broadcast as one NumPy
      array, each corpus partition runs the kernel in ``mapInPandas``,
      and a window reduces the partials to the global top-k. This is
@@ -213,6 +216,22 @@ def _arrow_matrix(col: pa.ListArray) -> np.ndarray:
     return flat.astype(np.float64, copy=False).reshape(len(col), -1)
 
 
+def _projection(corpus: DataFrame, corpus_id: str, corpus_vec: str) -> DataFrame:
+    """The corpus's (doc_id, v) projection, made once per corpus frame
+    and column pair and kept on the frame. A DataFrame's plan is fixed
+    when it is made (its file listing too), so the kept projection
+    reads exactly what a fresh one would; re-running it reuses the
+    plan Spark already built, where a fresh one is analyzed, optimized
+    and planned again on every request."""
+    kept = corpus.__dict__.setdefault("_sg_projections", {})
+    key = (corpus_id, corpus_vec)
+    if key not in kept:
+        kept[key] = corpus.select(
+            F.col(corpus_id).alias("doc_id"), F.col(corpus_vec).alias("v")
+        )
+    return kept[key]
+
+
 def _driver_topk(
     spark: SparkSession,
     qids: np.ndarray,
@@ -223,8 +242,8 @@ def _driver_topk(
 ) -> DataFrame:
     """The executor placement's answer computed on the driver: the
     corpus projection is read once through Arrow (a JVM-only job) and
-    each record batch goes through ``_batch_topk``. Nothing is cached:
-    every request re-reads the corpus."""
+    each record batch goes through ``_batch_topk``. No rows are
+    cached: every request re-reads the corpus."""
     # seeded with an empty triple so an empty corpus merges to an
     # empty answer
     parts = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
@@ -283,7 +302,6 @@ def exact_cosine_topk_gemm(
     qids_l = np.array([r["qid"] for r in qrows], dtype=np.int64)
     qmat_l = _normalize_rows(np.array([r["v"] for r in qrows], dtype=np.float64))
 
-    c = corpus.select(F.col(corpus_id).alias("doc_id"), F.col(corpus_vec).alias("v"))
     if (
         len(qrows) <= _RESIDENT_MAX_QUERIES
         # py4j hands the BigInt over as a Python int; a plan without
@@ -292,7 +310,10 @@ def exact_cosine_topk_gemm(
         and corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         <= _RESIDENT_MAX_BYTES
     ):
-        return _driver_topk(spark, qids_l, qmat_l, c, k, round_to)
+        return _driver_topk(
+            spark, qids_l, qmat_l, _projection(corpus, corpus_id, corpus_vec), k, round_to
+        )
+    c = corpus.select(F.col(corpus_id).alias("doc_id"), F.col(corpus_vec).alias("v"))
     bc = spark.sparkContext.broadcast((qids_l, qmat_l))
 
     def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -945,6 +945,18 @@ def test_resident_parity_and_invalidation_across_commits(
     kernels of the partitions the commit rewrote: a full rebuild's by
     a reload, a driver-placed upsert's or compaction's by the kernels
     the write built, with no load. A repeat search reloads nothing."""
+    _resident_across_commits(spark, tmp_path, monkeypatch, "driver")
+
+
+def test_resident_invalidation_after_executor_writes(spark, tmp_path, monkeypatch):
+    """The same commits with every upsert and compaction forced onto
+    the executors (a zero byte budget around the write alone; reads
+    stay resident): the read after each reloads exactly the
+    partitions that write rewrote."""
+    _resident_across_commits(spark, tmp_path, monkeypatch, "executors")
+
+
+def _resident_across_commits(spark, tmp_path, monkeypatch, placement):
     from inside_vectordb_spark import _generations as gen
     from inside_vectordb_spark.operators.hnsw_index import (
         compact_hnsw_index,
@@ -970,6 +982,17 @@ def test_resident_parity_and_invalidation_across_commits(
     loads = _LoadCounter(art)
     kw = dict(k=K, ef_search=EF_SEARCH, loads=loads)
 
+    def write(op, *args, **kwargs):
+        with monkeypatch.context() as mp:
+            if placement == "executors":
+                mp.setattr(hnsw_mod, "_RESIDENT_MAX_BYTES", 0)
+            return op(*args, **kwargs)
+
+    def replaced(parts):
+        # a driver write hands its kernels over; the read after an
+        # executor write loads each rewritten partition
+        return (0 if placement == "driver" else len(parts), parts)
+
     # a full rebuild rewrites graph/part=<p> in place under the same
     # relation name: only the directory stamp tells the two apart
     build_hnsw_index(corpus.drop("part"), art, m=8, **params)
@@ -982,9 +1005,9 @@ def test_resident_parity_and_invalidation_across_commits(
     assert loads.take() == (0, set())
 
     # upsert into the previously empty partition: it alone is replaced
-    upsert_hnsw_index(spark, fill.drop("part"), art)
+    write(upsert_hnsw_index, spark, fill.drop("part"), art)
     _assert_parity(spark, art, q, monkeypatch, **kw)
-    assert loads.take() == (0, {hole})
+    assert loads.take() == replaced({hole})
 
     # delete: tombstones only, no graph partition reloads
     heavy = [i for i in by_part[1] if i % 5 != 0][:40]
@@ -994,9 +1017,9 @@ def test_resident_parity_and_invalidation_across_commits(
     assert loads.take() == (0, set())
 
     # upsert spread over the other three partitions
-    upsert_hnsw_index(spark, spread.drop("part"), art)
+    write(upsert_hnsw_index, spark, spread.drop("part"), art)
     _assert_parity(spark, art, q, monkeypatch, dead=dead, **kw)
-    assert loads.take() == (0, {0, 1, 2})
+    assert loads.take() == replaced({0, 1, 2})
 
     # the delete's in-between window: tombstone rows land in the
     # relation before (or without) a meta write; the very next
@@ -1012,17 +1035,17 @@ def test_resident_parity_and_invalidation_across_commits(
     assert loads.take() == (0, set())
 
     # partial compaction rebuilds only the dirty partition
-    meta = compact_hnsw_index(spark, art, min_dead_fraction=0.2)
+    meta = write(compact_hnsw_index, spark, art, min_dead_fraction=0.2)
     assert set(meta["part_rels"]) >= {"1"}
     dirty = {int(p) for p, rel in meta["part_rels"].items() if rel.startswith("graph_c")}
     assert dirty == {1}
     _assert_parity(spark, art, q, monkeypatch, dead=dead, **kw)
-    assert loads.take() == (0, {1})
+    assert loads.take() == replaced({1})
 
     # full compaction rewrites every partition
-    compact_hnsw_index(spark, art)
+    write(compact_hnsw_index, spark, art)
     a = _assert_parity(spark, art, q, monkeypatch, dead=dead, **kw)
-    assert loads.take() == (0, {0, 1, 2, 3})
+    assert loads.take() == replaced({0, 1, 2, 3})
     assert a["query_id"].nunique() == 20
 
 

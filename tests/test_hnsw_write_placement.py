@@ -9,8 +9,8 @@ compares the live graph rows — ``ord``, ``node_id``, ``level``,
 ``neighbors``, ``vector`` and ``meta_json``, which carries each
 partition's RNG state — row for row, and the meta fields the write
 maintains. The file also pins the driver placement's delta checks,
-its kernel hand-off to the resident cache, the NumPy twin of the
-partition rule, and the Spark job count of each small write.
+its kernel hand-off to the resident cache and the Spark job count of
+each small write.
 """
 
 from __future__ import annotations
@@ -47,9 +47,11 @@ def _vectors(spark, ids, seed):
     )
 
 
-def _routes(ids, n_parts=PARAMS["n_parts"]):
-    ids = np.asarray(list(ids), dtype=np.int64)
-    return dict(zip(ids.tolist(), hi._part_ids(ids, n_parts).tolist()))
+def _routes(spark, ids):
+    """id -> partition under the index's routing rule."""
+    df = spark.createDataFrame(pd.DataFrame({"vec_id": np.asarray(list(ids), dtype=np.int64)}))
+    rows = df.select("vec_id", hi._part_expr("vec_id", PARAMS["n_parts"])).collect()
+    return {int(i): int(p) for i, p in rows}
 
 
 def _graph_rows(path):
@@ -91,7 +93,7 @@ def base(spark, tmp_path_factory):
     case."""
     root = tmp_path_factory.mktemp("hnsw_place")
     ids = range(240)
-    routes = _routes(ids)
+    routes = _routes(spark, ids)
     hole = 2
     full = str(root / "full")
     hi.build_hnsw_index(_vectors(spark, ids, 1), full, **PARAMS)
@@ -229,7 +231,7 @@ def _jobs(spark, group):
 
 def test_small_writes_run_at_most_one_job(spark, base, tmp_path):
     """A small upsert runs one job (its delta collect), a list delete
-    and a small compaction none."""
+    and a small compaction, full or incremental, none."""
     path = str(tmp_path / "idx")
     shutil.copytree(base["full"], path)
     src = str(tmp_path / "delta")
@@ -241,23 +243,17 @@ def test_small_writes_run_at_most_one_job(spark, base, tmp_path):
         hi.delete_from_hnsw_index(spark, path, [3, 4, 5, 601])
     with _jobs(spark, "hnsw-compact") as co:
         hi.compact_hnsw_index(spark, path)
-    assert len(up) <= 1 and (len(de), len(co)) == (0, 0)
+    by_part = base["by_part"]
+    gone = set(by_part[0][: len(by_part[0]) // 3] + by_part[1][:2])
+    hi.delete_from_hnsw_index(spark, path, sorted(gone))
+    with _jobs(spark, "hnsw-compact-partial") as cp:
+        hi.compact_hnsw_index(spark, path, min_dead_fraction=0.2)
+    assert len(up) <= 1 and (len(de), len(co), len(cp)) == (0, 0, 0)
     live = (set(range(240)) | set(range(600, 640))) - {3, 4, 5, 601}
-    want = Counter(_routes(live).values())
-    assert gen.read_meta(path)["part_counts"] == {str(p): n for p, n in sorted(want.items())}
-
-
-def test_part_ids_match_the_spark_routing_rule(spark):
-    rng = np.random.default_rng(0)
-    ids = np.concatenate(
-        [
-            np.arange(-100, 2000),
-            rng.integers(-(2**63), 2**63 - 1, 2000, dtype=np.int64),
-            np.array([2**63 - 1, -(2**63)], dtype=np.int64),
-        ]
-    )
-    df = spark.createDataFrame(pd.DataFrame({"vec_id": ids}))
-    for n in (1, 3, 4, 16):
-        got = df.select("vec_id", hi._part_expr("vec_id", n).alias("p")).toPandas()
-        want = hi._part_ids(got["vec_id"].to_numpy(), n)
-        assert (want == got["p"].to_numpy()).all(), n
+    want = Counter(_routes(spark, live).values())
+    # the incremental compaction rebuilt partition 0 without its dead
+    # rows and left partition 1's tombstones masking
+    want[0] -= len(gone & set(by_part[0]) - {3, 4, 5})
+    meta = gen.read_meta(path)
+    assert meta["part_counts"] == {str(p): n for p, n in sorted(want.items())}
+    assert gen.tombstone_ids(path, meta) == gone & set(by_part[1])

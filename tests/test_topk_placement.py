@@ -221,3 +221,22 @@ def test_null_or_ragged_embeddings_raise_alike(spark, tmp_path, monkeypatch, bad
         m.setattr(topk, "_RESIDENT_MAX_BYTES", 0)
         with pytest.raises(PythonException, match=f"ValueError: .*{msg}"):
             exact_cosine_topk_gemm(queries, corpus, k=2).collect()
+
+
+def test_repeat_requests_reuse_one_kept_projection(spark, tmp_path, monkeypatch):
+    """Requests over one corpus frame re-run one kept projection, one
+    per column pair, and each new query batch is answered like the
+    executor placement answers it."""
+    rng = np.random.default_rng(21)
+    corpus = spark.read.parquet(
+        _write(tmp_path, "c", np.arange(40), _ternary(rng, 40), n_files=2)
+    ).withColumn("again", F.col("embedding"))
+    for seed in (1, 2):
+        q = _queries(spark, [1, 2, 3], _ternary(np.random.default_rng(seed), 3))
+        _assert_parity(q, corpus, monkeypatch, k=5)
+    kept = dict(corpus._sg_projections)
+    assert list(kept) == [("vec_id", "embedding")]
+    got = _sorted(exact_cosine_topk_gemm(q, corpus, k=5, corpus_vec="again"))
+    assert corpus._sg_projections[("vec_id", "embedding")] is kept[("vec_id", "embedding")]
+    assert set(corpus._sg_projections) == {("vec_id", "embedding"), ("vec_id", "again")}
+    pd.testing.assert_frame_equal(got, _sorted(exact_cosine_topk_gemm(q, corpus, k=5)))
