@@ -89,8 +89,16 @@ META = "meta.json"
 TOMBSTONES = "tombstones"
 
 
-def read_meta(path: str) -> dict[str, Any] | None:
-    return mio.read_json(mio.join(path, META))
+def read_meta(
+    path: str, kind: str | None = None, tier: str | None = None
+) -> dict[str, Any] | None:
+    """The committed ``meta.json``, or None when there is none. With
+    ``kind``, a missing meta or one of another kind raises
+    ``FileNotFoundError`` naming the ``tier`` (default: the kind)."""
+    meta = mio.read_json(mio.join(path, META))
+    if kind is not None and (meta is None or meta.get("kind") != kind):
+        raise FileNotFoundError(f"no complete {tier or kind} index at {path}")
+    return meta
 
 
 def write_meta(path: str, meta: dict[str, Any], indent: int | None = None) -> None:

@@ -44,7 +44,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from inside_vectordb_spark.functions.vector import dot_product, l2_normalize
+from inside_vectordb_spark.functions.vector import (
+    cosine_similarity,
+    dot_product,
+    l2_normalize,
+)
 
 _BUCKET_SCHEMA = StructType(
     [
@@ -109,6 +113,35 @@ def lsh_bucket_ids(
     return v.mapInPandas(bucketize, schema=_BUCKET_SCHEMA)
 
 
+def rank_topk(scored: DataFrame, k: int, round_to: int | None = None) -> DataFrame:
+    """THE Spark side of the ranked-answer contract (FIXTURES.md §6):
+    ``(query_id, doc_id, score)`` → ``(query_id, doc_id, score, rank)``
+    with rank 1..k per query by (score DESC, doc_id ASC), the score
+    rounded to ``round_to`` decimals AFTER the cut when given. Every
+    vector search ends here — a local top-k per partition, then this
+    one global merge; ``topk._local_topk`` is its NumPy twin."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    out = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    if round_to is not None:
+        out = out.withColumn("score", F.round("score", round_to))
+    return out.select("query_id", "doc_id", "score", "rank")
+
+
+def rounded_cosine_topk(pairs: DataFrame, k: int, corpus_vec: str) -> DataFrame:
+    """Exact rerank of candidate pairs carrying the query vector
+    ``__qv`` and the corpus vector ``corpus_vec``: the score is
+    ``round(cosine, 6)`` and the window ranks the ROUNDED score, the
+    convention the deterministic tiers' oracles restate."""
+    return rank_topk(
+        pairs.select(
+            "query_id",
+            "doc_id",
+            F.round(cosine_similarity("__qv", corpus_vec), 6).alias("score"),
+        ),
+        k,
+    )
+
+
 def _rerank_candidates(
     cand: DataFrame, queries: DataFrame, corpus: DataFrame,
     query_id: str, query_vec: str, corpus_id: str, corpus_vec: str,
@@ -128,11 +161,7 @@ def _rerank_candidates(
         .join(c, "doc_id")
         .select("query_id", "doc_id", dot_product("__qv", "__cv").alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    if round_to is not None:
-        out = out.withColumn("score", F.round("score", round_to))
-    return out.select("query_id", "doc_id", "score", "rank")
+    return rank_topk(scored, k, round_to)
 
 
 def ann_lsh_topk(

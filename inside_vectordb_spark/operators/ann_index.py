@@ -48,10 +48,6 @@ from inside_vectordb_spark.operators.ann import (
 )
 
 
-def _read_meta(path: str) -> dict[str, Any] | None:
-    return mio.read_json(mio.join(path, "meta.json"))
-
-
 def _begin_rebuild(path: str) -> None:
     """Invalidate the completeness marker BEFORE any data dir is
     touched: a rebuild overwrites the live relations in place, so a
@@ -208,7 +204,7 @@ def ensure_lsh_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, A
     same corpus fingerprint exists (the reference's cache check,
     ``003:234-251``, keys on params only — a changed corpus at the
     same path would silently serve stale buckets)."""
-    meta = _read_meta(path)
+    meta = gen.read_meta(path)
     want = {
         "kind": "lsh",
         # RESOLVED defaults included (review r8, the ensure_mrl_index
@@ -282,9 +278,7 @@ def upsert_lsh_index(
     # (both pass, the second appends duplicate rows), and readers /
     # ensure_* hit the marker window of a healthy index mid-append
     with mio.commit_lock(path):
-        meta = _read_meta(path)
-        if meta is None or meta.get("kind") != "lsh":
-            raise FileNotFoundError(f"no complete LSH index at {path}")
+        meta = gen.read_meta(path, "lsh", "LSH")
         spark = new_vectors.sparkSession
         buckets_path = os.path.join(path, "buckets")
         _assert_disjoint_delta(
@@ -343,9 +337,7 @@ def ann_lsh_topk_indexed(
     signature-hashed per batch; the corpus bucket table is a parquet
     scan (and the candidate join broadcasts the query buckets, so the
     stored table never shuffles)."""
-    meta = _read_meta(path)
-    if meta is None or meta.get("kind") != "lsh":
-        raise FileNotFoundError(f"no complete LSH index at {path}")
+    meta = gen.read_meta(path, "lsh", "LSH")
     spark = queries.sparkSession
     cb = spark.read.parquet(os.path.join(path, "buckets"))
     qb = lsh_bucket_ids(
@@ -423,7 +415,7 @@ def build_pq_index(
 
 
 def ensure_pq_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, Any]:
-    meta = _read_meta(path)
+    meta = gen.read_meta(path)
     want = {
         "kind": "pq",
         # RESOLVED defaults included (review r8, the ensure_mrl_index
@@ -446,7 +438,7 @@ def ensure_pq_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, An
 
 
 def load_pq_codebooks(spark: SparkSession, path: str) -> np.ndarray:
-    meta = _read_meta(path)
+    meta = gen.read_meta(path)
     rows = mio.read_parquet_rows(
         os.path.join(path, "codebooks"), order_by=("subspace", "code")
     )
@@ -472,9 +464,7 @@ def ann_pq_topk_indexed(
     by the candidate-keyed exact re-rank."""
     from inside_vectordb_spark.operators.pq import ann_pq_topk
 
-    meta = _read_meta(path)
-    if meta is None or meta.get("kind") != "pq":
-        raise FileNotFoundError(f"no complete PQ index at {path}")
+    meta = gen.read_meta(path, "pq", "PQ")
     spark = queries.sparkSession
     books = load_pq_codebooks(spark, path)
     codes = spark.read.parquet(os.path.join(path, "codes"))
@@ -568,9 +558,7 @@ def delete_from_sq_index(
     # (both pass, the second appends duplicate rows), and readers /
     # ensure_* hit the marker window of a healthy index mid-append
     with mio.commit_lock(path):
-        meta = _read_meta(path)
-        if meta is None or meta.get("kind") != "sq":
-            raise FileNotFoundError(f"no complete SQ index at {path}")
+        meta = gen.read_meta(path, "sq", "SQ")
         return gen.delete(spark, path, meta, ids, col="doc_id", indent=2)
 
 
@@ -580,7 +568,7 @@ def deleted_ids(spark: SparkSession, path: str) -> set[int]:
 
 
 def ensure_sq_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, Any]:
-    meta = _read_meta(path)
+    meta = gen.read_meta(path)
     want = {
         "kind": "sq",
         **{k: v for k, v in params.items() if k not in ("id_col", "vec_col")},
@@ -619,9 +607,7 @@ def ann_sq_topk_indexed(
     deleted vectors can therefore never reach the rerank either."""
     from inside_vectordb_spark.operators.sq import ann_sq_topk
 
-    meta = _read_meta(path)
-    if meta is None or meta.get("kind") != "sq":
-        raise FileNotFoundError(f"no complete SQ index at {path}")
+    meta = gen.read_meta(path, "sq", "SQ")
     spark = queries.sparkSession
     stats = load_sq_stats(spark, path)
     codes = gen.drop_deleted(

@@ -27,10 +27,11 @@ broadcasts implicitly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from inside_vectordb_spark.functions.vector import l2_norm, l2_normalize
+from inside_vectordb_spark.operators.ann import rank_topk
 
 # ann_brp_topk force-broadcasts its query side (build-side pin);
 # batches above this ceiling are rejected rather than risking a
@@ -125,25 +126,9 @@ def ann_brp_topk(
     scored = joined.select(
         F.col("datasetB.qid").alias("query_id"),
         F.col("datasetA.doc_id").alias("doc_id"),
-        # rank on the UNROUNDED score like every sibling tier
-        # (_rerank_candidates rounds AFTER row_number) so near-tie
-        # top-k membership matches exact/ann_lsh (review r9-5), then
-        # round for display. `is not None`, not truthiness: round_to=0
-        # means round to 0 decimals (review r7).
-        score.alias("__raw"),
+        score.alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("__raw"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "doc_id",
-            (
-                F.round(F.col("__raw"), round_to)
-                if round_to is not None
-                else F.col("__raw")
-            ).alias("score"),
-            "rank",
-        )
-    )
+    # rank on the UNROUNDED score like exact/ann_lsh, so near-tie
+    # top-k membership matches theirs (review r9-5); rank_topk rounds
+    # after the cut
+    return rank_topk(scored, k, round_to)

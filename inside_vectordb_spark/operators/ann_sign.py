@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from inside_vectordb_spark import _generations as gen
 from inside_vectordb_spark import _meta_io as mio
 from inside_vectordb_spark.functions.vector import cosine_similarity
+from inside_vectordb_spark.operators.ann import rounded_cosine_topk
 
 SIGN_BITS = 6  # default: 64 buckets; ~N/64 candidates per query
 SIGN_DIM = 64
@@ -173,7 +174,7 @@ def ensure_sign_index(
     }
     # subset compare: lifecycle bookkeeping (n_deleted) must not
     # invalidate the cache — only changed params/corpus do
-    meta = mio.read_json(mio.join(path, "meta.json"))
+    meta = gen.read_meta(path)
     if meta is not None and all(meta.get(k) == v for k, v in want.items()):
         return path
     from inside_vectordb_spark.operators.ann_index import _begin_rebuild
@@ -293,17 +294,7 @@ def ann_sign_topk_indexed(
         withvec = withvec.filter(F.col("__qf") == F.col("__cf"))
     if exclude_self:
         withvec = withvec.filter(F.col("query_id") != F.col("doc_id"))
-    scored = withvec.select(
-        "query_id",
-        "doc_id",
-        F.round(cosine_similarity("__qv", "__cv"), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rounded_cosine_topk(withvec, k, "__cv")
 
 
 def sign_bucket_probes(vec_col: Column | str, planes=None) -> Column:
@@ -410,17 +401,7 @@ def ann_sign_multiprobe_topk(
         corpus.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("__cv")),
         "doc_id",
     )
-    scored = withvec.select(
-        "query_id",
-        "doc_id",
-        F.round(cosine_similarity("__qv", "__cv"), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rounded_cosine_topk(withvec, k, "__cv")
 
 
 def ann_sign_probe_stats(
@@ -595,9 +576,7 @@ def _upsert_sign_locked(
         _merge_fingerprint,
     )
 
-    meta = mio.read_json(mio.join(path, "meta.json"))
-    if meta is None or meta.get("kind") != "sign_lsh":
-        raise FileNotFoundError(f"no complete sign-LSH index at {path}")
+    meta = gen.read_meta(path, "sign_lsh", "sign-LSH")
     stored_ids = spark.read.parquet(os.path.join(path, "buckets")).select("id")
     dead = gen.tombstones(spark, path, meta)
     if dead is not None:
@@ -632,9 +611,7 @@ def delete_from_sign_index(
     would be silently dropped — the compacted index would resurrect
     the id."""
     with mio.commit_lock(path):
-        meta = mio.read_json(mio.join(path, "meta.json"))
-        if meta is None or meta.get("kind") != "sign_lsh":
-            raise FileNotFoundError(f"no complete sign-LSH index at {path}")
+        meta = gen.read_meta(path, "sign_lsh", "sign-LSH")
         return gen.delete(spark, path, meta, ids)
 
 
@@ -680,9 +657,7 @@ def compact_sign_index(spark: SparkSession, path: str) -> dict:
     check no longer sees it), which is correct — no tombstone remains
     to mask it."""
     with mio.commit_lock(path):
-        meta = mio.read_json(mio.join(path, "meta.json"))
-        if meta is None or meta.get("kind") != "sign_lsh":
-            raise FileNotFoundError(f"no complete sign-LSH index at {path}")
+        meta = gen.read_meta(path, "sign_lsh", "sign-LSH")
         buckets = os.path.join(path, "buckets")
         tmp = mio.join(path, "buckets_compact_tmp")
         mio.remove_tree(tmp)  # orphan from a crashed prior compaction
@@ -850,17 +825,7 @@ def _ivf_search(
         withvec = withvec.filter(F.col("__qf") == F.col("__cf")).filter(
             F.col("query_id") != F.col("doc_id")
         )
-    scored = withvec.select(
-        "query_id",
-        "doc_id",
-        F.round(cosine_similarity("__qv", "__dv"), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rounded_cosine_topk(withvec, k, "__dv")
 
 
 def _ensure_ivf(
@@ -883,7 +848,7 @@ def _ensure_ivf(
     base corpus and without retraining."""
     from inside_vectordb_spark.operators.ann_index import _begin_rebuild
 
-    meta = mio.read_json(mio.join(path, "meta.json"))
+    meta = gen.read_meta(path)
     if meta is not None and all(meta.get(k) == v for k, v in want.items()):
         return path
     _begin_rebuild(path)  # no stale completeness marker over torn data
@@ -928,9 +893,7 @@ def _upsert_ivf(
     )
 
     with mio.commit_lock(path):
-        meta = mio.read_json(mio.join(path, "meta.json"))
-        if meta is None or meta.get("kind") != kind:
-            raise FileNotFoundError(f"no complete {kind} index at {path}")
+        meta = gen.read_meta(path, kind)
         if check_delta is not None:
             check_delta(meta)
         _assert_disjoint_delta(

@@ -112,7 +112,7 @@ from typing import Any
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -126,7 +126,7 @@ from pyspark.sql.types import (
 
 from inside_vectordb_spark import _generations as gen
 from inside_vectordb_spark import _meta_io as mio
-from inside_vectordb_spark.operators.ann import _normalize_rows
+from inside_vectordb_spark.operators.ann import _normalize_rows, rank_topk
 from inside_vectordb_spark.operators.ann_index import (
     _assert_disjoint_delta,
     _begin_rebuild,
@@ -171,13 +171,6 @@ _GRAPH_FILE_SCHEMA = pa.schema(
 # superseded (and reclaimed) one partition dir at a time
 _FAMILIES = ("graph", gen.TOMBSTONES)
 _PART_LEVEL = ("graph",)
-
-
-def _read_meta(path: str) -> dict[str, Any]:
-    meta = gen.read_meta(path)
-    if meta is None or meta.get("kind") != "hnsw_vendored":
-        raise FileNotFoundError(f"no complete vendored-HNSW index at {path}")
-    return meta
 
 
 def _commit(path: str, meta: dict, superseded: list, drop=()) -> dict[str, Any]:
@@ -731,7 +724,7 @@ def ann_hnsw_topk_indexed(
     partition regardless of how many distinct values the batch
     carries. NULL-valued queries match nothing (SQL equality).
     Mutually exclusive with ``filter_df``."""
-    meta = _read_meta(path)
+    meta = gen.read_meta(path, "hnsw_vendored", "vendored-HNSW")
     if filter_df is not None and query_filter_col is not None:
         raise ValueError(
             "filter_df (global allow-list) and query_filter_col (per-query "
@@ -891,13 +884,7 @@ def ann_hnsw_topk_indexed(
         )
         partials = branch if partials is None else partials.unionByName(branch)
     partials = gen.drop_deleted(spark, partials, path, meta)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    out = partials.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    if round_to is not None:
-        out = out.withColumn("score", F.round("score", round_to))
-    return out.select("query_id", "doc_id", "score", "rank")
+    return rank_topk(partials, k, round_to)
 
 
 # -- writes ----------------------------------------------------------------
@@ -955,7 +942,7 @@ def _upsert_hnsw_locked(
     id_col: str,
     vec_col: str,
 ) -> dict[str, Any]:
-    meta = _read_meta(path)
+    meta = gen.read_meta(path, "hnsw_vendored", "vendored-HNSW")
     kp = _kernel_params(meta)
     stored = gen.part_map(path, meta)
     delta = new_vectors.select(
@@ -1193,7 +1180,8 @@ def delete_from_hnsw_index(
     id; runs under the commit lock (a delete landing inside a
     concurrent compaction's window would be silently dropped)."""
     with mio.commit_lock(path):
-        return gen.delete(spark, path, _read_meta(path), ids, indent=2)
+        meta = gen.read_meta(path, "hnsw_vendored", "vendored-HNSW")
+        return gen.delete(spark, path, meta, ids, indent=2)
 
 
 def compact_hnsw_index(
@@ -1241,7 +1229,7 @@ def compact_hnsw_index(
 def _compact_hnsw_locked(
     spark: SparkSession, path: str, min_dead_fraction: float | None
 ) -> dict[str, Any]:
-    meta = _read_meta(path)
+    meta = gen.read_meta(path, "hnsw_vendored", "vendored-HNSW")
     has_tomb = gen.has_tombstones(path, meta)
     if min_dead_fraction is None:
         if not (meta.get("part_rels") or has_tomb):

@@ -38,11 +38,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from inside_vectordb_spark import _generations as gen
 from inside_vectordb_spark import _meta_io as mio
-from inside_vectordb_spark.functions.vector import (
-    as_double_array,
-    cosine_similarity,
-)
+from inside_vectordb_spark.functions.vector import as_double_array
+from inside_vectordb_spark.operators.ann import rounded_cosine_topk
 from inside_vectordb_spark.operators.ann_sign import (
     _assign_nearest,
     id_rule_centroids,
@@ -136,7 +135,7 @@ def ensure_ivfpq_det_index(
         "res_cap": IVFPQ_RES_CAP,
         "corpus": _corpus_fingerprint(corpus, id_col),
     }
-    meta = mio.read_json(mio.join(path, "meta.json"))
+    meta = gen.read_meta(path)
     if meta is not None and all(meta.get(kk) == v for kk, v in want.items()):
         return path
     from inside_vectordb_spark.operators.ann_index import _begin_rebuild
@@ -228,14 +227,4 @@ def ann_ivfpq_det_topk(
         corpus.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("__dv")),
         "doc_id",
     )
-    scored = withvec.select(
-        "query_id",
-        "doc_id",
-        F.round(cosine_similarity("__qv", "__dv"), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rounded_cosine_topk(withvec, k, "__dv")

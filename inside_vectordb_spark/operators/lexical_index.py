@@ -95,13 +95,13 @@ def _docnorm_dir(path: str, meta: dict) -> str:
     return os.path.join(path, meta.get("docnorm_rel", "docnorm"))
 
 
-def _validate_serving(meta: dict | None, path: str) -> dict:
-    """Shared gate for every read path: kind, layout, AND bucket
-    count — a layout-1 index or one bucketed under a different
-    N_TERM_BUCKETS would otherwise be pruned with the wrong modulus
-    and silently drop matching postings buckets."""
-    if meta is None or meta.get("kind") != "lexical":
-        raise FileNotFoundError(f"no complete lexical index at {path}")
+def _validate_serving(path: str) -> dict:
+    """The committed meta, through the shared gate for every read
+    path: kind, layout, AND bucket count — a layout-1 index or one
+    bucketed under a different N_TERM_BUCKETS would otherwise be
+    pruned with the wrong modulus and silently drop matching postings
+    buckets."""
+    meta = gen.read_meta(path, "lexical")
     if meta.get("layout") != LEXICAL_LAYOUT:
         raise ValueError(
             f"lexical index at {path} has layout {meta.get('layout')} "
@@ -271,7 +271,7 @@ def bm25_topk_indexed(
     aggregation — nothing O(corpus) moves. Identical scoring
     arithmetic to ``bm25_scores``, so results match the fresh path
     bit-for-bit."""
-    meta = _validate_serving(gen.read_meta(path), path)
+    meta = _validate_serving(path)
     q = queries.select(
         F.col(qid_col).alias("query_id"), F.lower(F.col(qtext_col)).alias("__qt")
     )
@@ -328,7 +328,7 @@ def build_tfidf_norms(spark: SparkSession, path: str) -> None:
     # killed build left a torn docnorm that silently dropped documents
     # from every TF-IDF result forever)
     with mio.commit_lock(path):
-        meta = _validate_serving(gen.read_meta(path), path)
+        meta = _validate_serving(path)
         prev = dict(meta)
         postings = _read_postings(spark, path, meta)
         dft = spark.read.parquet(_df_dir(path, meta)).select("term", "df")
@@ -367,11 +367,11 @@ def tfidf_topk_indexed(
     precomputed ``docnorm`` relation (built once from the full
     dictionary), and the query side stays a broadcast. Same
     arithmetic as ``operators/tfidf.py:tfidf_scores``."""
-    meta = _validate_serving(gen.read_meta(path), path)
+    meta = _validate_serving(path)
     if not mio.is_dir(_docnorm_dir(path, meta)):
         build_tfidf_norms(spark, path)
         # the build COMMITS by repointing docnorm_rel — re-read meta
-        meta = _validate_serving(gen.read_meta(path), path)
+        meta = _validate_serving(path)
     n_docs = float(meta["n_docs"])
     q = queries.select(
         F.col(qid_col).alias("query_id"), F.lower(F.col(qtext_col)).alias("__qt")
@@ -499,7 +499,7 @@ def compact_lexical_index(spark: SparkSession, path: str) -> dict:
     oracle in tests and on the driver via ``bm25_compacted_topk``.
     Idempotent: a compacted index is a no-op (returned unchanged)."""
     with mio.commit_lock(path, timeout_sec=600.0):
-        meta = _validate_serving(gen.read_meta(path), path)
+        meta = _validate_serving(path)
         post_rels = list(meta.get("postings_rels", ["postings"]))
         dl_rels = list(meta.get("doclen_rels", ["doclen"]))
         if len(post_rels) <= 1 and len(dl_rels) <= 1:
@@ -528,7 +528,7 @@ def _upsert_locked(
     )
     from inside_vectordb_spark.operators.bm25 import doc_token_stream
 
-    meta = _validate_serving(gen.read_meta(path), path)
+    meta = _validate_serving(path)
     spark = new_docs.sparkSession
     d = new_docs.select(
         F.col(id_col).alias("doc_id"), F.lower(F.col(text_col)).alias("__t")

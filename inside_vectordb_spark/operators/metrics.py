@@ -220,7 +220,8 @@ def ndcg_at_k(
     reference member; BEIR's headline metric, Järvelin & Kekäläinen
     gains): per query DCG@K = Σ (2^rel − 1)/log2(rank+1) over judged
     hits, normalized by the ideal DCG of that query's own judgment
-    set, mean over searched-and-judged queries (the A5 skip rule).
+    set, mean over searched-and-judged queries (the A5 skip rule);
+    0.0 when no query qualifies, like Recall@K.
 
     DCG comes from the same per-query aggregate as the A5-A7 chain
     (per-K conditional sums over the graded hits join); the ideal DCG
@@ -248,15 +249,18 @@ def ndcg_at_k(
     )
     # searched AND judged; all-grade-0 judgment sets have idcg == 0
     # and are skipped, explicitly — ANSI mode (Spark 4 default) makes
-    # 0/0 an error, not a null
+    # 0/0 an error, not a null. An empty mean is 0.0, as in _means.
     per_q = _per_query(topk, qrels, k_values, graded=True).join(F.broadcast(ideal), "query_id")
     means = per_q.agg(*[
-        F.avg(
-            F.when(
-                F.col(f"idcg_{k}") > 0,
-                F.coalesce(F.col(f"dcg_{k}"), F.lit(0.0)) / F.col(f"idcg_{k}"),
-            )
+        F.coalesce(
+            F.avg(
+                F.when(
+                    F.col(f"idcg_{k}") > 0,
+                    F.coalesce(F.col(f"dcg_{k}"), F.lit(0.0)) / F.col(f"idcg_{k}"),
+                )
+            ),
+            F.lit(0.0),
         ).alias(f"ndcg_{k}")
         for k in k_values
     ])
-    return _view(means, "ndcg", k_values, round_to).filter(F.col("ndcg").isNotNull())
+    return _view(means, "ndcg", k_values, round_to)

@@ -29,7 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from inside_vectordb_spark import _generations as gen
 from inside_vectordb_spark.functions.vector import cosine_similarity
+from inside_vectordb_spark.operators.ann import rounded_cosine_topk
 
 # Trained MRL embeddings front-load variance into the prefix; the
 # synthetic testdata's dimensions are exchangeable, so the registry
@@ -69,22 +71,12 @@ def _funnel(
         .filter(F.col("__crn") <= n_candidates)
         .select("query_id", "doc_id")
     )
-    rescored = (
+    pairs = (
         corpus.select(F.col(corpus_id).alias("doc_id"), F.col(corpus_vec).alias("__cv"))
         .join(F.broadcast(cand), "doc_id")
         .join(F.broadcast(q.select("query_id", "__qv")), "query_id")
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(cosine_similarity("__qv", "__cv"), 6).alias("score"),
-        )
     )
-    wf = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rounded_cosine_topk(pairs, k, "__cv")
 
 
 def ann_mrl_topk(
@@ -156,12 +148,9 @@ def build_mrl_index(
 
 
 def ensure_mrl_index(corpus: DataFrame, path: str, **params) -> dict:
-    from inside_vectordb_spark.operators.ann_index import (
-        _corpus_fingerprint,
-        _read_meta,
-    )
+    from inside_vectordb_spark.operators.ann_index import _corpus_fingerprint
 
-    meta = _read_meta(path)
+    meta = gen.read_meta(path)
     # validate against the RESOLVED params (defaults applied) — a
     # caller relying on the MRL_PREFIX_DIM default must not silently
     # accept an artifact built at another width (review r7)
@@ -189,7 +178,7 @@ def ensure_mrl_index(corpus: DataFrame, path: str, **params) -> dict:
     from inside_vectordb_spark import _meta_io as mio
 
     with mio.commit_lock(path):
-        meta = _read_meta(path)
+        meta = gen.read_meta(path)
         if meta is not None and all(meta.get(k) == v for k, v in want.items()):
             return meta
         return build_mrl_index(corpus, path, **params)
@@ -212,11 +201,7 @@ def ann_mrl_topk_indexed(
     vectors never shuffle in either stage."""
     import os
 
-    from inside_vectordb_spark.operators.ann_index import _read_meta
-
-    meta = _read_meta(path)
-    if meta is None or meta.get("kind") != "mrl":
-        raise FileNotFoundError(f"no complete MRL index at {path}")
+    meta = gen.read_meta(path, "mrl", "MRL")
     spark = queries.sparkSession
     prefix_dim = int(meta["prefix_dim"])
     q = queries.select(
@@ -331,12 +316,9 @@ def build_mrl_sq_index(
 
 
 def ensure_mrl_sq_index(corpus: DataFrame, path: str, **params) -> dict:
-    from inside_vectordb_spark.operators.ann_index import (
-        _corpus_fingerprint,
-        _read_meta,
-    )
+    from inside_vectordb_spark.operators.ann_index import _corpus_fingerprint
 
-    meta = _read_meta(path)
+    meta = gen.read_meta(path)
     # validate RESOLVED defaults (the ensure_* class rule); mins/spans
     # are derived state, not identity — params + corpus fingerprint
     # fully determine them
@@ -352,7 +334,7 @@ def ensure_mrl_sq_index(corpus: DataFrame, path: str, **params) -> dict:
     from inside_vectordb_spark import _meta_io as mio
 
     with mio.commit_lock(path):
-        meta = _read_meta(path)
+        meta = gen.read_meta(path)
         if meta is not None and all(meta.get(k) == v for k, v in want.items()):
             return meta
         return build_mrl_sq_index(corpus, path, **params)
@@ -377,11 +359,7 @@ def ann_mrl_sq_topk_indexed(
 
     import numpy as np
 
-    from inside_vectordb_spark.operators.ann_index import _read_meta
-
-    meta = _read_meta(path)
-    if meta is None or meta.get("kind") != "mrl_sq":
-        raise FileNotFoundError(f"no complete MRL-SQ index at {path}")
+    meta = gen.read_meta(path, "mrl_sq", "MRL-SQ")
     spark = queries.sparkSession
     codes = spark.read.parquet(os.path.join(path, "prefix_codes"))
     return ann_mrl_sq_topk(
@@ -417,10 +395,7 @@ def upsert_mrl_index(corpus_delta: DataFrame, path: str, id_col: str = "vec_id",
         _write_meta,
     )
 
-    from inside_vectordb_spark.operators.ann_index import (
-        _assert_disjoint_delta,
-        _read_meta,
-    )
+    from inside_vectordb_spark.operators.ann_index import _assert_disjoint_delta
 
     # the whole read-meta → append → write-meta sequence runs under
     # the commit lock (review r9-4): without it two concurrent upserts
@@ -436,9 +411,7 @@ def upsert_mrl_index(corpus_delta: DataFrame, path: str, id_col: str = "vec_id",
     # writing generation dirs, a layout this single-relation append
     # deliberately trades away for O(delta) simplicity.
     with mio.commit_lock(path):
-        meta = _read_meta(path)  # the shared meta seam, like every sibling
-        if meta is None or meta.get("kind") != "mrl":
-            raise FileNotFoundError(f"no complete MRL index at {path}")
+        meta = gen.read_meta(path, "mrl", "MRL")
         _assert_disjoint_delta(
             corpus_delta.sparkSession.read.parquet(
                 os.path.join(path, "prefixes")
@@ -485,15 +458,12 @@ def compact_mrl_index(spark, path: str) -> dict:
     from inside_vectordb_spark import _meta_io as mio
     from inside_vectordb_spark.operators.ann_index import (
         _begin_rebuild,
-        _read_meta,
         _write_meta,
     )
     from inside_vectordb_spark.operators.layout import compact_small_files
 
     with mio.commit_lock(path):
-        meta = _read_meta(path)
-        if meta is None or meta.get("kind") != "mrl":
-            raise FileNotFoundError(f"no complete MRL index at {path}")
+        meta = gen.read_meta(path, "mrl", "MRL")
         prefixes = os.path.join(path, "prefixes")
         tmp = mio.join(path, "prefixes_compact_tmp")
         mio.remove_tree(tmp)  # orphan from a crashed prior compaction

@@ -38,14 +38,14 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from inside_vectordb_spark.operators.ann import _normalize_rows
+from inside_vectordb_spark.operators.ann import _normalize_rows, rank_topk
 from inside_vectordb_spark.operators.topk import _PARTIAL_SCHEMA
 
 
-def _local_topk(
+def _partition_hnsw_topk(
     ids: np.ndarray,
     mat: np.ndarray,
     qids: np.ndarray,
@@ -56,8 +56,10 @@ def _local_topk(
     ef_search: int,
     kernel: str = "auto",
 ) -> pd.DataFrame:
-    """Partition-local top-k. Inputs are L2-normalized, so inner
-    product == cosine. ``kernel`` picks the engine (module docstring)."""
+    """One partition's local top-k for every query: an HNSW graph built
+    over ``ids``/``mat`` (or the exact GEMM fallback) answers them.
+    Inputs are L2-normalized, so inner product == cosine. ``kernel``
+    picks the engine (module docstring)."""
     kk = min(k, len(ids))
 
     def _assemble(labels: np.ndarray, dists: np.ndarray) -> pd.DataFrame:
@@ -155,16 +157,9 @@ def ann_hnsw_partitioned_topk(
             mat = _normalize_rows(
                 np.array(list(pdf["v"].to_numpy()), dtype=np.float64)
             )
-            yield _local_topk(
+            yield _partition_hnsw_topk(
                 ids, mat, qids, qmat, k, m, ef_construction, ef_search, kernel
             )
 
     partials = c.mapInPandas(search_partition, schema=_PARTIAL_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    out = (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-    if round_to is not None:
-        out = out.withColumn("score", F.round("score", round_to))
-    return out.select("query_id", "doc_id", "score", "rank")
+    return rank_topk(partials, k, round_to)

@@ -54,6 +54,7 @@ from inside_vectordb_spark.functions.vector import (
     dot_product,
     l2_norm,
 )
+from inside_vectordb_spark.operators.ann import rounded_cosine_topk
 from inside_vectordb_spark.operators.ann_sign import id_rule, id_rule_centroids
 
 PQ_DET_STRIDE = 29
@@ -188,17 +189,7 @@ def _adc_search(
         corpus.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("__dv")),
         "doc_id",
     )
-    scored = withvec.select(
-        "query_id",
-        "doc_id",
-        F.round(cosine_similarity("__qv", "__dv"), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rounded_cosine_topk(withvec, k, "__dv")
 
 
 def ann_pq_det_topk(
@@ -257,7 +248,7 @@ def ensure_pq_det_index(
         "cap": n_centroids_cap,
         "corpus": _corpus_fingerprint(corpus, id_col),
     }
-    meta = mio.read_json(mio.join(path, "meta.json"))
+    meta = gen.read_meta(path)
     if meta is not None and all(meta.get(kk) == v for kk, v in want.items()):
         return path
     from inside_vectordb_spark.operators.ann_index import _begin_rebuild
@@ -310,9 +301,7 @@ def upsert_pq_det_index(
             _merge_fingerprint,
         )
 
-        meta = mio.read_json(mio.join(path, "meta.json"))
-        if meta is None or meta.get("kind") != "pq_det":
-            raise FileNotFoundError(f"no complete pq_det index at {path}")
+        meta = gen.read_meta(path, "pq_det")
         stride, cap = int(meta["stride"]), int(meta["cap"])
         m_sub, dim = int(meta["m"]), int(meta["dim"])
         bad = new_vectors.filter(id_rule(id_col, stride, cap)).count()
@@ -373,9 +362,7 @@ def delete_from_pq_det_index(
     # (both pass, the second appends duplicate rows), and readers /
     # ensure_* hit the marker window of a healthy index mid-append
     with mio.commit_lock(path):
-        meta = mio.read_json(mio.join(path, "meta.json"))
-        if meta is None or meta.get("kind") != "pq_det":
-            raise FileNotFoundError(f"no complete pq_det index at {path}")
+        meta = gen.read_meta(path, "pq_det")
         return gen.delete(spark, path, meta, ids)
 
 

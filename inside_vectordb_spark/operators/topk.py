@@ -42,6 +42,9 @@ Two physical strategies, same semantics:
 
 Tie-breaking is declared deterministic: (score DESC, id ASC) —
 FIXTURES.md §6; the reference's argsort tie order is unspecified.
+Exactly two functions define that cut: ``ann.rank_topk`` (the Spark
+window every vector search's global merge calls) and ``_local_topk``
+below (its NumPy twin for the driver placements).
 """
 
 from __future__ import annotations
@@ -51,7 +54,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -62,7 +65,7 @@ from pyspark.sql.types import (
 )
 
 from inside_vectordb_spark.functions.vector import dot_product, l2_normalize
-from inside_vectordb_spark.operators.ann import _normalize_rows
+from inside_vectordb_spark.operators.ann import _normalize_rows, rank_topk
 
 
 def exact_cosine_topk(
@@ -94,14 +97,7 @@ def exact_cosine_topk(
         "doc_id",
         dot_product("__qv", "__cv").alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-    if round_to is not None:
-        out = out.withColumn("score", F.round("score", round_to))
-    return out.select("query_id", "doc_id", "score", "rank")
+    return rank_topk(scored, k, round_to)
 
 
 _PARTIAL_SCHEMA = StructType(
@@ -329,14 +325,7 @@ def exact_cosine_topk_gemm(
             yield pd.DataFrame({"query_id": q, "doc_id": d, "score": s})
 
     partials = c.mapInPandas(score_partition, schema=_PARTIAL_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    out = (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-    if round_to is not None:
-        out = out.withColumn("score", F.round("score", round_to))
-    return out.select("query_id", "doc_id", "score", "rank")
+    return rank_topk(partials, k, round_to)
 
 
 def ranked_result_lists(topk: DataFrame) -> DataFrame:
@@ -446,11 +435,4 @@ def filtered_cosine_topk(
             dot_product("__qv", "__cv").alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-    if round_to is not None:
-        out = out.withColumn("score", F.round("score", round_to))
-    return out.select("query_id", "doc_id", "score", "rank")
+    return rank_topk(scored, k, round_to)

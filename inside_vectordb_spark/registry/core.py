@@ -252,7 +252,8 @@ def mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN ideal i USING (query_id)
       LEFT JOIN dcg d ON d.query_id = s.query_id AND d.k = i.k
       WHERE i.idcg > 0)
-    SELECT k, round(avg(nd), 6) AS ndcg FROM perq GROUP BY k ORDER BY k
+    SELECT ks.k AS k, round(COALESCE(avg(p.nd), 0.0), 6) AS ndcg
+    FROM ks LEFT JOIN perq p ON p.k = ks.k GROUP BY ks.k ORDER BY ks.k
     """,
 )
 def ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:

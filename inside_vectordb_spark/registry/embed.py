@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from inside_vectordb_spark import io as eio
 from inside_vectordb_spark.functions.vector import dot_product
+from inside_vectordb_spark.operators.ann import rank_topk
 from inside_vectordb_spark.operators.embed import DEFAULT_DIM, encode_documents
 from inside_vectordb_spark.registry import register
 
@@ -251,12 +252,7 @@ def text_search_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.sqrt(dot_product("qv", "qv")) * F.sqrt(dot_product("cv", "cv")))
         ).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "doc_id", F.round("score", 6).alias("score"), "rank")
-    )
+    return rank_topk(scored, 5, 6)
 
 
 _FILTERED_EXACT_ORACLE = f"""

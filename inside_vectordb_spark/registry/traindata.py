@@ -597,8 +597,8 @@ def late_interaction_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials, not chunk pairs. Full DuckDB oracle (sparse exact-integer
     restatement of the hash encoder, as chunked_retrieval)."""
     from inside_vectordb_spark.functions.vector import cosine_similarity
+    from inside_vectordb_spark.operators.ann import rank_topk
     from inside_vectordb_spark.operators.embed import encode_documents
-    from pyspark.sql import Window as W
 
     docs = eio.load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") >= 5)
@@ -623,16 +623,7 @@ def late_interaction_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("m"), 6).alias("score"))
     )
-    return (
-        agg.withColumn(
-            "rank",
-            F.row_number().over(
-                W.partitionBy("query_id").orderBy(F.desc("score"), "doc_id")
-            ),
-        )
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rank_topk(agg, 5)
 
 
 # The (word, corpus frequency) table every BPE oracle starts from —

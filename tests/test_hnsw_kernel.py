@@ -88,7 +88,8 @@ def test_deterministic_build_and_query(built):
 
 def test_ip_distance_contract(built):
     """dists are ascending and equal 1 − ⟨q, v⟩ — the hnswlib
-    'ip'-space convention ``_local_topk`` converts back to cosine."""
+    'ip'-space convention ``_partition_hnsw_topk`` converts back to
+    cosine."""
     idx, pts, ids, q = built
     idx.set_ef(64)
     labels, dists = idx.knn_query(q[:5], K)

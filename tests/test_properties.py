@@ -563,8 +563,9 @@ def test_ndcg_dedups_duplicate_judgments(spark):
 def test_recall_zero_fills_when_no_query_judged(spark):
     """Review r7: the reference returns 0.0 when the skip rule removes
     every query — the DataFrame twin must emit (k, 0.0) rows, not an
-    empty frame that downstream reports misread as 'no metric'."""
-    from inside_vectordb_spark.operators.metrics import recall_at_k
+    empty frame that downstream reports misread as 'no metric'. nDCG
+    follows the same skip rule and zero-fills the same way."""
+    from inside_vectordb_spark.operators.metrics import ndcg_at_k, recall_at_k
 
     topk = spark.createDataFrame(
         [(1, 10, 1)], "query_id long, doc_id long, rank int"
@@ -574,6 +575,8 @@ def test_recall_zero_fills_when_no_query_judged(spark):
     )
     rows = recall_at_k(topk, qrels, (1, 5)).collect()
     assert [(r["k"], r["recall"]) for r in rows] == [(1, 0.0), (5, 0.0)]
+    rows = ndcg_at_k(topk, qrels, (1, 5)).collect()
+    assert [(r["k"], r["ndcg"]) for r in rows] == [(1, 0.0), (5, 0.0)]
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
@@ -583,13 +586,14 @@ def test_ndcg_matches_reference_semantics(spark, results, qrels):
 
     # grade-0 judgments contribute zero gain on both sides; a query
     # whose judgments are ALL grade-0 has idcg == 0 and is skipped by
-    # both (Spark: 0/0 -> null -> dropped by avg; Python: idcg > 0)
+    # both (Spark: 0/0 -> null -> dropped by avg; Python: idcg > 0);
+    # when every query is skipped nDCG zero-fills to 0.0
     topk, qr = _to_dfs(spark, results, qrels)
     k = 5
     got = {r["k"]: r["ndcg"] for r in ndcg_at_k(topk, qr, (k,), round_to=None).collect()}
     want = _ref_ndcg(results, qrels, k)
     if want is None:
-        assert k not in got or got[k] is None or math.isnan(got[k]) or got[k] == 0.0
+        assert got[k] == 0.0
     else:
         assert math.isclose(got[k], want, abs_tol=1e-9)
 
