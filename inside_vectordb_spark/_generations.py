@@ -1,11 +1,26 @@
 """The commit protocol every persisted index shares.
 
-An index lives in one directory: parquet DATA relations (one
-subdirectory each) plus ``meta.json``, the CONTROL file that names
-which relations are live. This module is the one place that protocol
-is written down and implemented; the tiers (``hnsw_index``,
-``lexical_index``, SQ in ``ann_index``, ``ann_sign``, ``pq_det``) call
-into it instead of restating it.
+An index lives in one directory: parquet DATA relations (one or more
+subdirectories each) plus ``meta.json``, the CONTROL file that names
+which directories are live. This module is the one place that protocol
+is written down and implemented; every tier (``hnsw_index``,
+``lexical_index``, the LSH, PQ and SQ tiers in ``ann_index``, the
+sign-LSH and IVF tiers in ``ann_sign``, ``pq_det``, ``ivfpq_det`` and
+``mrl``) calls into it instead of restating it.
+
+Relation map. Meta names every relation an index serves as one map
+from relation name to a list of directories (``rels``; the lexical
+index keeps its own ``postings_rels``/``doclen_rels`` lists, and the
+partitioned HNSW graph its ``base_rel``/``part_rels``). A reader
+resolves every relation from the one meta read it makes and unions a
+relation's directories (``read_rel``; one ``spark.read.parquet`` per
+directory, since two partitioned roots cannot share one read). The
+writes follow one rule:
+  - a build, rebuild or compaction writes a fresh ``<name>_g<n>`` for
+    each relation it rewrites (``build_rels``) and names it alone;
+  - an upsert writes its delta to a fresh ``<name>_d<n>``
+    (``delta_rel``) and appends it to that relation's list;
+  - nothing ever writes into a directory that meta already names.
 
 Generation naming. A write never goes into a directory a reader could
 resolve. Each new relation takes the smallest ``<prefix><n>`` with no
@@ -22,42 +37,47 @@ serves it (``part_map``: meta's ``part_rels``, else ``base_rel``, and a
 partition whose ``part=<p>`` directory is absent is simply empty) — so
 a crash before the meta write leaves the previous index fully
 readable, and a reader never sees a relation that was not committed.
-Every commit runs under ``_meta_io.commit_lock``.
+Every write runs under ``_meta_io.commit_lock``: GC is a sweep, and
+would otherwise delete another writer's generation while it is still
+being written.
 
 One-commit grace and GC. A commit supersedes relations (a partition
-repointed at a new generation, an old dictionary, a folded tombstone
-set). A reader that resolved the previous meta may still hold lazy
-frames over them, so they survive exactly one commit and are reclaimed
-by the next (``commit`` → ``gc``). GC is a sweep: every directory of
-the index's families that the new meta does not serve and does not
-hold in grace goes. A partitioned index records its grace list in meta
-(``gc_pending``: ``[rel, part]`` for one partition directory,
-``[rel, null]`` for a whole relation); an index without one passes the
-previous meta's relations as the grace set. Because GC is a sweep and
-not a replay of a list, it is self-healing: directories left by a
-crash — an uncommitted generation, or relations a crashed GC never
-reached — go at the next successful commit.
+repointed at a new generation, a rebuilt relation, an old dictionary,
+a folded tombstone set). A reader that resolved the previous meta may
+still hold lazy frames over them, so they survive exactly one commit
+and are reclaimed by the next (``commit`` → ``gc``). GC is a sweep:
+every directory of the index's families that the new meta does not
+serve and does not hold in grace goes. A partitioned index records its
+grace list in meta (``gc_pending``: ``[rel, part]`` for one partition
+directory, ``[rel, null]`` for a whole relation); the other indexes
+pass the previous meta's relations as the grace set (``commit_rels``
+reads it from disk, under the lock). Because GC is a sweep and not a
+replay of a list, it is self-healing: directories left by a crash — an
+uncommitted generation, or relations a crashed GC never reached — go
+at the next successful commit.
 
 Tombstones. Deletes are hnswlib ``mark_deleted`` / FAISS
 ``remove_ids``: ids are appended to a tombstone relation (meta's
 ``tomb_rel``, default ``tombstones``) that every search anti-joins;
 the data relations are untouched until a compaction or rebuild
-removes the rows physically and clears the relation. The relation is
-read as a directory, so an append is visible the moment it lands: the
-append IS a delete's commit. A delete of a list of ids runs no Spark
-job: the set difference against the stored tombstones is taken on the
-driver and the new ids are appended as one parquet file written with
-pyarrow (``write_ids``; ``_meta_io.write_parquet`` renames it into
-place whole). A delete given as a DataFrame stays on the executors.
-A partial compaction writes its surviving ids to a fresh
-``tombstones_g<n>`` relation the same way. Meta carries
-``n_deleted``, the count search uses to over-fetch past masked rows;
-it is written BEFORE the append, as the size of (existing ∪ new)
-tombstones, so a crash between the two only over-counts (more
-over-fetch, never fewer than k live rows) and the next delete
-recounts it exactly.
+removes the rows physically and names a fresh, still absent
+``tombstones_g<n>``. A reader holding the previous meta keeps its
+tombstones through the grace, and the new lifecycle never sees them.
+The relation is read as a directory, so an append is visible the
+moment it lands: the append IS a delete's commit. A delete of a list
+of ids runs no Spark job: the set difference against the stored
+tombstones is taken on the driver and the new ids are appended as one
+parquet file written with pyarrow (``write_ids``;
+``_meta_io.write_parquet`` renames it into place whole). A delete
+given as a DataFrame stays on the executors. A partial compaction
+writes its surviving ids to a fresh ``tombstones_g<n>`` relation the
+same way. Meta carries ``n_deleted``, the count search uses to
+over-fetch past masked rows; it is written BEFORE the append, as the
+size of (existing ∪ new) tombstones, so a crash between the two only
+over-counts (more over-fetch, never fewer than k live rows) and the
+next delete recounts it exactly.
 
-Crash behaviour, per step of a maintenance op:
+Crash behaviour, per step of a write:
   - before or during the meta write: the previous index is served;
     the new generation is an orphan, swept by the next commit;
   - after the meta write, before or during GC: the new index is
@@ -65,12 +85,10 @@ Crash behaviour, per step of a maintenance op:
   - a delete: before its meta write nothing changed; after it, the
     ids are masked once the append lands.
 
-Full rebuilds of the ANN tiers (``ann_index._begin_rebuild``), the LSH
-upsert's append and the sign and MRL compactions' directory swaps use
-the older marker protocol (remove meta first, rewrite it last) and
-are not generation commits. The other in-place appends (the sign,
-det-PQ, MRL and IVF upserts) write their rows first and rewrite meta
-last, also outside this protocol.
+An index whose meta lacks its tier's layout keys (``_LAYOUT``: the
+relation map, or the graph's generation map and counts) predates this
+protocol: ``current`` reports it stale, so ``ensure_*`` rebuilds it,
+and ``read_meta`` with a kind refuses it.
 """
 
 from __future__ import annotations
@@ -87,18 +105,43 @@ from inside_vectordb_spark import _meta_io as mio
 
 META = "meta.json"
 TOMBSTONES = "tombstones"
+# keys a meta of this protocol carries, per kind (default: the
+# relation map); the lexical index validates its own ``layout``
+_LAYOUT = {
+    "hnsw_vendored": ("base_rel", "part_rels", "part_counts", "heuristic"),
+    "lexical": (),
+}
+
+
+def _has_layout(meta: dict[str, Any] | None) -> bool:
+    return meta is not None and all(
+        k in meta for k in _LAYOUT.get(meta.get("kind"), ("rels",))
+    )
 
 
 def read_meta(
     path: str, kind: str | None = None, tier: str | None = None
 ) -> dict[str, Any] | None:
     """The committed ``meta.json``, or None when there is none. With
-    ``kind``, a missing meta or one of another kind raises
-    ``FileNotFoundError`` naming the ``tier`` (default: the kind)."""
+    ``kind``, a missing meta, one of another kind or one without the
+    kind's layout keys raises ``FileNotFoundError`` naming the
+    ``tier`` (default: the kind)."""
     meta = mio.read_json(mio.join(path, META))
-    if kind is not None and (meta is None or meta.get("kind") != kind):
+    if kind is not None and (
+        meta is None or meta.get("kind") != kind or not _has_layout(meta)
+    ):
         raise FileNotFoundError(f"no complete {tier or kind} index at {path}")
     return meta
+
+
+def current(path: str, want: dict[str, Any]) -> dict[str, Any] | None:
+    """The committed meta when it has its kind's layout and agrees with
+    ``want`` on every key (lifecycle bookkeeping such as ``n_deleted``
+    is not compared); None tells an ``ensure_*`` to rebuild."""
+    meta = read_meta(path)
+    if _has_layout(meta) and all(meta.get(k) == v for k, v in want.items()):
+        return meta
+    return None
 
 
 def write_meta(path: str, meta: dict[str, Any], indent: int | None = None) -> None:
@@ -113,12 +156,19 @@ def _subdirs(path: str) -> list[str]:
         return []
 
 
-def fresh_gen(path: str, *prefixes: str, start: int = 1) -> int:
+def fresh_gen(
+    path: str, *prefixes: str, start: int = 1, taken: Iterable[str] = ()
+) -> int:
     """Smallest ``n >= start`` for which no ``<prefix><n>`` directory
     exists for ANY of ``prefixes`` (one number names a set of sibling
-    relations written together)."""
+    relations written together) and none is ``taken`` — a name still
+    held in grace is reclaimed by the next commit even when its
+    directory is already gone."""
+    taken = set(taken)
     n = start
-    while any(mio.is_dir(mio.join(path, f"{p}{n}")) for p in prefixes):
+    while any(
+        f"{p}{n}" in taken or mio.is_dir(mio.join(path, f"{p}{n}")) for p in prefixes
+    ):
         n += 1
     return n
 
@@ -128,8 +178,8 @@ def part_map(path: str, meta: dict[str, Any]) -> dict[int, str]:
     ``part=<p>`` directory is absent under its relation is empty — never
     populated, or rebuilt to zero rows by a compaction — and is left
     out; falling back to an older relation would resurrect rows."""
-    part_rels = meta.get("part_rels") or {}
-    base_rel = meta.get("base_rel", "graph")
+    part_rels = meta["part_rels"]
+    base_rel = meta["base_rel"]
     out = {}
     for p in range(int(meta["n_parts"])):
         rel = part_rels.get(str(p), base_rel)
@@ -145,6 +195,67 @@ def read_rels(spark: SparkSession, path: str, rels: Iterable[str]) -> DataFrame:
         d = spark.read.parquet(mio.join(path, rel))
         out = d if out is None else out.unionByName(d)
     return out
+
+
+def read_rel(
+    spark: SparkSession, path: str, meta: dict[str, Any], name: str
+) -> DataFrame:
+    """Relation ``name`` as meta serves it: the union of its
+    directories. Filters on partition columns prune within each."""
+    return read_rels(spark, path, meta["rels"][name])
+
+
+def rel_dir(path: str, meta: dict[str, Any], name: str) -> str:
+    """The one directory of a relation that is only ever rewritten
+    whole (a codebook, the centroids)."""
+    (rel,) = meta["rels"][name]
+    return mio.join(path, rel)
+
+
+def build_rels(path: str, *names: str) -> dict[str, Any]:
+    """Meta's ``rels`` and ``tomb_rel`` for a build, rebuild or
+    compaction that rewrites ``names``: one fresh ``<name>_g<n>`` each
+    and a fresh, absent ``tombstones_g<n>``, all sharing one ``n``."""
+    n = fresh_gen(path, *(f"{name}_g" for name in names), f"{TOMBSTONES}_g")
+    return {
+        "rels": {name: [f"{name}_g{n}"] for name in names},
+        "tomb_rel": f"{TOMBSTONES}_g{n}",
+    }
+
+
+def delta_rel(path: str, name: str) -> str:
+    """A fresh directory name for an upsert's delta of ``name``."""
+    return f"{name}_d{fresh_gen(path, f'{name}_d')}"
+
+
+def _served(meta: dict[str, Any] | None) -> set[str]:
+    meta = meta or {}
+    rels = {rel for dirs in meta.get("rels", {}).values() for rel in dirs}
+    return rels | {meta.get("tomb_rel", TOMBSTONES)}
+
+
+def commit_rels(
+    path: str, meta: dict[str, Any], deltas: dict[str, str] | None = None
+) -> dict[str, Any]:
+    """Commit a meta whose ``rels`` names every served relation, after
+    appending each written ``deltas`` directory (relation name →
+    directory) to its relation's list — one that holds no data file
+    is dropped, since Spark cannot read a relation from it. The
+    relations the committed meta on disk names keep their one-commit
+    grace. Call under the commit lock."""
+    for name, rel in (deltas or {}).items():
+        if _holds_data(mio.join(path, rel)):
+            meta["rels"][name] = [*meta["rels"][name], rel]
+    keep = _served(meta) | _served(read_meta(path))
+    return commit(path, meta, keep, (*meta["rels"], TOMBSTONES))
+
+
+def _holds_data(rel_dir: str) -> bool:
+    return any(
+        f.endswith(".parquet") and not f.startswith((".", "_"))
+        for _root, _dirs, files in os.walk(rel_dir)
+        for f in files
+    )
 
 
 def _entry(rel: str, part: int | None) -> str:
@@ -203,14 +314,6 @@ def commit_parts(
     keep.add(meta.get("tomb_rel", TOMBSTONES))
     keep |= {_entry(r, p) for r, p in superseded}
     return commit(path, meta, keep - prev - set(drop), families, part_level, indent=2)
-
-
-def remove_rels(path: str, *prefixes: str) -> None:
-    """Drop every relation whose name starts with one of ``prefixes``
-    — a full rebuild starting a fresh lifecycle."""
-    for name in _subdirs(path):
-        if name.startswith(prefixes):
-            mio.remove_tree(mio.join(path, name))
 
 
 # --- tombstones -------------------------------------------------------

@@ -158,21 +158,11 @@ def remove_tree(path: str) -> None:
     shutil.rmtree(path, ignore_errors=True)
 
 
-def move(src: str, dst: str) -> None:
-    """Same-filesystem directory rename (``dst`` must not exist).
-    POSIX rename is atomic; an object-store deployment swaps this for
-    a manifest/pointer update — which is why callers must treat the
-    move as NOT atomic and guard it with the marker protocol (remove
-    the completeness marker before, rewrite it after)."""
-    os.rename(src, dst)
-
-
 def remove_file(path: str) -> None:
     """Remove a single control file if present (no-op when missing).
-    Invalidating a completeness marker MUST go through the seam: on an
+    Releasing the commit lock MUST go through the seam: on an
     object-store deployment a raw ``os.remove`` would silently no-op
-    and revive the stale-meta-over-torn-data window the marker
-    protocol exists to close (advice r6)."""
+    and leave every later commit waiting (advice r6)."""
     try:
         os.remove(path)
     except FileNotFoundError:
@@ -181,9 +171,8 @@ def remove_file(path: str) -> None:
 
 def read_json(path: str) -> dict[str, Any] | None:
     """Load a JSON control file; None if absent. Absence is detected
-    by the open() itself, not an exists() pre-check — a marker removed
-    between check and open (``_begin_rebuild`` invalidating meta.json
-    under a concurrent probe) must read as "absent", never crash the
+    by the open() itself, not an exists() pre-check — a file removed
+    between check and open must read as "absent", never crash the
     reader (review r8)."""
     try:
         with open(path) as f:

@@ -20,10 +20,12 @@ The persisted IVF tiers (inverted lists as cid-partitioned parquet,
 probing = partition pruning) live in ``ann_sign.py``: the id-rule
 ``ivf_det`` and the trained ``ivf_km``.
 
-``meta.json`` is written LAST and is the completeness marker: a
-partially-written index (job died mid-write) has no meta and is
-rebuilt. ``ensure_*`` also rebuilds when the stored params differ
-from the requested ones.
+Every write is a generation commit (``inside_vectordb_spark/_generations.py``):
+a build writes fresh ``<name>_g<n>`` relations, an upsert a fresh
+``<name>_d<n>`` delta that meta appends to the relation's list, and
+the atomic ``meta.json`` rewrite publishes them, so a crash at any
+point leaves the previous index served. ``ensure_*`` rebuilds when
+the stored params or corpus differ from the requested ones.
 
 Search reuse: query batches against a stored index skip the corpus
 signature/encoding scan entirely — the only per-batch work is
@@ -32,7 +34,6 @@ bucketing/scoring the (small) query side and the candidate re-rank.
 
 from __future__ import annotations
 
-import os
 from typing import Any
 
 import numpy as np
@@ -46,22 +47,6 @@ from inside_vectordb_spark.operators.ann import (
     _rerank_candidates,
     lsh_bucket_ids,
 )
-
-
-def _begin_rebuild(path: str) -> None:
-    """Invalidate the completeness marker BEFORE any data dir is
-    touched: a rebuild overwrites the live relations in place, so a
-    crash mid-rebuild must leave "no complete index" (forcing a clean
-    rebuild) rather than a stale meta that validates torn data —
-    meta.json written last is only a completeness marker if it is
-    also REMOVED first (review r6s2; the lexical index solves the
-    same problem with generation dirs, which its multi-relation
-    layout needs — a single-relation ANN artifact only needs the
-    marker discipline). Goes through the _meta_io seam like every
-    other control-file touch: a raw os.remove would silently no-op on
-    an object-store deployment and leave the stale marker standing
-    (advice r6)."""
-    mio.remove_file(mio.join(path, "meta.json"))
 
 
 def _assert_disjoint_delta(
@@ -86,10 +71,6 @@ def _refuse_overlap(n_dup: int, path: str) -> None:
             f"{path} — upserts are append-only (rebuild to replace "
             "existing vectors)"
         )
-
-
-def _write_meta(path: str, meta: dict[str, Any]) -> None:
-    mio.write_json(mio.join(path, "meta.json"), meta, indent=2)
 
 
 # (source path, id_col, content_col) → (file stat, fingerprint dict);
@@ -170,7 +151,6 @@ def build_lsh_index(
 ) -> dict[str, Any]:
     """X1-analogue build + S9 sink: signature scan → capped bucket
     table → parquet. One corpus pass, no joins."""
-    _begin_rebuild(path)
     cb = lsh_bucket_ids(corpus, id_col, vec_col, dim, n_tables, n_bits, seed)
     if max_bucket_size is not None:
         w = Window.partitionBy("table_idx", "bucket").orderBy("id")
@@ -179,13 +159,6 @@ def build_lsh_index(
             .filter(F.col("__bpos") <= max_bucket_size)
             .drop("__bpos")
         )
-    os.makedirs(path, exist_ok=True)
-    # repartition on the partition key first: one file per table dir
-    # instead of (#task-partitions × #tables) tiny files — small-file
-    # explosion is a real read-path tax (observed 2.5× slower search)
-    cb.repartition("table_idx").write.mode("overwrite").partitionBy(
-        "table_idx"
-    ).parquet(os.path.join(path, "buckets"))
     meta = {
         "kind": "lsh",
         "dim": dim,
@@ -195,8 +168,16 @@ def build_lsh_index(
         "max_bucket_size": max_bucket_size,
         "corpus": _corpus_fingerprint(corpus, id_col),
     }
-    _write_meta(path, meta)
-    return meta
+    with mio.commit_lock(path):
+        meta.update(gen.build_rels(path, "buckets"))
+        # repartition on the partition key first: one file per table
+        # dir instead of (#task-partitions × #tables) tiny files —
+        # small-file explosion is a real read-path tax (observed 2.5×
+        # slower search)
+        cb.repartition("table_idx").write.partitionBy("table_idx").parquet(
+            gen.rel_dir(path, meta, "buckets")
+        )
+        return gen.commit_rels(path, meta)
 
 
 def ensure_lsh_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, Any]:
@@ -204,7 +185,6 @@ def ensure_lsh_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, A
     same corpus fingerprint exists (the reference's cache check,
     ``003:234-251``, keys on params only — a changed corpus at the
     same path would silently serve stale buckets)."""
-    meta = gen.read_meta(path)
     want = {
         "kind": "lsh",
         # RESOLVED defaults included (review r8, the ensure_mrl_index
@@ -222,9 +202,7 @@ def ensure_lsh_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, A
         **{k: v for k, v in params.items() if k not in ("id_col", "vec_col")},
         "corpus": _corpus_fingerprint(corpus, params.get("id_col", "vec_id")),
     }
-    if meta is not None and all(meta.get(k) == v for k, v in want.items()):
-        return meta
-    return build_lsh_index(corpus, path, **params)
+    return gen.current(path, want) or build_lsh_index(corpus, path, **params)
 
 
 def _merge_fingerprint(
@@ -255,11 +233,11 @@ def upsert_lsh_index(
     ``add_items`` loop (``003-hnswlib_demo.py:207-220`` adds 1000
     vectors at a time to the live index) re-expressed as an
     append-only delta write. Only the NEW vectors are signature-
-    hashed; their bucket rows land as additional parquet files inside
-    the same ``table_idx`` partitions, so search (which reads the
-    bucket table as one scan) needs zero changes. At 100 TB this is
-    the difference between a full rebuild (scan + rewrite everything)
-    and work proportional to the delta.
+    hashed; their bucket rows land in a fresh ``buckets_d<n>`` relation
+    that the meta commit appends to the bucket relation's list, and
+    search reads the union. At 100 TB this is the difference between
+    a full rebuild (scan + rewrite everything) and work proportional
+    to the delta.
 
     The per-bucket cap is enforced against EXISTING occupancy by
     reading only the touched buckets (a broadcast semi-join prunes
@@ -268,21 +246,21 @@ def upsert_lsh_index(
     them rides the other tables.
 
     Contract: delta ids must be disjoint from stored ids (FAISS
-    ``add`` appends; it never replaces). A crash mid-append leaves
-    meta's fingerprint stale, which the next ``ensure_lsh_index``
-    call detects as a mismatch and repairs via full rebuild.
+    ``add`` appends; it never replaces). A crash before the meta
+    commit leaves the previous index served, and its retry passes the
+    disjointness check, which reads only committed relations.
     """
     # serialize maintenance under the commit lock (review r9-4, the
     # hnsw/sign r9-2 rule applied tier-wide): without it the
     # disjointness guard races a concurrent upsert of the same delta
-    # (both pass, the second appends duplicate rows), and readers /
-    # ensure_* hit the marker window of a healthy index mid-append
+    # (both pass, both commit), and GC would sweep the other writer's
+    # uncommitted delta
     with mio.commit_lock(path):
         meta = gen.read_meta(path, "lsh", "LSH")
         spark = new_vectors.sparkSession
-        buckets_path = os.path.join(path, "buckets")
+        stored = gen.read_rel(spark, path, meta, "buckets")
         _assert_disjoint_delta(
-            spark.read.parquet(buckets_path).select("id").distinct(),
+            stored.select("id").distinct(),
             new_vectors.select(id_col),
             path,
         )
@@ -294,8 +272,7 @@ def upsert_lsh_index(
         if cap is not None:
             touched = nb.select("table_idx", "bucket").distinct()
             occupancy = (
-                spark.read.parquet(buckets_path)
-                .join(F.broadcast(touched), ["table_idx", "bucket"], "left_semi")
+                stored.join(F.broadcast(touched), ["table_idx", "bucket"], "left_semi")
                 .groupBy("table_idx", "bucket")
                 .agg(F.count("*").alias("__occ"))
             )
@@ -306,20 +283,14 @@ def upsert_lsh_index(
                 .filter(F.coalesce(F.col("__occ"), F.lit(0)) + F.col("__pos") <= cap)
                 .drop("__pos", "__occ")
             )
-        # invalidate the completeness marker BEFORE the append: a crash
-        # mid-append (partially visible task commits) must read as "no
-        # complete index" — the next ensure_* rebuilds — never a valid
-        # meta over torn appended rows; the meta rewrite below restores
-        # the marker as the commit point (review r8)
-        _begin_rebuild(path)
-        nb.repartition("table_idx").write.mode("append").partitionBy(
-            "table_idx"
-        ).parquet(buckets_path)
+        rel = gen.delta_rel(path, "buckets")
+        nb.repartition("table_idx").write.partitionBy("table_idx").parquet(
+            mio.join(path, rel)
+        )
         meta["corpus"] = _merge_fingerprint(
             meta.get("corpus"), _corpus_fingerprint(new_vectors, id_col)
         )
-        _write_meta(path, meta)
-        return meta
+        return gen.commit_rels(path, meta, {"buckets": rel})
 
 
 def ann_lsh_topk_indexed(
@@ -339,7 +310,7 @@ def ann_lsh_topk_indexed(
     stored table never shuffles)."""
     meta = gen.read_meta(path, "lsh", "LSH")
     spark = queries.sparkSession
-    cb = spark.read.parquet(os.path.join(path, "buckets"))
+    cb = gen.read_rel(spark, path, meta, "buckets")
     qb = lsh_bucket_ids(
         queries, query_id, query_vec,
         meta["dim"], meta["n_tables"], meta["n_bits"], meta["seed"],
@@ -382,25 +353,13 @@ def build_pq_index(
     from inside_vectordb_spark.operators.pq import pq_encode, pq_train
 
     spark = corpus.sparkSession
-    _begin_rebuild(path)
     books = pq_train(corpus, vec_col, dim, m, ks, seed, id_col=id_col)
-    os.makedirs(path, exist_ok=True)
     books_pdf = pd.DataFrame(
         {
             "subspace": np.repeat(np.arange(m, dtype=np.int32), ks),
             "code": np.tile(np.arange(ks, dtype=np.int32), m),
             "vector": [row.tolist() for row in books.reshape(m * ks, -1)],
         }
-    )
-    (
-        spark.createDataFrame(books_pdf)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "codebooks"))
-    )
-    (
-        pq_encode(corpus, id_col, vec_col, books)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "codes"))
     )
     meta = {
         "kind": "pq",
@@ -410,12 +369,18 @@ def build_pq_index(
         "seed": seed,
         "corpus": _corpus_fingerprint(corpus, id_col),
     }
-    _write_meta(path, meta)
-    return meta
+    with mio.commit_lock(path):
+        meta.update(gen.build_rels(path, "codebooks", "codes"))
+        spark.createDataFrame(books_pdf).write.parquet(
+            gen.rel_dir(path, meta, "codebooks")
+        )
+        pq_encode(corpus, id_col, vec_col, books).write.parquet(
+            gen.rel_dir(path, meta, "codes")
+        )
+        return gen.commit_rels(path, meta)
 
 
 def ensure_pq_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, Any]:
-    meta = gen.read_meta(path)
     want = {
         "kind": "pq",
         # RESOLVED defaults included (review r8, the ensure_mrl_index
@@ -432,15 +397,12 @@ def ensure_pq_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, An
         **{k: v for k, v in params.items() if k not in ("id_col", "vec_col")},
         "corpus": _corpus_fingerprint(corpus, params.get("id_col", "vec_id")),
     }
-    if meta is not None and all(meta.get(k) == v for k, v in want.items()):
-        return meta
-    return build_pq_index(corpus, path, **params)
+    return gen.current(path, want) or build_pq_index(corpus, path, **params)
 
 
-def load_pq_codebooks(spark: SparkSession, path: str) -> np.ndarray:
-    meta = gen.read_meta(path)
+def _load_pq_codebooks(path: str, meta: dict[str, Any]) -> np.ndarray:
     rows = mio.read_parquet_rows(
-        os.path.join(path, "codebooks"), order_by=("subspace", "code")
+        gen.rel_dir(path, meta, "codebooks"), order_by=("subspace", "code")
     )
     books = np.array([r["vector"] for r in rows], dtype=np.float64)
     return books.reshape(meta["m"], meta["ks"], -1)
@@ -466,8 +428,8 @@ def ann_pq_topk_indexed(
 
     meta = gen.read_meta(path, "pq", "PQ")
     spark = queries.sparkSession
-    books = load_pq_codebooks(spark, path)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
+    books = _load_pq_codebooks(path, meta)
+    codes = gen.read_rel(spark, path, meta, "codes")
     return ann_pq_topk(
         queries,
         corpus,
@@ -505,42 +467,27 @@ def build_sq_index(
     from inside_vectordb_spark.operators.sq import sq_encode_col, sq_train
 
     spark = corpus.sparkSession
-    _begin_rebuild(path)
     mins, spans = sq_train(corpus, vec_col)
-    mio.makedirs(path)
-    # a rebuild starts a fresh index lifecycle: tombstones from the
-    # previous index would silently exclude ids from the NEW corpus
-    # (deletes are "compacted away by a rebuild" — so the rebuild must
-    # actually drop them)
-    gen.remove_rels(path, gen.TOMBSTONES)
-    (
-        spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "pos": np.arange(len(mins), dtype=np.int32),
-                    "mn": mins,
-                    "span": spans,
-                }
-            )
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "stats"))
-    )
-    (
-        corpus.select(
-            F.col(id_col).alias("doc_id"),
-            sq_encode_col(vec_col, mins, spans).alias("codes"),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "codes"))
+    stats = pd.DataFrame(
+        {"pos": np.arange(len(mins), dtype=np.int32), "mn": mins, "span": spans}
     )
     meta = {
         "kind": "sq",
         "dim": len(mins),
         "corpus": _corpus_fingerprint(corpus, id_col),
     }
-    _write_meta(path, meta)
-    return meta
+    # a rebuild starts a fresh index lifecycle with a fresh tombstone
+    # relation: tombstones from the previous index would silently
+    # exclude ids from the NEW corpus (deletes are "compacted away by
+    # a rebuild")
+    with mio.commit_lock(path):
+        meta.update(gen.build_rels(path, "stats", "codes"))
+        spark.createDataFrame(stats).write.parquet(gen.rel_dir(path, meta, "stats"))
+        corpus.select(
+            F.col(id_col).alias("doc_id"),
+            sq_encode_col(vec_col, mins, spans).alias("codes"),
+        ).write.parquet(gen.rel_dir(path, meta, "codes"))
+        return gen.commit_rels(path, meta)
 
 
 def delete_from_sq_index(
@@ -552,11 +499,6 @@ def delete_from_sq_index(
     tombstone column is ``doc_id``). A delete touches O(deleted)
     bytes, and the codes table is compacted away lazily by a rebuild,
     not eagerly. Idempotent per id."""
-    # serialize maintenance under the commit lock (review r9-4, the
-    # hnsw/sign r9-2 rule applied tier-wide): without it the
-    # disjointness guard races a concurrent upsert of the same delta
-    # (both pass, the second appends duplicate rows), and readers /
-    # ensure_* hit the marker window of a healthy index mid-append
     with mio.commit_lock(path):
         meta = gen.read_meta(path, "sq", "SQ")
         return gen.delete(spark, path, meta, ids, col="doc_id", indent=2)
@@ -564,23 +506,20 @@ def delete_from_sq_index(
 
 def deleted_ids(spark: SparkSession, path: str) -> set[int]:
     """The current tombstone set (empty if none ever deleted)."""
-    return gen.tombstone_ids(path, col="doc_id")
+    return gen.tombstone_ids(path, gen.read_meta(path), col="doc_id")
 
 
 def ensure_sq_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, Any]:
-    meta = gen.read_meta(path)
     want = {
         "kind": "sq",
         **{k: v for k, v in params.items() if k not in ("id_col", "vec_col")},
         "corpus": _corpus_fingerprint(corpus, params.get("id_col", "vec_id")),
     }
-    if meta is not None and all(meta.get(k) == v for k, v in want.items()):
-        return meta
-    return build_sq_index(corpus, path, **params)
+    return gen.current(path, want) or build_sq_index(corpus, path, **params)
 
 
-def load_sq_stats(spark: SparkSession, path: str) -> tuple[np.ndarray, np.ndarray]:
-    rows = mio.read_parquet_rows(os.path.join(path, "stats"), order_by=("pos",))
+def _load_sq_stats(path: str, meta: dict[str, Any]) -> tuple[np.ndarray, np.ndarray]:
+    rows = mio.read_parquet_rows(gen.rel_dir(path, meta, "stats"), order_by=("pos",))
     mins = np.array([r["mn"] for r in rows], dtype=np.float64)
     spans = np.array([r["span"] for r in rows], dtype=np.float64)
     return mins, spans
@@ -609,9 +548,9 @@ def ann_sq_topk_indexed(
 
     meta = gen.read_meta(path, "sq", "SQ")
     spark = queries.sparkSession
-    stats = load_sq_stats(spark, path)
+    stats = _load_sq_stats(path, meta)
     codes = gen.drop_deleted(
-        spark, spark.read.parquet(os.path.join(path, "codes")), path, col="doc_id"
+        spark, gen.read_rel(spark, path, meta, "codes"), path, meta, col="doc_id"
     )
     return ann_sq_topk(
         queries,

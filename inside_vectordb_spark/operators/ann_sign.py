@@ -30,7 +30,7 @@ defined once: the id-modulo centroid rule (``id_rule``), the
 nearest-centroid assignment (``_assign_nearest``), the probe window
 (``probe_window``), the probe → lists → exact-rerank tail
 (``_ivf_search``), and the persisted lists/cents writer and lists
-appender (``_ensure_ivf``, ``_upsert_ivf``) behind the id-rule
+delta writer (``_ensure_ivf``, ``_upsert_ivf``) behind the id-rule
 ``ivf_det`` and the trained ``ivf_km`` tiers. The det-IVFPQ tier
 reuses the rule, the assignment, the probe window and the pruned
 scan; SemDeDup the rule and the assignment; det-PQ the rule.
@@ -39,7 +39,6 @@ scan; SemDeDup the rule and the assignment; det-PQ the rule.
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Callable
 from functools import lru_cache
 
@@ -98,27 +97,18 @@ def spark_plane_dot_sql(vec_expr: str, signs) -> str:
     )
 
 
-def spark_bucket_sql(vec_expr: str, planes=None) -> str:
-    """Spark-SQL twin of ``bucket_sql`` (0-indexed arrays)."""
-    planes = SIGN_PLANES if planes is None else planes
-    bits = [
-        f"(CASE WHEN ({spark_plane_dot_sql(vec_expr, signs)}) >= 0 "
-        f"THEN {1 << b} ELSE 0 END)"
-        for b, signs in enumerate(planes)
-    ]
-    return "CAST((" + " + ".join(bits) + ") AS INT)"
-
-
 def sign_bucket(vec_col: Column | str, planes=None) -> Column:
     """Bucket id = the sign-bit signature of the vector against the
     hyperplanes — pure Catalyst (one left-assoc dot per plane,
-    identical order to the SQL twin's left-assoc sum)."""
+    identical order to the SQL twin's left-assoc sum). The folds run
+    as higher-order functions, which Spark interprets: a literal sum
+    per plane grew the generated class of a sign-LSH search past
+    Java's 64 KB method limit."""
     planes = SIGN_PLANES if planes is None else planes
-    from ..functions.vector import sql_ident
-
-    if isinstance(vec_col, str):
-        return F.expr(spark_bucket_sql(sql_ident(vec_col), planes))
-    v = F.transform(vec_col, lambda x: x.cast("double"))
+    v = F.transform(
+        F.col(vec_col) if isinstance(vec_col, str) else vec_col,
+        lambda x: x.cast("double"),
+    )
     total = None
     for b, signs in enumerate(planes):
         sarr = F.array(*[F.lit(float(s)) for s in signs])
@@ -163,7 +153,9 @@ def ensure_sign_index(
     parquet partitioned by bucket, plus meta.json carrying the build
     params (``bits``/``dim`` — the bucket-count knob) and a corpus
     fingerprint (count + id range) so a changed corpus OR changed
-    params at the same path trigger a rebuild."""
+    params at the same path trigger a rebuild. A rebuild names a fresh
+    tombstone relation: tombstones from a prior index must not leak
+    into the rebuilt one (same contract as the SQ tier)."""
     from inside_vectordb_spark.operators.ann_index import _corpus_fingerprint
 
     want = {
@@ -172,64 +164,42 @@ def ensure_sign_index(
         "dim": dim,
         "corpus": _corpus_fingerprint(corpus, id_col),
     }
-    # subset compare: lifecycle bookkeeping (n_deleted) must not
-    # invalidate the cache — only changed params/corpus do
-    meta = gen.read_meta(path)
-    if meta is not None and all(meta.get(k) == v for k, v in want.items()):
+    if gen.current(path, want) is not None:
         return path
-    from inside_vectordb_spark.operators.ann_index import _begin_rebuild
-
-    # invalidate the completeness marker BEFORE touching any data dir:
-    # a crash mid-rebuild must leave "no index" rather than a stale
-    # meta validating torn buckets (with the tombstones already gone)
-    _begin_rebuild(path)
     planes = sign_planes(bits, dim)
-    # fresh lifecycle: tombstones from a prior index must not leak
-    # into the rebuilt one (same contract as the SQ tier)
-    gen.remove_rels(path, gen.TOMBSTONES)
-    (
+    with mio.commit_lock(path):
+        meta = {**want, **gen.build_rels(path, "buckets")}
         corpus.select(
             F.col(id_col).alias("id"),
             sign_bucket(vec_col, planes).alias("bucket"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "buckets"))
-    )
-    mio.write_json(mio.join(path, "meta.json"), want)
+        ).write.partitionBy("bucket").parquet(gen.rel_dir(path, meta, "buckets"))
+        gen.commit_rels(path, meta)
     return path
 
 
-def pruned_lists(spark: SparkSession, path: str, probes: DataFrame) -> DataFrame:
-    """The IVF inverted-lists scan pruned to the probed centroids
-    (``pruned_scan`` of the index's ``lists`` relation). Shared by
-    both det-IVF indexed searches and the registry's probe sweep
-    (review r9-3: the sweep read 100% of the lists to use at most
-    |Q|·4 of them)."""
-    return pruned_scan(spark, os.path.join(path, "lists"), probes)
-
-
-def pruned_scan(spark: SparkSession, rel: str, probes: DataFrame) -> DataFrame:
-    """A cid-partitioned parquet relation pruned to the probed
-    centroids: collect the distinct probed cid set (≤ |queries| ×
-    n_probe rows — the audited driver-size contract) and filter with
-    literal values, so unprobed partitions cost zero I/O
-    (PartitionFilters, the FAISS nprobe economics). The det-IVF lists
-    and the det-IVFPQ codes both read through it."""
+def pruned_scan(rel: DataFrame, probes: DataFrame) -> DataFrame:
+    """A cid-partitioned relation pruned to the probed centroids:
+    collect the distinct probed cid set (≤ |queries| × n_probe rows —
+    the audited driver-size contract) and filter with literal values,
+    so unprobed partitions cost zero I/O (PartitionFilters, the FAISS
+    nprobe economics) in every directory of the relation. The det-IVF
+    lists, the registry's probe sweep and the det-IVFPQ codes all read
+    through it."""
     probed = sorted({r["cid"] for r in probes.select("cid").distinct().collect()})
-    return spark.read.parquet(rel).filter(F.col("cid").isin(probed))
+    return rel.filter(F.col("cid").isin(probed))
 
 
 def _index_scan(spark: SparkSession, path: str, probed: list[int]) -> DataFrame:
     """The pruned (id, bucket) scan every sign-LSH search shares:
     partition-pruned to the probed buckets, with tombstoned ids
     anti-joined out, so deleted vectors can never reach candidate
-    generation or the rerank."""
-    idx = (
-        spark.read.parquet(os.path.join(path, "buckets"))
-        .filter(F.col("bucket").isin(probed))
+    generation or the rerank. Buckets and tombstones resolve through
+    one meta read."""
+    meta = gen.read_meta(path, "sign_lsh", "sign-LSH")
+    idx = gen.read_rel(spark, path, meta, "buckets").filter(
+        F.col("bucket").isin(probed)
     )
-    return gen.drop_deleted(spark, idx, path, on="id")
+    return gen.drop_deleted(spark, idx, path, meta, on="id")
 
 
 def ann_sign_topk_indexed(
@@ -539,9 +509,10 @@ def upsert_sign_index(
     hnswlib batched ``add_items`` loop (``003-hnswlib_demo.py:207-220``)
     as an append-only delta write: only the NEW vectors are bucketed
     (with the planes recorded in meta.json, so a bits=10 index stays a
-    bits=10 index), and their rows land as extra parquet files inside
-    the same bucket partitions — search needs zero changes and still
-    partition-prunes. O(delta) work; the stored fingerprint merges the
+    bits=10 index), and their rows land in a fresh ``buckets_d<n>``
+    relation that the meta commit appends to the bucket relation's
+    list — search reads the union and still partition-prunes each
+    directory. O(delta) work; the stored fingerprint merges the
     delta so a later ``ensure_sign_index`` over the full corpus
     recognizes the maintained index as current. Because the bucket
     function is deterministic, an upserted index is BIT-IDENTICAL to a
@@ -554,11 +525,10 @@ def upsert_sign_index(
     the merged fingerprint counted it — silently unsearchable).
 
     Runs under the index commit lock (review r9): the upsert is a
-    read-modify-write on the fingerprint, and a concurrent
-    ``compact_sign_index`` holding only its own lock could otherwise
-    rewrite ``buckets`` from a listing that predates this append —
-    silently dropping the delta while the merged fingerprint claims
-    it is present."""
+    read-modify-write on the fingerprint and the relation list, and a
+    concurrent compaction could otherwise fold a listing that predates
+    this delta — silently dropping it while the merged fingerprint
+    claims it is present."""
     with mio.commit_lock(path):
         return _upsert_sign_locked(spark, new_vectors, path, id_col, vec_col)
 
@@ -577,26 +547,21 @@ def _upsert_sign_locked(
     )
 
     meta = gen.read_meta(path, "sign_lsh", "sign-LSH")
-    stored_ids = spark.read.parquet(os.path.join(path, "buckets")).select("id")
+    stored_ids = gen.read_rel(spark, path, meta, "buckets").select("id")
     dead = gen.tombstones(spark, path, meta)
     if dead is not None:
         stored_ids = stored_ids.unionByName(dead)
     _assert_disjoint_delta(stored_ids, new_vectors.select(id_col), path)
     planes = sign_planes(meta["bits"], meta["dim"])
-    (
-        new_vectors.select(
-            F.col(id_col).alias("id"),
-            sign_bucket(vec_col, planes).alias("bucket"),
-        )
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "buckets"))
-    )
+    rel = gen.delta_rel(path, "buckets")
+    new_vectors.select(
+        F.col(id_col).alias("id"),
+        sign_bucket(vec_col, planes).alias("bucket"),
+    ).write.partitionBy("bucket").parquet(mio.join(path, rel))
     meta["corpus"] = _merge_fingerprint(
         meta.get("corpus"), _corpus_fingerprint(new_vectors, id_col)
     )
-    mio.write_json(mio.join(path, "meta.json"), meta)
-    return meta
+    return gen.commit_rels(path, meta, {"buckets": rel})
 
 
 def delete_from_sign_index(
@@ -616,27 +581,27 @@ def delete_from_sign_index(
 
 
 def sign_deleted_ids(spark: SparkSession, path: str) -> set[int]:
-    return gen.tombstone_ids(path)
+    return gen.tombstone_ids(path, gen.read_meta(path))
 
 
 def compact_sign_index(spark: SparkSession, path: str) -> dict:
     """OPTIMIZE for the sign-LSH tier (Delta ``OPTIMIZE`` / FAISS
     rebuild-without-retrain analogue; reference anchor: the index
     caching/rebuild economics of ``003-hnswlib_demo.py:234-251``).
-    Upserts append extra parquet files into the bucket partitions and
+    Upserts add delta relations that every search unions back in and
     deletes accumulate tombstone rows that EVERY search anti-joins —
     both costs grow without bound until a full rebuild. Compaction
     folds them back to the base shape at O(index) sequential I/O and
     ZERO recompute (the bucket assignment is already materialized; no
-    re-hashing, unlike a rebuild):
+    re-hashing, unlike a rebuild), as one generation commit:
 
-    1. under the commit lock, rewrite (live buckets ⊖ tombstones)
-       into a fresh temp dir, one file per bucket partition;
-    2. remove the completeness marker (crash from here = "no index",
-       the next ensure rebuilds — marker protocol, review r6s2);
-    3. swap the temp dir over ``buckets``, drop ``tombstones``;
-    4. recommit meta UNCHANGED except the tombstone bookkeeping
-       (``n_deleted`` → ``n_compacted_away``, plus ``compacted``).
+    1. under the commit lock, write (live buckets ⊖ tombstones) into
+       a fresh ``buckets_g<n>``, one file per bucket partition, and
+       validate its row count;
+    2. commit meta naming it alone, with a fresh, empty tombstone
+       relation and the tombstone bookkeeping moved (``n_deleted`` →
+       ``n_compacted_away``, plus ``compacted``); the folded relations
+       keep their one-commit grace for in-flight readers.
 
     The corpus fingerprint deliberately stays as-is: it is a LINEAGE
     identity (base ∪ every upsert delta), not a live-row count —
@@ -658,10 +623,8 @@ def compact_sign_index(spark: SparkSession, path: str) -> dict:
     to mask it."""
     with mio.commit_lock(path):
         meta = gen.read_meta(path, "sign_lsh", "sign-LSH")
-        buckets = os.path.join(path, "buckets")
-        tmp = mio.join(path, "buckets_compact_tmp")
-        mio.remove_tree(tmp)  # orphan from a crashed prior compaction
-        live = gen.drop_deleted(spark, spark.read.parquet(buckets), path, on="id")
+        buckets = gen.read_rel(spark, path, meta, "buckets")
+        live = gen.drop_deleted(spark, buckets, path, meta, on="id")
         # emptiness guard BEFORE any write: an all-tombstoned index
         # must refuse (and an empty partitioned parquet dir can't even
         # be read back for validation — UNABLE_TO_INFER_SCHEMA)
@@ -672,30 +635,22 @@ def compact_sign_index(spark: SparkSession, path: str) -> dict:
                 "EMPTY (every row tombstoned) — rebuild over a fresh "
                 "corpus instead"
             )
+        meta.update(gen.build_rels(path, "buckets"))
+        out = gen.rel_dir(path, meta, "buckets")
         # one file per bucket partition (each bucket lands in exactly
         # one shuffle task), same physical shape as a fresh build
-        live.repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(tmp)
-        # validate the WRITTEN data before swapping it live
-        if spark.read.parquet(tmp).count() != n_live:
-            mio.remove_tree(tmp)
+        live.repartition("bucket").write.partitionBy("bucket").parquet(out)
+        # validate the WRITTEN data before committing it
+        if spark.read.parquet(out).count() != n_live:
             raise RuntimeError(
-                f"compaction wrote a torn bucket table at {tmp} — "
+                f"compaction wrote a torn bucket table at {out} — "
                 "index left untouched"
             )
-        from inside_vectordb_spark.operators.ann_index import _begin_rebuild
-
-        _begin_rebuild(path)  # marker OFF before the non-atomic swap
-        mio.remove_tree(buckets)
-        mio.move(tmp, buckets)
-        gen.remove_rels(path, gen.TOMBSTONES)
         removed = meta.pop("n_deleted", 0)
         if removed:
             meta["n_compacted_away"] = meta.get("n_compacted_away", 0) + removed
         meta["compacted"] = True
-        mio.write_json(mio.join(path, "meta.json"), meta)
-        return meta
+        return gen.commit_rels(path, meta)
 
 
 def _assign_nearest(
@@ -785,7 +740,7 @@ def _ivf_search(
     id_col: str,
     vec_col: str,
     filter_col: str | None = None,
-    lists_path: str | None = None,
+    lists: DataFrame | None = None,
 ) -> DataFrame:
     """The probe → lists → exact-rerank tail every deterministic IVF
     variant shares, so the id-rule, hash-rule and trained quantizers
@@ -794,10 +749,9 @@ def _ivf_search(
     orderable, not numeric.
 
     The inverted lists are either assigned in-plan (corpus × broadcast
-    centroids, ``lists_path`` None) or read from a stored index's
-    cid-partitioned ``lists`` relation, pruned to the probed cids
-    (``pruned_lists``). Deterministic assignment makes both answer
-    identically.
+    centroids, ``lists`` None) or a stored index's cid-partitioned
+    ``lists`` relation, pruned to the probed cids (``pruned_scan``).
+    Deterministic assignment makes both answer identically.
 
     ``filter_col``: optional metadata predicate — rank only corpus
     rows whose value equals the query's. Same composition as the
@@ -812,10 +766,10 @@ def _ivf_search(
         ["__qf"] if filter_col is not None else []
     )
     probes = probe_window(queries.select(*qcols), cents, n_probe).select(*keep)
-    if lists_path is None:
+    if lists is None:
         lists = _assign_nearest(corpus, cents, id_col, vec_col)
     else:
-        lists = pruned_lists(queries.sparkSession, lists_path, probes)
+        lists = pruned_scan(lists, probes)
     cand = probes.join(lists, "cid").drop("cid")
     ccols = [F.col(id_col).alias("doc_id"), F.col(vec_col).alias("__dv")] + (
         [F.col(filter_col).alias("__cf")] if filter_col is not None else []
@@ -839,26 +793,24 @@ def _ensure_ivf(
 ) -> str:
     """THE build of a persisted deterministic IVF index (det and km):
     reuse a complete index whose meta matches ``want`` (params +
-    corpus fingerprint); otherwise drop the completeness marker, write
-    the centroid table ``cents`` (``centroids()`` → (cid, __cv)), assign
-    the corpus against the STORED centroids into ``lists`` partitioned
-    by cid (inverted lists as directory layout → probing = parquet
-    partition pruning), and write meta.json LAST as the completeness
-    marker. Stored centroids let O(delta) upserts assign without the
-    base corpus and without retraining."""
-    from inside_vectordb_spark.operators.ann_index import _begin_rebuild
-
-    meta = gen.read_meta(path)
-    if meta is not None and all(meta.get(k) == v for k, v in want.items()):
+    corpus fingerprint); otherwise write the centroid table ``cents``
+    (``centroids()`` → (cid, __cv)) and assign the corpus against the
+    STORED centroids into ``lists`` partitioned by cid (inverted lists
+    as directory layout → probing = parquet partition pruning), both
+    fresh generations, and commit them through meta. Stored centroids
+    let O(delta) upserts assign without the base corpus and without
+    retraining."""
+    if gen.current(path, want) is not None:
         return path
-    _begin_rebuild(path)  # no stale completeness marker over torn data
-    centroids().write.mode("overwrite").parquet(os.path.join(path, "cents"))
-    stored_cents = spark.read.parquet(os.path.join(path, "cents"))
-    assign = _assign_nearest(corpus, stored_cents, id_col, vec_col)
-    assign.repartition("cid").write.mode("overwrite").partitionBy("cid").parquet(
-        os.path.join(path, "lists")
-    )
-    mio.write_json(mio.join(path, "meta.json"), want)
+    with mio.commit_lock(path):
+        meta = {**want, **gen.build_rels(path, "cents", "lists")}
+        cents_dir = gen.rel_dir(path, meta, "cents")
+        centroids().write.parquet(cents_dir)
+        assign = _assign_nearest(corpus, spark.read.parquet(cents_dir), id_col, vec_col)
+        assign.repartition("cid").write.partitionBy("cid").parquet(
+            gen.rel_dir(path, meta, "lists")
+        )
+        gen.commit_rels(path, meta)
     return path
 
 
@@ -871,21 +823,20 @@ def _upsert_ivf(
     vec_col: str,
     check_delta: Callable[[dict], None] | None = None,
 ) -> dict:
-    """THE lists appender of the persisted deterministic IVF tiers
+    """THE lists delta writer of the persisted deterministic IVF tiers
     (FAISS ``add``): assign ONLY the delta against the stored, frozen
-    centroids and append its rows into the cid-partitioned lists —
-    O(delta) work, and deterministic assignment makes the maintained
-    lists bit-identical to a build over base ∪ delta against the
-    same centroids. ``check_delta(meta)`` runs a tier's own delta
-    contract first. Delta ids must be DISJOINT from the stored ones
+    centroids into a fresh cid-partitioned ``lists_d<n>`` that the
+    meta commit appends to the lists — O(delta) work, and
+    deterministic assignment makes the maintained lists bit-identical
+    to a build over base ∪ delta against the same centroids.
+    ``check_delta(meta)`` runs a tier's own delta contract first. Delta ids must be DISJOINT from the stored ones
     (the append-only contract every upsert shares): a re-added id
     would be served twice in a top-k, so a retried maintenance job
     fails loudly instead.
 
     Serialized under the commit lock (review r9-4): without it the
     disjointness guard races a concurrent upsert of the same delta
-    (both pass, the second appends duplicate rows), and readers /
-    ensure_* hit the marker window of a healthy index mid-append."""
+    (both pass, both commit duplicate rows)."""
     from inside_vectordb_spark.operators.ann_index import (
         _assert_disjoint_delta,
         _corpus_fingerprint,
@@ -897,20 +848,20 @@ def _upsert_ivf(
         if check_delta is not None:
             check_delta(meta)
         _assert_disjoint_delta(
-            spark.read.parquet(os.path.join(path, "lists")).select("doc_id"),
+            gen.read_rel(spark, path, meta, "lists").select("doc_id"),
             new_vectors.select(id_col),
             path,
         )
-        cents = spark.read.parquet(os.path.join(path, "cents"))
+        cents = gen.read_rel(spark, path, meta, "cents")
         assign = _assign_nearest(new_vectors, cents, id_col, vec_col)
-        assign.repartition("cid").write.mode("append").partitionBy("cid").parquet(
-            os.path.join(path, "lists")
+        rel = gen.delta_rel(path, "lists")
+        assign.repartition("cid").write.partitionBy("cid").parquet(
+            mio.join(path, rel)
         )
         meta["corpus"] = _merge_fingerprint(
             meta.get("corpus"), _corpus_fingerprint(new_vectors, id_col)
         )
-        mio.write_json(mio.join(path, "meta.json"), meta)
-        return meta
+        return gen.commit_rels(path, meta, {"lists": rel})
 
 
 def ann_ivf_det_topk(
@@ -1119,12 +1070,13 @@ def ann_ivf_det_topk_indexed(
     ensure_ivf_det_index(
         spark, corpus, path, centroid_stride, n_centroids_cap, id_col, vec_col
     )
+    meta = gen.read_meta(path, "ivf_det")
     cents = id_rule_centroids(
         corpus, id_col, vec_col, centroid_stride, n_centroids_cap
     )
     return _ivf_search(
         queries, corpus, cents, k, n_probe, query_id_col, id_col, vec_col,
-        lists_path=path,
+        lists=gen.read_rel(spark, path, meta, "lists"),
     )
 
 
@@ -1240,10 +1192,10 @@ def ann_ivf_km_topk_indexed(
     training + assignment ⇒ bit-identical to the in-memory
     ``ann_ivf_km_topk`` (the registered query shares its oracle)."""
     ensure_ivf_km_index(spark, corpus, path, km_k, km_iters, id_col, vec_col)
-    cents = spark.read.parquet(os.path.join(path, "cents"))
+    meta = gen.read_meta(path, "ivf_km")
     return _ivf_search(
-        queries, corpus, cents, k, n_probe, query_id_col, id_col, vec_col,
-        lists_path=path,
+        queries, corpus, gen.read_rel(spark, path, meta, "cents"), k, n_probe,
+        query_id_col, id_col, vec_col, lists=gen.read_rel(spark, path, meta, "lists"),
     )
 
 

@@ -12,21 +12,23 @@ per-partition graph build the scatter-gather tier
 
 Layout (all data parquet, control files via the ``_meta_io`` seam):
 
-    <path>/graph/part=<p>/…   base generation: one row per
-                              (node, level) — internal insertion
-                              index (``ord``), external id, neighbor
-                              ``ord`` list; the level-0 row carries
-                              the L2-NORMALIZED vector; one header
-                              row per partition (level = −1) carries
-                              entry point / max level / RNG state
+    <path>/graph_g<N>/part=<p>/…  build generations (``base_rel``):
+                              one row per (node, level) — internal
+                              insertion index (``ord``), external id,
+                              neighbor ``ord`` list; the level-0 row
+                              carries the L2-NORMALIZED vector; one
+                              header row per partition (level = −1)
+                              carries entry point / max level / RNG
+                              state
     <path>/graph_u<N>/…       upsert generations; meta's
                               ``part_rels`` names which generation
                               serves each partition
     <path>/graph_c<N>/…       compaction generations (``base_rel``)
-    <path>/tombstones/        mark_deleted ids (search filters them;
-                              compaction removes them physically)
+    <path>/tombstones_g<N>/   mark_deleted ids (``tomb_rel``; search
+                              filters them, compaction removes them
+                              physically)
     <path>/meta.json          params + fingerprint + the generation
-                              map; removed first only on full rebuilds
+                              map, the commit point of every write
 
 Generation naming, meta as the commit point, the one-commit GC grace
 (``gc_pending``) and tombstones follow ``inside_vectordb_spark/_generations.py``.
@@ -43,10 +45,10 @@ two paths that return the same rows:
   and kept in a process-level LRU (``_KERNELS``, bounded by estimated
   bytes) keyed by (index path, partition) and valid only for the
   relation meta names and the ``part=<p>`` directory stamp (file
-  names, sizes, mtimes) it was read from. Meta alone is not enough: a
-  full rebuild rewrites ``graph/part=<p>`` in place under the same
-  name, and a delete writes meta before its tombstone append, so the
-  tombstones are read on every request instead. Only index structure
+  names, sizes, mtimes) it was read from (every write takes a fresh
+  generation, so the stamp only guards a directory replaced from
+  outside the engine). A delete writes meta before its tombstone
+  append, so the tombstones are read on every request instead. Only index structure
   is cached, never answers. The result is a local frame (one
   ``LocalTableScan``), so collecting it runs no Spark job.
 - Scatter-gather (filtered searches, large batches, large indexes):
@@ -129,7 +131,6 @@ from inside_vectordb_spark import _meta_io as mio
 from inside_vectordb_spark.operators.ann import _normalize_rows, rank_topk
 from inside_vectordb_spark.operators.ann_index import (
     _assert_disjoint_delta,
-    _begin_rebuild,
     _corpus_fingerprint,
     _merge_fingerprint,
     _refuse_overlap,
@@ -305,7 +306,7 @@ def _kernel_params(meta: dict) -> dict[str, Any]:
         "m": meta["m"],
         "ef_construction": meta["ef_construction"],
         "seed": meta.get("seed", 42),
-        "heuristic": bool(meta.get("heuristic", False)),
+        "heuristic": bool(meta["heuristic"]),
     }
 
 
@@ -361,21 +362,19 @@ def build_hnsw_index(
     ``save_index`` analogue, ``003-hnswlib_demo.py:234-243``). One
     corpus pass: route by the partition rule, build one graph per
     partition inside its task, write the serialized rows partitioned
-    by ``part``. meta.json (params + corpus fingerprint) lands LAST as
-    the completeness marker."""
+    by ``part`` into a fresh ``graph_g<n>``, and commit it through
+    meta with a fresh tombstone relation; the previous index's
+    relations keep their one-commit grace (``gc_pending``)."""
     fp = _corpus_fingerprint(corpus, id_col)
     if fp["n"] == 0:
         raise ValueError(
             "refusing to persist an HNSW index over an EMPTY corpus — "
-            "it would serve empty top-k forever under a valid marker"
+            "it would serve empty top-k forever under a committed meta"
         )
-    # the full rebuild runs under the commit lock (review r10): an
-    # unlocked build racing a LOCKED upsert removed the marker and
-    # deleted graph_u* generation dirs while the upsert was writing
-    # them — the upsert's meta commit then named relations the build
-    # had destroyed. Serializing here turns that into
-    # rebuild-after-commit; a maintenance op waiting on this lock
-    # re-reads meta after acquisition and sees the rebuilt index.
+    # the full rebuild runs under the commit lock (review r10): its GC
+    # sweep would otherwise delete the generation a concurrent upsert
+    # is still writing. A maintenance op waiting on this lock re-reads
+    # meta after acquisition and sees the rebuilt index.
     with mio.commit_lock(path):
         return _build_hnsw_locked(
             corpus, path, fp, dim, m, ef_construction, n_parts, seed,
@@ -387,7 +386,6 @@ def _build_hnsw_locked(
     corpus, path, fp, dim, m, ef_construction, n_parts, seed, id_col,
     vec_col, heuristic=False,
 ) -> dict[str, Any]:
-    _begin_rebuild(path)
     c = corpus.select(
         F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v")
     ).withColumn("part", _part_expr("doc_id", n_parts))
@@ -396,9 +394,8 @@ def _build_hnsw_locked(
         "heuristic": bool(heuristic),
     }
     rows = c.groupBy("part").applyInPandas(_build_partition_udf(kp), GRAPH_SCHEMA)
-    rows.write.mode("overwrite").partitionBy("part").parquet(
-        os.path.join(path, "graph")
-    )
+    n = gen.fresh_gen(path, "graph_g", f"{gen.TOMBSTONES}_g")
+    rows.write.partitionBy("part").parquet(os.path.join(path, f"graph_g{n}"))
     # per-partition node counts ride the meta (round-10): incremental
     # OPTIMIZE's dirty-shard decision then reads metadata + the
     # bounded tombstone set instead of scanning the whole graph — at
@@ -409,10 +406,14 @@ def _build_hnsw_locked(
         str(r["part"]): r["count"]
         for r in c.groupBy("part").count().collect()
     }
-    # fresh lifecycle: upsert/compaction generations and tombstones
-    # from a prior index must not leak into the rebuilt one (the
-    # marker is already off, so no reader resolves them mid-cleanup)
-    gen.remove_rels(path, "graph_u", "graph_c", gen.TOMBSTONES)
+    # fresh lifecycle: the previous index's generations and
+    # tombstones stay readable for one commit, then GC reclaims them
+    prev = gen.current(path, {"kind": "hnsw_vendored"})
+    served = set() if prev is None else {
+        prev["base_rel"],
+        *prev["part_rels"].values(),
+        prev.get("tomb_rel", gen.TOMBSTONES),
+    }
     meta = {
         "kind": "hnsw_vendored",
         "dim": dim,
@@ -427,15 +428,14 @@ def _build_hnsw_locked(
         # per-partition relation map: upserts repoint a partition at a
         # fresh generation dir instead of rewriting the live one in
         # place (review r9 — dynamic overwrite deleted files under
-        # in-flight readers, and a crash after the marker removal
-        # destroyed a valid index)
-        "part_rels": {},  # part -> rel; absent parts resolve to "graph"
-        "gc_pending": [],
+        # in-flight readers)
+        "base_rel": f"graph_g{n}",
+        "part_rels": {},  # part -> rel; absent parts resolve to base_rel
+        "tomb_rel": f"{gen.TOMBSTONES}_g{n}",
         "part_counts": part_counts,  # stored nodes per partition
         "corpus": fp,
     }
-    gen.write_meta(path, meta, indent=2)
-    return meta
+    return _commit(path, meta, [[rel, None] for rel in sorted(served)])
 
 
 def ensure_hnsw_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, Any]:
@@ -449,7 +449,6 @@ def ensure_hnsw_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, 
     ``ann_index.ensure_pq_index``); the corollary, as there, is
     that pointing ``vec_col`` at a DIFFERENT vector column over the
     same ids requires a distinct ``path``."""
-    meta = gen.read_meta(path)
     want = {
         "kind": "hnsw_vendored",
         "dim": params["dim"],
@@ -457,25 +456,17 @@ def ensure_hnsw_index(corpus: DataFrame, path: str, **params: Any) -> dict[str, 
         "ef_construction": params.get("ef_construction", 100),
         "n_parts": params.get("n_parts", 4),
         "seed": params.get("seed", 42),
-        # pre-r11 metas carry no flag; they were built simple, so a
-        # missing key matches heuristic=False instead of forcing a
-        # rebuild of every existing artifact
         "heuristic": bool(params.get("heuristic", False)),
         "corpus": _corpus_fingerprint(corpus, params.get("id_col", "vec_id")),
     }
-    if meta is not None and all(
-        meta.get(k, False if k == "heuristic" else None) == v
-        for k, v in want.items()
-    ):
-        return meta
-    return build_hnsw_index(corpus, path, **params)
+    return gen.current(path, want) or build_hnsw_index(corpus, path, **params)
 
 
 def _read_graph(spark: SparkSession, path: str, meta: dict) -> DataFrame:
     """Union the live graph rows across generation dirs, each
-    partition read from the relation meta names for it ("graph" = the
-    base build; "graph_u<N>" = the upsert generation that last rewrote
-    it)."""
+    partition read from the relation meta names for it (``base_rel``
+    = the build or compaction generation; "graph_u<N>" = the upsert
+    generation that last rewrote it)."""
     by_rel: dict[str, list[int]] = {}
     for p, rel in gen.part_map(path, meta).items():
         by_rel.setdefault(rel, []).append(p)
@@ -1066,18 +1057,13 @@ def _commit_upsert(
     """Repoint the touched partitions at ``rel``, count their new
     nodes and merge the delta's fingerprint, then commit."""
     touched = sorted(delta_counts)
-    part_rels = dict(meta.get("part_rels", {}) or {})
+    part_rels = dict(meta["part_rels"])
     for p in touched:
         part_rels[str(p)] = rel
     meta["part_rels"] = part_rels
-    # maintain the per-partition node counts ONLY on post-r10 lineage
-    # (a pre-r10 meta has no baseline to add deltas to — compaction
-    # falls back to the graph-scan stats path for those)
-    if "part_counts" in meta:
-        counts = dict(meta["part_counts"] or {})
-        for p, n in delta_counts.items():
-            counts[str(p)] = counts.get(str(p), 0) + n
-        meta["part_counts"] = counts
+    counts = meta["part_counts"]
+    for p, n in delta_counts.items():
+        counts[str(p)] = counts.get(str(p), 0) + n
     meta["corpus"] = _merge_fingerprint(meta.get("corpus"), fp)
     return _commit(path, meta, [[stored[p], p] for p in touched if p in stored])
 
@@ -1239,7 +1225,7 @@ def _compact_hnsw_locked(
     kp = _kernel_params(meta)
     n_parts = int(meta["n_parts"])
     stored = gen.part_map(path, meta)
-    pc = meta.get("part_counts")
+    pc = meta["part_counts"]
     sizes = dead = None
     if min_dead_fraction is None:
         dirty = list(range(n_parts))
@@ -1252,22 +1238,11 @@ def _compact_hnsw_locked(
         dead = np.array(sorted(gen.tombstone_ids(path, meta)), dtype=np.int64)
         dead_part = _route_ids(spark, dead, n_parts)
         # dirty-shard decision from METADATA (round-10): the
-        # per-partition node counts ride meta since this round, so
-        # "which shards to compact" costs zero graph I/O — at
-        # 100 TB a full index pass just to find dirty shards IS
-        # the cost incremental OPTIMIZE exists to avoid. Pre-r10
-        # artifacts (no part_counts) fall back to one graph scan.
-        if pc:
-            sizes = {int(k): int(v) for k, v in pc.items()}
-        else:
-            sizes = {
-                int(r["part"]): int(r["n"])
-                for r in _read_graph(spark, path, meta)
-                .filter(F.col("level") == 0)
-                .groupBy("part")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
+        # per-partition node counts ride meta, so "which shards to
+        # compact" costs zero graph I/O — at 100 TB a full index pass
+        # just to find dirty shards IS the cost incremental OPTIMIZE
+        # exists to avoid
+        sizes = {int(k): int(v) for k, v in pc.items()}
         dirty = sorted(
             p
             for p, n_dead in Counter(dead_part.tolist()).items()
@@ -1281,8 +1256,7 @@ def _compact_hnsw_locked(
     rel = f"graph_c{gen.fresh_gen(path, 'graph_c')}"
     stamps = _stamps(path, stored)
     if (
-        pc
-        and sum(int(pc.get(str(p), 0)) for p in dirty) <= _DRIVER_REBUILD_MAX_VECTORS
+        sum(int(pc.get(str(p), 0)) for p in dirty) <= _DRIVER_REBUILD_MAX_VECTORS
         and _stamped_bytes(stamps) <= _RESIDENT_MAX_BYTES
     ):
         if dead is None:
@@ -1317,22 +1291,22 @@ def _compact_hnsw_locked(
         # canonical rebuild: the live counts ARE the new census
         meta["part_counts"] = {str(p): n for p, n in sorted(live_counts.items())}
     else:
-        part_rels = dict(meta.get("part_rels", {}) or {})
+        part_rels = dict(meta["part_rels"])
         for p in dirty:
             part_rels[str(p)] = rel
         meta["part_rels"] = part_rels
-        if "part_counts" in meta:
-            counts = dict(meta["part_counts"] or {})
-            for p in dirty:
-                # a fully-tombstoned shard rebuilds to zero rows;
-                # recording 0 keeps future dirty decisions honest
-                counts[str(p)] = live_counts.get(p, 0)
-            meta["part_counts"] = counts
+        for p in dirty:
+            # a fully-tombstoned shard rebuilds to zero rows;
+            # recording 0 keeps future dirty decisions honest
+            pc[str(p)] = live_counts.get(p, 0)
         if remaining:
             # survivors move to a FRESH versioned relation; the
             # meta commit swaps it in atomically (a crash before
             # the commit leaves the old relation fully live)
-            new_tomb = f"tombstones_g{gen.fresh_gen(path, 'tombstones_g')}"
+            pending = [rel for rel, _part in meta["gc_pending"]]
+            new_tomb = "tombstones_g%d" % gen.fresh_gen(
+                path, "tombstones_g", taken=pending
+            )
             gen.write_ids(mio.join(path, new_tomb), np.array(remaining, dtype=np.int64))
             meta["tomb_rel"] = new_tomb
             meta["n_deleted"] = len(remaining)

@@ -33,8 +33,6 @@ only by the candidate-keyed exact rerank.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -121,8 +119,8 @@ def ensure_ivfpq_det_index(
     """Persist the IVFPQ codes PARTITIONED BY coarse cid — inverted
     lists of compressed codes (probe pruning AND 48× scan-volume cut
     in one layout). Both quantizers re-derive from stored rules, so
-    meta.json (atomic, written LAST) needs only params + the corpus
-    fingerprint."""
+    meta.json needs only params, the corpus fingerprint and the
+    relation map that commits the fresh codes and residual codebook."""
     from inside_vectordb_spark.operators.ann_index import _corpus_fingerprint
 
     want = {
@@ -135,23 +133,21 @@ def ensure_ivfpq_det_index(
         "res_cap": IVFPQ_RES_CAP,
         "corpus": _corpus_fingerprint(corpus, id_col),
     }
-    meta = gen.read_meta(path)
-    if meta is not None and all(meta.get(kk) == v for kk, v in want.items()):
+    if gen.current(path, want) is not None:
         return path
-    from inside_vectordb_spark.operators.ann_index import _begin_rebuild
-
-    _begin_rebuild(path)  # no stale completeness marker over torn data
     cents = id_rule_centroids(
         corpus, id_col, vec_col, IVFPQ_COARSE_STRIDE, IVFPQ_COARSE_CAP
     )
     res = _residuals(corpus, cents, id_col, vec_col)
     rcb_sub = _res_codebook(res, m_sub, dim)
     codes = _encode_res(res, rcb_sub, m_sub, dim)
-    codes.repartition("cid").write.mode("overwrite").partitionBy("cid").parquet(
-        os.path.join(path, "codes")
-    )
-    rcb_sub.write.mode("overwrite").parquet(os.path.join(path, "rcb"))
-    mio.write_json(mio.join(path, "meta.json"), want)
+    with mio.commit_lock(path):
+        meta = {**want, **gen.build_rels(path, "codes", "rcb")}
+        codes.repartition("cid").write.partitionBy("cid").parquet(
+            gen.rel_dir(path, meta, "codes")
+        )
+        rcb_sub.write.parquet(gen.rel_dir(path, meta, "rcb"))
+        gen.commit_rels(path, meta)
     return path
 
 
@@ -180,7 +176,8 @@ def ann_ivfpq_det_topk(
         ensure_ivfpq_det_index(
             spark, corpus, path, m_sub, dim, id_col, vec_col
         )
-        rcb_sub = spark.read.parquet(os.path.join(path, "rcb"))
+        meta = gen.read_meta(path, "ivfpq_det", "det-IVFPQ")
+        rcb_sub = gen.read_rel(spark, path, meta, "rcb")
     else:
         res = _residuals(corpus, cents, id_col, vec_col)
         rcb_sub = _res_codebook(res, m_sub, dim)
@@ -210,7 +207,7 @@ def ann_ivfpq_det_topk(
         _l2sq(F.col("__qrm"), F.col("__rcv")).alias("pd"),
     )
     if path is not None:
-        codes = pruned_scan(spark, os.path.join(path, "codes"), probes)
+        codes = pruned_scan(gen.read_rel(spark, path, meta, "codes"), probes)
     else:
         codes = _encode_res(res, rcb_sub, m_sub, dim)
     aw = Window.partitionBy("query_id").orderBy(F.asc("__a"), F.asc("doc_id"))

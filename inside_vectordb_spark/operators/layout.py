@@ -86,7 +86,7 @@ def zorder_write(
 
 def compact_small_files(
     spark,
-    src: str,
+    src: str | list[str],
     dst: str,
     target_file_bytes: int = 128 << 20,
     open_cost_bytes: int = 256 << 10,
@@ -108,6 +108,9 @@ def compact_small_files(
     I/O and embarrassingly parallel (splits = bytes / target), which
     is why every lakehouse compactor uses exactly this shape.
 
+    ``src`` may list several unpartitioned directories of one schema
+    (a relation and its upsert deltas); they are read as one scan.
+
     Returns {"files_before", "files_after", "bytes"} for audit.
     """
     import glob as _glob
@@ -119,7 +122,8 @@ def compact_small_files(
             if os.path.isfile(p)
         ]
 
-    before = _datafiles(src)
+    srcs = [src] if isinstance(src, str) else src
+    before = [p for d in srcs for p in _datafiles(d)]
     total = sum(os.path.getsize(p) for p in before)
     # minPartitionNum defaults to the cluster parallelism, which makes
     # the scan SHRINK splits below maxPartitionBytes to keep every
@@ -134,7 +138,7 @@ def compact_small_files(
     for k, v in overrides.items():
         spark.conf.set(k, v)
     try:
-        spark.read.parquet(src).write.mode("overwrite").parquet(dst)
+        spark.read.parquet(*srcs).write.mode("overwrite").parquet(dst)
     finally:
         for k, v in saved.items():
             if v is None:

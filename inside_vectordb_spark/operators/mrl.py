@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from inside_vectordb_spark import _generations as gen
+from inside_vectordb_spark import _meta_io as mio
 from inside_vectordb_spark.functions.vector import cosine_similarity
 from inside_vectordb_spark.operators.ann import rounded_cosine_topk
 
@@ -118,39 +119,25 @@ def build_mrl_index(
     can't express because the slice is INSIDE the array column).
     Extraction is deterministic, so stored prefixes ≡ fresh slices and
     the indexed search shares the in-memory query's full oracle."""
-    import os
+    from inside_vectordb_spark.operators.ann_index import _corpus_fingerprint
 
-    from inside_vectordb_spark import _meta_io as mio
-    from inside_vectordb_spark.operators.ann_index import (
-        _corpus_fingerprint,
-        _write_meta,
-    )
-
-    from inside_vectordb_spark.operators.ann_index import _begin_rebuild
-
-    mio.makedirs(path)
-    _begin_rebuild(path)  # no stale completeness marker over torn data
-    (
-        corpus.select(
-            F.col(id_col).alias("doc_id"),
-            F.slice(vec_col, 1, prefix_dim).alias("prefix"),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "prefixes"))
-    )
     meta = {
         "kind": "mrl",
         "prefix_dim": prefix_dim,
         "corpus": _corpus_fingerprint(corpus, id_col),
     }
-    _write_meta(path, meta)
-    return meta
+    with mio.commit_lock(path):
+        meta.update(gen.build_rels(path, "prefixes"))
+        corpus.select(
+            F.col(id_col).alias("doc_id"),
+            F.slice(vec_col, 1, prefix_dim).alias("prefix"),
+        ).write.parquet(gen.rel_dir(path, meta, "prefixes"))
+        return gen.commit_rels(path, meta)
 
 
 def ensure_mrl_index(corpus: DataFrame, path: str, **params) -> dict:
     from inside_vectordb_spark.operators.ann_index import _corpus_fingerprint
 
-    meta = gen.read_meta(path)
     # validate against the RESOLVED params (defaults applied) — a
     # caller relying on the MRL_PREFIX_DIM default must not silently
     # accept an artifact built at another width (review r7)
@@ -164,24 +151,7 @@ def ensure_mrl_index(corpus: DataFrame, path: str, **params) -> dict:
         },
         "corpus": _corpus_fingerprint(corpus, params.get("id_col", "vec_id")),
     }
-    if meta is not None and all(meta.get(k) == v for k, v in want.items()):
-        return meta
-    # the REBUILD branch runs under the commit lock with a post-
-    # acquisition re-check (advice r10): without it, an ensure_* racing
-    # a locked upsert sees the upsert's deliberately-removed marker,
-    # decides "stale", and starts a full overwrite that interleaves
-    # with the in-flight append — the surviving dir can hold rebuilt
-    # files PLUS the delta under a fresh valid meta. Waiting for the
-    # lock and re-reading meta turns that into rebuild-after-commit
-    # (and the re-check skips the rebuild entirely when the interim
-    # committer made the index current).
-    from inside_vectordb_spark import _meta_io as mio
-
-    with mio.commit_lock(path):
-        meta = gen.read_meta(path)
-        if meta is not None and all(meta.get(k) == v for k, v in want.items()):
-            return meta
-        return build_mrl_index(corpus, path, **params)
+    return gen.current(path, want) or build_mrl_index(corpus, path, **params)
 
 
 def ann_mrl_topk_indexed(
@@ -199,8 +169,6 @@ def ann_mrl_topk_indexed(
     the prefixes parquet (narrow), stage 2 broadcast-joins the
     candidate list into the full-width corpus for the exact rerank —
     vectors never shuffle in either stage."""
-    import os
-
     meta = gen.read_meta(path, "mrl", "MRL")
     spark = queries.sparkSession
     prefix_dim = int(meta["prefix_dim"])
@@ -209,7 +177,7 @@ def ann_mrl_topk_indexed(
         F.col(query_vec).alias("__qv"),
         F.slice(query_vec, 1, prefix_dim).alias("__qpre"),
     )
-    pre_tab = spark.read.parquet(os.path.join(path, "prefixes")).select(
+    pre_tab = gen.read_rel(spark, path, meta, "prefixes").select(
         "doc_id", F.col("prefix").alias("__cpre")
     )
     return _funnel(q, pre_tab, corpus, corpus_id, corpus_vec, k, n_candidates)
@@ -282,28 +250,14 @@ def build_mrl_sq_index(
     so stored codes ≡ fresh codes and the indexed search shares the
     in-memory query's full oracle (the hash match IS the
     stored==fresh proof on the driver's hard signal)."""
-    import os
-
-    from inside_vectordb_spark import _meta_io as mio
-    from inside_vectordb_spark.operators.ann_index import (
-        _begin_rebuild,
-        _corpus_fingerprint,
-        _write_meta,
-    )
+    from inside_vectordb_spark.operators.ann_index import _corpus_fingerprint
     from inside_vectordb_spark.operators.sq import sq_encode_col, sq_train
 
-    mio.makedirs(path)
     pre = corpus.select(
         F.col(id_col).alias("doc_id"),
         F.slice(vec_col, 1, prefix_dim).alias("__pre"),
     )
     mins, spans = sq_train(pre, "__pre")
-    _begin_rebuild(path)  # no stale completeness marker over torn data
-    (
-        pre.select("doc_id", sq_encode_col("__pre", mins, spans).alias("codes"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "prefix_codes"))
-    )
     meta = {
         "kind": "mrl_sq",
         "prefix_dim": prefix_dim,
@@ -311,14 +265,17 @@ def build_mrl_sq_index(
         "spans": [float(v) for v in spans],
         "corpus": _corpus_fingerprint(corpus, id_col),
     }
-    _write_meta(path, meta)
-    return meta
+    with mio.commit_lock(path):
+        meta.update(gen.build_rels(path, "prefix_codes"))
+        pre.select(
+            "doc_id", sq_encode_col("__pre", mins, spans).alias("codes")
+        ).write.parquet(gen.rel_dir(path, meta, "prefix_codes"))
+        return gen.commit_rels(path, meta)
 
 
 def ensure_mrl_sq_index(corpus: DataFrame, path: str, **params) -> dict:
     from inside_vectordb_spark.operators.ann_index import _corpus_fingerprint
 
-    meta = gen.read_meta(path)
     # validate RESOLVED defaults (the ensure_* class rule); mins/spans
     # are derived state, not identity — params + corpus fingerprint
     # fully determine them
@@ -327,17 +284,7 @@ def ensure_mrl_sq_index(corpus: DataFrame, path: str, **params) -> dict:
         "prefix_dim": int(params.get("prefix_dim", MRL_PREFIX_DIM)),
         "corpus": _corpus_fingerprint(corpus, params.get("id_col", "vec_id")),
     }
-    if meta is not None and all(meta.get(k) == v for k, v in want.items()):
-        return meta
-    # locked rebuild with post-acquisition re-check — same ensure-vs-
-    # maintenance interleaving fix as ensure_mrl_index (advice r10)
-    from inside_vectordb_spark import _meta_io as mio
-
-    with mio.commit_lock(path):
-        meta = gen.read_meta(path)
-        if meta is not None and all(meta.get(k) == v for k, v in want.items()):
-            return meta
-        return build_mrl_sq_index(corpus, path, **params)
+    return gen.current(path, want) or build_mrl_sq_index(corpus, path, **params)
 
 
 def ann_mrl_sq_topk_indexed(
@@ -355,13 +302,11 @@ def ann_mrl_sq_topk_indexed(
     stage 1 decodes the stored int8 codes with the stored stats (1
     byte/dim at rest, prefix width only), stage 2 broadcast-joins the
     candidates into the full-width corpus for the exact rerank."""
-    import os
-
     import numpy as np
 
     meta = gen.read_meta(path, "mrl_sq", "MRL-SQ")
     spark = queries.sparkSession
-    codes = spark.read.parquet(os.path.join(path, "prefix_codes"))
+    codes = gen.read_rel(spark, path, meta, "prefix_codes")
     return ann_mrl_sq_topk(
         queries,
         corpus,
@@ -382,104 +327,73 @@ def ann_mrl_sq_topk_indexed(
 
 def upsert_mrl_index(corpus_delta: DataFrame, path: str, id_col: str = "vec_id", vec_col: str = "embedding") -> dict:
     """O(delta) maintenance of the prefix table: slice ONLY the new
-    vectors at the stored width and append — prefix extraction has no
-    trained state, so (unlike a quantizer) an upsert can never drift
-    from a rebuild; the merged artifact is byte-equivalent to
-    build-from-scratch over the union (pinned in tests)."""
-    import os
-
-    from inside_vectordb_spark import _meta_io as mio
+    vectors at the stored width into a fresh ``prefixes_d<n>`` that
+    the meta commit appends to the prefix relation — prefix
+    extraction has no trained state, so (unlike a quantizer) an upsert
+    can never drift from a rebuild; the merged artifact is
+    byte-equivalent to build-from-scratch over the union (pinned in
+    tests). Readers keep serving the previous index until the commit."""
     from inside_vectordb_spark.operators.ann_index import (
+        _assert_disjoint_delta,
         _corpus_fingerprint,
         _merge_fingerprint,
-        _write_meta,
     )
 
-    from inside_vectordb_spark.operators.ann_index import _assert_disjoint_delta
-
-    # the whole read-meta → append → write-meta sequence runs under
+    # the whole read-meta → write-delta → commit sequence runs under
     # the commit lock (review r9-4): without it two concurrent upserts
-    # read-modify-write the same fingerprint (the loser's rows vanish
-    # from meta), and an ensure_* rebuild — which also takes this lock
-    # since advice r10 — would see the deliberately-removed marker and
-    # start a full overwrite that interleaves with the in-flight
-    # append, leaving rebuilt files PLUS the delta under a fresh valid
-    # meta (duplicate doc_ids in top-k). READERS take no lock: one that
-    # loads meta inside the marker window still fails LOUDLY with
-    # FileNotFoundError (availability, not correctness — retry after
-    # the commit succeeds); the hnsw/sign tiers avoid even that by
-    # writing generation dirs, a layout this single-relation append
-    # deliberately trades away for O(delta) simplicity.
+    # read-modify-write the same fingerprint and relation list (the
+    # loser's rows vanish from meta)
     with mio.commit_lock(path):
         meta = gen.read_meta(path, "mrl", "MRL")
         _assert_disjoint_delta(
-            corpus_delta.sparkSession.read.parquet(
-                os.path.join(path, "prefixes")
-            ).select("doc_id"),
+            gen.read_rel(corpus_delta.sparkSession, path, meta, "prefixes").select(
+                "doc_id"
+            ),
             corpus_delta.select(id_col),
             path,
         )
         prefix_dim = int(meta["prefix_dim"])
-        # invalidate the completeness marker BEFORE the append: a
-        # crash mid-append must read as "no complete index" (the next
-        # ensure_* rebuilds), never a valid meta over torn appended
-        # rows — the meta rewrite below restores the marker (review r8)
-        mio.remove_file(mio.join(path, "meta.json"))
-        (
-            corpus_delta.select(
-                F.col(id_col).alias("doc_id"),
-                F.slice(vec_col, 1, prefix_dim).alias("prefix"),
-            )
-            .write.mode("append")
-            .parquet(os.path.join(path, "prefixes"))
-        )
+        rel = gen.delta_rel(path, "prefixes")
+        corpus_delta.select(
+            F.col(id_col).alias("doc_id"),
+            F.slice(vec_col, 1, prefix_dim).alias("prefix"),
+        ).write.parquet(mio.join(path, rel))
         meta["corpus"] = _merge_fingerprint(
             meta.get("corpus"), _corpus_fingerprint(corpus_delta, id_col)
         )
-        _write_meta(path, meta)
-    return meta
+        return gen.commit_rels(path, meta, {"prefixes": rel})
 
 
 def compact_mrl_index(spark, path: str) -> dict:
     """OPTIMIZE for the MRL prefix table (review r9-4): O(delta)
-    upserts append small files into ``prefixes`` without bound, and
+    upserts add delta relations (and small files) without bound, and
     the documented remedy — "rebuild via ensure_mrl_index" — no-ops
     by design (the merged fingerprint matches what a full build would
     record, so ensure correctly sees the index as current). Compaction
-    is the real remedy: under the commit lock, rewrite the prefix
-    table into ~target-size files with the engine's zero-shuffle
-    small-file compactor (scan bin-packing — pure sequential I/O, no
-    recompute: the prefixes are already materialized), validate the
-    row count, then swap. Rows, meta, and the corpus fingerprint are
-    unchanged — search results are bit-identical before and after
-    (the tier has no tombstones; compaction is purely physical)."""
-    import os
-
-    from inside_vectordb_spark import _meta_io as mio
-    from inside_vectordb_spark.operators.ann_index import (
-        _begin_rebuild,
-        _write_meta,
-    )
+    is the real remedy: under the commit lock, rewrite the union of
+    the prefix relation into one fresh generation of ~target-size
+    files with the engine's zero-shuffle small-file compactor (scan
+    bin-packing — pure sequential I/O, no recompute: the prefixes are
+    already materialized), validate the row count, then commit it
+    alone. Rows and the corpus fingerprint are unchanged — search
+    results are bit-identical before and after (the tier has no
+    tombstones; compaction is purely physical)."""
     from inside_vectordb_spark.operators.layout import compact_small_files
 
     with mio.commit_lock(path):
         meta = gen.read_meta(path, "mrl", "MRL")
-        prefixes = os.path.join(path, "prefixes")
-        tmp = mio.join(path, "prefixes_compact_tmp")
-        mio.remove_tree(tmp)  # orphan from a crashed prior compaction
-        n_before = spark.read.parquet(prefixes).count()
-        stats = compact_small_files(spark, prefixes, tmp)
-        if spark.read.parquet(tmp).count() != n_before:
-            mio.remove_tree(tmp)
+        prefixes = [mio.join(path, rel) for rel in meta["rels"]["prefixes"]]
+        n_before = gen.read_rel(spark, path, meta, "prefixes").count()
+        meta.update(gen.build_rels(path, "prefixes"))
+        out = gen.rel_dir(path, meta, "prefixes")
+        stats = compact_small_files(spark, prefixes, out)
+        if spark.read.parquet(out).count() != n_before:
             raise RuntimeError(
-                f"compaction wrote a torn prefix table at {tmp} — "
+                f"compaction wrote a torn prefix table at {out} — "
                 "index left untouched"
             )
-        _begin_rebuild(path)  # marker OFF before the non-atomic swap
-        mio.remove_tree(prefixes)
-        mio.move(tmp, prefixes)
         meta["compacted"] = True
-        _write_meta(path, meta)
+        gen.commit_rels(path, meta)
         meta["files_before"] = stats.get("files_before")
         meta["files_after"] = stats.get("files_after")
     return meta

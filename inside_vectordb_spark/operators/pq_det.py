@@ -41,8 +41,6 @@ codes themselves, and the exact rerank touches only candidates.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -235,9 +233,10 @@ def ensure_pq_det_index(
     per vector, the compressed representation FAISS keeps in RAM. The
     codebook needs no artifact: centroids re-derive from the corpus
     by the stored rule (stride/cap/m in meta.json — the same
-    no-shipped-artifact property the sign-plane generator has).
-    meta.json via the atomic ``_meta_io`` seam, written LAST as the
-    completeness marker."""
+    no-shipped-artifact property the sign-plane generator has). The
+    codes and the codebook rows are fresh generations committed
+    through meta, with a fresh tombstone relation: a rebuild compacts
+    tombstones away (FAISS retrain semantics)."""
     from inside_vectordb_spark.operators.ann_index import _corpus_fingerprint
 
     want = {
@@ -248,24 +247,20 @@ def ensure_pq_det_index(
         "cap": n_centroids_cap,
         "corpus": _corpus_fingerprint(corpus, id_col),
     }
-    meta = gen.read_meta(path)
-    if meta is not None and all(meta.get(kk) == v for kk, v in want.items()):
+    if gen.current(path, want) is not None:
         return path
-    from inside_vectordb_spark.operators.ann_index import _begin_rebuild
-
-    _begin_rebuild(path)  # no stale completeness marker over torn data
     cents = id_rule_centroids(
         corpus, id_col, vec_col, centroid_stride, n_centroids_cap
     )
     cents_sub = _sub_explode(cents, "__cv", "__cv", m_sub, dim)
     codes = _encode(corpus, cents_sub, id_col, vec_col, m_sub, dim)
-    codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    # the codebook rows persist so O(delta) upserts can encode without
-    # the base corpus; a rebuild also compacts tombstones away (FAISS
-    # retrain semantics)
-    cents_sub.write.mode("overwrite").parquet(os.path.join(path, "cents"))
-    gen.remove_rels(path, gen.TOMBSTONES)
-    mio.write_json(mio.join(path, "meta.json"), want)
+    with mio.commit_lock(path):
+        meta = {**want, **gen.build_rels(path, "codes", "cents")}
+        codes.write.parquet(gen.rel_dir(path, meta, "codes"))
+        # the codebook rows persist so O(delta) upserts can encode
+        # without the base corpus
+        cents_sub.write.parquet(gen.rel_dir(path, meta, "cents"))
+        gen.commit_rels(path, meta)
     return path
 
 
@@ -279,10 +274,11 @@ def upsert_pq_det_index(
     """Incremental maintenance of the persisted PQ codes — FAISS
     ``add`` on an already-trained IndexPQ: the codebook is FROZEN (it
     derives from the stored stride/cap rule), so only the delta is
-    encoded and its codes append into the codes parquet. O(delta)
-    work; because encode is deterministic, the maintained index is
-    BIT-IDENTICAL to a full rebuild over base ∪ delta — the
-    registered upsert query shares the plain search oracle.
+    encoded, into a fresh ``codes_d<n>`` that the meta commit appends
+    to the codes relation. O(delta) work; because encode is
+    deterministic, the maintained index is BIT-IDENTICAL to a full
+    rebuild over base ∪ delta — the registered upsert query shares the
+    plain search oracle.
 
     Contract: delta ids disjoint from stored ids AND disjoint from
     the centroid-selection rule (``id % stride == 1 AND id <
@@ -293,8 +289,7 @@ def upsert_pq_det_index(
     # serialize maintenance under the commit lock (review r9-4, the
     # hnsw/sign r9-2 rule applied tier-wide): without it the
     # disjointness guard races a concurrent upsert of the same delta
-    # (both pass, the second appends duplicate rows), and readers /
-    # ensure_* hit the marker window of a healthy index mid-append
+    # (both pass, both commit duplicate rows)
     with mio.commit_lock(path):
         from inside_vectordb_spark.operators.ann_index import (
             _corpus_fingerprint,
@@ -318,9 +313,7 @@ def upsert_pq_det_index(
             # duplicate id reports as m duplicates and the semi-join scans
             # the un-deduplicated relation (review r8; the LSH twin
             # already dedupes)
-            spark.read.parquet(os.path.join(path, "codes"))
-            .select("doc_id")
-            .distinct(),
+            gen.read_rel(spark, path, meta, "codes").select("doc_id").distinct(),
             new_vectors.select(id_col),
             path,
         )
@@ -330,19 +323,14 @@ def upsert_pq_det_index(
         # impossible from the delta alone, so the codebook rides in from
         # the stored raw vectors at search time; here we only need the
         # centroid VECTORS, which the index stores for exactly this reason.
-        cents_sub = spark.read.parquet(os.path.join(path, "cents"))
+        cents_sub = gen.read_rel(spark, path, meta, "cents")
         codes = _encode(new_vectors, cents_sub, id_col, vec_col, m_sub, dim)
-        # invalidate the completeness marker BEFORE the append: a crash
-        # mid-append must read as "no complete index" (the next ensure_*
-        # rebuilds), never a valid meta over torn appended rows — the
-        # meta rewrite below restores the marker (review r8)
-        mio.remove_file(mio.join(path, "meta.json"))
-        codes.write.mode("append").parquet(os.path.join(path, "codes"))
+        rel = gen.delta_rel(path, "codes")
+        codes.write.parquet(mio.join(path, rel))
         meta["corpus"] = _merge_fingerprint(
             meta.get("corpus"), _corpus_fingerprint(new_vectors, id_col)
         )
-        mio.write_json(mio.join(path, "meta.json"), meta)
-        return meta
+        return gen.commit_rels(path, meta, {"codes": rel})
 
 
 def delete_from_pq_det_index(
@@ -356,14 +344,16 @@ def delete_from_pq_det_index(
     ``ids`` is a DataFrame with one LONG column (stays on the
     executors end to end — a delete set can be O(corpus) at crawl
     scale and must never round-trip the driver) or a small list."""
-    # serialize maintenance under the commit lock (review r9-4, the
-    # hnsw/sign r9-2 rule applied tier-wide): without it the
-    # disjointness guard races a concurrent upsert of the same delta
-    # (both pass, the second appends duplicate rows), and readers /
-    # ensure_* hit the marker window of a healthy index mid-append
     with mio.commit_lock(path):
         meta = gen.read_meta(path, "pq_det")
         return gen.delete(spark, path, meta, ids)
+
+
+def _live_codes(spark: SparkSession, path: str) -> DataFrame:
+    """The stored codes without tombstoned docs, both resolved through
+    one meta read."""
+    meta = gen.read_meta(path, "pq_det")
+    return gen.drop_deleted(spark, gen.read_rel(spark, path, meta, "codes"), path, meta)
 
 
 def ann_pq_det_topk_indexed(
@@ -395,7 +385,7 @@ def ann_pq_det_topk_indexed(
         corpus, id_col, vec_col, centroid_stride, n_centroids_cap
     )
     cents_sub = _sub_explode(cents, "__cv", "__cv", m_sub, dim)
-    codes = gen.drop_deleted(spark, spark.read.parquet(os.path.join(path, "codes")), path)
+    codes = _live_codes(spark, path)
     return _adc_search(
         queries, codes, corpus, cents_sub, k, cand_k,
         query_id_col, id_col, vec_col, m_sub, dim,
@@ -433,7 +423,7 @@ def pq_det_refine_sweep(
     # the sweep measures the index state SEARCH serves: tombstoned
     # docs must not occupy candidate slots or set top1_score
     # (review r8 — the search path anti-joined, the sweep didn't)
-    codes = gen.drop_deleted(spark, spark.read.parquet(os.path.join(path, "codes")), path)
+    codes = _live_codes(spark, path)
     qb, ranked = _adc_ranked(
         queries, codes, cents_sub, query_id_col, vec_col, m_sub, dim
     )

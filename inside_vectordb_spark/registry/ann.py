@@ -47,7 +47,7 @@ def _rebuild_if_stale(art, want, rebuild, meta_stale=None):
     reads as stale, never as current."""
     import json as _json
 
-    meta = mio.read_json(mio.join(art, "meta.json"))
+    meta = gen.read_meta(art)
     want_j = _json.loads(_json.dumps(want))  # tuple/int normalization
     stale = (
         meta is None
@@ -611,7 +611,7 @@ def ann_hnsw_lifecycle_invariants_q(spark: SparkSession, sf_dir: str) -> DataFra
 
     res = ann_hnsw_vendored_lifecycle_q(spark, sf_dir)  # ensures the chain ran
     art = mio.art_path("hnsw_lifecycle", sf_dir)
-    meta = mio.read_json(mio.join(art, "meta.json"))
+    meta = gen.read_meta(art)
     tombstones_cleared = not gen.has_tombstones(art)
     generations_folded = not meta.get("part_rels") and str(
         meta.get("base_rel", "")
@@ -729,10 +729,10 @@ def ann_hnsw_partial_compact_invariants_q(
         },
         _rebuild,
     )
-    meta = mio.read_json(mio.join(art, "meta.json"))
+    meta = gen.read_meta(art)
     part_rels = meta.get("part_rels", {}) or {}
-    clean_part_untouched = (
-        "0" not in part_rels and meta.get("base_rel", "graph") == "graph"
+    clean_part_untouched = "0" not in part_rels and meta["base_rel"].startswith(
+        "graph_g"
     )
     dirty_parts_compacted = set(part_rels) == {"1", "2", "3"} and all(
         rel.startswith("graph_c") for rel in part_rels.values()
@@ -1279,8 +1279,6 @@ def index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — never the vectors; the oracle recomputes the deterministic
     bucket assignment from scratch, so this also cross-checks the
     stored index against its definition."""
-    import os
-
     from pyspark.sql import functions as F
 
     from inside_vectordb_spark.operators.ann_sign import ensure_sign_index
@@ -1289,7 +1287,7 @@ def index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     art = mio.art_path("ann_sign", sf_dir)
     ensure_sign_index(spark, corpus, art)
     sz = (
-        spark.read.parquet(os.path.join(art, "buckets"))
+        gen.read_rel(spark, art, gen.read_meta(art, "sign_lsh"), "buckets")
         .groupBy("bucket")
         .agg(F.count("*").alias("sz"))
     )
@@ -1635,7 +1633,7 @@ def ann_ivf_det_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_ivf_det_index,
         id_rule_centroids,
         probe_window,
-        pruned_lists,
+        pruned_scan,
     )
 
     corpus = eio.load_table(spark, sf_dir, "embeddings")
@@ -1645,7 +1643,7 @@ def ann_ivf_det_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quantizer from the index's meta (stride/cap), never a second
     # inline copy of the centroid rule (review r7): probes and the
     # persisted lists must move together if the defaults change
-    meta = mio.read_json(mio.join(path, "meta.json"))
+    meta = gen.read_meta(path, "ivf_det")
     cents = id_rule_centroids(
         corpus, "vec_id", "embedding", int(meta["stride"]), int(meta["cap"])
     )
@@ -1662,7 +1660,7 @@ def ann_ivf_det_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prune the lists scan to the probed cids like the indexed
     # search does (review r9-3: the unfiltered read scanned every
     # list partition to use at most |Q|·4 of them)
-    lists = pruned_lists(spark, path, probes)
+    lists = pruned_scan(gen.read_rel(spark, path, meta, "lists"), probes)
     cand = probes.join(lists, "cid").join(vecs, "doc_id")
     per = cand.rollup("query_id", "__rn").agg(
         F.count("*").alias("n_candidates"),

@@ -284,15 +284,15 @@ def _candidate_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # together. (The DuckDB oracle restates the current 37/16 rule as
     # literals — a default change flips that row red, which is the
     # gate working as intended.)
-    from inside_vectordb_spark import _meta_io as mio
+    from inside_vectordb_spark import _generations as gen
 
-    meta = mio.read_json(mio.join(path, "meta.json"))
+    meta = gen.read_meta(path, "ivf_det")
     cents = id_rule_centroids(
         c, "vec_id", "embedding", int(meta["stride"]), int(meta["cap"])
     )
     qb = q.select("query_id", F.col("embedding").alias("__qv"))
     probes = probe_window(qb, cents, 4).select("query_id", "cid")
-    lists = spark.read.parquet(os.path.join(path, "lists"))
+    lists = gen.read_rel(spark, path, meta, "lists")
     ivf_n = probes.join(lists, "cid").count()
     exact_n = n_q * n_c
     rows = [

@@ -677,7 +677,9 @@ def test_pq_det_lifecycle(spark, tmp_path):
     assert after.filter(F.col("doc_id").isin(dead)).count() == 0
     ensure_pq_det_index(spark, c.limit(400), full)  # changed corpus → rebuild
     import os
-    assert not os.path.isdir(os.path.join(full, "tombstones"))
+
+    from inside_vectordb_spark import _generations as gen
+    assert not os.path.isdir(os.path.join(full, gen.read_meta(full)["tomb_rel"]))
 
 
 def test_ivfpq_det_indexed_matches_fresh_and_prunes(spark, tmp_path):

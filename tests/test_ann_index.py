@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+from inside_vectordb_spark import _generations as gen
 from inside_vectordb_spark import io as eio
 from inside_vectordb_spark.operators.ann import ann_lsh_topk
 from inside_vectordb_spark.operators.ann_index import (
@@ -93,7 +94,7 @@ def test_lsh_upsert_equals_full_build(spark, corpus, queries, tmp_path_factory):
     def rows(p):
         return sorted(
             (r["id"], r["table_idx"], r["bucket"])
-            for r in spark.read.parquet(os.path.join(p, "buckets")).collect()
+            for r in gen.read_rel(spark, p, gen.read_meta(p), "buckets").collect()
         )
 
     assert rows(inc_path) == rows(full_path)
@@ -124,10 +125,10 @@ def test_lsh_upsert_respects_bucket_cap(spark, corpus, tmp_path_factory):
     build_lsh_index(base, path, **params)
     before = set(
         (r["id"], r["table_idx"], r["bucket"])
-        for r in spark.read.parquet(os.path.join(path, "buckets")).collect()
+        for r in gen.read_rel(spark, path, gen.read_meta(path), "buckets").collect()
     )
     upsert_lsh_index(delta, path)
-    after_df = spark.read.parquet(os.path.join(path, "buckets"))
+    after_df = gen.read_rel(spark, path, gen.read_meta(path), "buckets")
     worst = (
         after_df.groupBy("table_idx", "bucket")
         .count()
@@ -196,10 +197,8 @@ def test_ivf_km_upsert_assigns_against_stored_centroids(
     ensure_ivf_km_index(spark, base, path)
     # tamper: replace the trained centroids with 4 KNOWN delta vectors
     # (cids 0..3) — a retraining upsert would ignore this table
-    import os as _os
-
     planted = delta.orderBy("vec_id").limit(4).collect()
-    cents_dir = _os.path.join(path, "cents")
+    cents_dir = gen.rel_dir(path, gen.read_meta(path), "cents")
     spark.createDataFrame(
         [(i, list(r["embedding"])) for i, r in enumerate(planted)],
         "cid int, __cv array<float>",
@@ -207,7 +206,7 @@ def test_ivf_km_upsert_assigns_against_stored_centroids(
     upsert_ivf_km_index(spark, delta, path)
     lists = {
         r["doc_id"]: r["cid"]
-        for r in spark.read.parquet(_os.path.join(path, "lists")).collect()
+        for r in gen.read_rel(spark, path, gen.read_meta(path), "lists").collect()
         if r["doc_id"] % 37 == 5  # the delta rows this upsert appended
     }
     cents = np.array([r["embedding"] for r in planted], dtype=np.float64)
@@ -272,7 +271,7 @@ def test_ivf_km_probe_prunes_partitions(spark, corpus, tmp_path_factory):
 
     path = str(tmp_path_factory.mktemp("ivfkm_prune") / "idx")
     ensure_ivf_km_index(spark, corpus, path)
-    scan = spark.read.parquet(os.path.join(path, "lists")).filter(
+    scan = gen.read_rel(spark, path, gen.read_meta(path), "lists").filter(
         "cid IN (0, 2)"
     )
     plan = scan._jdf.queryExecution().executedPlan().toString()

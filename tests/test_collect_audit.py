@@ -49,7 +49,7 @@ COLLECT_BUDGET = {
                                       # the four sign-LSH probed-bucket sets
     "operators/bm25.py": 1,           # 1-row corpus stats literal (N, avgdl)
     "operators/compare.py": 2,        # per-method 1-row metric tables
-    "operators/hnsw_index.py": 7,     # |Q|-row query matrix (broadcast
+    "operators/hnsw_index.py": 6,     # |Q|-row query matrix (broadcast
                                       # contract, as topk.py); the driver
                                       # upsert's delta read (toArrow of
                                       # limit(_DRIVER_UPSERT_MAX_VECTORS
@@ -65,9 +65,8 @@ COLLECT_BUDGET = {
                                       # maintain meta part_counts so
                                       # incremental OPTIMIZE's dirty
                                       # decision costs zero graph I/O);
-                                      # pre-r10 fallback per-part sizes
-                                      # (≤ n_parts rows); tombstone ids
-                                      # are read through _meta_io
+                                      # tombstone ids are read through
+                                      # _meta_io
     "operators/lexical_index.py": 4,  # 1-row stats + per-bucket offset rows
     "operators/partitioned_ann.py": 1,  # per-partition top-k merge (≤ parts·Q·k)
     "operators/pq.py": 2,             # |Q|-row query matrix; the ≤8192-row

@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import inside_vectordb_spark.io as eio
+from inside_vectordb_spark import _generations as gen
 from inside_vectordb_spark import _meta_io as mio
 from inside_vectordb_spark.operators.ann_sign import (
     ann_sign_topk_indexed,
@@ -40,9 +41,10 @@ DELETED = [5, 7, 11, 23, 42]
 
 def _bucket_file_counts(path: str) -> dict[str, int]:
     out: dict[str, int] = {}
-    for f in glob.glob(os.path.join(path, "buckets", "**", "*.parquet"), recursive=True):
-        d = os.path.basename(os.path.dirname(f))
-        out[d] = out.get(d, 0) + 1
+    for rel in gen.read_meta(path)["rels"]["buckets"]:
+        for f in glob.glob(os.path.join(path, rel, "**", "*.parquet"), recursive=True):
+            d = os.path.basename(os.path.dirname(f))
+            out[d] = out.get(d, 0) + 1
     return out
 
 
@@ -77,8 +79,8 @@ def test_sign_compaction_preserves_results(spark, tmp_path):
     after = _sign_search(spark, art, corpus)
     pd.testing.assert_frame_equal(before, after)
     # deleted ids physically gone, not just masked
-    assert not os.path.isdir(os.path.join(art, "tombstones"))
-    b = spark.read.parquet(os.path.join(art, "buckets"))
+    assert not os.path.isdir(os.path.join(art, meta["tomb_rel"]))
+    b = gen.read_rel(spark, art, meta, "buckets")
     assert b.filter(F.col("id").isin(DELETED)).count() == 0
     # one file per bucket partition
     counts = _bucket_file_counts(art)
@@ -115,8 +117,9 @@ def test_sign_compaction_crash_mid_swap_recovers(spark, tmp_path):
     art = str(tmp_path / "sign_crash")
     corpus = _sign_chain(spark, art)
     # simulate a crash between the marker removal and the meta
-    # recommit: no completeness marker + an orphan temp dir
-    os.makedirs(os.path.join(art, "buckets_compact_tmp"), exist_ok=True)
+    # recommit: no completeness marker + an orphan generation
+    orphan = os.path.join(art, gen.build_rels(art, "buckets")["rels"]["buckets"][0])
+    os.makedirs(orphan)
     mio.remove_file(os.path.join(art, "meta.json"))
     with pytest.raises(FileNotFoundError):
         compact_sign_index(spark, art)
@@ -125,8 +128,8 @@ def test_sign_compaction_crash_mid_swap_recovers(spark, tmp_path):
     ensure_sign_index(spark, corpus, art)
     delete_from_sign_index(spark, art, DELETED)
     compact_sign_index(spark, art)
-    assert not os.path.isdir(os.path.join(art, "buckets_compact_tmp"))
-    b = spark.read.parquet(os.path.join(art, "buckets"))
+    assert not os.path.isdir(orphan)
+    b = gen.read_rel(spark, art, gen.read_meta(art), "buckets")
     assert b.filter(F.col("id").isin(DELETED)).count() == 0
 
 

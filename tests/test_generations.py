@@ -10,6 +10,11 @@
   like a crash-free run of the same sequence. At these sizes the HNSW
   upsert and compaction write on the driver; the upsert also runs
   through both crash points on the executors;
+- the same meta-write crash for every write of the tiers that commit
+  through a relation map (LSH, PQ, SQ, sign-LSH, det-IVF, km-IVF,
+  det-PQ, det-IVFPQ and MRL builds, upserts and compactions): the
+  crashed index serves the pre-op answer with no deleted id, and the
+  retry matches a crash-free run;
 - the tombstone count stays exact when tombstones landed without a
   meta write;
 - a TF-IDF norm build after a rebuild never reuses a relation the
@@ -31,8 +36,13 @@ from pyspark.sql import functions as F
 
 import inside_vectordb_spark.io as eio
 from inside_vectordb_spark import _generations as gen
+from inside_vectordb_spark.operators import ann_index as ai
+from inside_vectordb_spark.operators import ann_sign as sg
 from inside_vectordb_spark.operators import hnsw_index as hi
+from inside_vectordb_spark.operators import ivfpq_det as ivq
 from inside_vectordb_spark.operators import lexical_index as lx
+from inside_vectordb_spark.operators import mrl
+from inside_vectordb_spark.operators import pq_det as pqd
 from tests.conftest import SF_DIR
 
 DIM = 16
@@ -243,9 +253,10 @@ def test_delete_recounts_tombstones_written_without_meta(spark, tmp_path):
     order = sorted(vecs, key=lambda i: -float(vecs[i] @ q) / np.linalg.norm(vecs[i]))
     nearest, farthest = order[:K], order[-1]
     # tombstones that landed without their meta write
-    os.makedirs(os.path.join(path, "tombstones"))
+    tomb = os.path.join(path, gen.read_meta(path)["tomb_rel"])
+    os.makedirs(tomb)
     pd.DataFrame({"id": np.array(nearest, dtype=np.int64)}).to_parquet(
-        os.path.join(path, "tombstones", "part-crashed.parquet")
+        os.path.join(tomb, "part-crashed.parquet")
     )
     meta = hi.delete_from_hnsw_index(spark, path, [farthest])
     assert meta["n_deleted"] == K + 1
@@ -357,3 +368,213 @@ def test_tfidf_norms_after_rebuild_take_a_fresh_relation(spark, tmp_path):
         before["df_rel"], before["docnorm_rel"]
     }
     assert after["docnorm_rel"] not in named_before
+
+
+# --- relation-map tiers ------------------------------------------------
+#
+# Every other persisted tier commits through ``commit_rels``. Each op
+# is crashed once inside the meta write: the crashed index must serve
+# the pre-op answer, with no deleted id, and the retry must serve and
+# lay out its data dirs like a crash-free run. The searches of the
+# sign, IVF, det-PQ and det-IVFPQ tiers ensure their index against the
+# corpus they are given, so each answer is taken against the corpus
+# the index should hold and must commit nothing.
+
+LSH = dict(dim=64, n_tables=4, n_bits=4, seed=42, max_bucket_size=None)
+
+
+@pytest.fixture(scope="module")
+def tier_frames(spark):
+    """The sf0.001 corpus (500 vectors) split into a base, an upserted
+    delta and the delta each upsert op adds; neither delta holds an id
+    the det-IVF or det-PQ centroid rules select."""
+    emb = eio.load_table(spark, SF_DIR, "embeddings")
+    vid = F.col("vec_id")
+    free = (vid % 37 != 1) & (vid % 29 != 1)
+    d1, d2 = (vid % 10 == 3) & free, (vid % 10 == 7) & free
+    return {
+        "queries": eio.query_vectors(spark, SF_DIR),
+        "base": emb.filter(~d1 & ~d2),
+        "d1": emb.filter(d1),
+        "d2": emb.filter(d2),
+        "kept": emb.filter(~d2),  # base ∪ d1: what the template holds
+        "all": emb,
+    }
+
+
+def _tier_answer(spark, f, tier, path, corpus="kept"):
+    search = TIERS[tier]["search"]
+    before = gen.read_meta(path)
+    rows = search(spark, f, path, f[corpus]).collect()
+    assert gen.read_meta(path) == before  # the search committed nothing
+    return sorted(tuple(r) for r in rows)
+
+
+def _sign_search(spark, f, path, corpus):
+    return sg.ann_sign_topk_indexed(spark, f["queries"], corpus, path, k=K)
+
+
+# tier → its template (build, upsert d1), its search and its ops; an op
+# maps to (run(spark, f, path), the corpus the index holds after it)
+TIERS = {
+    "lsh": {
+        "setup": lambda spark, f, p: (
+            ai.build_lsh_index(f["base"], p, **LSH), ai.upsert_lsh_index(f["d1"], p)
+        ),
+        "search": lambda spark, f, p, c: ai.ann_lsh_topk_indexed(
+            f["queries"], f["all"], p, k=K
+        ),
+        "ops": {
+            "build": (lambda spark, f, p: ai.build_lsh_index(f["all"], p, **LSH), "all"),
+            "upsert": (lambda spark, f, p: ai.upsert_lsh_index(f["d2"], p), "all"),
+        },
+    },
+    "pq": {
+        "setup": lambda spark, f, p: ai.build_pq_index(f["kept"], p, dim=64),
+        "search": lambda spark, f, p, c: ai.ann_pq_topk_indexed(
+            f["queries"], f["all"], p, k=K
+        ),
+        "ops": {
+            "rebuild": (lambda spark, f, p: ai.build_pq_index(f["all"], p, dim=64), "all"),
+        },
+    },
+    "sq": {
+        "setup": lambda spark, f, p: ai.build_sq_index(f["kept"], p),
+        "delete": lambda spark, p, ids: ai.delete_from_sq_index(spark, p, ids),
+        "search": lambda spark, f, p, c: ai.ann_sq_topk_indexed(
+            f["queries"], f["all"], p, k=K
+        ),
+        "ops": {
+            "rebuild": (lambda spark, f, p: ai.build_sq_index(f["all"], p), "all"),
+        },
+    },
+    "sign": {
+        "setup": lambda spark, f, p: (
+            sg.ensure_sign_index(spark, f["base"], p),
+            sg.upsert_sign_index(spark, f["d1"], p),
+        ),
+        "delete": lambda spark, p, ids: sg.delete_from_sign_index(spark, p, ids),
+        "search": _sign_search,
+        "ops": {
+            "build": (lambda spark, f, p: sg.ensure_sign_index(spark, f["all"], p), "all"),
+            "upsert": (lambda spark, f, p: sg.upsert_sign_index(spark, f["d2"], p), "all"),
+            "compact": (lambda spark, f, p: sg.compact_sign_index(spark, p), "kept"),
+        },
+    },
+    "ivf_det": {
+        "setup": lambda spark, f, p: (
+            sg.ensure_ivf_det_index(spark, f["base"], p),
+            sg.upsert_ivf_det_index(spark, f["d1"], p),
+        ),
+        "search": lambda spark, f, p, c: sg.ann_ivf_det_topk_indexed(
+            spark, f["queries"], c, p, k=K
+        ),
+        "ops": {
+            "build": (lambda spark, f, p: sg.ensure_ivf_det_index(spark, f["all"], p), "all"),
+            "upsert": (lambda spark, f, p: sg.upsert_ivf_det_index(spark, f["d2"], p), "all"),
+        },
+    },
+    "ivf_km": {
+        "setup": lambda spark, f, p: (
+            sg.ensure_ivf_km_index(spark, f["base"], p),
+            sg.upsert_ivf_km_index(spark, f["d1"], p),
+        ),
+        "search": lambda spark, f, p, c: sg.ann_ivf_km_topk_indexed(
+            spark, f["queries"], c, p, k=K
+        ),
+        "ops": {
+            "build": (lambda spark, f, p: sg.ensure_ivf_km_index(spark, f["all"], p), "all"),
+            "upsert": (lambda spark, f, p: sg.upsert_ivf_km_index(spark, f["d2"], p), "all"),
+        },
+    },
+    "pq_det": {
+        "setup": lambda spark, f, p: (
+            pqd.ensure_pq_det_index(spark, f["base"], p),
+            pqd.upsert_pq_det_index(spark, f["d1"], p),
+        ),
+        "delete": lambda spark, p, ids: pqd.delete_from_pq_det_index(spark, p, ids),
+        "search": lambda spark, f, p, c: pqd.ann_pq_det_topk_indexed(
+            spark, f["queries"], c, p, k=K
+        ),
+        "ops": {
+            "build": (lambda spark, f, p: pqd.ensure_pq_det_index(spark, f["all"], p), "all"),
+            "upsert": (lambda spark, f, p: pqd.upsert_pq_det_index(spark, f["d2"], p), "all"),
+        },
+    },
+    "ivfpq_det": {
+        "setup": lambda spark, f, p: ivq.ensure_ivfpq_det_index(spark, f["kept"], p),
+        "search": lambda spark, f, p, c: ivq.ann_ivfpq_det_topk(
+            spark, f["queries"], c, path=p, k=K
+        ),
+        "ops": {
+            "rebuild": (
+                lambda spark, f, p: ivq.ensure_ivfpq_det_index(spark, f["all"], p), "all"
+            ),
+        },
+    },
+    "mrl": {
+        "setup": lambda spark, f, p: (
+            mrl.build_mrl_index(f["base"], p), mrl.upsert_mrl_index(f["d1"], p)
+        ),
+        "search": lambda spark, f, p, c: mrl.ann_mrl_topk_indexed(
+            f["queries"], f["all"], p, k=K
+        ),
+        "ops": {
+            "build": (lambda spark, f, p: mrl.build_mrl_index(f["all"], p), "all"),
+            "upsert": (lambda spark, f, p: mrl.upsert_mrl_index(f["d2"], p), "all"),
+            "compact": (lambda spark, f, p: mrl.compact_mrl_index(spark, p), "kept"),
+        },
+    },
+}
+
+
+@pytest.fixture(scope="module")
+def tier_cases(spark, tier_frames, tmp_path_factory):
+    """One maintained template per tier, built on first use; a tier
+    with deletes tombstones three ids its template serves."""
+    root = tmp_path_factory.mktemp("gen_tiers")
+    cases = {}
+
+    def case(tier):
+        if tier not in cases:
+            t, f = TIERS[tier], tier_frames
+            template = str(root / tier / "template")
+            t["setup"](spark, f, template)
+            deleted = set()
+            if "delete" in t:
+                served = _tier_answer(spark, f, tier, template)
+                deleted = sorted({r[1] for r in served})[:3]
+                t["delete"](spark, template, deleted)
+            cases[tier] = {
+                "root": root / tier,
+                "template": template,
+                "deleted": set(deleted),
+                "pre": _tier_answer(spark, f, tier, template),
+            }
+        return cases[tier]
+
+    return case
+
+
+@pytest.mark.parametrize(
+    "tier,op", [(tier, op) for tier, t in TIERS.items() for op in t["ops"]]
+)
+def test_tier_meta_crash_matrix(spark, tier_frames, tier_cases, monkeypatch, tier, op):
+    c, f = tier_cases(tier), tier_frames
+    run, after = TIERS[tier]["ops"][op]
+    free = str(c["root"] / f"free_{op}")
+    shutil.copytree(c["template"], free)
+    run(spark, f, free)
+    post = _tier_answer(spark, f, tier, free, after)
+    path = str(c["root"] / f"crash_{op}")
+    shutil.copytree(c["template"], path)
+    with monkeypatch.context() as mp:
+        _crashing(mp, "meta")
+        with pytest.raises(_Crash):
+            run(spark, f, path)
+    crashed = _tier_answer(spark, f, tier, path)
+    assert crashed == c["pre"]
+    assert not {r[1] for r in crashed} & c["deleted"]
+    run(spark, f, path)  # the retry
+    assert _tier_answer(spark, f, tier, path, after) == post
+    assert _renumbered(_data_dirs(path)) == _renumbered(_data_dirs(free))

@@ -572,8 +572,9 @@ def test_partial_compact_rebuilds_only_dirty_partitions(spark, tmp_path):
     pre = _sorted_frame(
         ann_hnsw_topk_indexed(spark, _queries(spark), art, k=K, ef_search=EF_SEARCH)
     )
+    base_rel = mio.read_json(os.path.join(art, "meta.json"))["base_rel"]
     snap_before = {
-        p: _dir_snapshot(os.path.join(art, "graph", f"part={p}"))
+        p: _dir_snapshot(os.path.join(art, base_rel, f"part={p}"))
         for p in range(N_PARTS)
     }
 
@@ -581,7 +582,7 @@ def test_partial_compact_rebuilds_only_dirty_partitions(spark, tmp_path):
     # only partition 1 crossed the threshold
     assert set(meta["part_rels"]) == {"1"}
     assert meta["part_rels"]["1"].startswith("graph_c")
-    assert meta["base_rel"] == "graph" if "base_rel" in meta else True
+    assert meta["base_rel"] == base_rel
     assert meta["n_compacted_away"] == len(heavy)
     assert meta["n_deleted"] == len(light)
     assert meta["tomb_rel"].startswith("tombstones_g")
@@ -589,7 +590,7 @@ def test_partial_compact_rebuilds_only_dirty_partitions(spark, tmp_path):
     # clean partitions byte-untouched
     for p in (0, 2, 3):
         assert (
-            _dir_snapshot(os.path.join(art, "graph", f"part={p}"))
+            _dir_snapshot(os.path.join(art, base_rel, f"part={p}"))
             == snap_before[p]
         ), f"clean partition {p} was touched"
     # served results unchanged; every deleted id still absent
@@ -667,18 +668,6 @@ def test_part_counts_ride_meta_across_the_lifecycle(spark, tmp_path):
     # full compact: census equals the live corpus
     meta = compact_hnsw_index(spark, art)
     assert sum(meta["part_counts"].values()) == corpus.count() - len(victims)
-
-    # pre-r10 artifact: drop part_counts, the scan fallback still works
-    raw = mio.read_json(os.path.join(art, "meta.json"))
-    raw.pop("part_counts")
-    mio.write_json(os.path.join(art, "meta.json"), raw)
-    delete_from_hnsw_index(spark, art, [int(r["vec_id"]) for r in corpus.limit(8).collect()[3:]])
-    meta = compact_hnsw_index(spark, art, min_dead_fraction=0.0)
-    assert "part_counts" not in meta  # legacy lineage stays legacy
-    res = ann_hnsw_topk_indexed(
-        spark, _queries(spark), art, k=K, ef_search=EF_SEARCH
-    ).toPandas()
-    assert len(res) > 0
 
 
 from hypothesis import HealthCheck, given, settings  # noqa: E402

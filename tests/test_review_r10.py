@@ -98,16 +98,17 @@ def test_partial_compact_tomb_dir_crash_window_reclaimed(spark, tmp_path):
     delta = corpus.filter(F.col("vec_id") % 10 == 0)
     build_hnsw_index(base, art, dim=DIM, n_parts=2)
     delete_from_hnsw_index(spark, art, [1, 2, 3])
+    tomb = mio.read_json(mio.join(art, "meta.json"))["tomb_rel"]
     meta = compact_hnsw_index(spark, art, min_dead_fraction=0.0)
-    assert ["tombstones", None] in meta["gc_pending"]
-    assert not mio.is_dir(os.path.join(art, "tombstones"))
+    assert [tomb, None] in meta["gc_pending"]
+    assert not mio.is_dir(os.path.join(art, tomb))
     # crash simulation: the dir reappears (removal "didn't happen") —
     # a real crash leaves it with its pre-compact content
     spark.createDataFrame([(1,), (2,), (3,)], "id long").write.parquet(
-        os.path.join(art, "tombstones")
+        os.path.join(art, tomb)
     )
     upsert_hnsw_index(spark, delta, art)  # next commit
-    assert not mio.is_dir(os.path.join(art, "tombstones")), (
+    assert not mio.is_dir(os.path.join(art, tomb)), (
         "gc_pending must reclaim the stale tombstone dir"
     )
 

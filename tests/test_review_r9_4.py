@@ -11,7 +11,17 @@ import pytest
 from pyspark.sql import functions as F
 
 import inside_vectordb_spark.io as eio
+from inside_vectordb_spark import _generations as gen
 from tests.conftest import SF_DIR
+
+
+def _prefix_files(art: str) -> list[str]:
+    """The data files of the MRL prefix relation, resolved through meta."""
+    return [
+        f
+        for rel in gen.read_meta(art)["rels"]["prefixes"]
+        for f in glob.glob(os.path.join(art, rel, "*.parquet"))
+    ]
 
 
 def _emb(spark):
@@ -128,11 +138,11 @@ def test_mrl_compaction_folds_files_results_identical(spark, tmp_path):
     # two delta appends -> extra small files
     upsert_mrl_index(emb.filter(F.col("vec_id") % 6 == 0), art)
     upsert_mrl_index(emb.filter(F.col("vec_id") % 6 == 3), art)
-    files_before = glob.glob(os.path.join(art, "prefixes", "*.parquet"))
+    files_before = _prefix_files(art)
     before = ann_mrl_topk_indexed(q, emb, art, k=10).collect()
     meta = compact_index(spark, art)  # facade routes kind="mrl"
     assert meta.get("compacted") is True
-    files_after = glob.glob(os.path.join(art, "prefixes", "*.parquet"))
+    files_after = _prefix_files(art)
     assert len(files_after) < len(files_before)
     after = ann_mrl_topk_indexed(q, emb, art, k=10).collect()
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
