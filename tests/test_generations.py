@@ -410,10 +410,6 @@ def _tier_answer(spark, f, tier, path, corpus="kept"):
     return sorted(tuple(r) for r in rows)
 
 
-def _sign_search(spark, f, path, corpus):
-    return sg.ann_sign_topk_indexed(spark, f["queries"], corpus, path, k=K)
-
-
 # tier → its template (build, upsert d1), its search and its ops; an op
 # maps to (run(spark, f, path), the corpus the index holds after it)
 TIERS = {
@@ -454,7 +450,9 @@ TIERS = {
             sg.upsert_sign_index(spark, f["d1"], p),
         ),
         "delete": lambda spark, p, ids: sg.delete_from_sign_index(spark, p, ids),
-        "search": _sign_search,
+        "search": lambda spark, f, p, c: sg.ann_sign_topk_indexed(
+            spark, f["queries"], c, p, k=K
+        ),
         "ops": {
             "build": (lambda spark, f, p: sg.ensure_sign_index(spark, f["all"], p), "all"),
             "upsert": (lambda spark, f, p: sg.upsert_sign_index(spark, f["d2"], p), "all"),
